@@ -165,3 +165,16 @@ def test_ingest_ranges_retries_transient_failure_idempotently(spark, tmp_path):
     with pytest.raises(RuntimeError, match="source down"):
         ingest_ranges(spark, [(300, 399)], always_fail, path,
                       max_retries=1, backoff_s=0.01)
+
+
+def test_wallet_changelogs_refuse_transfer_without_timestamp(spark, transfers):
+    """A transfer whose block has no timestamp fails loudly, naming the
+    pipeline and the column — not with a bare NULL_MAP_KEY."""
+    first = transfers.limit(1).select("_key").collect()[0][0]
+    broken = transfers.withColumn(
+        "transact_at",
+        F.when(F.col("_key") == first, None).otherwise(F.col("transact_at")),
+    )
+    meta = fixtures.token_metadata_df(spark)
+    with pytest.raises(Exception, match=r"wallet_balance_changelogs: .*transact_at"):
+        wallet_balance_changelogs(broken, meta, densify=False).collect()

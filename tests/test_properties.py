@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import struct
 
 from hypothesis import example, given, settings, strategies as st
@@ -870,7 +871,15 @@ def test_media_decoders_never_crash_on_fuzzed_payloads(spark, payloads):
     ),
     n_buckets=st.sampled_from([2, 4, 16]),
 )
-@FAST
+# every batch sequence pays two sink commits per batch, so the default
+# wave draws one sequence beside the pinned one; the full run draws 8
+@example(
+    batches=[[(0, 1), (1, 2), (2, 3), (3, 4)], [(1, 20), (5, 6)], [(0, 100), (5, 60), (7, 7)]],
+    n_buckets=4,
+)
+@settings(
+    max_examples=8 if os.environ.get("SPARK_GRAFT_FULL_TESTS") else 1, deadline=None
+)
 def test_incremental_upsert_equals_full_upsert(spark, tmp_path_factory, batches, n_buckets):
     """The touched-bucket merge (staging-swap commit) is semantically
     identical to the whole-table upsert for ANY batch sequence and

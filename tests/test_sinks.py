@@ -81,6 +81,51 @@ def test_incremental_upsert_matches_full_and_skips_untouched_buckets(spark, tmp_
     assert rewritten != set(before)  # ...but not every bucket
 
 
+def _last_write_plan(spark, path: str) -> str:
+    """The executed (final, adaptive) physical plan of the latest SQL
+    execution that wrote under ``path``, from the SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    recent = store.executionsList(max(0, n - 10), 10).iterator()
+    plans = []
+    while recent.hasNext():
+        plan = recent.next().physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in plan and path in plan:
+            plans.append(plan)
+    assert plans, f"no write under {path} among the last SQL executions"
+    return plans[-1]
+
+
+def test_incremental_upsert_plan_prunes_and_shuffles_once(spark, tmp_path):
+    """The sink's write is one plan: the table scan carries a dynamic
+    partition filter on _bucket (the touched buckets, from the broadcast
+    semi join), and exactly one Exchange — hashpartitioning on _bucket —
+    sits between the union and the write (the window and the
+    partitioned write share it)."""
+    import re
+
+    from token_etl_spark.io.sinks import upsert_by_key_incremental
+
+    path = str(tmp_path / "plan_pin")
+    rows = spark.createDataFrame([(f"k{i}", i) for i in range(40)], "_key string, v long")
+    upsert_by_key_incremental(spark, rows, path, n_buckets=8)
+    update = spark.createDataFrame([("k3", 33), ("new", 1)], "_key string, v long")
+    upsert_by_key_incremental(spark, update, path, n_buckets=8)
+
+    plan = _last_write_plan(spark, path)
+    assert "dynamicpruningexpression(_bucket" in plan
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    tree = final.splitlines()
+    write = next(i for i, ln in enumerate(tree) if "InsertIntoHadoopFsRelationCommand" in ln)
+    union = next(i for i, ln in enumerate(tree) if "Union" in ln)
+    between = [ln for ln in tree[write:union] if re.search(r"\bExchange \(", ln)]
+    assert len(between) == 1, between
+    node = re.search(r"Exchange \((\d+)\)", between[0]).group(1)
+    args = plan.split(f"({node}) Exchange")[1].split("Arguments: ")[1]
+    assert re.match(r"hashpartitioning\(_bucket#\d+, \d+\)", args), args[:80]
+
+
 def test_upsert_read_failure_is_not_first_write(spark, tmp_path):
     """A corrupt/unreadable existing table must RAISE, not be silently
     treated as table-absent (which would overwrite surviving buckets with
@@ -100,8 +145,8 @@ def test_upsert_read_failure_is_not_first_write(spark, tmp_path):
 
 
 def test_upsert_within_batch_duplicate_keys_deterministic(spark, tmp_path):
-    """Duplicate keys inside ONE batch share an _ingest_version; the
-    winner must be the same row on every rerun (content-hash tiebreak)."""
+    """Duplicate keys inside ONE batch share a source rank; the winner
+    must be the same row on every rerun (content-hash tiebreak)."""
     from token_etl_spark.io.sinks import read_upserted, upsert_by_key_incremental
 
     rows = [("dup", i) for i in range(20)] + [("solo", 99)]
@@ -339,13 +384,12 @@ def test_markerless_state_validated_before_adoption(spark, tmp_path):
     assert read_upserted(spark, path).count() == 40
 
 
-def test_saturated_batch_takes_full_rewrite_path(spark, tmp_path):
-    """The saturation guard (VERDICT r9 item 5): a batch touching >= 75%
-    of all buckets degrades to ONE staged full rewrite — same surviving
-    rows as the per-bucket path (keep-latest per key, untouched keys
-    intact), marker re-persisted, a warning naming the fallback."""
+def test_saturated_batch_merges_every_bucket(spark, tmp_path):
+    """A batch touching every bucket goes through the same per-bucket
+    merge as a small one: keep-latest per key, untouched keys intact,
+    the bucket-count marker kept, and a later small batch still merges
+    against the recorded count."""
     import os
-    import warnings as w
 
     from token_etl_spark.io.sinks import read_upserted, upsert_by_key_incremental
 
@@ -359,17 +403,13 @@ def test_saturated_batch_takes_full_rewrite_path(spark, tmp_path):
     update = spark.createDataFrame(
         [(f"k{i}", i + 1000) for i in range(0, 64, 2)], "_key string, v long"
     )
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        upsert_by_key_incremental(spark, update, path, n_buckets=4)
-    assert any("full rewrite" in str(c.message) for c in caught)
+    upsert_by_key_incremental(spark, update, path, n_buckets=4)
     got = {r["_key"]: r["v"] for r in read_upserted(spark, path).collect()}
     assert got == {
         f"k{i}": (i + 1000 if i % 2 == 0 else i) for i in range(64)
     }
     assert os.path.exists(os.path.join(path, "_n_buckets"))
-    # a later SMALL batch still goes through the per-bucket path and
-    # must agree with the recorded count
+    # a later SMALL batch must agree with the recorded count
     small = spark.createDataFrame([("k1", 7777)], "_key string, v long")
     upsert_by_key_incremental(spark, small, path, n_buckets=4)
     assert read_upserted(spark, path).filter("_key = 'k1'").collect()[0]["v"] == 7777

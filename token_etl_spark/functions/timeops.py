@@ -38,6 +38,24 @@ def bucket(ts_seconds: Column | str, width: int) -> Column:
     return ((c.cast("long") / width).cast("long") * width).cast("long")
 
 
+def require_timestamp(ts_seconds: Column, pipeline: str) -> Column:
+    """``ts_seconds`` unchanged, or a runtime error naming ``pipeline``
+    and ``transact_at`` on a row without one (a transfer whose block is
+    missing from the block-timestamp dimension). In-plan, so it adds no
+    Spark job; without it the null surfaces later as a bare
+    ``NULL_MAP_KEY`` from the changelog collapse."""
+    return F.when(
+        ts_seconds.isNull(),
+        F.raise_error(
+            F.lit(
+                f"{pipeline}: a transfer has no timestamp (transact_at is null "
+                "or not unix seconds) — is its block missing from the "
+                "block_timestamps dimension?"
+            )
+        ),
+    ).otherwise(ts_seconds)
+
+
 def hour_bucket(ts_seconds: Column | str) -> Column:
     return bucket(ts_seconds, HOUR)
 

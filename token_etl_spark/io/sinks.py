@@ -4,8 +4,9 @@ The reference's ArangoDB sink is an upsert-on-``_key`` append
 (Spark.scala:71-88, ``overwrite.mode=update``); its CSV debug sink is
 WriteToFile.scala:6-12. Parquet replaces the document store; upsert
 semantics are reproduced with a deterministic keyed dedup
-(row_number over _key ordered by ingest version, keep latest) — the same
-MERGE-by-key contract without requiring a table format.
+(row_number over _key, batch rows ranked before table rows — keep
+latest) — the same MERGE-by-key contract without requiring a table
+format.
 
 At 100 TB the upsert would target a lakehouse table format with real MERGE
 support; the dedup-by-key plan below is the format-free equivalent and is
@@ -18,8 +19,9 @@ from __future__ import annotations
 import warnings
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Staging-dir suffixes are PER PROTOCOL: the whole-table swap
 # (.staging-full — the staged dir is a complete replacement table,
@@ -32,50 +34,76 @@ from pyspark.sql import functions as F
 _STAGING_FULL = ".staging-full"
 _STAGING_BUCKETS = ".staging-buckets"
 
-#: Touched-bucket fraction above which merge_touched_buckets falls back
-#: to one staged full rewrite: the r9 probe measured a uniform batch
-#: touching 61/64 buckets at 2.4× the cost of a full rewrite (per-bucket
-#: staging renames + the isin filter buy nothing once most buckets are
-#: rewritten anyway — PERF.md "touched-bucket merge").
-_FULL_REWRITE_FRACTION = 0.75
+#: Temporary source rank stamped on the merge union: 0 on batch rows, 1
+#: on table rows. An ``order`` that sorts on it ascending lets the batch
+#: win (keep-latest); it is dropped before the write.
+SOURCE_RANK = "_src"
 
 
-def _read_existing(spark: SparkSession, path: str) -> DataFrame | None:
+def _read_existing(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame | None:
     """Read the target table, distinguishing "does not exist yet" (→ None)
     from real failures. A bare ``except Exception`` here would treat a
     transient storage error or corrupt footer as first-write and let the
     subsequent overwrite discard existing rows — only the analyzer's
     path-not-found is a legitimate first-write signal; everything else
     re-raises.
+
+    ``schema``: read with it instead of inferring one — inference reads a
+    footer in its own Spark job. Table columns outside it are not read;
+    its columns the table lacks read as null.
     """
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     except AnalysisException as e:
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
             return None
         raise
 
 
-def _latest_per_key(merged: DataFrame, key: str, version_col: str) -> DataFrame:
-    """Keep the highest-version row per key. Duplicate keys WITHIN one
-    batch share a version, so break ties deterministically on the row's
-    content hash — the winner is arbitrary-but-stable across retries
-    (input order inside a shuffled batch is not reproducible; a hash is).
-    """
-    tiebreak = F.xxhash64(*[F.col(c) for c in merged.columns])
-    w = Window.partitionBy(key).orderBy(F.col(version_col).desc(), tiebreak.desc())
+def latest_order(columns: list[str]) -> list[Column]:
+    """The keep-latest ``order`` of both upsert sinks: batch rows before
+    table rows, then a content hash over ``columns``. Duplicate keys
+    WITHIN one batch share a rank, and the hash makes their winner
+    arbitrary-but-stable across retries (input order inside a shuffled
+    batch is not reproducible; a hash is)."""
+    return [F.col(SOURCE_RANK).asc(), F.xxhash64(*columns).desc()]
+
+
+def _first_per_key(
+    table: DataFrame | None,
+    batch: DataFrame,
+    key: str,
+    order: list[Column],
+    bucket_col: str | None = None,
+) -> DataFrame:
+    """Union ``table`` (None on a first write) and ``batch`` under the
+    temporary :data:`SOURCE_RANK`, then keep the first row per ``key``
+    under ``order``. With ``bucket_col`` the union is hash-partitioned
+    on it once and the window runs over (bucket, key): the exchange the
+    partitioned write needs is the window's too, so none is added."""
+    merged = batch.withColumn(SOURCE_RANK, F.lit(0))
+    if table is not None:
+        merged = (
+            table.select(*batch.columns)
+            .withColumn(SOURCE_RANK, F.lit(1))
+            .unionByName(merged)
+        )
+    parts = [key]
+    if bucket_col is not None:
+        merged, parts = merged.repartition(bucket_col), [bucket_col, key]
+    w = Window.partitionBy(*parts).orderBy(*order)
     return (
         merged.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        .drop("_rn", SOURCE_RANK)
     )
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    df.write.mode(mode).parquet(path)
 
 
 def write_csv(df: DataFrame, path: str) -> None:
@@ -88,12 +116,12 @@ def upsert_by_key(
     new_df: DataFrame,
     path: str,
     key: str = "_key",
-    version_col: str = "_ingest_version",
 ) -> None:
     """Upsert-by-key sink (S6; Spark.scala:71-88 ``overwrite.mode=update``).
 
-    Reads the existing keyed table (if any), unions the new batch tagged
-    with a higher version, keeps the latest row per key, and rewrites.
+    Reads the existing keyed table (if any), unions the new batch ranked
+    before it, keeps the latest row per key (:func:`latest_order`), and
+    rewrites. Table columns outside the batch's are dropped.
     ``keep.null=true`` parity: nulls in the new batch overwrite (we keep
     whole-row latest, which the reference's document-update also does for
     supplied fields).
@@ -108,49 +136,17 @@ def upsert_by_key(
     """
     _heal_full_swap(spark, path)
     existing = _read_existing(spark, path)
-
-    if existing is not None:
-        if version_col not in existing.columns:
-            existing = existing.withColumn(version_col, F.lit(0).cast("long"))
-        next_version = existing.agg(F.max(version_col)).collect()[0][0] or 0
-        batch = new_df.withColumn(version_col, F.lit(next_version + 1).cast("long"))
-        merged = existing.select(batch.columns).unionByName(batch)
-    else:
-        merged = new_df.withColumn(version_col, F.lit(1).cast("long"))
-
-    deduped = _latest_per_key(merged, key, version_col)
+    deduped = _first_per_key(existing, new_df, key, latest_order(new_df.columns))
     _full_swap(spark, deduped, path)
 
 
-def _full_swap(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    marker_n_buckets: int | None = None,
-) -> None:
+def _full_swap(spark: SparkSession, df: DataFrame, path: str) -> None:
     """Stage ``df`` as a COMPLETE replacement table at
-    ``<path>.staging-full`` and swap it over ``path`` via rename —
-    shared by :func:`upsert_by_key` and the saturated-batch fallback in
-    :func:`merge_touched_buckets`. An in-place overwrite of the only
-    copy would lose the whole table on a crash mid-write.
-
-    ``marker_n_buckets``: when set, the ``_n_buckets`` marker is written
-    INTO the staging dir before the rename so it travels with the swap.
-    Residual window, stated honestly: a crash between the staging job's
-    ``_SUCCESS`` and the driver-side marker write heals (via
-    ``_heal_full_swap``, which cannot know the count) into a marker-less
-    final dir — that one commit then goes through the VALIDATED
-    structural-adoption path of ``_check_bucket_count`` (loud warning,
-    bucket-id bounds checked) at the next merge instead of the hard
-    marker equality. The bucket-swap protocol closes its equivalent
-    window completely by gating completeness on the marker itself
-    (see :func:`_heal_bucket_swap`); the full swap cannot, because
-    ``upsert_by_key`` legitimately stages marker-less tables."""
+    ``<path>.staging-full`` and swap it over ``path`` via rename (the
+    commit of :func:`upsert_by_key`). An in-place overwrite of the only
+    copy would lose the whole table on a crash mid-write."""
     staging = path.rstrip("/") + _STAGING_FULL
-    write_parquet(df, staging, mode="overwrite", partition_by=partition_by)
-    if marker_n_buckets is not None:
-        _write_bucket_marker(spark, staging, marker_n_buckets)
+    write_parquet(df, staging, mode="overwrite")
     fs, hpath = _bucket_fs(spark, path)
     if not fs.exists(hpath(staging + "/_SUCCESS")):
         raise IOError(
@@ -379,76 +375,55 @@ def merge_touched_buckets(
     spark: SparkSession,
     batch: DataFrame,
     path: str,
-    merge,
+    key: str,
+    order: list[Column],
     n_buckets: int,
     bucket_col: str = "_bucket",
 ) -> None:
     """The touched-bucket MERGE approximation, shared by the incremental
     upsert sink (keep-latest) and the streaming URL-dedup state
-    (keep-best): ``batch`` already carries ``bucket_col``; ``merge(
-    affected_or_None, batch) -> DataFrame`` collapses the union to one
-    row per key (still carrying ``bucket_col``). Only the buckets the
-    batch touches are read, merged, and replaced; the driver-side bucket
-    list is bounded by ``n_buckets``, never by data size.
+    (keep-best): ``batch`` already carries ``bucket_col``; the union of
+    the touched table buckets and the batch collapses to the first row
+    per ``key`` under ``order``, which may sort on the temporary
+    :data:`SOURCE_RANK` (0 on batch rows, 1 on table rows). Only the
+    buckets the batch touches are read, merged, and replaced.
+
+    One plan, whose write is its only action: the table is read with the
+    batch's schema (no inference job); the touched buckets are a
+    broadcast left-semi join on ``bucket_col``, which dynamic partition
+    pruning turns into a scan of those bucket dirs only (the
+    ``bucket_col < n_buckets`` filter states the bucket range and marks
+    the broadcast side selective, which the pruning rule asks for); and
+    the union is hash-partitioned on ``bucket_col`` once, which both the
+    (bucket, key) window and the partitioned write reuse — so each bucket
+    lands in one task and one file (without it every writing task splays
+    a file into every bucket dir: 5.1 s vs 1.3 s and 4,098 vs 130 files
+    at gate scale, PERF.md r10). The partition count is left to AQE.
 
     Commit protocol: the merged buckets are written to a sibling
-    ``.staging`` dir first, then each staged bucket dir REPLACES its
-    final counterpart via rename — so a crash can never leave a bucket
-    half-written, and :func:`_heal_bucket_swap` (run at the start of
-    every merge) finishes or discards an interrupted swap using the
-    staging write's ``_SUCCESS`` marker as the completeness signal.
-    The remaining exposure is bounded to the healed window — unlike a
-    dynamic-partition overwrite, whose delete-then-move inside the
-    committer can lose a bucket's PRIOR rows with nothing on disk to
-    recover from. ``n_buckets`` is validated against the state's
-    persisted marker (:func:`_check_bucket_count`).
-
-    Saturation guard (r10): when the batch touches ≥
-    ``_FULL_REWRITE_FRACTION`` of all buckets, per-bucket staging buys
-    nothing — the r9 probe measured a uniform batch touching 61/64
-    buckets at 2.4× a full rewrite's cost — so the merge degrades to ONE
-    staged full rewrite (same output: both merge callbacks are
-    idempotent per-key folds, so untouched keys pass through unchanged),
-    swapped whole-dir and re-marked. Both heal protocols run up front
-    because either commit path may have been interrupted."""
+    ``.staging-buckets`` dir first, then each staged bucket dir REPLACES
+    its final counterpart via rename — so a crash can never leave a
+    bucket half-written, and :func:`_heal_bucket_swap` (run at the start
+    of every merge) finishes or discards an interrupted swap using the
+    staging write's ``_SUCCESS`` and ``_n_buckets`` markers as the
+    completeness signal. The remaining exposure is bounded to the healed
+    window — unlike a dynamic-partition overwrite, whose delete-then-move
+    inside the committer can lose a bucket's PRIOR rows with nothing on
+    disk to recover from. ``n_buckets`` is validated against the state's
+    persisted marker (:func:`_check_bucket_count`). The full-swap heal
+    also runs, for a ``.staging-full`` left by the saturated-batch full
+    rewrite this merge used to take."""
     _heal_bucket_swap(spark, path)
     _heal_full_swap(spark, path)
     _check_bucket_count(spark, path, n_buckets)
-    existing = _read_existing(spark, path)
-    if existing is None:
-        merged = merge(None, batch)
-    else:
-        touched = sorted(
-            r[0] for r in batch.select(bucket_col).distinct().collect()
+    existing = _read_existing(spark, path, batch.schema)
+    if existing is not None:
+        touched = batch.select(bucket_col).distinct().where(
+            F.col(bucket_col) < n_buckets
         )
-        if len(touched) >= _FULL_REWRITE_FRACTION * n_buckets:
-            warnings.warn(
-                f"batch touches {len(touched)}/{n_buckets} buckets at {path}: "
-                "falling back to one staged full rewrite (per-bucket staging "
-                "costs more than a full rewrite once most buckets are touched "
-                "— if batches are routinely this uniform, raise n_buckets or "
-                "use upsert_by_key)",
-                stacklevel=2,
-            )
-            merged = merge(existing, batch)
-            _full_swap(
-                spark,
-                merged.repartition(n_buckets, bucket_col),
-                path,
-                partition_by=[bucket_col],
-                marker_n_buckets=n_buckets,  # travels atomically with the swap
-            )
-            return
-        affected = existing.filter(F.col(bucket_col).isin(touched))
-        merged = merge(affected, batch)
+        existing = existing.join(F.broadcast(touched), bucket_col, "left_semi")
+    merged = _first_per_key(existing, batch, key, order, bucket_col)
     staging = path.rstrip("/") + _STAGING_BUCKETS
-    # co-partition on the bucket before the partitioned write: without it
-    # every writing task splays a file into every bucket dir (tasks ×
-    # buckets tiny files — measured 5.1 s vs 1.3 s and 4,098 vs 130 files
-    # at gate scale). One task per bucket caps write parallelism at
-    # n_buckets, which the sizing rule already demands exceed the
-    # cluster's parallelism at scale.
-    merged = merged.repartition(n_buckets, bucket_col)
     merged.write.mode("overwrite").partitionBy(bucket_col).parquet(staging)
     # the marker rides the staged commit: a bucket staging only counts
     # as COMPLETE once BOTH _SUCCESS and _n_buckets exist (the heal's
@@ -471,7 +446,6 @@ def upsert_by_key_incremental(
     path: str,
     key: str = "_key",
     n_buckets: int = 16,
-    version_col: str = "_ingest_version",
 ) -> None:
     """Incremental upsert: hash-bucket the key space into ``n_buckets``
     parquet partitions and rewrite ONLY the buckets the batch touches
@@ -481,27 +455,22 @@ def upsert_by_key_incremental(
     bucket, so per-bucket merge preserves upsert-by-key semantics while
     leaving untouched buckets' files alone. At 100 TB with a well-sized
     bucket count, a small batch rewrites |touched buckets| / n_buckets
-    of the table instead of all of it. Commit + crash recovery + bucket-
-    count validation via :func:`merge_touched_buckets`.
+    of the table instead of all of it. Keep-latest is
+    :func:`latest_order`; commit, crash recovery and bucket-count
+    validation are :func:`merge_touched_buckets`.
     """
     batch = new_df.withColumn(
         "_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
     )
-
-    def _merge(affected: DataFrame | None, b: DataFrame) -> DataFrame:
-        if affected is None:
-            merged = b.withColumn(version_col, F.lit(1).cast("long"))
-        else:
-            next_version = affected.agg(F.max(version_col)).collect()[0][0] or 0
-            b = b.withColumn(version_col, F.lit(next_version + 1).cast("long"))
-            merged = affected.select(b.columns).unionByName(b)
-        return _latest_per_key(merged, key, version_col)
-
-    merge_touched_buckets(spark, batch, path, _merge, n_buckets)
+    merge_touched_buckets(
+        spark, batch, path, key, latest_order(new_df.columns), n_buckets
+    )
 
 
 def read_upserted(spark: SparkSession, path: str) -> DataFrame:
-    """Read an upserted table, hiding the bookkeeping columns."""
+    """Read an upserted table, hiding the bookkeeping columns (tables
+    written before the source rank replaced it still carry
+    ``_ingest_version``)."""
     df = spark.read.parquet(path)
     return df.drop(*[c for c in ("_bucket", "_ingest_version") if c in df.columns])
 

@@ -8,13 +8,22 @@ wallet-cluster pivot), each collapsed to one row, zipped by a reduce-join
 on monotonically_increasing_id (J6), unioned across tokens, written as
 one document per token.
 
-Spark-native shape: ONE pass over all tokens — every metric is computed
-grouped by ``contract_address`` (the per-token driver loop becomes the
-grouping key), changelogs collapse to per-token maps, and the nine
-frames fold with explicit equi-joins on the contract key
-(operators/assemble.py replaces the id-join quirk, SURVEY §2.3 J6 note).
-The shared scan is persisted once — the reference re-reads its source
-for every metric (SURVEY §4 "scan reuse").
+Spark-native shape: ONE pass over all tokens — the per-token driver loop
+becomes the grouping key, and the transfers are scanned once (SURVEY §4
+"scan reuse") into a stack of aggregates, each computed from the one
+below it:
+
+1. per (token, wallet, hour): net flow, transfers sent, value received —
+   and, over a running-sum window, the wallet's balance after the hour;
+2. per (token, hour): tx count, volume, unique wallets, holders, whales
+   and dapps touched;
+3. per token: every changelog map, the daily one included, in one
+   aggregate.
+
+Only the broadcast dimensions are joined, so a token keeps its document
+whichever metric is empty for it (a token no dapp touched gets an empty
+``dappChanges`` map). Tokens without metadata get no document, as in the
+reference's loop over known tokens.
 """
 
 from __future__ import annotations
@@ -22,18 +31,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from token_etl_spark.functions.timeops import hour_bucket, day_bucket
-from token_etl_spark.operators.assemble import assemble_on_key
-from token_etl_spark.operators.dapps import match_dapp_endpoints
+from token_etl_spark.functions.keys import strip_collection_prefix
+from token_etl_spark.functions.timeops import (
+    changelog_entries,
+    day_bucket,
+    hour_bucket,
+    require_timestamp,
+)
+from token_etl_spark.operators.dapps import explode_registry
 
 
-def _collapse(df: DataFrame, ts: str, value: str, out: str) -> DataFrame:
+def _changelog(ts: str, value: str, out: str):
     """Per-token A11 collapse: Map<bucket_ts → value>."""
-    return df.groupBy("contract_address").agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct(F.col(ts).alias("ts"), F.col(value).alias("value"))))
-        ).alias(out)
-    )
+    return F.map_from_entries(changelog_entries(ts, value)).alias(out)
 
 
 def enhance_tokens(
@@ -43,95 +53,123 @@ def enhance_tokens(
     start_ts: int | None = None,
     end_ts: int | None = None,
 ) -> DataFrame:
-    """transfers (+dims) → one summary document per token.
+    """transfers (+dims) → one summary document per token with metadata.
 
-    Columns: contract_address, name, symbol, txChanges, tradingVolumeChanges,
-    uniqueAddressChanges, holderChanges, avgTransactionPerDay(+Changes map),
-    and dappChanges when a registry is supplied.
+    Columns: contract_address, txChanges, tradingVolumeChanges,
+    uniqueAddressChanges, avgTransactionPerDayChanges, holderChanges,
+    whaleChanges, dappChanges (when a registry is supplied), name,
+    symbol. A transfer without a timestamp raises an error naming this
+    pipeline and ``transact_at``.
     """
-    scoped = transfers.withColumn("ts_sec", F.col("transact_at").cast("long"))
+    ts = F.col("transact_at").cast("long")
+    scoped = transfers
     if start_ts is not None and end_ts is not None:
         # S4 semantics: contract/time predicate pushed into the scan
-        scoped = scoped.filter(F.col("ts_sec").between(start_ts, end_ts))
-    scoped = scoped.withColumn("hour_ts", hour_bucket(F.col("ts_sec")))
-    scoped.persist()
+        scoped = scoped.filter(ts.between(start_ts, end_ts))
+    hour = hour_bucket(require_timestamp(ts, "enhance_tokens"))
 
-    # tx-count changelog (A3 hourly)
-    tx = _collapse(
-        scoped.groupBy("contract_address", "hour_ts").agg(F.count("*").alias("v")),
-        "hour_ts", "v", "txChanges",
-    )
-    # trading-volume changelog (A5)
-    vol = _collapse(
-        scoped.groupBy("contract_address", "hour_ts").agg(F.sum("value").alias("v")),
-        "hour_ts", "v", "tradingVolumeChanges",
-    )
-    # unique active wallets changelog (A6: explode endpoints, exact distinct)
-    endpoints = scoped.withColumn("address", F.explode(F.array("_from", "_to")))
-    uniq = _collapse(
-        endpoints.groupBy("contract_address", "hour_ts").agg(
-            F.countDistinct("address").alias("v")
+    # 1. per (token, wallet, hour): one row per transfer endpoint, the
+    # sender (-value, sent) and the receiver (+value, received); a
+    # self-transfer nets to zero and still counts once as sent
+    endpoints = F.array(
+        F.struct(
+            F.col("_from").alias("address"),
+            (-F.col("value")).alias("flow"),
+            F.lit(1).alias("sent"),
+            F.lit(None).cast(transfers.schema["value"].dataType).alias("received"),
         ),
-        "hour_ts", "v", "uniqueAddressChanges",
+        F.struct(
+            F.col("_to").alias("address"),
+            F.col("value").alias("flow"),
+            F.lit(0).alias("sent"),
+            F.col("value").alias("received"),
+        ),
     )
-    # avg tx per day (A4: per-day count / 24, reference quirk)
-    daily = scoped.withColumn("day_ts", day_bucket(F.col("ts_sec"))).groupBy(
-        "contract_address", "day_ts"
-    ).agg((F.count("*") / F.lit(24.0)).alias("v"))
-    avg_tx = _collapse(daily, "day_ts", "v", "avgTransactionPerDayChanges")
-
-    # holder-count changelog (P7+A2 over running balances)
-    pair = F.array(
-        F.struct(F.col("_from").alias("address"), (-F.col("value")).alias("sv")),
-        F.struct(F.col("_to").alias("address"), F.col("value").alias("sv")),
-    )
-    flows = (
-        scoped.withColumn("_e", F.explode(pair))
-        .groupBy("contract_address", F.col("_e.address").alias("address"), "hour_ts")
-        .agg(F.sum("_e.sv").alias("net"))
-    )
-    w = (
+    running = (
         Window.partitionBy("contract_address", "address")
         .orderBy("hour_ts")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    balances = flows.withColumn("balance", F.sum("net").over(w))
-    holders = _collapse(
-        balances.groupBy("contract_address", "hour_ts").agg(
-            F.sum((F.col("balance") > 0).cast("int")).alias("v")
-        ),
-        "hour_ts", "v", "holderChanges",
-    )
-    # whale-count changelog (F5 threshold from broadcast metadata dim)
     dim = F.broadcast(
         token_metadata.select(
-            "contract_address", "name", "symbol", "circulating_supply", "whale_threshold"
+            "contract_address",
+            "name",
+            "symbol",
+            (F.col("circulating_supply") * F.col("whale_threshold")).alias("whale_min"),
         )
     )
-    whales = _collapse(
-        balances.join(dim, "contract_address")
-        .groupBy("contract_address", "hour_ts")
+    wallets = (
+        scoped.select("contract_address", hour.alias("hour_ts"), F.inline(endpoints))
+        # one exchange for the aggregate and the balance window both
+        .repartition("contract_address", "address")
+        .groupBy("contract_address", "address", "hour_ts")
         .agg(
-            F.sum(
-                (F.col("balance") >= F.col("circulating_supply") * F.col("whale_threshold")).cast("int")
-            ).alias("v")
-        ),
-        "hour_ts", "v", "whaleChanges",
+            F.sum("flow").alias("net"),
+            F.sum("sent").alias("sent"),
+            F.sum("received").alias("received"),
+        )
+        .withColumn("balance", F.sum("net").over(running))
+        .join(dim.select("contract_address", "whale_min"), "contract_address")
     )
 
-    frames = [tx, vol, uniq, avg_tx, holders, whales]
-
+    # 2. per (token, hour)
+    hourly_aggs = [
+        F.sum("sent").alias("tx"),
+        F.sum("received").alias("volume"),
+        F.count("address").alias("wallets"),
+        F.sum((F.col("balance") > 0).cast("int")).alias("holders"),
+        F.sum((F.col("balance") >= F.col("whale_min")).cast("int")).alias("whales"),
+    ]
     if dapp_registry is not None:
-        matched = match_dapp_endpoints(scoped, dapp_registry)
-        dapps = _collapse(
-            matched.groupBy("contract_address", "hour_ts").agg(
-                F.countDistinct("idCMC").alias("v")
-            ),
-            "hour_ts", "v", "dappChanges",
+        # wallet → the dapps it is a contract of (a broadcast lookup, so
+        # no wallet row is duplicated); dapps touched per hour = distinct
+        # union of the touched wallets' dapps
+        reg = explode_registry(dapp_registry)
+        dapps_of = F.broadcast(
+            reg.groupBy("dapp_address").agg(F.collect_set("idCMC").alias("dapp_ids"))
         )
-        frames.append(dapps)
+        wallets = wallets.join(
+            dapps_of,
+            strip_collection_prefix("address") == dapps_of["dapp_address"],
+            "left",
+        )
+        hourly_aggs.append(
+            F.size(F.array_distinct(F.flatten(F.collect_list("dapp_ids"))))
+            .cast("long")
+            .alias("dapps")
+        )
+    hourly = wallets.groupBy("contract_address", "hour_ts").agg(*hourly_aggs)
 
-    assembled = assemble_on_key(frames, key="contract_address")
-    out = assembled.join(dim.select("contract_address", "name", "symbol"), "contract_address", "left")
-    scoped.unpersist()
-    return out
+    # 3. per token: every changelog in one aggregate. Hourly rows are
+    # few (tokens × hours), so one exchange on the token serves the
+    # daily window and the aggregate both. avg tx per day is the A4
+    # reference quirk, per-day count / 24; each hour of a day carries
+    # the same entry, which array_distinct keeps once.
+    per_day = Window.partitionBy("contract_address", "day_ts")
+    hourly = (
+        hourly.repartition("contract_address")
+        .withColumn("day_ts", day_bucket(F.col("hour_ts")))
+        .withColumn("avg_tx", F.sum("tx").over(per_day) / F.lit(24.0))
+    )
+    maps = [
+        _changelog("hour_ts", "tx", "txChanges"),
+        _changelog("hour_ts", "volume", "tradingVolumeChanges"),
+        _changelog("hour_ts", "wallets", "uniqueAddressChanges"),
+        F.map_from_entries(
+            F.array_distinct(changelog_entries("day_ts", "avg_tx"))
+        ).alias("avgTransactionPerDayChanges"),
+        _changelog("hour_ts", "holders", "holderChanges"),
+        _changelog("hour_ts", "whales", "whaleChanges"),
+    ]
+    if dapp_registry is not None:
+        # only hours some dapp touched get an entry
+        maps.append(
+            F.map_filter(
+                F.map_from_entries(changelog_entries("hour_ts", "dapps")),
+                lambda _, n: n > 0,
+            ).alias("dappChanges")
+        )
+    per_token = hourly.groupBy("contract_address").agg(*maps)
+    return per_token.join(
+        dim.select("contract_address", "name", "symbol"), "contract_address"
+    )

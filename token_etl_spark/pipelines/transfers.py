@@ -87,7 +87,7 @@ def ingest_ranges(
     bounded-Future pool (which throttles a SINGLE-machine fetch loop)
     has no analog worth reproducing — concurrency here would just make
     two jobs fight over the same executors and break per-range retry
-    isolation against the versioned sink.
+    isolation against the keyed sink.
 
     Returns the number of ranges ingested. Raises the last error if a
     range stays failing after ``max_retries`` retries.

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from token_etl_spark.functions.keys import composite_key, strip_collection_prefix
-from token_etl_spark.functions.timeops import hour_bucket
+from token_etl_spark.functions.timeops import hour_bucket, require_timestamp
 
 
 def wallet_balance_changelogs(
@@ -30,11 +30,15 @@ def wallet_balance_changelogs(
     """transfers (all tokens) → TOKEN_WALLETS rows.
 
     Output: ``_key`` = "{token}_{wallet}", ``address``,
-    ``balanceChangeLogs``: Map<hour_ts → {isWhale, balance}>.
+    ``balanceChangeLogs``: Map<hour_ts → {isWhale, balance}>. A transfer
+    without a timestamp raises an error naming this pipeline and
+    ``transact_at``.
     """
     base = transfers.select(
         "contract_address",
-        hour_bucket(F.col("transact_at").cast("long")).alias("timestamp"),
+        hour_bucket(
+            require_timestamp(F.col("transact_at").cast("long"), "wallet_balance_changelogs")
+        ).alias("timestamp"),
         F.col("_from"),
         F.col("_to"),
         "value",

@@ -340,7 +340,7 @@ from token_etl_spark.plans.base import QuerySpec
 #      a fully unrolled oracle — rel_dapp_registry, the S10
 #      preprocessing semantics on a synthesized registry frame —
 #      rel_upsert_latest, the S6 upsert sink's keep-latest-per-key
-#      MERGE semantics driven through io/sinks._latest_per_key — and
+#      MERGE semantics driven through io/sinks._first_per_key — and
 #      rel_enrich_transfers, the S2/S8/S9/F4 TransferEnricher plan
 #      (range predicate + deterministic keys + broadcast dim with the
 #      null-on-missing path) on synthesized raw/dim frames —

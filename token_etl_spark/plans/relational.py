@@ -794,17 +794,19 @@ FROM kept WHERE len(ca) > 0
 def q_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6 driver row: the upsert sink's MERGE semantics (Spark.scala:71-88
     ``overwrite.mode=update``) driven under the gate via the sink's own
-    keep-latest-per-key reducer (io/sinks._latest_per_key — the exact
-    frame both upsert_by_key and upsert_by_key_incremental write).
+    keep-latest-per-key reducer (io/sinks._first_per_key under
+    io/sinks.latest_order — the exact frame both upsert_by_key and
+    upsert_by_key_incremental write, minus the bucket partitioning).
     Existing table and incoming batch are synthesized from ``orders`` so
     every merge branch is exercised: keys %4∈{0,2} exist in both (batch
     wins), %4==1 exist only in the table (kept untouched), %4==3 arrive
-    only in the batch (inserted). No (key, version) ties, so the
-    xxhash64 within-batch tiebreak is inert and the oracle is a plain
-    row_number-over-version replay. The parquet WRITE itself stays
+    only in the batch (inserted). Batch keys are unique, so the
+    xxhash64 within-batch tiebreak is inert; ``_v`` marks each row's
+    side (1 table, 2 batch) and the oracle is a plain
+    row_number-over-``_v`` replay. The parquet WRITE itself stays
     environment-bound (tests/test_sinks.py idempotency + untouched-bucket
     checks); this row proves the merge plan end-to-end."""
-    from token_etl_spark.io.sinks import _latest_per_key
+    from token_etl_spark.io.sinks import _first_per_key, latest_order
 
     orders = t(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
@@ -820,7 +822,7 @@ def q_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("U").alias("status"),
         F.lit(2).cast("long").alias("_v"),
     )
-    return _latest_per_key(existing.unionByName(batch), "o_orderkey", "_v")
+    return _first_per_key(existing, batch, "o_orderkey", latest_order(batch.columns))
 
 
 SQL_UPSERT_LATEST = """

@@ -961,8 +961,6 @@ def _url_dedup_sink_batch(
     (max under the (quality DESC, id ASC) order), so re-merging the same
     batch — even into a state some buckets of which already absorbed it
     before a crash — converges to the same rows."""
-    from pyspark.sql import Window
-
     from token_etl_spark.io.sinks import merge_touched_buckets
     from token_etl_spark.operators.curation import url_canonicalize
 
@@ -976,9 +974,9 @@ def _url_dedup_sink_batch(
         .withColumn(
             "_bucket", F.pmod(F.xxhash64("canon_url"), F.lit(n_buckets)).cast("int")
         )
-        # materialize ONCE: the touched-bucket collect and the merge job
-        # both consume this frame — without the checkpoint each would
-        # re-run the multi-stage canonicalization regexes over the batch
+        # materialize ONCE: the merge plan reads this frame twice (the
+        # touched-bucket broadcast and the union) — without the
+        # checkpoint each would re-run the canonicalization regexes
         .localCheckpoint(eager=True)
     )
     order = (
@@ -986,17 +984,7 @@ def _url_dedup_sink_batch(
         if quality_col
         else [F.col(id_col).asc()]
     )
-
-    def _merge(affected: DataFrame | None, b: DataFrame) -> DataFrame:
-        merged = b if affected is None else affected.select(b.columns).unionByName(b)
-        w = Window.partitionBy("canon_url").orderBy(*order)
-        return (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-
-    merge_touched_buckets(spark, canon, state_path, _merge, n_buckets)
+    merge_touched_buckets(spark, canon, state_path, "canon_url", order, n_buckets)
 
 
 def run_streaming_url_dedup(
@@ -1019,7 +1007,7 @@ def run_streaming_url_dedup(
     ``n_buckets`` parquet partitions; each micro-batch reads and
     rewrites ONLY the buckets its keys land in (the shared
     ``io/sinks.merge_touched_buckets`` MERGE — |touched|/n_buckets of
-    the state, driver list bounded by n_buckets, staging + per-bucket
+    the state, touched buckets pruned in-plan, staging + per-bucket
     rename commit with crash healing, persisted bucket-count marker).
     Stream≡batch equivalence and crash-retry convergence are pinned in
     tests/test_streaming_curation.py.
