@@ -2,13 +2,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from token_etl_spark.operators.balances import (
-    calculate_balance,
-    cumulative_balance,
-    forward_fill,
-    hourly_net_flow,
-    signed_endpoint_unpivot,
-)
+from token_etl_spark import fixtures
+from token_etl_spark.operators.balances import wallet_hour_balances
+from token_etl_spark.pipelines.wallets import wallet_balance_changelogs
+
+TOKEN = fixtures.TOKENS[0][0]  # VALAS: whale line 500
+SCHEMA = "contract_address string, _from string, _to string, value double, transact_at string"
 
 TRANSFERS = [
     # (_from, _to, value, transact_at) — hand-computed fixture
@@ -19,76 +18,86 @@ TRANSFERS = [
 ]
 
 
-def _df(spark):
-    return spark.createDataFrame(TRANSFERS, ["_from", "_to", "value", "transact_at"])
+def _df(spark, rows=TRANSFERS):
+    return spark.createDataFrame([(TOKEN, *r) for r in rows], SCHEMA)
+
+
+def _balances(spark, rows=TRANSFERS):
+    return wallet_hour_balances(_df(spark, rows), "test")
 
 
 def test_signed_unpivot_doubles_rows_and_signs(spark):
-    out = signed_endpoint_unpivot(_df(spark))
-    assert out.count() == 8
-    sums = {
-        r["address"]: r["s"]
-        for r in out.groupBy("address").agg(F.sum("signed_value").alias("s")).collect()
-    }
+    # every transfer is a sender row (-v) and a receiver row (+v); the
+    # last running balance of each wallet is the sum of its signed rows
+    rows = _balances(spark).collect()
+    assert len(rows) == 4  # (a,3600) (a,7200) (b,3600) (c,7200)
+    last = {}
+    for r in sorted(rows, key=lambda r: r["hour_ts"]):
+        last[r["address"]] = r["balance"]
     # a: -10 +4 -2 = -8 ; b: +10 -4 = 6 ; c: +2 -9 +9 = 2
-    assert sums == {"wallets/a": -8.0, "wallets/b": 6.0, "wallets/c": 2.0}
+    assert last == {"wallets/a": -8.0, "wallets/b": 6.0, "wallets/c": 2.0}
 
 
 def test_unpivot_agrees_with_union_form(spark):
-    # The reference builds the same thing as a union of two projections
-    # (BaseEnricher.scala:91-102); both forms must agree (SURVEY §2.7 U1).
+    # The reference builds the signed rows as a union of two projections
+    # (BaseEnricher.scala:91-102); the stage's net flow must agree with
+    # that form's per-(wallet, hour) sum (SURVEY §2.7 U1).
     df = _df(spark)
-    explode_form = signed_endpoint_unpivot(df).select("address", "signed_value")
-    union_form = df.select(
-        F.col("_from").alias("address"), (-F.col("value")).alias("signed_value")
-    ).union(df.select(F.col("_to").alias("address"), F.col("value").alias("signed_value")))
-    assert sorted(map(tuple, explode_form.collect())) == sorted(map(tuple, union_form.collect()))
+    hour = ((F.col("transact_at").cast("long") / 3600).cast("long") * 3600).alias("hour_ts")
+    union_form = (
+        df.select(hour, F.col("_from").alias("address"), (-F.col("value")).alias("v"))
+        .union(df.select(hour, F.col("_to").alias("address"), F.col("value").alias("v")))
+        .groupBy("address", "hour_ts")
+        .agg(F.sum("v").alias("net"))
+    )
+    got = _balances(spark).select("address", "hour_ts", "net")
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, union_form.collect()))
 
 
 def test_cumulative_balance_hand_computed(spark):
-    balances = calculate_balance(_df(spark))
-    got = {(r["address"], r["timestamp"]): r["balance"] for r in balances.collect()}
-    assert got == {
-        ("wallets/a", 3600): -6.0,   # -10 + 4
-        ("wallets/a", 7200): -8.0,   # cumulative
-        ("wallets/b", 3600): 6.0,
-        ("wallets/c", 7200): 2.0,    # +2 (self-transfer nets out)
-    }
-
-
-def test_with_prev_balance_lag(spark):
-    from token_etl_spark.operators.balances import with_prev_balance
-
-    balances = calculate_balance(_df(spark))
     got = {
-        (r["address"], r["timestamp"]): r["pre_balance"]
-        for r in with_prev_balance(balances).collect()
+        (r["contract_address"], r["address"], r["hour_ts"]): (
+            r["balance"], r["sent"], r["received"]
+        )
+        for r in _balances(spark).collect()
     }
-    assert got[("wallets/a", 3600)] is None      # first observation → no prev
-    assert got[("wallets/a", 7200)] == -6.0      # prev hour's balance
+    assert got == {
+        (TOKEN, "wallets/a", 3600): (-6.0, 1, 4.0),   # -10 + 4
+        (TOKEN, "wallets/a", 7200): (-8.0, 1, None),  # cumulative
+        (TOKEN, "wallets/b", 3600): (6.0, 1, 10.0),
+        # +2 (self-transfer nets out, counts once as sent, +9 received)
+        (TOKEN, "wallets/c", 7200): (2.0, 1, 11.0),
+    }
 
 
 def test_forward_fill_matches_crossjoin_reference(spark):
-    # Engine's window forward-fill must equal the reference's
-    # crossJoin + left-outer densification (WalletEnricher.scala:27-37).
-    sparse = spark.createDataFrame(
-        [("a", 1, 10.0), ("a", 3, 30.0), ("b", 2, 5.0)], ["k", "ts", "v"]
+    # Densified balances must equal the reference's crossJoin + left-outer
+    # densification (WalletEnricher.scala:27-37): every wallet of a token
+    # gets every hour of that token from its first observation on.
+    rows = [
+        ("wallets/x", "wallets/a", 10.0, "3600"),
+        ("wallets/y", "wallets/b", 5.0, "7200"),
+        ("wallets/x", "wallets/a", 20.0, "10800"),
+    ]
+    out = wallet_balance_changelogs(
+        _df(spark, rows), fixtures.token_metadata_df(spark), densify=True
     )
-    filled = forward_fill(sparse, "k", "ts", "v")
-    got = {(r["k"], r["ts"]): r["v"] for r in filled.collect()}
+    got = {
+        r["address"]: {ts: v["balance"] for ts, v in r["balanceChangeLogs"].items()}
+        for r in out.collect()
+    }
     assert got == {
-        ("a", 1): 10.0, ("a", 2): 10.0, ("a", 3): 30.0,
-        ("b", 1): None, ("b", 2): 5.0, ("b", 3): 5.0,
+        "a": {3600: 10.0, 7200: 10.0, 10800: 30.0},
+        "b": {7200: 5.0, 10800: 5.0},  # nothing before its first hour
+        "x": {3600: -10.0, 7200: -10.0, 10800: -30.0},
+        "y": {7200: -5.0, 10800: -5.0},
     }
 
 
 def test_hourly_net_flow_zero_value_and_gap(spark):
-    df = spark.createDataFrame(
+    out = _balances(
+        spark,
         [("wallets/a", "wallets/b", 0.0, "3600"), ("wallets/a", "wallets/b", 1.0, "10900")],
-        ["_from", "_to", "value", "transact_at"],
     )
-    out = hourly_net_flow(
-        signed_endpoint_unpivot(df.withColumn("transact_at_sec", F.col("transact_at").cast("long")))
-    )
-    hours = sorted({r["timestamp"] for r in out.collect()})
+    hours = sorted({r["hour_ts"] for r in out.collect()})
     assert hours == [3600, 10800]  # hour 7200 absent (gap preserved, no fill here)

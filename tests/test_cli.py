@@ -5,6 +5,7 @@ import json
 from pyspark.sql import functions as F
 
 from token_etl_spark import cli, fixtures
+from token_etl_spark.io.sinks import read_upserted
 
 
 def test_cli_all_four_pipelines(spark, tmp_path):
@@ -37,13 +38,34 @@ def test_cli_all_four_pipelines(spark, tmp_path):
          "--registry", str(tmp_path / "registry.json"), "--out", str(tmp_path / "dapps")]
     )
 
-    assert spark.read.parquet(str(tmp_path / "edges")).count() == 300
+    assert read_upserted(spark, str(tmp_path / "edges")).count() == 300
     wallets = spark.read.parquet(str(tmp_path / "wallets"))
     assert wallets.count() > 0 and "_key" in wallets.columns
     tokens = spark.read.parquet(str(tmp_path / "tokens"))
     assert tokens.count() == 3 and "dappChanges" in tokens.columns
     dapps = spark.read.parquet(str(tmp_path / "dapps"))
     assert dapps.count() > 0 and "_key" in dapps.columns
+
+
+def test_cli_ingest_overlapping_ranges_keeps_one_row_per_key(spark, tmp_path):
+    """Two block ranges that overlap land in the key-bucketed transfers
+    table once per key: the overlap's rows are upserted, not appended."""
+    raw_pdf = fixtures.make_raw_transfer_events_pdf(n_rows=200)
+    fixtures.raw_transfer_events_df(spark, n_rows=200).write.parquet(str(tmp_path / "raw"))
+    fixtures.block_timestamps_df(spark, raw_pdf).write.parquet(str(tmp_path / "blocks"))
+    edges = str(tmp_path / "edges")
+    lo, hi = int(raw_pdf["block_number"].min()), int(raw_pdf["block_number"].max())
+    mid = (lo + hi) // 2
+    overlap = raw_pdf["block_number"].between(mid - 2_000, mid + 2_000).sum()
+    assert overlap > 0
+    for lower, upper in [(lo, mid + 2_000), (mid - 2_000, hi)]:
+        cli.main(
+            ["ingest", "--raw", str(tmp_path / "raw"), "--blocks", str(tmp_path / "blocks"),
+             "--out", edges, "--lower", str(lower), "--upper", str(upper)]
+        )
+    assert "_bucket" in spark.read.parquet(edges).columns  # the bucketed layout
+    got = read_upserted(spark, edges)
+    assert got.count() == got.select("_key").distinct().count() == 200
 
 
 def test_cli_corpus_pipeline(spark, tmp_path):

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from token_etl_spark import schemas
-from token_etl_spark.operators.balances import calculate_balance
+from token_etl_spark.operators.balances import wallet_hour_balances
 from token_etl_spark.operators.dedup import exact_dedup, minhash_dedup
 from token_etl_spark.operators.graph import connected_components
 from token_etl_spark.operators.similarity import brute_force_topk
@@ -15,7 +15,7 @@ from token_etl_spark import fixtures
 
 def test_balance_on_empty_transfers(spark):
     empty = spark.createDataFrame([], schemas.TRANSFERS)
-    assert calculate_balance(empty).count() == 0
+    assert wallet_hour_balances(empty, "test").count() == 0
 
 
 def test_wallet_pipeline_on_empty(spark):
@@ -48,8 +48,9 @@ def test_topk_k_larger_than_corpus(spark):
 
 def test_self_transfer_only(spark):
     df = spark.createDataFrame(
-        [("wallets/a", "wallets/a", 5.0, "3600")],
-        ["_from", "_to", "value", "transact_at"],
+        [("0xt", "wallets/a", "wallets/a", 5.0, "3600")],
+        ["contract_address", "_from", "_to", "value", "transact_at"],
     )
-    rows = calculate_balance(df).collect()
+    rows = wallet_hour_balances(df, "test").collect()
     assert len(rows) == 1 and rows[0]["balance"] == 0.0  # nets to zero
+    assert (rows[0]["sent"], rows[0]["received"]) == (1, 5.0)  # sent once

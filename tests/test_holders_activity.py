@@ -2,14 +2,23 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from token_etl_spark.operators.activity import (
-    avg_tx_per_day,
-    tx_count,
-    unique_active_wallets,
-    wallet_cluster,
-    wallet_cluster_pivot,
-)
-from token_etl_spark.operators.holders import holder_count, holder_flag
+from token_etl_spark import fixtures
+from token_etl_spark.operators.activity import wallet_cluster, wallet_cluster_pivot
+from token_etl_spark.operators.holders import holder_flag
+from token_etl_spark.pipelines.tokens import enhance_tokens
+
+TOKEN = fixtures.TOKENS[0][0]
+
+
+def _token_doc(spark, rows, registry=None):
+    """enhance_tokens' document for TOKEN over (_from, _to, value,
+    transact_at) transfer rows — the pipeline that owns the A2-A7 maps."""
+    transfers = spark.createDataFrame(
+        [(TOKEN, *r) for r in rows],
+        "contract_address string, _from string, _to string, value double, "
+        "transact_at string",
+    )
+    return enhance_tokens(transfers, fixtures.token_metadata_df(spark), registry).collect()[0]
 
 
 def test_holder_flag_reference_semantics(spark):
@@ -25,75 +34,59 @@ def test_holder_flag_reference_semantics(spark):
 
 
 def test_holder_count_sums_booleans(spark):
-    df = spark.createDataFrame(
-        [(3600, True), (3600, True), (3600, False), (7200, True)],
-        "timestamp long, isHolder boolean",
-    )
-    got = {r["timestamp"]: r["holder_count"] for r in holder_count(df).collect()}
-    assert got == {3600: 2, 7200: 1}
-
-
-def test_whale_flag_expression(spark):
-    from token_etl_spark.operators.holders import whale_flag
-
-    df = spark.createDataFrame([(499.9,), (500.0,), (500.1,)], "balance double")
-    out = [r["w"] for r in df.select(whale_flag("balance", 1_000_000.0, 0.0005).alias("w")).collect()]
-    assert out == [False, True, True]
+    # A2: per hour, the wallets that moved and hold a positive balance
+    doc = _token_doc(spark, [
+        ("wallets/x", "wallets/a", 5.0, "3600"),
+        ("wallets/x", "wallets/b", 3.0, "3700"),
+        ("wallets/a", "wallets/c", 5.0, "7300"),  # a drops to 0, c holds
+    ])
+    assert doc["holderChanges"] == {3600: 2, 7200: 1}
 
 
 def test_with_whale_flag_broadcast_dim(spark):
-    from token_etl_spark import fixtures
     from token_etl_spark.operators.holders import with_whale_flag
 
     balances = spark.createDataFrame(
-        [(fixtures.TOKENS[0][0], "a", 600.0), (fixtures.TOKENS[0][0], "b", 400.0),
+        [(TOKEN, "a", 600.0), (TOKEN, "b", 400.0), (TOKEN, "e", 500.0),
          ("0xunknown", "c", 1e12)],
         "contract_address string, address string, balance double",
     )
     out = {r["address"]: r["isWhale"] for r in
            with_whale_flag(balances, fixtures.token_metadata_df(spark)).collect()}
-    # VALAS threshold = 0.0005 × 1,000,000 = 500
-    assert out == {"a": True, "b": False, "c": False}  # unknown token → False
+    # VALAS threshold = 0.0005 × 1,000,000 = 500; exactly 500 is a whale
+    assert out == {"a": True, "b": False, "e": True, "c": False}  # unknown token → False
 
 
 def test_dapp_changelog_hourly(spark):
-    from token_etl_spark.operators.dapps import dapp_changelog
-
-    matched = spark.createDataFrame(
-        [("d1", "3600"), ("d2", "3700"), ("d1", "3800"), ("d1", "7300")],
-        "idCMC string, transact_at string",
-    ).withColumn("ts", F.col("transact_at").cast("long"))
-    got = {r["timestamp"]: (r["dapp_count"], r["dapp_ids"]) for r in dapp_changelog(matched, "ts").collect()}
-    assert got == {3600: (2, ["d1", "d1", "d2"]), 7200: (1, ["d1"])}
-
-
-def test_address_rollup_sorted(spark):
-    from token_etl_spark.operators.activity import address_rollup
-
-    df = spark.createDataFrame(
-        [(1, "z"), (1, "a"), (2, "m")], "g int, address string"
+    # A7: distinct dapps whose contracts a transfer touched, per hour
+    d1, d2 = "0x" + "d1" * 20, "0x" + "d2" * 20
+    registry = spark.createDataFrame(
+        [("d1", "One", None, [d1]), ("d2", "Two", None, [d2])],
+        "_id string, name string, image string, contract_addresses array<string>",
     )
-    got = {r["g"]: r["addresses"] for r in address_rollup(df, ["g"]).collect()}
-    assert got == {1: ["a", "z"], 2: ["m"]}
+    doc = _token_doc(spark, [
+        ("wallets/u", f"wallets/{d1}", 1.0, "3600"),
+        ("wallets/u", f"wallets/{d2}", 1.0, "3700"),
+        (f"wallets/{d1}", "wallets/u", 1.0, "3800"),
+        ("wallets/u", f"wallets/{d1}", 1.0, "7300"),
+    ], registry)
+    assert doc["dappChanges"] == {3600: 2, 7200: 1}
 
 
 def test_avg_tx_per_day_is_count_div_24(spark):
     # A4 quirk (BaseEnricher.scala:213-220): per-day count / 24, not a mean.
-    df = spark.createDataFrame([(i,) for i in range(48)], ["ts"]).withColumn(
-        "ts", F.col("ts") * 1800
-    )  # 48 events in day 0
-    out = avg_tx_per_day(df, "ts").collect()
-    assert len(out) == 1
-    assert out[0]["avg_tx_per_day"] == 48 / 24.0
+    doc = _token_doc(
+        spark, [("wallets/a", "wallets/b", 1.0, str(i * 1800)) for i in range(48)]
+    )  # 48 transfers in day 0
+    assert doc["avgTransactionPerDayChanges"] == {0: 48 / 24.0}
 
 
 def test_unique_active_wallets_counts_both_endpoints(spark):
-    df = spark.createDataFrame(
-        [("wallets/a", "wallets/b", "3600"), ("wallets/b", "wallets/c", "3800")],
-        ["_from", "_to", "transact_at"],
-    ).withColumn("ts", F.col("transact_at").cast("long"))
-    out = unique_active_wallets(df, "ts").collect()
-    assert out[0]["unique_wallets"] == 3
+    doc = _token_doc(spark, [
+        ("wallets/a", "wallets/b", 1.0, "3600"),
+        ("wallets/b", "wallets/c", 1.0, "3800"),
+    ])
+    assert doc["uniqueAddressChanges"] == {3600: 3}
 
 
 def test_wallet_cluster_pivot_deterministic(spark):
@@ -107,6 +100,11 @@ def test_wallet_cluster_pivot_deterministic(spark):
 
 
 def test_tx_count_day_bucket(spark):
-    df = spark.createDataFrame([(10,), (86410,), (86420,)], ["ts"])
-    got = {r["timestamp"]: r["tx_count"] for r in tx_count(df, "ts", width=86400).collect()}
-    assert got == {0: 1, 86400: 2}
+    # A3 per hour, and per day through the A4 map
+    doc = _token_doc(spark, [
+        ("wallets/a", "wallets/b", 1.0, "10"),
+        ("wallets/a", "wallets/b", 1.0, "86410"),
+        ("wallets/a", "wallets/b", 1.0, "86420"),
+    ])
+    assert doc["txChanges"] == {0: 1, 86400: 2}
+    assert doc["avgTransactionPerDayChanges"] == {0: 1 / 24.0, 86400: 2 / 24.0}

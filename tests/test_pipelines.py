@@ -10,7 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from token_etl_spark import fixtures
-from token_etl_spark.operators.dapps import dapp_rollup, match_dapp_endpoints
+from token_etl_spark.operators.dapps import match_dapp_endpoints
+from token_etl_spark.pipelines.dapps_pipeline import enrich_dapps
 from token_etl_spark.pipelines.transfers import enrich_transfers
 from token_etl_spark.pipelines.wallets import wallet_balance_changelogs
 
@@ -120,11 +121,14 @@ def test_dapp_matching_and_rollup(spark, transfers):
     ids = {r["idCMC"] for r in matched.select("idCMC").distinct().collect()}
     assert "dapp-swap" in ids       # overlap address is in the transfer set
     assert "dapp-miss" not in ids   # never-seen address joins nothing
-    rolled = dapp_rollup(matched)
-    rows = {r["idCMC"]: r for r in rolled.collect()}
-    assert rows["dapp-swap"]["addresses"] == sorted(rows["dapp-swap"]["addresses"])
-    if "dapp-lend" in rows:
-        assert rows["dapp-lend"]["image"] == "default.png"  # na.fill parity
+    rolled = enrich_dapps(transfers, registry).collect()
+    assert {r["idCMC"] for r in rolled} == ids
+    for r in rolled:
+        assert r["_key"] == f"{r['contract_address']}_{r['idCMC']}"
+        # A8: the interacting addresses, distinct and sorted
+        assert r["addresses"] == sorted(set(r["addresses"]))
+        if r["idCMC"] == "dapp-lend":
+            assert r["image"] == "default.png"  # na.fill parity
 
 
 def test_ingest_ranges_retries_transient_failure_idempotently(spark, tmp_path):

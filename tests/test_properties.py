@@ -8,7 +8,6 @@ import struct
 from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from token_etl_spark.operators.balances import forward_fill
 from token_etl_spark.functions.timeops import HOUR, bucket
 
 # Spark jobs per example are expensive — keep example counts small but
@@ -41,9 +40,11 @@ def test_bucket_idempotent_and_bounded(spark, ts):
 @given(
     data=st.lists(
         st.tuples(
+            st.sampled_from([0, 1]),
+            st.sampled_from(["a", "b", "c"]),
             st.sampled_from(["a", "b", "c"]),
             st.integers(min_value=0, max_value=10),
-            st.floats(min_value=-100, max_value=100, allow_nan=False),
+            st.integers(min_value=0, max_value=400),
         ),
         min_size=1,
         max_size=25,
@@ -51,28 +52,51 @@ def test_bucket_idempotent_and_bounded(spark, ts):
 )
 @FAST
 def test_forward_fill_equals_crossjoin_reference(spark, data):
-    # engine form (window fill) ≡ reference form (crossJoin + left-outer
-    # + per-cell lookup of the latest value at-or-before ts)
-    s = _get(spark)
-    # dedup (k, ts) — both forms assume one observation per key/ts
-    seen = {}
-    for k, ts, v in data:
-        seen[(k, ts)] = v
-    rows = [(k, ts, v) for (k, ts), v in seen.items()]
-    df = s.createDataFrame(rows, "k string, ts long, v double")
+    # the wallet pipeline's densified changelogs (window fill) ≡ the
+    # reference form: per token, every wallet × every hour (crossJoin +
+    # left-outer), each cell the latest running balance at-or-before the
+    # hour, nothing before a wallet's first hour. Integer values keep
+    # every sum exact, so the whale line compares exactly too.
+    from token_etl_spark import fixtures
+    from token_etl_spark.pipelines.wallets import wallet_balance_changelogs
 
+    s = _get(spark)
+    tokens = fixtures.TOKENS[:2]
+    rows = [
+        (tokens[t][0], f"wallets/{f}", f"wallets/{to}", float(v), str(h * 3600))
+        for t, f, to, h, v in data
+    ]
+    df = s.createDataFrame(
+        rows,
+        "contract_address string, _from string, _to string, value double, "
+        "transact_at string",
+    )
+    out = wallet_balance_changelogs(
+        df, fixtures.token_metadata_df(s), densify=True
+    )
     got = {
-        (r["k"], r["ts"]): r["v"] for r in forward_fill(df, "k", "ts", "v").collect()
+        r["_key"]: {ts: (e["isWhale"], e["balance"]) for ts, e in r["balanceChangeLogs"].items()}
+        for r in out.collect()
     }
 
-    keys = sorted({k for k, _, _ in rows})
-    tss = sorted({ts for _, ts, _ in rows})
+    whale_min = {tok: thr * supply for tok, _, thr, supply in tokens}
+    net = {}
+    for tok, f, to, v, ts in rows:
+        h = int(ts)
+        net[(tok, f, h)] = net.get((tok, f, h), 0.0) - v
+        net[(tok, to, h)] = net.get((tok, to, h), 0.0) + v
     exp = {}
-    for k in keys:
-        obs = sorted((ts, v) for kk, ts, v in rows if kk == k)
-        for ts in tss:
-            prior = [v for t0, v in obs if t0 <= ts]
-            exp[(k, ts)] = prior[-1] if prior else None
+    for tok in {r[0] for r in rows}:
+        hours = sorted({h for (t, _, h) in net if t == tok})
+        wallets = sorted({w for (t, w, _) in net if t == tok})
+        for w in wallets:
+            balance, cells = None, {}
+            for h in hours:
+                if (tok, w, h) in net:
+                    balance = (balance or 0.0) + net[(tok, w, h)]
+                if balance is not None:
+                    cells[h] = (balance >= whale_min[tok], balance)
+            exp[f"{tok}_{w.split('/')[1]}"] = cells
     assert got == exp
 
 
@@ -85,11 +109,11 @@ def test_forward_fill_equals_crossjoin_reference(spark, data):
 )
 @FAST
 def test_collapse_map_keys_are_distinct_ts(spark, vals):
-    from token_etl_spark.functions.timeops import collapse_to_map
+    from token_etl_spark.functions.timeops import changelog
 
     s = _get(spark)
     df = s.createDataFrame(vals, "ts long, v double")
-    m = collapse_to_map(df, "ts", "v", "m").collect()[0]["m"]
+    m = df.select(changelog("ts", "v", "m")).collect()[0]["m"]
     assert set(m) == {ts for ts, _ in vals}
 
 

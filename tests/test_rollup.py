@@ -139,3 +139,35 @@ def test_hll_rollup_estimates_track_exact(spark, sf_dir):
     total_exact = sum(r["exact"] for r in rows)
     total_est = sum(r["est"] for r in rows)
     assert abs(total_est - total_exact) / total_exact < 0.05
+
+
+def test_hll_densify_is_ansi_safe(spark, sf_dir):
+    """The register densify builds no out-of-range array index, so it
+    runs under ANSI mode and yields, with ANSI on or off, exactly the
+    dense form of the sparse (bucket, m_j) registers: m_j at its bucket,
+    0 elsewhere."""
+    from token_etl_spark.functions.timeops import hour_bucket
+    from token_etl_spark.operators.rollup import hourly_rollup_hll
+    from token_etl_spark.operators.sketch import hll_registers
+
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id") % 7 == 0)
+    base = ev.select(
+        hour_bucket(F.unix_timestamp("ts")).alias("hour_ts"), "event_type", "user_id"
+    )
+    expected = {}
+    for r in hll_registers(base, "user_id", ("hour_ts", "event_type"), m=256).collect():
+        regs = expected.setdefault((r["hour_ts"], r["event_type"]), [0] * 256)
+        regs[r["bucket"]] = r["m_j"]
+    assert expected
+
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            got = {
+                (r["hour_ts"], r["event_type"]): list(r["hll_regs"])
+                for r in hourly_rollup_hll(ev).collect()
+            }
+            assert got == expected, ansi
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)

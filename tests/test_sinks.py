@@ -350,6 +350,26 @@ def test_staging_protocols_do_not_cross_heal(spark, tmp_path):
     assert {r["_key"]: r["v"] for r in read_upserted(spark, path).collect()} == before
 
 
+def test_incremental_upsert_refuses_flat_table(spark, tmp_path):
+    """An incremental upsert onto a flat table (written by upsert_by_key)
+    must refuse: its new _bucket= partitions would shadow the flat part
+    files in partition discovery, and every reader would silently see
+    only the batch's rows."""
+    import pytest
+
+    from token_etl_spark.io.sinks import read_upserted, upsert_by_key_incremental
+
+    path = str(tmp_path / "flat")
+    mk = lambda lo, hi: spark.createDataFrame(
+        [(f"k{i}", i) for i in range(lo, hi)], "_key string, v long"
+    )
+    upsert_by_key(spark, mk(0, 10), path)
+    with pytest.raises(ValueError, match="flat table"):
+        upsert_by_key_incremental(spark, mk(5, 15), path)
+    got = sorted(r["_key"] for r in read_upserted(spark, path).collect())
+    assert got == sorted(f"k{i}" for i in range(10))  # the table is untouched
+
+
 def test_markerless_state_validated_before_adoption(spark, tmp_path):
     """A legacy bucketed dir with no _n_buckets marker is validated
     structurally before adoption (r10 ADVICE): bucket ids >= the passed

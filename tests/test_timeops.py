@@ -2,7 +2,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from token_etl_spark.functions.timeops import HOUR, bucket, collapse_to_map, unix_seconds
+from token_etl_spark.functions.timeops import HOUR, bucket, changelog, unix_seconds
 
 
 def test_hour_bucket_truncates(spark):
@@ -19,7 +19,7 @@ def test_unix_seconds_truncates_subseconds(spark):
 
 def test_collapse_to_map_global(spark):
     df = spark.createDataFrame([(3600, 1.0), (7200, 2.0)], ["ts", "v"])
-    row = collapse_to_map(df, "ts", "v", "m").collect()[0]
+    row = df.select(changelog("ts", "v", "m")).collect()[0]
     assert row["m"] == {3600: 1.0, 7200: 2.0}
 
 
@@ -27,7 +27,7 @@ def test_collapse_to_map_duplicate_ts_last_sorted_wins(spark):
     # Duplicate timestamp keys: entries sorted by (ts, value); the
     # map keeps the last writer → the larger value, deterministically.
     df = spark.createDataFrame([(3600, 5.0), (3600, 1.0), (7200, 2.0)], ["ts", "v"])
-    row = collapse_to_map(df, "ts", "v", "m").collect()[0]
+    row = df.select(changelog("ts", "v", "m")).collect()[0]
     assert row["m"] == {3600: 5.0, 7200: 2.0}
 
 
@@ -35,5 +35,5 @@ def test_collapse_to_map_grouped(spark):
     df = spark.createDataFrame(
         [("a", 3600, 1.0), ("a", 7200, 2.0), ("b", 3600, 3.0)], ["k", "ts", "v"]
     )
-    rows = {r["k"]: r["m"] for r in collapse_to_map(df, "ts", "v", "m", ["k"]).collect()}
+    rows = {r["k"]: r["m"] for r in df.groupBy("k").agg(changelog("ts", "v", "m")).collect()}
     assert rows == {"a": {3600: 1.0, 7200: 2.0}, "b": {3600: 3.0}}

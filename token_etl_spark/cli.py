@@ -9,6 +9,10 @@ over parquet paths:
     python -m token_etl_spark.cli tokens   --transfers T --metadata M [--dapps D] --out O
     python -m token_etl_spark.cli dapps    --transfers T --registry D --out O
 
+``ingest`` upserts its block range into the key-bucketed transfers table
+(``pipelines/transfers.ingest_ranges``, retried on failure); read it back
+with ``io/sinks.read_upserted``.
+
 Plus the training-corpus extension pipelines:
 
     python -m token_etl_spark.cli corpus   --documents P --out O
@@ -41,7 +45,7 @@ import argparse
 
 from pyspark.sql import functions as F
 
-from token_etl_spark.io.sinks import upsert_by_key, write_parquet
+from token_etl_spark.io.sinks import write_parquet
 from token_etl_spark.io.sources import read_json_registry
 from token_etl_spark.session import get_spark
 
@@ -511,15 +515,16 @@ def main(argv: list[str] | None = None) -> None:
         return
 
     if args.cmd == "ingest":
-        from token_etl_spark.pipelines.transfers import enrich_transfers
+        from token_etl_spark.pipelines.transfers import enrich_transfers, ingest_ranges
 
-        out = enrich_transfers(
-            spark.read.parquet(args.raw),
-            spark.read.parquet(args.blocks),
-            args.lower,
-            args.upper,
+        raw = spark.read.parquet(args.raw)
+        blocks = spark.read.parquet(args.blocks)
+        ingest_ranges(
+            spark,
+            [(args.lower, args.upper)],
+            lambda lo, hi: enrich_transfers(raw, blocks, lo, hi),
+            args.out,
         )
-        upsert_by_key(spark, out, args.out)
     elif args.cmd == "wallets":
         from token_etl_spark.pipelines.wallets import wallet_balance_changelogs
 

@@ -11,7 +11,7 @@ from token_etl_spark.functions.timeops import (
     bucket,
     hour_bucket,
     day_bucket,
-    collapse_to_map,
+    changelog,
     changelog_entries,
 )
 
@@ -26,6 +26,6 @@ __all__ = [
     "bucket",
     "hour_bucket",
     "day_bucket",
-    "collapse_to_map",
+    "changelog",
     "changelog_entries",
 ]

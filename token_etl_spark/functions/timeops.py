@@ -15,7 +15,7 @@ Canonical time semantics (shared with every DuckDB oracle):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 HOUR = 3600
@@ -71,23 +71,13 @@ def changelog_entries(ts: Column | str, value: Column | str) -> Column:
     return F.sort_array(F.collect_list(F.struct(t.alias("ts"), v.alias("value"))))
 
 
-def collapse_to_map(
-    df: DataFrame,
-    ts: str,
-    value: str,
-    out: str,
-    group_by: list[str] | None = None,
-) -> DataFrame:
-    """A11 collapse-to-map: per-group (or global) ``Map<ts → value>``.
+def changelog(ts: Column | str, value: Column | str, out: str) -> Column:
+    """A11 collapse-to-map, an aggregate: ``Map<ts → value>`` named ``out``
+    over the group's rows.
 
     Reference pattern (BaseEnricher.scala:162-177 and six siblings):
     ``select(collect_list(struct(ts, value)))`` → ``map_from_entries``;
-    per-address variant WalletEnricher.scala:42-58. The global form
-    produces ONE row holding the whole changelog — fine for a per-token
-    summary document, and at scale the per-key grouped form keeps the map
-    bounded by the group's bucket count, not the table size.
+    per-address variant WalletEnricher.scala:42-58. Grouped per key, the
+    map is bounded by the group's bucket count, not the table size.
     """
-    entries = F.map_from_entries(changelog_entries(ts, value)).alias(out)
-    if group_by:
-        return df.groupBy(*group_by).agg(entries)
-    return df.select(entries)
+    return F.map_from_entries(changelog_entries(ts, value)).alias(out)

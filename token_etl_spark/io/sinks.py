@@ -303,11 +303,16 @@ def _check_bucket_count(spark: SparkSession, path: str, n_buckets: int) -> None:
                 "original bucket count"
             )
     elif fs.exists(hpath(path)):
-        ids = [
-            int(st.getPath().getName().split("=", 1)[1])
-            for st in fs.listStatus(hpath(path))
-            if st.getPath().getName().startswith("_bucket=")
-        ]
+        names = [st.getPath().getName() for st in fs.listStatus(hpath(path))]
+        flat = sorted(n for n in names if not n.startswith(("_", ".")))
+        if flat:
+            raise ValueError(
+                f"{path} holds data outside _bucket= partitions ({flat[:3]}): "
+                "it is a flat table (e.g. written by upsert_by_key), and new "
+                "_bucket= partitions would hide its rows from every reader — "
+                "rewrite it with upsert_by_key_incremental into a new path"
+            )
+        ids = [int(n.split("=", 1)[1]) for n in names if n.startswith("_bucket=")]
         bad = sorted(i for i in ids if i >= n_buckets)
         if bad:
             raise ValueError(

@@ -1,74 +1,17 @@
-"""Activity / volume / clustering operators (SURVEY §2.4 A3-A10).
+"""Wallet-cluster operators (SURVEY §2.4 A9/A10).
 
-Per-token time-series metrics the reference computes in
-BaseEnricher.scala: transaction counts per hour/day (A3, :204-208,
-239-243), the avg-tx-per-day quirk (A4, :213-220 — the "average" is the
-per-day count divided by 24, reproduced exactly), hourly trading volume
-(A5, :271-274), distinct active wallets (A6, :300-306 — exact
-countDistinct, not approximate: correctness tests hash-match), multi-agg
-dapp rollups (A7), collect_list rollups (A8 — wrapped in sort_array for
-determinism), and the wallet-cluster pivot (A9/A10, :412-435).
+The reference tags each wallet LOW/MEDIUM/HIGH by balance band and
+pivots the tags per timestamp (BaseEnricher.scala:412-435). The other
+per-token activity metrics of BaseEnricher.scala (A3-A8: transaction
+counts, the avg-tx-per-day quirk, volume, distinct wallets, dapp
+rollups) are computed by ``pipelines/tokens.enhance_tokens`` and
+``pipelines/dapps_pipeline.enrich_dapps``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from token_etl_spark.functions.timeops import DAY, HOUR, day_bucket, hour_bucket
-
-
-def tx_count(df: DataFrame, ts_seconds_col: str, width: int = HOUR) -> DataFrame:
-    """A3: count(*) per bucket."""
-    b = hour_bucket(F.col(ts_seconds_col)) if width == HOUR else day_bucket(F.col(ts_seconds_col))
-    return df.groupBy(b.alias("timestamp")).agg(F.count("*").alias("tx_count"))
-
-
-def avg_tx_per_day(df: DataFrame, ts_seconds_col: str) -> DataFrame:
-    """A4: per-day count / 24 — the reference's "average" (BaseEnricher.
-    scala:213-220). Not a true mean; reproduced exactly.
-    """
-    daily = tx_count(df, ts_seconds_col, width=DAY)
-    return daily.select(
-        "timestamp",
-        (F.col("tx_count") / F.lit(24.0)).alias("avg_tx_per_day"),
-    )
-
-
-def trading_volume(df: DataFrame, ts_seconds_col: str, value_col: str = "value") -> DataFrame:
-    """A5: sum(value) per hour."""
-    return df.groupBy(hour_bucket(F.col(ts_seconds_col)).alias("timestamp")).agg(
-        F.sum(value_col).alias("trading_volume")
-    )
-
-
-def unique_active_wallets(
-    df: DataFrame,
-    ts_seconds_col: str,
-    from_col: str = "_from",
-    to_col: str = "_to",
-) -> DataFrame:
-    """A6: distinct endpoints per hour via explode(array(from,to)).
-
-    Reference: BaseEnricher.scala:300-306 — explode both endpoints then
-    exact countDistinct. Exact (not approx_count_distinct): the oracle
-    hash-match requires it; at 100 TB swap in approx_ with a documented
-    error budget if exactness is not contractual.
-    """
-    return (
-        df.withColumn("address", F.explode(F.array(F.col(from_col), F.col(to_col))))
-        .groupBy(hour_bucket(F.col(ts_seconds_col)).alias("timestamp"))
-        .agg(F.countDistinct("address").alias("unique_wallets"))
-    )
-
-
-def address_rollup(df: DataFrame, group_cols: list[str], address_col: str = "address") -> DataFrame:
-    """A8: collect_list of addresses per group, sort_array-wrapped so the
-    output is deterministic (the reference's bare collect_list order is
-    partition-dependent, BaseEnricher.scala:345-346)."""
-    return df.groupBy(*group_cols).agg(
-        F.sort_array(F.collect_list(address_col)).alias("addresses")
-    )
 
 
 def wallet_cluster(balance_col: str = "balance", low: float = 1000.0, high: float = 100000.0):

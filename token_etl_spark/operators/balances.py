@@ -1,15 +1,10 @@
-"""Balance time-series operators (SURVEY §2.7 U1, §2.4 A1, §2.5 W1-W2).
+"""Wallet hourly balance stage (SURVEY §2.7 U1, §2.4 A1, §2.5 W1).
 
-Reference lifecycle (BaseEnricher.scala:87-133, driven from
-WalletEnricher.scala): hour-bucket each transfer, unpivot the edge into
-signed endpoint rows (sender −value / receiver +value), hash-aggregate
-net flow per (hour, address), then a cumulative-sum window for the
-running balance and a lag window for the previous balance.
-
-Scale notes: the unpivot is an ``explode`` of a 2-element struct array —
-row count merely doubles, no shuffle; the aggregation and both windows
-share the same ``address`` hash partitioning, so Spark plans ONE shuffle
-(exchange on address) reused across agg + window stages.
+Reference lifecycle (``calculateBalance``, BaseEnricher.scala:87-128,
+shared by the wallet enricher and the token enricher's holder and whale
+changelogs): hour-bucket each transfer, unpivot the edge into signed
+endpoint rows (sender −value / receiver +value), aggregate net flow per
+(hour, address), then a cumulative-sum window for the running balance.
 """
 
 from __future__ import annotations
@@ -17,112 +12,54 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from token_etl_spark.functions.timeops import hour_bucket
+from token_etl_spark.functions.timeops import hour_bucket, require_timestamp
 
 
-def signed_endpoint_unpivot(
-    df: DataFrame,
-    from_col: str = "_from",
-    to_col: str = "_to",
-    value_col: str = "value",
-) -> DataFrame:
-    """U1: edge → two signed endpoint rows (sender −v, receiver +v).
+def wallet_hour_balances(transfers: DataFrame, pipeline: str) -> DataFrame:
+    """transfers → one row per (token, wallet, hour) the wallet moved in:
+    ``contract_address``, ``address``, ``hour_ts``, ``net`` flow,
+    transfers ``sent``, value ``received`` and the running ``balance``
+    after the hour. Hours a wallet did not move in are absent.
 
-    The reference builds this as a union of two renamed projections
-    (BaseEnricher.scala:91-102); it also uses the equivalent
-    ``explode(array(_from,_to))`` elsewhere (:303-304). We use a single
-    explode of ``[(from, −v), (to, +v)]`` — one pass over the input, both
-    forms agree (tested).
+    A transfer without a timestamp raises an error naming ``pipeline``
+    and ``transact_at``. One exchange on (token, wallet) serves the
+    aggregate and the balance window both; Catalyst prunes whichever of
+    ``net``/``sent``/``received`` a caller does not read.
     """
-    pair = F.array(
-        F.struct(F.col(from_col).alias("address"), (-F.col(value_col)).alias("signed_value")),
-        F.struct(F.col(to_col).alias("address"), F.col(value_col).alias("signed_value")),
+    hour = hour_bucket(
+        require_timestamp(F.col("transact_at").cast("long"), pipeline)
     )
-    return (
-        df.withColumn("_endpoint", F.explode(pair))
-        .withColumn("address", F.col("_endpoint.address"))
-        .withColumn("signed_value", F.col("_endpoint.signed_value"))
-        .drop("_endpoint")
+    # one row per transfer endpoint, the sender (-value, sent) and the
+    # receiver (+value, received); a self-transfer nets to zero and
+    # still counts once as sent
+    endpoints = F.array(
+        F.struct(
+            F.col("_from").alias("address"),
+            (-F.col("value")).alias("flow"),
+            F.lit(1).alias("sent"),
+            F.lit(None).cast(transfers.schema["value"].dataType).alias("received"),
+        ),
+        F.struct(
+            F.col("_to").alias("address"),
+            F.col("value").alias("flow"),
+            F.lit(0).alias("sent"),
+            F.col("value").alias("received"),
+        ),
     )
-
-
-def hourly_net_flow(df: DataFrame, ts_seconds_col: str = "transact_at_sec") -> DataFrame:
-    """A1: net flow per (hour, address): ``sum(signed_value)``.
-
-    Input: unpivoted frame from :func:`signed_endpoint_unpivot` with a
-    unix-seconds column. Reference: BaseEnricher.scala:104-107.
-    """
-    return (
-        df.withColumn("timestamp", hour_bucket(F.col(ts_seconds_col)))
-        .groupBy("timestamp", "address")
-        .agg(F.sum("signed_value").alias("hourly_balance"))
-    )
-
-
-def cumulative_balance(df: DataFrame) -> DataFrame:
-    """W1: running balance per address ordered by hour bucket.
-
-    Reference: BaseEnricher.scala:113-124 (rowsBetween unboundedPreceding).
-    """
-    w = (
-        Window.partitionBy("address")
-        .orderBy("timestamp")
+    running = (
+        Window.partitionBy("contract_address", "address")
+        .orderBy("hour_ts")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return df.withColumn("balance", F.sum("hourly_balance").over(w)).drop("hourly_balance")
-
-
-def with_prev_balance(df: DataFrame) -> DataFrame:
-    """W2: previous balance via lag(1) (BaseEnricher.scala:130-133)."""
-    w = Window.partitionBy("address").orderBy("timestamp")
-    return df.withColumn("pre_balance", F.lag("balance", 1).over(w))
-
-
-def calculate_balance(transfers: DataFrame) -> DataFrame:
-    """Full balance pipeline (BaseEnricher.scala:87-128): transfers edge
-    table (with string ``transact_at``) → (address, timestamp, balance).
-
-    The reference follows with a global ``orderBy(address, timestamp)``
-    (:126-127); sort order is not part of the value contract (Spark does
-    not guarantee order survives later transforms), so we order only at
-    final output sinks.
-    """
-    with_ts = transfers.withColumn("transact_at_sec", F.col("transact_at").cast("long"))
-    unpivoted = signed_endpoint_unpivot(with_ts)
-    return cumulative_balance(hourly_net_flow(unpivoted))
-
-
-def forward_fill(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_col: str,
-    scaffold_ts: DataFrame | None = None,
-) -> DataFrame:
-    """Densify a per-key time series onto the union of observed timestamps.
-
-    The reference does this with ``distinct addresses × distinct
-    timestamps`` crossJoin + left-outer join (WalletEnricher.scala:27-37,
-    J3/J4) — O(keys × timestamps) rows *materialized before* the join. At
-    100 TB that scaffold is the bottleneck, so the engine's canonical form
-    is: crossJoin the (small, distinct) timestamp list only — unavoidable
-    to densify — but carry the fill with ``last(value, ignorenulls)`` over
-    an address-partitioned window instead of re-joining balances row-by-
-    row. The scaffold here is distinct-keys × distinct-buckets, which for
-    hourly buckets over a bounded window is keys × (window_hours) — linear
-    in keys with a small constant, and the window fill is a single
-    per-key sort, not a second shuffle (same partitioning as the join).
-
-    Returns (key, ts, value) with value forward-filled per key (null
-    before a key's first observation).
-    """
-    ts_dim = scaffold_ts if scaffold_ts is not None else df.select(ts_col).distinct()
-    keys = df.select(key_col).distinct()
-    scaffold = keys.crossJoin(F.broadcast(ts_dim))
-    joined = scaffold.join(df, [key_col, ts_col], "left_outer")
-    w = (
-        Window.partitionBy(key_col)
-        .orderBy(ts_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return (
+        transfers.select("contract_address", hour.alias("hour_ts"), F.inline(endpoints))
+        # one exchange for the aggregate and the balance window both
+        .repartition("contract_address", "address")
+        .groupBy("contract_address", "address", "hour_ts")
+        .agg(
+            F.sum("flow").alias("net"),
+            F.sum("sent").alias("sent"),
+            F.sum("received").alias("received"),
+        )
+        .withColumn("balance", F.sum("net").over(running))
     )
-    return joined.withColumn(value_col, F.last(value_col, ignorenulls=True).over(w))

@@ -1170,8 +1170,8 @@ def vocab_growth(
     sizes. Only the final cumulative sum runs as a global-order window
     — over the BUCKET frame, whose cardinality is n_docs/bucket_size
     (already thousands of times smaller than the corpus; for a curve
-    with millions of buckets, the two-phase cumsum in
-    ``operators/balances`` drops in).
+    with millions of buckets, the two-phase cumsum of
+    :func:`token_budget_cap` drops in).
     """
     # TRUE integral division (`div` truncates toward zero, exactly like
     # DuckDB's integer `//`): double-division-then-cast would lose

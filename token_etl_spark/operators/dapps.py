@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from token_etl_spark.functions.keys import strip_collection_prefix
-from token_etl_spark.functions.timeops import hour_bucket
 
 
 def filter_registry(raw: DataFrame, chain_prefix: str = "0x38") -> DataFrame:
@@ -66,24 +65,4 @@ def match_dapp_endpoints(
     reg = F.broadcast(explode_registry(registry))
     return endpoints.join(reg, endpoints["address"] == reg["dapp_address"], "inner").drop(
         "dapp_address"
-    )
-
-
-def dapp_changelog(matched: DataFrame, ts_seconds_col: str) -> DataFrame:
-    """A7: per-hour distinct-dapp count + sorted info list
-    (BaseEnricher.scala:364-368)."""
-    return matched.groupBy(hour_bucket(F.col(ts_seconds_col)).alias("timestamp")).agg(
-        F.countDistinct("idCMC").alias("dapp_count"),
-        F.sort_array(F.collect_list(F.col("idCMC"))).alias("dapp_ids"),
-    )
-
-
-def dapp_rollup(matched: DataFrame) -> DataFrame:
-    """DappEnricher.scala:38-40: group to one row per dapp with the sorted
-    interacting-address list and a ``{token}_{idCMC}``-style key, default
-    image back-fill (na.fill parity, :47-48)."""
-    return (
-        matched.groupBy("idCMC", "name", "image")
-        .agg(F.sort_array(F.collect_set("address")).alias("addresses"))
-        .withColumn("image", F.coalesce(F.col("image"), F.lit("default.png")))
     )

@@ -3,13 +3,13 @@
 Reference semantics:
 - holder flag (BaseEnricher.scala:141-155): a wallet is a holder at a
   timestamp when ``balance > threshold`` OR (``pre_balance > threshold``
-  AND ``balance IS NULL``) — the boolean-combination predicate P7;
-  holder *count* per timestamp is ``sum(cast(isHolder as int))`` (A2,
-  :156-160).
+  AND ``balance IS NULL``) — the boolean-combination predicate P7. The
+  holder *count* per timestamp (A2, :156-160) is computed by
+  ``pipelines/tokens.enhance_tokens``.
 - whale flag (WalletEnricher.scala:23-25, F5): closure-captured
   ``balance >= circulatingSupply * threshold`` — here a plain native
-  comparison against a literal or a broadcast-joined per-token threshold
-  column (no UDF).
+  comparison against a broadcast-joined per-token threshold column (no
+  UDF).
 """
 
 from __future__ import annotations
@@ -24,21 +24,6 @@ def holder_flag(balance: Column, pre_balance: Column, threshold: float = 0.0) ->
         (balance > threshold) | ((pre_balance > threshold) & balance.isNull()),
         F.lit(True),
     ).otherwise(F.lit(False))
-
-
-def holder_count(df: DataFrame, flag_col: str = "isHolder", ts_col: str = "timestamp") -> DataFrame:
-    """A2: per-timestamp holder count as sum of boolean→int."""
-    return df.groupBy(ts_col).agg(
-        F.sum(F.col(flag_col).cast("int")).alias("holder_count")
-    )
-
-
-def whale_flag(balance: Column | str, circulating_supply: float | Column, threshold: float | Column) -> Column:
-    """F5 as a native expression: balance >= supply × threshold."""
-    supply = F.lit(circulating_supply) if isinstance(circulating_supply, float) else circulating_supply
-    thr = F.lit(threshold) if isinstance(threshold, float) else threshold
-    bal = F.col(balance) if isinstance(balance, str) else balance
-    return bal >= supply * thr
 
 
 def with_whale_flag(

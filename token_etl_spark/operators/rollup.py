@@ -161,23 +161,22 @@ def hourly_rollup_hll(
     # this rollup's plan — OPTIMIZATION_r16.md). Same dense array
     # bit-for-bit: buckets are distinct per group and sorted, so the
     # scatter reproduces coalesce(map[b], 0) for every b in 0..m-1.
+    # Each entry's predecessor bucket comes from the bucket list shifted
+    # right by one behind a -1 sentinel, so no index below 1 is ever
+    # built (ANSI-safe without leaning on lazy CASE evaluation).
     entries = F.sort_array(F.collect_list(F.struct("bucket", "m_j"))).alias("_ent")
     ent = F.col("_ent")
     n = F.size(ent)
-    runs = F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.concat(
+    buckets = F.transform(ent, lambda e: e.getField("bucket"))
+    prev = F.concat(F.array(F.lit(-1).cast("long")), F.slice(buckets, 1, n - 1))
+    runs = F.zip_with(
+        ent,
+        prev,
+        lambda e, p: F.concat(
             F.array_repeat(
-                F.lit(0),
-                (
-                    F.element_at(ent, i).getField("bucket")
-                    - F.when(i == 1, F.lit(-1).cast("long")).otherwise(
-                        F.element_at(ent, i - 1).getField("bucket")
-                    )
-                    - F.lit(1)
-                ).cast("int"),
+                F.lit(0), (e.getField("bucket") - p - F.lit(1)).cast("int")
             ),
-            F.array(F.element_at(ent, i).getField("m_j")),
+            F.array(e.getField("m_j")),
         ),
     )
     tail = F.array_repeat(

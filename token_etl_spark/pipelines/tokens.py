@@ -14,7 +14,9 @@ becomes the grouping key, and the transfers are scanned once (SURVEY §4
 below it:
 
 1. per (token, wallet, hour): net flow, transfers sent, value received —
-   and, over a running-sum window, the wallet's balance after the hour;
+   and, over a running-sum window, the wallet's balance after the hour
+   (``operators/balances.wallet_hour_balances``, the wallet pipeline's
+   stage too);
 2. per (token, hour): tx count, volume, unique wallets, holders, whales
    and dapps touched;
 3. per token: every changelog map, the daily one included, in one
@@ -32,18 +34,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from token_etl_spark.functions.keys import strip_collection_prefix
-from token_etl_spark.functions.timeops import (
-    changelog_entries,
-    day_bucket,
-    hour_bucket,
-    require_timestamp,
-)
+from token_etl_spark.functions.timeops import changelog, changelog_entries, day_bucket
+from token_etl_spark.operators.balances import wallet_hour_balances
 from token_etl_spark.operators.dapps import explode_registry
-
-
-def _changelog(ts: str, value: str, out: str):
-    """Per-token A11 collapse: Map<bucket_ts → value>."""
-    return F.map_from_entries(changelog_entries(ts, value)).alias(out)
 
 
 def enhance_tokens(
@@ -66,30 +59,6 @@ def enhance_tokens(
     if start_ts is not None and end_ts is not None:
         # S4 semantics: contract/time predicate pushed into the scan
         scoped = scoped.filter(ts.between(start_ts, end_ts))
-    hour = hour_bucket(require_timestamp(ts, "enhance_tokens"))
-
-    # 1. per (token, wallet, hour): one row per transfer endpoint, the
-    # sender (-value, sent) and the receiver (+value, received); a
-    # self-transfer nets to zero and still counts once as sent
-    endpoints = F.array(
-        F.struct(
-            F.col("_from").alias("address"),
-            (-F.col("value")).alias("flow"),
-            F.lit(1).alias("sent"),
-            F.lit(None).cast(transfers.schema["value"].dataType).alias("received"),
-        ),
-        F.struct(
-            F.col("_to").alias("address"),
-            F.col("value").alias("flow"),
-            F.lit(0).alias("sent"),
-            F.col("value").alias("received"),
-        ),
-    )
-    running = (
-        Window.partitionBy("contract_address", "address")
-        .orderBy("hour_ts")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     dim = F.broadcast(
         token_metadata.select(
             "contract_address",
@@ -98,18 +67,9 @@ def enhance_tokens(
             (F.col("circulating_supply") * F.col("whale_threshold")).alias("whale_min"),
         )
     )
-    wallets = (
-        scoped.select("contract_address", hour.alias("hour_ts"), F.inline(endpoints))
-        # one exchange for the aggregate and the balance window both
-        .repartition("contract_address", "address")
-        .groupBy("contract_address", "address", "hour_ts")
-        .agg(
-            F.sum("flow").alias("net"),
-            F.sum("sent").alias("sent"),
-            F.sum("received").alias("received"),
-        )
-        .withColumn("balance", F.sum("net").over(running))
-        .join(dim.select("contract_address", "whale_min"), "contract_address")
+    # 1. per (token, wallet, hour)
+    wallets = wallet_hour_balances(scoped, "enhance_tokens").join(
+        dim.select("contract_address", "whale_min"), "contract_address"
     )
 
     # 2. per (token, hour)
@@ -152,14 +112,14 @@ def enhance_tokens(
         .withColumn("avg_tx", F.sum("tx").over(per_day) / F.lit(24.0))
     )
     maps = [
-        _changelog("hour_ts", "tx", "txChanges"),
-        _changelog("hour_ts", "volume", "tradingVolumeChanges"),
-        _changelog("hour_ts", "wallets", "uniqueAddressChanges"),
+        changelog("hour_ts", "tx", "txChanges"),
+        changelog("hour_ts", "volume", "tradingVolumeChanges"),
+        changelog("hour_ts", "wallets", "uniqueAddressChanges"),
         F.map_from_entries(
             F.array_distinct(changelog_entries("day_ts", "avg_tx"))
         ).alias("avgTransactionPerDayChanges"),
-        _changelog("hour_ts", "holders", "holderChanges"),
-        _changelog("hour_ts", "whales", "whaleChanges"),
+        changelog("hour_ts", "holders", "holderChanges"),
+        changelog("hour_ts", "whales", "whaleChanges"),
     ]
     if dapp_registry is not None:
         # only hours some dapp touched get an entry

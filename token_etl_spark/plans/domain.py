@@ -14,7 +14,7 @@ from token_etl_spark.functions.timeops import (
     DAY,
     HOUR,
     bucket,
-    changelog_entries,
+    changelog,
     hour_bucket,
     unix_seconds,
 )
@@ -341,9 +341,7 @@ def q_changelog_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end under the driver's hash gate. The raw-map form stays
     exact-value-tested in pytest."""
     hourly = q_hourly_volume(spark, sf_dir)
-    m = hourly.select(
-        F.map_from_entries(changelog_entries("hour_ts", "trading_volume")).alias("m")
-    )
+    m = hourly.select(changelog("hour_ts", "trading_volume", "m"))
     first_key = F.array_min(F.map_keys("m"))
     last_key = F.array_max(F.map_keys("m"))
     return m.select(
@@ -375,9 +373,7 @@ def q_changelog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     evt_changelog_map stays rows-only; ROADMAP notes driver map-hash
     corner cases)."""
     hourly = q_hourly_volume(spark, sf_dir)
-    m = hourly.select(
-        F.map_from_entries(changelog_entries("hour_ts", "trading_volume")).alias("m")
-    )
+    m = hourly.select(changelog("hour_ts", "trading_volume", "m"))
     e = m.select(F.explode(F.map_entries("m")).alias("kv"))
     return e.select(
         F.col("kv.key").alias("hour_ts"), F.col("kv.value").alias("trading_volume")

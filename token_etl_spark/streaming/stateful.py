@@ -1,8 +1,9 @@
 """Stateful streaming: running balances as a streaming computation
 (SURVEY §7.2 "genuinely stateful").
 
-Batch recomputation (operators/balances.py) matches the reference's
-actual behavior; this module is the streaming-native variant: per-key
+Batch recomputation (``operators/balances.wallet_hour_balances``)
+matches the reference's actual behavior; this module is the
+streaming-native variant: per-key
 running totals carried in Spark state via ``applyInPandasWithState`` —
 each micro-batch folds its rows into the persisted per-user balance, so
 the cumulative series never recomputes history.
