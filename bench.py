@@ -20,6 +20,9 @@ versions, CPU model/count, OS image) — the r12 drift bisect proved the
 ENVIRONMENT moved (+40% on identical code and data) and nothing had
 recorded what it was, so every future drift investigation starts from
 recorded facts, not archaeology (VERDICT r12 item 2).
+
+A "codegen" field gives each headline query's generated-code layer over
+its timed runs: classes compiled and their summed compile milliseconds.
 """
 
 from __future__ import annotations
@@ -74,6 +77,19 @@ def env_stamp(spark) -> dict:
     except Exception:
         pass
     return stamp
+
+
+def codegen_counters(spark) -> tuple[int, int] | None:
+    """(classes compiled, summed compile nanoseconds) in this JVM so far:
+    Spark's ``CodegenMetrics`` compile count and ``CodeGenerator``'s
+    compile-time total. Best-effort — None when the JVM hides them."""
+    try:
+        jvm = spark.sparkContext._jvm
+        count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+        nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+        return int(count), int(nanos)
+    except Exception:
+        return None
 
 
 def ingest_stage_decomposition(spark, sf_dir: str) -> dict:
@@ -163,11 +179,13 @@ def main() -> None:
     timings: dict[str, float] = {}
     spread: dict[str, dict] = {}
     plan_stats: dict[str, dict] = {}
+    codegen: dict[str, dict] = {}
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     for name in BENCH_SET:
         runs: list[float] = []
         group = ""
+        cg0 = codegen_counters(spark)
         for i in range(n_runs):
             # job-group tag set BEFORE the timed window opens (a thread-
             # local assignment, nothing scheduled); counts are read after
@@ -177,6 +195,14 @@ def main() -> None:
             start = time.perf_counter()
             force(SPECS[name].fn(spark, sf_dir))
             runs.append(round(time.perf_counter() - start, 4))
+        # generated code compiled during the timed runs (read after the
+        # window closes, like the job counts below)
+        cg1 = codegen_counters(spark)
+        if cg0 and cg1:
+            codegen[name] = {
+                "compiles": cg1[0] - cg0[0],
+                "compile_ms": round((cg1[1] - cg0[1]) / 1e6, 1),
+            }
         timings[name] = sorted(runs)[len(runs) // 2]  # median
         spread[name] = {"runs": runs, "min": min(runs), "max": max(runs)}
         # per-query parallelism evidence (VERDICT r15 item 5): job/stage/
@@ -221,6 +247,7 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "env": env_stamp(spark),
         "plan_stats": plan_stats,
+        "codegen": codegen,
     }
     try:
         result["stages"] = {

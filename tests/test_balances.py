@@ -18,8 +18,8 @@ TRANSFERS = [
 ]
 
 
-def _df(spark, rows=TRANSFERS):
-    return spark.createDataFrame([(TOKEN, *r) for r in rows], SCHEMA)
+def _df(spark, rows=TRANSFERS, token=TOKEN):
+    return spark.createDataFrame([(token, *r) for r in rows], SCHEMA)
 
 
 def _balances(spark, rows=TRANSFERS):
@@ -92,6 +92,67 @@ def test_forward_fill_matches_crossjoin_reference(spark):
         "x": {3600: -10.0, 7200: -10.0, 10800: -30.0},
         "y": {7200: -5.0, 10800: -5.0},
     }
+
+
+def _dense(spark, rows, token=TOKEN):
+    out = wallet_balance_changelogs(
+        _df(spark, rows, token), fixtures.token_metadata_df(spark), densify=True
+    )
+    return {
+        r["address"]: {ts: (v["isWhale"], v["balance"]) for ts, v in r["balanceChangeLogs"].items()}
+        for r in out.collect()
+    }
+
+
+def test_densify_wallet_first_seen_after_token_start(spark):
+    # c first moves at 14400, two token hours after the token's first;
+    # its map starts there. Hour 10800 has no transfer of the token, so
+    # no wallet gets it.
+    got = _dense(
+        spark,
+        [
+            ("wallets/x", "wallets/a", 10.0, "3600"),
+            ("wallets/y", "wallets/b", 5.0, "7200"),
+            ("wallets/z", "wallets/c", 7.0, "14400"),
+            ("wallets/a", "wallets/c", 3.0, "18000"),
+        ],
+    )
+    assert {ts: b for ts, (_, b) in got["c"].items()} == {14400: 7.0, 18000: 10.0}
+    assert {ts: b for ts, (_, b) in got["a"].items()} == {
+        3600: 10.0, 7200: 10.0, 14400: 10.0, 18000: 7.0
+    }
+    assert {ts: b for ts, (_, b) in got["b"].items()} == {7200: 5.0, 14400: 5.0, 18000: 5.0}
+
+
+def test_densify_whale_flag_on_carried_hours(spark):
+    # VALAS's whale line is 500: a carried balance keeps its flag, the
+    # exact line included, and a drop below it clears the flag from
+    # that hour on
+    got = _dense(
+        spark,
+        [
+            ("wallets/x", "wallets/a", 500.0, "3600"),
+            ("wallets/y", "wallets/b", 1.0, "7200"),
+            ("wallets/a", "wallets/y", 200.0, "10800"),
+            ("wallets/z", "wallets/w", 1.0, "14400"),
+        ],
+    )
+    assert got["a"] == {
+        3600: (True, 500.0),
+        7200: (True, 500.0),
+        10800: (False, 300.0),
+        14400: (False, 300.0),
+    }
+
+
+def test_densify_token_without_metadata_is_never_whale(spark):
+    got = _dense(
+        spark,
+        [("wallets/x", "wallets/a", 1e12, "3600"), ("wallets/y", "wallets/b", 1.0, "7200")],
+        token="0x" + "ee" * 20,
+    )
+    assert got["a"] == {3600: (False, 1e12), 7200: (False, 1e12)}
+    assert {w for cells in got.values() for w, _ in cells.values()} == {False}
 
 
 def test_hourly_net_flow_zero_value_and_gap(spark):

@@ -240,3 +240,34 @@ def test_keep_best_equals_keep_list_under_id_score(spark):
     a = {(r.doc_id, r.keep) for r in dedup_keep_list(pairs, all_ids).collect()}
     b = {(r.doc_id, r.keep) for r in keep_best_in_cluster(comps, scored).collect()}
     assert a == b
+
+
+def test_connected_components_cap_guard_reuses_last_probe(spark):
+    """On the cap-hit path the guard re-probes only when the final round
+    was not probed already: with ``probe_every`` dividing
+    ``max_iterations`` it adds no job beyond the in-loop probes (one
+    probe's jobs over the probe-free run), and with a cadence that
+    misses the final round it adds exactly one probe. Both still raise.
+    A 64-node chain cannot converge in 3 rounds."""
+    import pytest
+
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(63)], "id_a long, id_b long")
+
+    def jobs(max_iterations: int, probe_every: int) -> int:
+        group = f"cc-cap-{max_iterations}-{probe_every}"
+        sc.setJobGroup(group, group)
+        try:
+            if probe_every:
+                with pytest.raises(RuntimeError, match="max_iterations"):
+                    connected_components(pairs, max_iterations=max_iterations, probe_every=probe_every)
+            else:
+                connected_components(pairs, max_iterations=max_iterations, probe_every=0)
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one_probe = jobs(1, 1) - jobs(1, 0)  # final round probed in the loop
+    assert one_probe >= 1
+    # rounds 2 (probed in the loop) and 3 (probed by the guard)
+    assert jobs(3, 2) - jobs(3, 0) == 2 * one_probe

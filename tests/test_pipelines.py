@@ -180,5 +180,6 @@ def test_wallet_changelogs_refuse_transfer_without_timestamp(spark, transfers):
         F.when(F.col("_key") == first, None).otherwise(F.col("transact_at")),
     )
     meta = fixtures.token_metadata_df(spark)
-    with pytest.raises(Exception, match=r"wallet_balance_changelogs: .*transact_at"):
-        wallet_balance_changelogs(broken, meta, densify=False).collect()
+    for densify in (False, True):
+        with pytest.raises(Exception, match=r"wallet_balance_changelogs: .*transact_at"):
+            wallet_balance_changelogs(broken, meta, densify=densify).collect()

@@ -268,6 +268,11 @@ def minhash_dedup_clusters(
     for borderline near-dups the cluster form is the standard
     at-scale approximation (verify=False skips verification entirely and
     trusts band collisions, the cheapest and loosest setting).
+
+    Raises ``RuntimeError`` (eagerly, at the call) when the star-edge
+    graph does not converge within ``connected_components``' default
+    ``max_iterations``, instead of returning components that are not
+    the cluster-min ids.
     """
     from token_etl_spark.operators.graph import connected_components
 

@@ -103,6 +103,7 @@ def connected_components(
     # the same exchange (ReuseExchange serves them within the one job),
     # and rounds ≥ 2 use the round checkpoints — skipping the init
     # barrier saves a full job + barrier per CC call (measured A/B).
+    changed = 0  # the last probe's count: 1 when a label still moved
     for it in range(max_iterations):
         # hop: min label among neighbors
         neighbor_min = (
@@ -153,9 +154,13 @@ def connected_components(
         # cap exit with probing on: labels may not have converged, and
         # every caller's keep/representative rule assumes the fixpoint
         # (component == cluster-min id) — fail loudly instead of
-        # silently mislabeling. A limit-1 narrow scan of the final
-        # round's checkpoint blocks; runs ONLY on the cap-hit path.
-        if new_labels.where(F.col("_changed")).limit(1).count() > 0:
+        # silently mislabeling. The final round's probe already saw
+        # changes when the cadence landed on it; otherwise a limit-1
+        # narrow scan of that round's checkpoint blocks decides. Runs
+        # ONLY on the cap-hit path.
+        if max_iterations % probe_every:
+            changed = new_labels.where(F.col("_changed")).limit(1).count()
+        if changed > 0:
             raise RuntimeError(
                 f"connected_components hit max_iterations={max_iterations} "
                 "without converging; raise max_iterations (the component ="
@@ -176,7 +181,12 @@ def dedup_keep_list(
     all singletons (ids appearing in no pair). ``pairs_ordered_distinct``
     passes through to :func:`connected_components` (skip the edge-dedup
     shuffle when the pair set is already distinct with id_a < id_b — the
-    ``minhash_dedup`` / verified-LSH output contract)."""
+    ``minhash_dedup`` / verified-LSH output contract).
+
+    Raises ``RuntimeError`` (eagerly, at the call) when the pair graph
+    does not converge within ``connected_components``' default
+    ``max_iterations`` — a keep list from unconverged labels would keep
+    the wrong documents."""
     comps = connected_components(pairs, pairs_ordered_distinct=pairs_ordered_distinct)
     # component IS the cluster-min id (the connected_components contract
     # keep_list_from_components already relies on), so the representative

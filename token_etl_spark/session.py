@@ -3,7 +3,9 @@
 Replaces the reference's hand-rolled session builder
 (reference: src/main/scala/common/Spark.scala:13-19 — local[8], fixed
 executor conf) with a factory tuned for correctness-reproducibility
-(UTC, ANSI off) and scale (AQE, skew-join handling, Arrow).
+(UTC, ANSI at the Spark default — on in Spark 4) and scale (AQE,
+skew-join handling, Arrow, a code-generation cache that holds the
+engine's working set).
 
 On a real cluster the same conf applies; only ``master`` changes. The
 shuffle-partition count is sized for the local test box via env var and
@@ -27,8 +29,10 @@ def get_spark(app_name: str = "token_etl_spark", master: str | None = None) -> S
     DuckDB-oracle hash match):
       - session time zone pinned to UTC (all time bucketing is integer
         arithmetic on unix seconds; see functions/timeops.py),
-      - ANSI mode left at Spark default so double arithmetic matches the
-        reference's permissive casts.
+      - ANSI mode left at the Spark default, which is ON in Spark 4
+        (``spark.sql.ansi.enabled=true``): an invalid cast, index or
+        overflow raises instead of yielding NULL, so operators must not
+        rely on lazy ``CASE`` evaluation to hide one.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -54,6 +58,17 @@ def get_spark(app_name: str = "token_etl_spark", master: str | None = None) -> S
         # (reference behavior on Spark 3.4; entries are pre-sorted so the
         # winner is deterministic — functions/timeops.py).
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+        # Generated-class cache (static: read once, when the session is
+        # built). Spark's default of 100 is below the working set, so the
+        # LRU evicted every class before its query ran again and each
+        # run re-compiled (Janino) and re-JITted it. Measured on the
+        # perfbench workloads in one session (4 slots): one query_mix
+        # pass generates ~280 classes, one token_etl unit ~205, and the
+        # query_mix warm-up + 2 units then token_etl warm-up + 2 units
+        # retain 567 distinct classes. 1000 holds them with headroom; its
+        # cost after that run and a full GC is +16 MB heap (124 → 140 MB)
+        # and +4 MB Metaspace (180 → 183 MB). PERF.md, "Codegen cache".
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if master is not None:
         builder = builder.master(master)
