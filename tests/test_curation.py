@@ -103,13 +103,10 @@ def test_pii_scan_counts_and_redaction(spark):
 
 def test_quantile_band_filter_exact_and_approx(spark):
     df = spark.range(1, 101).select(F.col("id").alias("v"))
-    kept = C.quantile_band_filter(df, "v", 0.05, 0.95, exact=True)
+    kept = C.quantile_band_filter(df, "v", 0.05, 0.95)
     vals = sorted(r.v for r in kept.collect())
     # p05 of 1..100 ≈ 5.95, p95 ≈ 95.05 → keep 6..95
     assert vals[0] == 6 and vals[-1] == 95
-    approx = C.quantile_band_filter(df, "v", 0.05, 0.95, exact=False)
-    n = approx.count()
-    assert 85 <= n <= 95  # sketch boundaries may shift by a rank or two
 
 
 def test_quantile_band_filter_no_driver_jobs(spark):
@@ -188,9 +185,6 @@ def test_cross_corpus_dedup_removes_exact_matches(spark):
     kept = C.cross_corpus_dedup(docs, ref)
     assert sorted(r.doc_id for r in kept.collect()) == [11]
     assert "_digest" not in kept.columns
-    # broadcast variant agrees
-    kept_b = C.cross_corpus_dedup(docs, ref, broadcast_reference=True)
-    assert sorted(r.doc_id for r in kept_b.collect()) == [11]
 
 
 def test_importance_weights_separates_target_like_docs(spark):
@@ -250,30 +244,6 @@ def test_bigram_lm_quality_hand_computed(spark):
     # the reference doc scores itself: 3/4 + 2/3 + 3/4
     assert out[1].n_bigrams == 3
     assert abs(out[1].score - (3 / 4 + 2 / 3 + 3 / 4)) < 1e-12
-
-
-def test_importance_weights_fast_bucket_path(spark, sf_dir):
-    """portable=False (xxhash64 bucketing) produces the same SHAPE of
-    scoring — identical row set, n_bigrams identical (bucketing does not
-    change bigram counts), scores valid — while the portable md5 form
-    stays the oracle default. Scores differ (different bucket
-    assignment), so equality is checked on the hash-independent columns
-    and score finiteness."""
-    import math
-
-    from token_etl_spark.io.sources import load_table
-    from token_etl_spark.operators.curation import importance_weights
-
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    a = {r.doc_id: r for r in importance_weights(docs, ("src0",)).collect()}
-    b = {
-        r.doc_id: r
-        for r in importance_weights(docs, ("src0",), portable=False).collect()
-    }
-    assert set(a) == set(b)
-    for k in a:
-        assert a[k].n_bigrams == b[k].n_bigrams
-        assert math.isfinite(b[k].score) and b[k].score >= 0
 
 
 def test_temperature_weights_hand_computed(spark):
@@ -492,30 +462,20 @@ def test_url_canonicalize_idempotent(spark):
 
 def test_calibrate_scores_null_scores_kept_and_shuffle_join_path(spark):
     """ADVICE r7 (low): NULL-score rows are KEPT with NULL pct/bin (left
-    join — not silently dropped), and broadcast_pct=False produces the
-    same values through the co-partitioned shuffle join (the near-unique
-    float scale path that must not OOM-broadcast the pct map)."""
+    join — not silently dropped)."""
     rows = [
         ("d1", "a", 1), ("d2", "a", 2), ("d3", "a", None),
         ("d4", "b", 10), ("d5", "b", 20),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "source", "score"])
-    for bcast in (True, False):
-        out = {
-            r["doc_id"]: (r["pct"], r["bin"])
-            for r in C.calibrate_scores(
-                df, "score", "source", n_bins=4, broadcast_pct=bcast
-            ).collect()
-        }
-        assert len(out) == 5  # NULL-score row survives
-        assert out["d3"] == (None, None)  # and is unscored, not bin 3
-        assert out["d1"] == (0.5, 2) and out["d2"] == (1.0, 3)
-        assert out["d4"] == (0.5, 2) and out["d5"] == (1.0, 3)
-    # broadcast_pct=False must not plan a broadcast of the pct map
-    plan = C.calibrate_scores(
-        df, "score", "source", broadcast_pct=False
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" not in plan
+    out = {
+        r["doc_id"]: (r["pct"], r["bin"])
+        for r in C.calibrate_scores(df, "score", "source", n_bins=4).collect()
+    }
+    assert len(out) == 5  # NULL-score row survives
+    assert out["d3"] == (None, None)  # and is unscored, not bin 3
+    assert out["d1"] == (0.5, 2) and out["d2"] == (1.0, 3)
+    assert out["d4"] == (0.5, 2) and out["d5"] == (1.0, 3)
 
 
 # --- domain reputation gate ---------------------------------------------------

@@ -173,20 +173,6 @@ def test_simhash_neardup_equals_allpairs_hamming(spark):
     }
 
 
-def test_minhash_clusters_unverified_superset(spark):
-    """verify=False keeps at least the verified clusters' members."""
-    from token_etl_spark.operators.dedup import minhash_dedup_clusters
-
-    rows = [(i, "the same exact duplicated text content") for i in range(4)] + [
-        (99, "another unrelated piece of writing entirely different")
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    verified = {r.id for r in minhash_dedup_clusters(df).collect()}
-    loose = {r.id for r in minhash_dedup_clusters(df, verify=False).collect()}
-    assert verified <= loose
-    assert verified == {0, 1, 2, 3}
-
-
 def test_duplicated_spans_exact_values(spark):
     """Hand-computed ExactSubstr stats on a 3-doc corpus with k=4:
     docs 10 and 11 share an 8-token prefix (5 duplicated windows whose
@@ -284,24 +270,6 @@ def test_dedup_spans_rewrite_internal_repeat_and_identical_docs(spark):
     assert out[2].cleaned == "x y z w" and out[2].n_removed == 4
     assert out[3].n_removed == 0 and out[3].cleaned == rows[2][1]
     assert out[4].n_removed == 8 and out[4].cleaned == ""
-
-
-def test_span_fp_hash_form_equivalent(spark, sf_dir):
-    """portable_fp=False (two-xxhash64 struct fingerprints) produces the
-    same statistics and rewrites as the md5 oracle form on the real
-    documents table — the fingerprint only needs to be injective."""
-    from token_etl_spark.io.sources import load_table
-    from token_etl_spark.operators.dedup import dedup_spans_rewrite, duplicated_spans
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    a = sorted(map(tuple, duplicated_spans(docs, k=8).collect()))
-    b = sorted(map(tuple, duplicated_spans(docs, k=8, portable_fp=False).collect()))
-    assert a == b
-    c = sorted(map(tuple, dedup_spans_rewrite(docs, k=8).collect()))
-    d = sorted(
-        map(tuple, dedup_spans_rewrite(docs, k=8, portable_fp=False).collect())
-    )
-    assert c == d
 
 
 def test_containment_catches_what_jaccard_misses(spark):
@@ -451,19 +419,3 @@ def test_weighted_minhash_tf_cap_applies(spark):
     # identical docs are 1.0 regardless of cap; the cap is exercised by
     # the expansion arrays staying <= 4 elements (would OOM-scale otherwise)
     assert len(out) == 1 and abs(out[0].wjaccard - 1.0) < 1e-12
-
-
-def test_weighted_minhash_share_counts_is_output_identical(spark, sf_dir):
-    """share_counts=True (eager count-frame checkpoint, the 100 TB
-    single-pass form) must emit exactly the pairs of the default
-    recompute form."""
-    from token_etl_spark.io.sources import load_table
-    from token_etl_spark.operators.dedup import weighted_minhash_dedup
-
-    docs = load_table(spark, sf_dir, "documents").limit(150)
-    key = lambda df: {
-        (r["id_a"], r["id_b"], round(r["wjaccard"], 9)) for r in df.collect()
-    }
-    assert key(weighted_minhash_dedup(docs, share_counts=True)) == key(
-        weighted_minhash_dedup(docs)
-    )

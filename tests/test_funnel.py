@@ -67,11 +67,6 @@ def test_funnel_onepass_equals_chained_on_real_events(spark, sf_dir):
         key(r) for r in funnel_reach_onepass(ev, steps, window_s=86_400).collect()
     )
     assert got == exp and got
-    # funnel_counts (both reach plans) agree too
-    cc = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
-    assert cc(funnel_counts(ev, steps, onepass=True)) == cc(
-        funnel_counts(ev, steps, onepass=False)
-    )
 
 
 def test_funnel_greedy_earliest_qualifying(spark):

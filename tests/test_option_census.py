@@ -1,0 +1,141 @@
+"""Every boolean option of the package is set to its other value somewhere
+that runs in production.
+
+A boolean-default parameter doubles the configurations a function has to
+keep correct. When only tests pass the non-default value, no pipeline,
+declared query, CLI command or benchmark ever runs that side, and the
+oracle sweep never checks it. This census parses the sources with ``ast``
+(no Spark session) and fails on any such option, so a one-sided knob is
+deleted instead of carried.
+
+A call site counts when it lives in the package, ``bench.py``,
+``__spark_entry__.py``, ``perfbench/`` (outside its tests) or ``scripts/``
+(outside the ``probe_*.py`` experiments). It sets an option when it passes
+a value other than the default, by keyword or by position: a different
+literal, or any non-literal expression. Calls are matched by function
+name, so a same-named function elsewhere can only make the census more
+lenient, never flag a used option.
+"""
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "token_etl_spark"
+
+
+def _production_sources() -> list[Path]:
+    files = sorted(PACKAGE.rglob("*.py"))
+    files += [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    files += sorted(
+        p for p in (ROOT / "perfbench").rglob("*.py") if "tests" not in p.parts
+    )
+    files += sorted(
+        p for p in (ROOT / "scripts").glob("*.py") if not p.name.startswith("probe_")
+    )
+    return [p for p in files if p.is_file()]
+
+
+def _bool_options(tree: ast.Module, rel: str):
+    """(function name, parameter, position or None, default, where) for
+    every parameter of a function defined in ``tree`` whose default is a
+    ``bool`` literal. ``position`` is the index a positional argument
+    binds to (``None`` for keyword-only), counting ``self``/``cls`` out
+    of methods."""
+    for node in ast.walk(tree):
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        a = node.args
+        positional = a.posonlyargs + a.args
+        skip = 1 if positional and positional[0].arg in ("self", "cls") else 0
+        first_default = len(positional) - len(a.defaults)
+        for i, (arg, default) in enumerate(
+            zip(positional[first_default:], a.defaults), start=first_default
+        ):
+            if isinstance(default, ast.Constant) and isinstance(default.value, bool):
+                yield node.name, arg.arg, i - skip, default.value, f"{rel}:{node.lineno}"
+        for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+            if isinstance(default, ast.Constant) and isinstance(default.value, bool):
+                yield node.name, arg.arg, None, default.value, f"{rel}:{node.lineno}"
+
+
+def _call_name(call: ast.Call) -> str | None:
+    f = call.func
+    if isinstance(f, ast.Name):
+        return f.id
+    if isinstance(f, ast.Attribute):
+        return f.attr
+    return None
+
+
+def _sets(value: ast.expr, default: bool) -> bool:
+    """Whether passing ``value`` can select the non-default side."""
+    return not (isinstance(value, ast.Constant) and value.value is default)
+
+
+def census() -> tuple[list[tuple], list[tuple]]:
+    """(all boolean options, those never set off their default)."""
+    trees = {
+        p: ast.parse(p.read_text(), filename=str(p)) for p in _production_sources()
+    }
+    options = []
+    for path, tree in trees.items():
+        if PACKAGE in path.parents:
+            options += _bool_options(tree, str(path.relative_to(ROOT)))
+    calls: dict[str, list[ast.Call]] = {}
+    for tree in trees.values():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and (name := _call_name(node)):
+                calls.setdefault(name, []).append(node)
+
+    def is_set(fn, param, pos, default) -> bool:
+        for call in calls.get(fn, ()):
+            for kw in call.keywords:
+                if kw.arg == param and _sets(kw.value, default):
+                    return True
+                if kw.arg is None:  # ``**kwargs``: may carry anything
+                    return True
+            positional = call.args
+            if any(isinstance(x, ast.Starred) for x in positional):
+                return True
+            if pos is not None and pos < len(positional):
+                if _sets(positional[pos], default):
+                    return True
+        return False
+
+    unset = [o for o in options if not is_set(*o[:4])]
+    return options, unset
+
+
+def test_every_boolean_option_is_set_in_production():
+    options, unset = census()
+    assert options, "census found no boolean options; the parser is broken"
+    assert not unset, (
+        "boolean options that no production call site sets to their other "
+        "value (delete the option and its branch, or give it a caller):\n"
+        + "\n".join(f"  {where} {fn}({p}={d})" for fn, p, _, d, where in unset)
+    )
+
+
+def test_census_sees_keyword_positional_and_expression_arguments():
+    src = (
+        "def f(a, flag=False, *, other=True):\n    pass\n"
+        "def g(x, y=True):\n    pass\n"
+        "def h(z=False):\n    pass\n"
+        "f(1, True)\nf(1, other=cond)\ng(1, y=True)\nh(z=False)\n"
+    )
+    tree = ast.parse(src)
+    options = list(_bool_options(tree, "m.py"))
+    assert [(o[0], o[1], o[2], o[3]) for o in options] == [
+        ("f", "flag", 1, False),
+        ("f", "other", None, True),
+        ("g", "y", 1, True),
+        ("h", "z", 0, False),
+    ]
+    calls = [n for n in ast.walk(tree) if isinstance(n, ast.Call)]
+    f_pos, f_kw, g_same, h_same = calls
+    assert _sets(f_pos.args[1], False)  # positional literal off the default
+    assert _sets(f_kw.keywords[0].value, True)  # any expression may set it
+    assert not _sets(g_same.keywords[0].value, True)  # passing the default
+    assert not _sets(h_same.keywords[0].value, False)

@@ -143,7 +143,7 @@ def test_lazy_checkpoint_helpers_launch_no_jobs(spark, sf_dir):
         D.shingle_arrays(docs).localCheckpoint(eager=False)
         D.minhash_index_frame(ref).localCheckpoint(eager=False)
         D.minhash_match_index(new, D.minhash_index_frame(ref))
-        D.minhash_dedup(docs, share_shingles=True)
+        D.minhash_dedup(docs)
         D.containment_pairs(docs)
         eager = sc.statusTracker().getJobIdsForGroup(group)
         assert not eager, f"helper plan construction launched jobs: {eager}"

@@ -486,11 +486,10 @@ def write_sorted(
     path: str,
     sort_cols: list[str],
     n_files: int = 32,
-    descending: bool = False,
 ) -> DataFrame:
-    """Globally-sorted parquet export (O1 at scale; the reference's
-    ``orderBy`` before its sink, WriteToFile.scala:6-12 — but a bare
-    ``orderBy`` + single writer is the 100 TB anti-plan).
+    """Globally-sorted (ascending) parquet export (O1 at scale; the
+    reference's ``orderBy`` before its sink, WriteToFile.scala:6-12 — but
+    a bare ``orderBy`` + single writer is the 100 TB anti-plan).
 
     Scale shape: ``repartitionByRange`` samples range boundaries and
     distributes rows so partition i's keys all sort before partition
@@ -505,7 +504,7 @@ def write_sorted(
     the written footers — the index a reader uses to binary-search files
     without opening them.
     """
-    cols = [F.col(c).desc() if descending else F.col(c).asc() for c in sort_cols]
+    cols = [F.col(c).asc() for c in sort_cols]
     out = df.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
     out.write.mode("overwrite").parquet(path)
     lead = sort_cols[0]

@@ -74,10 +74,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 def read_json_registry(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """Multiline-JSON side-file source (S5; DappEnricher.scala:29)."""
     reader = spark.read.option("multiline", "true")

@@ -24,10 +24,9 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_payload: list[str],
-    strict: bool = False,
 ) -> DataFrame:
     """For each left row, attach the latest right row with
-    ``right.ts <= left.ts`` (``<`` when ``strict``) and equal key.
+    ``right.ts <= left.ts`` and equal key.
 
     Returns all left columns plus ``right_payload`` columns (null when no
     earlier right row exists).
@@ -53,12 +52,11 @@ def asof_join(
         F.struct(*right_payload).alias("_r"),
     )
     unioned = l_tag.unionByName(r_tag)
-    # strict: right rows at equal ts must NOT be visible to left rows at
-    # that ts → order right rows AFTER left rows at the same timestamp.
-    side_order = F.col("_side").desc() if strict else F.col("_side").asc()
+    # right rows (side 0) sort before left rows at an equal timestamp, so
+    # a right row at exactly the left ts is visible (inclusive <=)
     w = (
         Window.partitionBy("_k")
-        .orderBy(F.col("_ts"), side_order)
+        .orderBy(F.col("_ts"), F.col("_side").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     filled = unioned.withColumn("_rfill", F.last("_r", ignorenulls=True).over(w))

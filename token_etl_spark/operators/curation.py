@@ -426,22 +426,17 @@ def quantile_band_filter(
     value_col: str,
     lo: float = 0.05,
     hi: float = 0.95,
-    exact: bool = True,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Keep rows whose ``value_col`` lies within the [lo, hi] quantile
     band (the standard outlier filter on doc length / token count).
 
     The 1-row quantile frame enters the plan as a broadcast crossJoin —
     no driver-side ``.collect()``, the whole thing is one job (same
-    pattern as plans/tpch3.py Q17). ``exact=False`` switches to
-    ``approx_percentile`` — at 100 TB the exact percentile's global sort
-    is the wrong plan; t-digest sketch merges map-side.
+    pattern as plans/tpch3.py Q17). The bounds are exact ``percentile``
+    values, which the DuckDB oracle replays.
     """
-    fn = "percentile" if exact else "approx_percentile"
-    extra = "" if exact else f", {accuracy}"
     q = df.agg(
-        F.expr(f"{fn}({value_col}, array({lo}D, {hi}D){extra})").alias("_q")
+        F.expr(f"percentile({value_col}, array({lo}D, {hi}D))").alias("_q")
     ).select(F.col("_q")[0].alias("_lo"), F.col("_q")[1].alias("_hi"))
     return (
         df.crossJoin(F.broadcast(q))
@@ -458,21 +453,18 @@ def cross_corpus_dedup(
     docs: DataFrame,
     reference: DataFrame,
     text_col: str = "text",
-    broadcast_reference: bool = False,
 ) -> DataFrame:
     """Drop documents whose normalized content already appears in a
     reference corpus (dedup of a new crawl against the already-trained
     corpus) — exact-match tier; near-dup tier is
     ``dedup.minhash_dedup_clusters`` over the union.
 
-    Anti-join on md5(normalized text). Default is a shuffled anti-join
-    (both sides TB-scale); pass ``broadcast_reference=True`` when the
-    reference digest set fits an executor (e.g. a single eval suite).
+    Anti-join on md5(normalized text) with no broadcast hint (both sides
+    may be TB-scale); Spark's size-based planning still broadcasts a
+    reference digest set small enough to fit.
     """
     digest = F.md5(normalized(F.col(text_col)))
     ref = reference.select(digest.alias("_digest")).distinct()
-    if broadcast_reference:
-        ref = F.broadcast(ref)
     return docs.withColumn("_digest", digest).join(ref, "_digest", "left_anti").drop(
         "_digest"
     )
@@ -658,23 +650,14 @@ def _bigram_occurrences(
     text_col: str,
     id_col: str,
     source_col: str,
-    portable: bool = True,
 ) -> DataFrame:
-    """(doc_id, source, bucket) — one row per bigram occurrence.
-    ``portable=False`` buckets with xxhash64 instead of the md5-prefix
-    form: same uniformity, a fraction of the per-bigram cost (no hex
-    substring/parse), engine-local — the production setting; md5 stays
-    the default because the DuckDB oracle replays it."""
-    bkt = (
-        hash_bucket(F.col("bg"), n_buckets)
-        if portable
-        else F.pmod(F.xxhash64(F.col("bg")), F.lit(n_buckets))
-    )
+    """(doc_id, source, bucket) — one row per bigram occurrence, bucketed
+    with the md5-prefix ``hash_bucket`` the DuckDB oracle replays."""
     return docs.select(
         F.col(id_col).alias("doc_id"),
         F.col(source_col).alias("source"),
         F.explode(bigrams(F.col(text_col))).alias("bg"),
-    ).withColumn("bucket", bkt)
+    ).withColumn("bucket", hash_bucket(F.col("bg"), n_buckets))
 
 
 def _bigram_bucket_counts(
@@ -683,7 +666,6 @@ def _bigram_bucket_counts(
     text_col: str,
     id_col: str,
     source_col: str,
-    portable: bool = True,
 ) -> DataFrame:
     """(doc_id, source, bucket, c) — per-document bucket counts, the ONE
     frame both halves of DSIR scoring derive from: the bucket weight
@@ -702,7 +684,7 @@ def _bigram_bucket_counts(
     that wants single-scan sharing at 100 TB should persist this frame
     explicitly between stages (write/read parquet), not checkpoint it
     inside the query plan."""
-    occ = _bigram_occurrences(docs, n_buckets, text_col, id_col, source_col, portable)
+    occ = _bigram_occurrences(docs, n_buckets, text_col, id_col, source_col)
     return occ.groupBy("doc_id", "source", "bucket").agg(F.count("*").alias("c"))
 
 
@@ -821,7 +803,6 @@ def importance_weight_table(
     text_col: str = "text",
     id_col: str = "doc_id",
     source_col: str = "source",
-    portable: bool = True,
     bucket_counts: DataFrame | None = None,
 ) -> DataFrame:
     """Fit the DSIR-style bucket→weight table (see ``importance_weights``).
@@ -841,9 +822,7 @@ def importance_weight_table(
     dc = (
         bucket_counts
         if bucket_counts is not None
-        else _bigram_bucket_counts(
-            docs, n_buckets, text_col, id_col, source_col, portable
-        )
+        else _bigram_bucket_counts(docs, n_buckets, text_col, id_col, source_col)
     )
     is_target = F.col("source").isin(*target_sources)
     stats = dc.groupBy("bucket").agg(
@@ -865,7 +844,6 @@ def importance_weights(
     text_col: str = "text",
     id_col: str = "doc_id",
     source_col: str = "source",
-    portable: bool = True,
 ) -> DataFrame:
     """DSIR-style data-selection scoring (Xie et al. 2023,
     arXiv:2302.03169): score every document by how much its hashed-bigram
@@ -897,9 +875,7 @@ def importance_weights(
     be a separate small corpus; here target docs are a source-subset of
     the same frame, which keeps the oracle single-table.
     """
-    dc = _bigram_bucket_counts(
-        docs, n_buckets, text_col, id_col, source_col, portable
-    )
+    dc = _bigram_bucket_counts(docs, n_buckets, text_col, id_col, source_col)
     wtab = importance_weight_table(
         docs,
         target_sources,
@@ -1002,7 +978,6 @@ def calibrate_scores(
     score_col: str,
     source_col: str = "source",
     n_bins: int = 10,
-    broadcast_pct: bool = True,
 ) -> DataFrame:
     """Cross-source quality-score calibration: map each row's raw
     ``score_col`` to its WITHIN-SOURCE percentile (``pct`` — cume_dist
@@ -1027,12 +1002,10 @@ def calibrate_scores(
       2. cumsum + total over THAT frame (window per source over distinct
          scores — tiny for bounded-precision scores; round upstream if
          scores are near-unique floats);
-      3. join the (source, score) -> pct map back — broadcast by
-         default (``broadcast_pct=True``, right for bounded-precision
-         scores); pass ``broadcast_pct=False`` when scores are
-         near-unique floats at scale, where the distinct frame is
-         fact-table-sized and a broadcast would OOM the driver — the
-         join then runs as a co-partitioned shuffle equi-join.
+      3. join the (source, score) -> pct map back as a broadcast — right
+         for bounded-precision scores. Near-unique float scores at scale
+         make the distinct frame fact-table-sized, too large to
+         broadcast: round them upstream (step 2).
 
     ``bin = least(n_bins-1, floor(pct * n_bins))``: a map-only
     expression on both engines (no global ntile — a global ntile window
@@ -1065,10 +1038,8 @@ def calibrate_scores(
         "_score",
         (F.sum("_c").over(w_cum).cast("double") / F.sum("_c").over(w_tot)).alias("pct"),
     )
-    if broadcast_pct:
-        pct_map = F.broadcast(pct_map)
     joined = df.join(
-        pct_map,
+        F.broadcast(pct_map),
         (src == F.col("_src")) & (s == F.col("_score")),
         "left",
     ).drop("_src", "_score")

@@ -86,14 +86,6 @@ def minhash_sig_expr(sh: Column, num_hashes: int = 32) -> Column:
     )
 
 
-def minhash_signatures_narrow(arrays: DataFrame, num_hashes: int = 32) -> DataFrame:
-    """MinHash signatures as a NARROW map over per-doc shingle arrays.
-    No explode, no aggregation, no shuffle — strictly less data movement
-    than the grouped form for the same hash count (use the grouped
-    `minhash_signatures` when shingles are already exploded)."""
-    return arrays.select("id", minhash_sig_expr(F.col("sh"), num_hashes).alias("sig"))
-
-
 def minhash_signatures(shingled: DataFrame, num_hashes: int = 32) -> DataFrame:
     """MinHash signature per document: sig[i] = min over shingles of
     murmur3(shingle, salt=i). One aggregation, ``num_hashes`` JVM-side
@@ -254,10 +246,9 @@ def minhash_dedup_clusters(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    verify: bool = True,
 ) -> DataFrame:
     """Cluster-form MinHash+LSH dedup for large duplicate clusters: star
-    edges → (optional) Jaccard verify → connected components. Returns
+    edges → Jaccard verify → connected components. Returns
     (id, component) with component = min doc id of the near-dup cluster.
 
     Semantics vs ``minhash_dedup``: verification runs on the star edges
@@ -266,8 +257,7 @@ def minhash_dedup_clusters(
     For exact-copy clusters (the case that explodes pair counts) every
     star edge verifies identically, so the clusters match the pair form;
     for borderline near-dups the cluster form is the standard
-    at-scale approximation (verify=False skips verification entirely and
-    trusts band collisions, the cheapest and loosest setting).
+    at-scale approximation.
 
     Raises ``RuntimeError`` (eagerly, at the call) when the star-edge
     graph does not converge within ``connected_components``' default
@@ -282,8 +272,7 @@ def minhash_dedup_clusters(
         exploded = arrays.select("id", F.explode("sh").alias("shingle"))
         sigs = minhash_signatures(exploded, num_hashes)
         edges = lsh_star_edges(sigs, bands, sig_len=num_hashes)
-        if verify:
-            edges = jaccard_verify(edges, arrays, threshold).select("id_a", "id_b")
+        edges = jaccard_verify(edges, arrays, threshold).select("id_a", "id_b")
         # connected_components localCheckpoints every round, so its result
         # no longer references `arrays` — safe to release the cache here
         # instead of leaking it across calls. Star edges are distinct
@@ -328,7 +317,6 @@ def minhash_dedup(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    share_shingles: bool = True,
     max_bucket: int | None = 10_000,
 ) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline → verified (id_a, id_b, jaccard).
@@ -343,25 +331,16 @@ def minhash_dedup(
     aggregation (exploded + grouped min-aggs: whole-stage-codegen'd
     murmur3, measured ~2× faster than per-element array-transform
     lambdas) and the candidate verify (array intersection, no
-    re-shingling). ``share_shingles=True`` (default) cuts the arrays
-    with a LAZY ``localCheckpoint``: plan build stays job-free (the
-    plan-hygiene gate), the arrays materialize exactly once at first
-    action, and both consumers read the stored blocks — measured 4×
-    faster than recomputing the shingle map per consumer (5.9 s vs
-    23.4 s at sf0.1), while eager ``persist`` with no unpersist point
-    would leak the cache across calls (ADVICE r1); checkpoint blocks
-    are instead reclaimed by the ContextCleaner once the driver-side
-    plan is garbage-collected. ``share_shingles=False`` keeps the fully
-    lazy recompute form (right when the pipeline runs once per session
-    and executor storage is the scarce resource).
-
-    ``minhash_signatures_narrow`` remains available: it trades the
-    signature shuffle for per-row lambda CPU — the right call when the
-    cluster is shuffle-bound rather than CPU-bound.
+    re-shingling). The arrays are cut with a LAZY ``localCheckpoint``:
+    plan build stays job-free (the plan-hygiene gate), the arrays
+    materialize exactly once at first action, and both consumers read
+    the stored blocks — measured 4× faster than recomputing the shingle
+    map per consumer (5.9 s vs 23.4 s at sf0.1), while eager ``persist``
+    with no unpersist point would leak the cache across calls (ADVICE
+    r1); checkpoint blocks are instead reclaimed by the ContextCleaner
+    once the driver-side plan is garbage-collected.
     """
-    arrays = shingle_arrays(df, text_col, id_col, k)
-    if share_shingles:
-        arrays = arrays.localCheckpoint(eager=False)
+    arrays = shingle_arrays(df, text_col, id_col, k).localCheckpoint(eager=False)
     exploded = arrays.select("id", F.explode("sh").alias("shingle"))
     sigs = minhash_signatures(exploded, num_hashes)
     cands = lsh_candidate_pairs(sigs, bands, sig_len=num_hashes, max_bucket=max_bucket)
@@ -378,7 +357,6 @@ def weighted_minhash_dedup(
     threshold: float = 0.5,
     max_weight: int = 16,
     max_bucket: int | None = 10_000,
-    share_counts: bool = False,
 ) -> DataFrame:
     """TF-WEIGHTED MinHash near-dup → verified (id_a, id_b, wjaccard).
 
@@ -432,20 +410,15 @@ def weighted_minhash_dedup(
     # (the CDC barrier pattern) was tried and is a wash (the agg, not
     # the explode, is the repeated cost), and a LAZY checkpoint of
     # counts itself is forbidden (shuffle-bearing frame → AQE
-    # query-stage jobs at PLAN BUILD, the plan-hygiene red).
-    # ``share_counts=True`` takes the EAGER checkpoint: the aggregation
-    # runs once (run-time halved, 2.5 s → 1.7 s at sf0.1) at the cost
-    # of a job AT CONSTRUCTION — total is a wash at gate scale but the
-    # single corpus pass is the right trade at 100 TB; opt-in only,
-    # since declared gate queries must build job-free.
+    # query-stage jobs at PLAN BUILD, the plan-hygiene red). An EAGER
+    # checkpoint halves the run (2.5 s → 1.7 s at sf0.1) but runs a job
+    # at construction, which a declared query's job-free build forbids.
     counts = (
         all_grams.groupBy("id", "shingle")
         .agg(F.count("*").alias("_tf"))
         .withColumn("c", F.least(F.col("_tf"), F.lit(max_weight)).cast("long"))
         .drop("_tf")
     )
-    if share_counts:
-        counts = counts.localCheckpoint(eager=True)
     # per-row expansion array, materialized BEFORE the salted transforms
     expanded = counts.select(
         "id",
@@ -628,57 +601,22 @@ def simhash_neardup(
     )
 
 
-def _span_fp(joined: Column, portable: bool) -> Column:
-    """Window fingerprint: md5 hex (portable — DuckDB replays it
-    byte-for-byte, the oracle contract) or a 128-bit pair of xxhash64s
-    (engine-local — ~half the shuffle bytes of the 32-char hex string
-    and no hex encode; the production default at corpus scale, where
-    128 bits keeps the collision expectation negligible at billions of
-    windows). Both operators take ``portable_fp`` and are
-    result-equivalent under either (tested) — the fingerprint only has
-    to be injective in practice, never inverted."""
-    if portable:
-        return F.md5(joined)
-    return F.struct(
-        F.xxhash64(joined).alias("h1"),
-        F.xxhash64(joined, F.lit(1)).alias("h2"),
-    )
-
-
-def _window_fp_occ(
-    frame: DataFrame, n: Column, k: int, portable_fp: bool
-) -> DataFrame:
+def _window_fp_occ(frame: DataFrame, n: Column, k: int) -> DataFrame:
     """(id, pos, fp) occurrence frame of every k-token rolling-window
     fingerprint — the shared head of ``duplicated_spans`` and
     ``dedup_spans_rewrite``. ``frame`` must carry ``id`` and ``toks``;
     ``n`` is the token-count expression over it.
 
-    The two fingerprint modes take different shapes on purpose: the
-    portable md5 form hashes the joined window string exactly once, so
-    building it inline inside the one transform is the cheapest form
-    (binding the strings first was measured slightly SLOWER — an extra
-    array materialization for nothing). The xxhash64-pair form
-    references the window string TWICE (two salts), and a HOF lambda
-    gets no CSE — inline it would re-run the O(k) array_join per salt —
-    so there the joined strings are bound as a real array column first
-    and both salts read the materialized element (measured ~10% faster
-    at sf0.1, identical fingerprint partitions)."""
+    The fingerprint is the window's md5 hex, which the DuckDB oracle
+    replays byte-for-byte. It hashes the joined window string exactly
+    once, so building it inline inside the one transform is the
+    cheapest form (binding the strings first was measured slightly
+    SLOWER — an extra array materialization for nothing)."""
     seq = F.sequence(F.lit(1), n - (k - 1))
     join_win = lambda i: F.array_join(F.slice(F.col("toks"), i, k), " ")  # noqa: E731
-    if portable_fp:
-        fps = F.when(n >= k, F.transform(seq, lambda i: _span_fp(join_win(i), True))
-                     ).otherwise(F.array().cast("array<string>"))
-        exploded = frame.select("id", F.posexplode(fps).alias("pos0", "fp"))
-    else:
-        wins = F.when(n >= k, F.transform(seq, join_win)).otherwise(
-            F.array().cast("array<string>")
-        )
-        exploded = frame.withColumn("_wins", wins).select(
-            "id",
-            F.posexplode(
-                F.transform(F.col("_wins"), lambda s: _span_fp(s, False))
-            ).alias("pos0", "fp"),
-        )
+    fps = F.when(n >= k, F.transform(seq, lambda i: F.md5(join_win(i)))
+                 ).otherwise(F.array().cast("array<string>"))
+    exploded = frame.select("id", F.posexplode(fps).alias("pos0", "fp"))
     return exploded.select("id", (F.col("pos0") + 1).alias("pos"), "fp")
 
 
@@ -687,7 +625,6 @@ def duplicated_spans(
     k: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    portable_fp: bool = True,
 ) -> DataFrame:
     """Exact duplicated-substring statistics — the ExactSubstr recipe of
     Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
@@ -715,11 +652,8 @@ def duplicated_spans(
     fingerprint (ONE shuffle on a uniformly-distributed md5 key — no
     join back, no second shuffle of the occurrence frame), then the
     per-document interval union is a lag window over the (much smaller)
-    duplicated subset keyed by document. ``portable_fp=True`` (default)
-    fingerprints with full md5 hex strings so the DuckDB oracle replays
-    them byte-for-byte; ``portable_fp=False`` packs the fingerprint into
-    two xxhash64 BIGINTs — ~half the shuffle bytes, engine-local, same
-    plan and (tested) same result: the production setting.
+    duplicated subset keyed by document. Fingerprints are full md5 hex
+    strings so the DuckDB oracle replays them byte-for-byte.
 
     Token-position coverage is the classic sorted-interval union: window
     starts are strictly increasing within a document, so each duplicated
@@ -736,7 +670,7 @@ def duplicated_spans(
         F.greatest(n - (k - 1), F.lit(0)).cast("long").alias("n_windows"),
         F.col("toks"),
     )
-    occ = _window_fp_occ(stats, n, k, portable_fp)
+    occ = _window_fp_occ(stats, n, k)
     w_fp = Window.partitionBy("fp")
     dup = occ.withColumn("n_occ", F.count("*").over(w_fp)).filter(F.col("n_occ") > 1)
     w_doc = Window.partitionBy("id").orderBy("pos")
@@ -780,7 +714,6 @@ def dedup_spans_rewrite(
     k: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    portable_fp: bool = True,
 ) -> DataFrame:
     """ExactSubstr REWRITE (the transform `duplicated_spans` only
     measures): remove every duplicated k-token window occurrence except
@@ -813,7 +746,7 @@ def dedup_spans_rewrite(
     """
     base = df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
     n = F.size(F.col("toks"))
-    occ = _window_fp_occ(base, n, k, portable_fp)
+    occ = _window_fp_occ(base, n, k)
     w_rank = Window.partitionBy("fp").orderBy("id", "pos")
     removals = (
         occ.withColumn("rn", F.row_number().over(w_rank))
@@ -922,7 +855,7 @@ def containment_pairs(
 
     The per-doc shingle-array frame feeds three consumers (the exploded
     blocking path and both verify sides), so it is cut with the same
-    lazy ``localCheckpoint`` as ``minhash_dedup(share_shingles=True)``:
+    lazy ``localCheckpoint`` as ``minhash_dedup``:
     tokenize+shingle runs once, plan build stays job-free.
     """
     arrays = shingle_arrays(df, text_col=text_col, id_col=id_col, k=k).localCheckpoint(
@@ -1012,7 +945,6 @@ def minhash_match_index(
     bands: int = 8,
     threshold: float = 0.5,
     max_bucket: int | None = 10_000,
-    exclude_self_pairs: bool = False,
 ) -> DataFrame:
     """Incremental near-dup: match a NEW batch against a persisted
     ``minhash_index_frame`` — the LSH analog of ``cross_corpus_dedup``
@@ -1020,16 +952,12 @@ def minhash_match_index(
     (id_new, id_ref, jaccard) pairs; new docs with no row are novel.
 
     Same-id re-delivery (at-least-once sources / continuation streams):
-    by default a doc re-delivered under the SAME id in a later batch
-    MATCHES its own index copy (jaccard 1.0) and is therefore treated
-    as a duplicate — the index never accumulates duplicate rows per id.
-    ``exclude_self_pairs=True`` drops ``id_new == id_ref`` pairs instead
-    — only for callers whose new/index id namespaces are guaranteed
-    disjoint and who need belt-and-braces protection against matching a
-    batch's own partial state write (the foreachBatch retry path, which
-    ``streaming/dedup`` already guards structurally by excluding the
-    batch's own state partition). With it on, a same-id re-delivery is
-    re-admitted and duplicates its index row.
+    a doc re-delivered under the SAME id in a later batch MATCHES its
+    own index copy (jaccard 1.0) and is therefore treated as a
+    duplicate — the index never accumulates duplicate rows per id. A
+    batch never matches its own partial state write on a foreachBatch
+    retry: ``streaming/dedup`` excludes the batch's own state partition
+    from the index it passes.
 
     This is the steady-state shape of corpus dedup at 100 TB: the
     10 TB/day crawl shingles and signs ONLY itself (corpus-side work is
@@ -1087,10 +1015,6 @@ def minhash_match_index(
     cands = new_banded.join(ref_banded, ["band", "bucket"]).select(
         "id_new", "id_ref"
     )
-    if exclude_self_pairs:
-        # opt-in retry defense (see docstring) — NOT the default, because
-        # it re-admits same-id re-deliveries, duplicating index rows
-        cands = cands.filter(F.col("id_new") != F.col("id_ref"))
     cands = cands.distinct()
     a = new_idx.select(
         F.col("id").alias("id_new"), F.col("sh").alias("sh_a"), F.col("n_shingles").alias("n_a")

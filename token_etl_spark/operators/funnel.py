@@ -32,7 +32,6 @@ def funnel_reach(
     user_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
-    cache_stages: bool = False,
 ) -> DataFrame:
     """Per-user funnel reach times: (user, t1, t2, ..., tN) in integer
     microseconds, NULL from the first unconverted step onward.
@@ -48,18 +47,15 @@ def funnel_reach(
 
     Each stage consumes its predecessor twice (candidate filter + left
     join), so the uncut lineage re-runs earlier stages' event scans
-    ~2× per extra step. ``cache_stages=True`` lazily ``persist()``s the
-    per-user stage frames to cut that; measured at gate scale the cache
-    materialization barriers cost MORE than the recompute (0.25 s uncut
-    vs 2.5 s first-run cached at sf0.1, identical results), so it
-    defaults off — flip it when the events scan dominates (the deep-k
-    or petabyte regime), or persist the reach frame to parquet between
-    pipelines.
+    ~2× per extra step. Persisting the stage frames was measured to cost
+    MORE than the recompute at gate scale (0.25 s uncut vs 2.5 s
+    first-run cached at sf0.1, identical results); where the events scan
+    dominates, use :func:`funnel_reach_onepass` or persist the reach
+    frame to parquet between pipelines.
     """
-    cut = (lambda df: df.persist()) if cache_stages else (lambda df: df)
     us = F.col(ts_col)
     micros = F.unix_micros(us)
-    out = cut(
+    out = (
         events.where(F.col(type_col) == steps[0])
         .groupBy(F.col(user_col).alias("user"))
         .agg(F.min(micros).alias("t1"))
@@ -76,7 +72,7 @@ def funnel_reach(
             .groupBy("user")
             .agg(F.min("_ts").alias(f"t{i}"))
         )
-        out = cut(out.join(nxt, "user", "left"))
+        out = out.join(nxt, "user", "left")
     return out
 
 
@@ -175,7 +171,6 @@ def funnel_counts(
     user_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
-    onepass: bool = True,
 ) -> DataFrame:
     """Funnel rollup: (step, step_name, n_users, pct_of_step1) — users
     reaching each step under the anchored-first semantics. ``pct`` is
@@ -183,11 +178,9 @@ def funnel_counts(
 
     The per-step rows come from ONE explode over the 1-row counts frame
     (not k unioned selects), so the reach pipeline runs exactly once and
-    nothing needs a persist. Default reach plan is the single-scan
-    :func:`funnel_reach_onepass`; ``onepass=False`` selects the chained
-    form (the skew-safe variant, and the equivalence oracle)."""
-    reach_fn = funnel_reach_onepass if onepass else funnel_reach
-    reach = reach_fn(events, steps, window_s, user_col, type_col, ts_col)
+    nothing needs a persist. The reach plan is the single-scan
+    :func:`funnel_reach_onepass`."""
+    reach = funnel_reach_onepass(events, steps, window_s, user_col, type_col, ts_col)
     counts = reach.agg(
         *[
             F.count(F.col(f"t{i}")).cast("long").alias(f"n{i}")

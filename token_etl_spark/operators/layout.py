@@ -132,14 +132,13 @@ def write_bucketed(
     table: str,
     key: str,
     n_buckets: int = 32,
-    sort: bool = True,
     mode: str = "overwrite",
 ) -> None:
     """Write ``df`` as a hash-bucketed (and bucket-sorted) parquet table.
 
     Bucketing is THE co-location primitive at 100 TB: two tables
     bucketed on the same key with the same bucket count join with ZERO
-    shuffle on either side (and zero sort if ``sort=True``) — the
+    shuffle on either side (and zero sort) — the
     exchange that dominates a fact-fact join is paid once at write time
     and amortized over every subsequent join/groupBy on that key.
     ``n_buckets`` should be sized so one bucket of the larger table fits
@@ -148,7 +147,10 @@ def write_bucketed(
     Bucketed layout requires the table catalog (file listings carry no
     bucket metadata), hence ``saveAsTable`` rather than a path write.
     """
-    w = df.write.format("parquet").mode(mode).bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
+    (
+        df.write.format("parquet")
+        .mode(mode)
+        .bucketBy(n_buckets, key)
+        .sortBy(key)
+        .saveAsTable(table)
+    )

@@ -10,9 +10,10 @@ Plan shape: ONE aggregation over the table computes every column's
 (non-null count, distinct count, min, max) simultaneously — Catalyst
 plans the multi-distinct via Expand, so the table is scanned once — and
 a ``stack`` pivots the 1-row result to one row per column. Nothing
-driver-side; the profile is itself a DataFrame. At 100 TB swap
-``countDistinct`` for ``approx_count_distinct`` via ``exact=False``:
-HLL sketches merge map-side and drop the Expand blowup.
+driver-side; the profile is itself a DataFrame. Distinct counts are
+exact ``countDistinct``, which the DuckDB oracle replays; an HLL
+``approx_count_distinct`` would merge map-side and drop the Expand
+blowup, but no caller needs it.
 """
 
 from __future__ import annotations
@@ -21,18 +22,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def profile_table(df: DataFrame, cols: list[str] | None = None, exact: bool = True) -> DataFrame:
+def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """One row per column: ``col_name, n_rows, n_nulls, n_distinct,
     min_val, max_val`` (min/max cast to string so heterogeneous column
     types share one schema).
     """
     cols = cols or df.columns
-    ndv = F.countDistinct if exact else F.approx_count_distinct
     aggs = [F.count(F.lit(1)).alias("_total")]
     for c in cols:
         aggs += [
             F.count(c).alias(f"_nn_{c}"),
-            ndv(c).alias(f"_nd_{c}"),
+            F.countDistinct(c).alias(f"_nd_{c}"),
             F.min(c).cast("string").alias(f"_min_{c}"),
             F.max(c).cast("string").alias(f"_max_{c}"),
         ]
@@ -159,7 +159,6 @@ def zscore_outliers(
     value_col: str,
     group_cols: list[str],
     threshold: float = 3.0,
-    broadcast_stats: bool = True,
 ) -> DataFrame:
     """Per-group z-score anomaly detection: flag rows whose ``value_col``
     deviates more than ``threshold`` sample standard deviations from
@@ -170,10 +169,8 @@ def zscore_outliers(
     Plan shape (the 100 TB design): ONE combinable aggregation computes
     per-group (mean, stddev_samp, n) — partial-aggregated map-side, so
     the shuffle carries |groups| rows, not data — and the tiny stats
-    frame joins back broadcast (``broadcast_stats=False`` for
-    high-cardinality groupings, where AQE picks the strategy). No
-    window: a window over the fact table would shuffle and SORT every
-    row by group for two scalars per group.
+    frame joins back broadcast. No window: a window over the fact table
+    would shuffle and SORT every row by group for two scalars per group.
 
     Degenerate groups are honest: ``stddev_samp`` is NULL for n=1 and
     0.0 for constant groups; both yield ``z`` NULL and ``is_outlier``
@@ -187,11 +184,9 @@ def zscore_outliers(
     """
     v = F.col(value_col)
     stats = zscore_stats(df, value_col, group_cols)
-    if broadcast_stats:
-        stats = F.broadcast(stats)
     z = F.when(F.col("_sd") > 0, (v - F.col("_mu")) / F.col("_sd"))
     return (
-        df.join(stats, group_cols, "left")
+        df.join(F.broadcast(stats), group_cols, "left")
         .withColumn("z", z)
         .withColumn("is_outlier", F.coalesce(F.abs(F.col("z")) > threshold, F.lit(False)))
         .drop("_mu", "_sd", "_n")
@@ -204,8 +199,6 @@ def mad_outliers(
     group_cols: list[str],
     threshold: float = 3.5,
     consistency: float = 1.4826,
-    exact: bool = True,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Robust per-group outlier screen via the modified z-score
     (Iglewicz & Hoaglin 1993): ``robust_z = (x - median) /
@@ -218,25 +211,21 @@ def mad_outliers(
     Plan shape: two grouped percentile aggregations (median, then MAD
     over the median-joined frame), each broadcast-joined back; no
     fact-table window. Exact ``percentile`` is an order statistic —
-    deterministic, no accumulation-order caveat — but buffers each
-    group's values on its reducer; at 100 TB set ``exact=False`` for
-    the mergeable t-digest ``approx_percentile`` (same split as
-    ``quantile_band_filter``).
+    deterministic, no accumulation-order caveat, and replayed by the
+    DuckDB oracle — but it buffers each group's values on its reducer.
 
     Degenerate groups are honest: MAD = 0 (over half the group at one
     value) or a 1-row group yields robust_z NULL and is_outlier false.
     """
-    fn = "percentile" if exact else "approx_percentile"
-    extra = "" if exact else f", {accuracy}"
     v = F.col(value_col)
     med = df.groupBy(*group_cols).agg(
-        F.expr(f"{fn}({value_col}, 0.5D{extra})").alias("_med")
+        F.expr(f"percentile({value_col}, 0.5D)").alias("_med")
     )
     with_med = df.join(F.broadcast(med), group_cols, "left")
     mad = (
         with_med.withColumn("_adev", F.abs(v - F.col("_med")))
         .groupBy(*group_cols)
-        .agg(F.expr(f"{fn}(_adev, 0.5D{extra})").alias("_mad"))
+        .agg(F.expr("percentile(_adev, 0.5D)").alias("_mad"))
     )
     z = F.when(
         F.col("_mad") > 0, (v - F.col("_med")) / (F.lit(consistency) * F.col("_mad"))

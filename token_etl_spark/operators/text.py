@@ -36,13 +36,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    """Fraction of *distinct* tokens that are stopwords of ``lang``."""
-    toks = F.array_distinct(tokens(text))
-    hits = F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in STOPWORDS[lang]])))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
 def quality_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document quality metrics: char len, token count, mean token
     length, alpha ratio, stopword ratio — the standard cheap filters a

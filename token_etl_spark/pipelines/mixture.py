@@ -51,7 +51,6 @@ def build_mixture(
     weights: dict[str, float] | None = None,
     pack_budget: int = 2048,
     n_shards: int = 256,
-    cache_stages: bool = True,
     checkpoint_stages: bool = False,
 ) -> DataFrame:
     """documents(doc_id, source, text, ...) → mixture manifest.
@@ -77,19 +76,19 @@ def build_mixture(
     ids containing ':') survive losslessly (the key is injective
     because epoch, an integral type, is always the final segment).
 
-    ``cache_stages`` (default True) lazily ``persist()``s each stage
-    boundary that is consumed more than once — every selection stage's
-    decision frame derives from the SAME frame the main chain continues
-    from, so without a cut the lineage re-derives upstream work 2-3×
+    Each stage boundary that is consumed more than once is lazily
+    ``persist()``ed — every selection stage's decision frame derives
+    from the SAME frame the main chain continues from, so without a
+    cut the lineage re-derives upstream work 2-3×
     per stage and the five-stage plan compounds to ~180 parquet scans
     (measured: Spark's ReusedExchange recovers none of it — the branch
     projections differ). A lazy persist launches no plan-build jobs
     (the repo's hygiene gate) and collapses execution to one
     materialization per stage (measured 14.9 s → 7.8 s cold / 2.5 s on
     re-run at sf0.01 for the five-stage query).
-    Lifecycle: the cached blocks live until the session drops them —
-    a long-running service should pass False and persist stage outputs
-    to parquet between pipelines instead (the 100 TB guidance above).
+    Lifecycle: the cached blocks live until the session drops them, so
+    a long-running service persists stage outputs to parquet between
+    pipelines (the 100 TB guidance above).
 
     ``checkpoint_stages=True`` upgrades each stage cut from a lazy
     ``persist`` to an EAGER ``localCheckpoint``: the composed five-stage
@@ -106,7 +105,7 @@ def build_mixture(
     if checkpoint_stages:
         cut = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
     else:
-        cut = (lambda df: df.persist()) if cache_stages else (lambda df: df)
+        cut = lambda df: df.persist()  # noqa: E731
     out = docs
     if decisions is not None:
         keep = decisions.where(F.col("keep")).select("doc_id")

@@ -256,7 +256,7 @@ def q_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor stats. The quantile frame is a broadcast 1-row crossJoin,
     not a driver collect."""
     docs = t(spark, sf_dir, "documents")
-    kept = C.quantile_band_filter(docs, "n_chars", 0.05, 0.95, exact=True)
+    kept = C.quantile_band_filter(docs, "n_chars", 0.05, 0.95)
     return kept.groupBy("source").agg(
         F.count("*").alias("n_kept"),
         F.round(F.avg("n_chars"), 6).alias("avg_chars"),

@@ -720,9 +720,7 @@ def q_anomaly_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-group outlier screen (operators/profile.mad_outliers):
     modified z-score over (median, MAD) per event_type — the
     heavy-tail-safe twin of evt_anomaly_zscore, and the deterministic
-    one (order statistics, no accumulation-order caveat). Exact
-    percentile declared here (the gate corpus fits a reducer);
-    ``exact=False`` is the 100 TB t-digest path."""
+    one (order statistics, no accumulation-order caveat)."""
     from token_etl_spark.operators.profile import mad_outliers
 
     ev = t(spark, sf_dir, "events")

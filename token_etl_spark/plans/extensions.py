@@ -612,7 +612,7 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus itself: the in-plan window count runs (and passes — no gate
     bucket is near 10k), so the guarded path is driver-proven, not just
     pinned by the local OOM-fixture test (tests/test_dedup.py)."""
-    # NOT fanned (fan_narrow): minhash_dedup's share_shingles lazy
+    # NOT fanned (fan_narrow): minhash_dedup's lazy shingle-array
     # checkpoint sits over the source — an upstream exchange would
     # materialize its shuffle stage at plan build and break the
     # no-jobs-at-build gate (measured −0.75 s forgone at sf0.1).
@@ -1797,8 +1797,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = fan_narrow(t(spark, sf_dir, "embeddings"))
     out = S.semantic_dedup(
         emb,
-        n_centroids=16,
-        n_iters=2,
         threshold=SEMDEDUP_COSINE,
         centroids=_trained_centroids(spark, sf_dir),
     )
@@ -1901,8 +1899,6 @@ def q_semantic_dedup_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     out = S.semantic_dedup(
         emb,
-        n_centroids=16,
-        n_iters=2,
         threshold=SEMDEDUP_COSINE,
         n_assign=2,
         centroids=_trained_centroids(spark, sf_dir),

@@ -61,9 +61,7 @@ def streaming_text_normalize(
     return normalize_text(stream, text_col=text_col, out_col=out_col)
 
 
-def streaming_line_cleanup(
-    stream: DataFrame, text_col: str = "text", dedup_lines: bool = True
-) -> DataFrame:
+def streaming_line_cleanup(stream: DataFrame, text_col: str = "text") -> DataFrame:
     """Ingest-time line hygiene on a document stream: C4-style line
     filtering (``line_filter``) then intra-document line dedup
     (``line_dedup``) applied SEQUENTIALLY — dedup runs on line_filter's
@@ -76,10 +74,7 @@ def streaming_line_cleanup(
     shrinks every byte that flows downstream."""
     from token_etl_spark.operators.text import line_dedup, line_filter
 
-    out = line_filter(stream, text_col=text_col)
-    if dedup_lines:
-        out = line_dedup(out, text_col="cleaned")
-    return out
+    return line_dedup(line_filter(stream, text_col=text_col), text_col="cleaned")
 
 
 def benchmark_shingle_set(

@@ -157,11 +157,11 @@ def _neardup_sink_batch(
     index copy at jaccard 1.0, bogus pairs in the matches partition, and
     the index partition overwritten EMPTY (docs permanently lost).
 
-    That partition exclusion is the WHOLE retry guard — the matcher runs
-    with its default ``exclude_self_pairs=False``, so a doc re-delivered
-    under the SAME id in a LATER batch (at-least-once source) matches
-    its own earlier index copy at jaccard 1.0 and is correctly NOT
-    re-admitted: the index never accumulates duplicate rows per id."""
+    That partition exclusion is the WHOLE retry guard — the matcher
+    keeps same-id pairs, so a doc re-delivered under the SAME id in a
+    LATER batch (at-least-once source) matches its own earlier index
+    copy at jaccard 1.0 and is correctly NOT re-admitted: the index
+    never accumulates duplicate rows per id."""
     from token_etl_spark.operators.dedup import minhash_index_frame, minhash_match_index
 
     if batch_df.isEmpty():
