@@ -27,7 +27,7 @@ def test_asof_backward_join(spark):
     assert len(got) == 4             # all left rows preserved
 
 
-def test_asof_equal_ts_inclusive_vs_strict(spark):
+def test_asof_equal_ts_inclusive(spark):
     left = spark.createDataFrame([(1, "u", 100)], "event_id long, user string, ts long")
     right = spark.createDataFrame([("u", 100, "exact")], "user string, rts long, tag string")
     incl = asof_join(left, right, "user", "ts", "rts", ["tag"]).collect()[0]

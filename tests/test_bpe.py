@@ -247,7 +247,7 @@ def test_bpe_train_checkpointed_heals_interrupted_swap(spark, sf_dir, tmp_path):
     bpe_train_checkpointed(docs, state, n_merges=5, checkpoint_every=2)
 
     fs, hpath = _bucket_fs(spark, state)
-    assert fs.rename(hpath(state), hpath(state + ".staging"))
+    assert fs.rename(hpath(state), hpath(state + ".staging-full"))
     out = _merge_rows(
         bpe_train_checkpointed(docs, state, n_merges=8, checkpoint_every=2)
     )
@@ -258,15 +258,15 @@ def test_bpe_train_checkpointed_discards_partial_first_commit(
     spark, sf_dir, tmp_path
 ):
     """A crash DURING the very first commit's staging write leaves
-    final-missing + partial staging (no _COMMITTED marker). The heal
-    must discard it and train from scratch — promoting it would wedge
+    final-missing + partial staging (no root _SUCCESS marker). The heal
+    must never promote it; the train starts from scratch — promoting it would wedge
     (committer temporaries only) or silently desync vocab from merges
     (r11 review)."""
     from token_etl_spark.operators.bpe import bpe_train_checkpointed
 
     docs = load_table(spark, sf_dir, "documents").limit(60)
     state = str(tmp_path / "bpe_partial")
-    staging = tmp_path / "bpe_partial.staging" / "vocab"
+    staging = tmp_path / "bpe_partial.staging-full" / "vocab"
     staging.mkdir(parents=True)
     (staging / "part-00000.parquet").write_bytes(b"partial write, no marker")
 
@@ -275,4 +275,4 @@ def test_bpe_train_checkpointed_discards_partial_first_commit(
     )
     assert got == _merge_rows(bpe_train(docs, n_merges=6))
     import os
-    assert not os.path.exists(str(tmp_path / "bpe_partial.staging"))
+    assert not os.path.exists(str(tmp_path / "bpe_partial.staging-full"))

@@ -1685,14 +1685,14 @@ def test_refresh_domain_stats_rule_chain_fuzz(spark, suf1, suf2, decorate):
 
         # crash window: stage a lite re-fit with the marker but no
         # rename — the next load must heal into the NEW (lite) state
-        staging = p + C2._STAGING_DOMSTATS
+        staging = p + ".staging-full"
         stats = C2.domain_stats(docs)
         stats.write.mode("overwrite").parquet(f"{staging}/stats")
         s.createDataFrame(
             [("lite", "")], "rule string, suffix_md5 string"
         ).write.mode("overwrite").parquet(f"{staging}/params")
         fs, hpath = _bucket_fs(s, p)
-        fs.create(hpath(f"{staging}/{C2._DOMSTATS_MARKER}"), True).close()
+        fs.create(hpath(f"{staging}/_SUCCESS"), True).close()
         with pytest.raises(ValueError, match="mismatched registered-domain"):
             load_domain_stats(s, p, suffixes=table(suf2))
         assert load_domain_stats(s, p).count() >= 1

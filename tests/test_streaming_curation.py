@@ -371,7 +371,7 @@ def test_kmv_state_corrupt_footer_raises_not_resets(spark, tmp_path):
 
 def test_kmv_state_swap_leaves_no_staging(spark, tmp_path):
     """The staging-dir swap replaces the state in place and cleans up:
-    two merges leave exactly one state dir, no .staging leftovers, and
+    two merges leave exactly one state dir, no .staging-full leftovers, and
     the merged sketch equals the batch sketch over the union."""
     from token_etl_spark.operators.sketch import kmv_sketch
     from token_etl_spark.streaming.curation import merge_kmv_state
@@ -381,7 +381,7 @@ def test_kmv_state_swap_leaves_no_staging(spark, tmp_path):
     b2 = spark.createDataFrame([(f"w{i}",) for i in range(25, 75)], ["_item"])
     merge_kmv_state(b1, state, "_item", (), k=16)
     merge_kmv_state(b2, state, "_item", (), k=16)
-    assert not (tmp_path / "kmv_swap.staging").exists()
+    assert not (tmp_path / "kmv_swap.staging-full").exists()
     exp = {
         (r["h"], r["rank"])
         for r in kmv_sketch(b1.unionByName(b2), "_item", (), k=16).collect()
@@ -392,7 +392,7 @@ def test_kmv_state_swap_leaves_no_staging(spark, tmp_path):
 
 def test_kmv_state_recovers_interrupted_swap(spark, tmp_path):
     """r6 ADVICE: a crash between delete(final) and rename(staging)
-    leaves only a COMPLETE .staging dir; the next merge must recover it
+    leaves only a COMPLETE .staging-full dir; the next merge must recover it
     (rename into place) instead of silently restarting state from
     scratch via _read_existing's path-not-found -> None."""
     import shutil
@@ -405,7 +405,7 @@ def test_kmv_state_recovers_interrupted_swap(spark, tmp_path):
     b2 = spark.createDataFrame([(f"w{i}",) for i in range(25, 75)], ["_item"])
     merge_kmv_state(b1, state, "_item", (), k=16)
     # simulate the crash window: final deleted, complete staging left
-    shutil.move(state, state + ".staging")
+    shutil.move(state, state + ".staging-full")
     merge_kmv_state(b2, state, "_item", (), k=16)
     exp = {
         (r["h"], r["rank"])
@@ -413,6 +413,27 @@ def test_kmv_state_recovers_interrupted_swap(spark, tmp_path):
     }
     got = {(r["h"], r["rank"]) for r in spark.read.parquet(state).collect()}
     assert got == exp  # b1's contribution survived the interrupted swap
+
+
+def test_kmv_state_ignores_crashed_first_write_leftover(spark, tmp_path):
+    """A first merge that crashed mid-write can leave a staging dir
+    holding only the committer's ``_temporary/`` and no final dir. That
+    leftover carries no completeness mark, so nothing may promote it:
+    renaming it into place made every later merge fail schema inference.
+    The next merge succeeds and equals the batch sketch."""
+    from token_etl_spark.operators.sketch import kmv_sketch
+    from token_etl_spark.streaming.curation import merge_kmv_state
+
+    state = str(tmp_path / "kmv")
+    leftover = tmp_path / "kmv.staging" / "_temporary" / "0" / "task_0"
+    leftover.mkdir(parents=True)
+    (leftover / "part-0.parquet").write_bytes(b"partial")
+
+    b = spark.createDataFrame([(f"w{i}",) for i in range(40)], ["_item"])
+    merge_kmv_state(b, state, "_item", (), k=16)
+    exp = {(r["h"], r["rank"]) for r in kmv_sketch(b, "_item", (), k=16).collect()}
+    got = {(r["h"], r["rank"]) for r in spark.read.parquet(state).collect()}
+    assert got == exp
 
 
 def test_semantic_decontaminate_empty_benchmark_keeps_all(spark, sf_dir, tmp_path):

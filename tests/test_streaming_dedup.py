@@ -404,9 +404,9 @@ def test_compact_state_partitions_preserves_state_and_continuation(
 
 def test_compact_state_partitions_heals_interrupted_swap(spark, sf_dir, tmp_path):
     """Crash window: a failure between delete(final) and rename(staging)
-    leaves only a complete .staging dir. The next compaction call must
-    recover it (via _recover_state_dir) instead of treating the state as
-    empty."""
+    leaves only a complete, marked .staging-full dir. The next compaction
+    call must recover it (via io.sinks._heal_full_swap) instead of
+    treating the state as empty."""
     import os
 
     from token_etl_spark.io.sources import load_table
@@ -425,10 +425,11 @@ def test_compact_state_partitions_heals_interrupted_swap(spark, sf_dir, tmp_path
     }
 
     # simulate the crash: a completed staging dir, final deleted
-    staging = index_path + ".staging"
+    staging = index_path + ".staging-full"
     spark.read.parquet(index_path).drop("batch_id").write.parquet(
         f"{staging}/batch_id=compacted-0"
     )
+    open(os.path.join(staging, "_SUCCESS"), "w").close()  # the root mark
     import shutil
 
     shutil.rmtree(index_path)
@@ -464,12 +465,54 @@ def test_compact_state_partitions_clears_stale_staging(spark, sf_dir, tmp_path):
     }
     # stale staging from an interrupted compaction under a DIFFERENT label
     spark.read.parquet(index_path).drop("batch_id").write.parquet(
-        index_path + ".staging/batch_id=oldlabel-0"
+        index_path + ".staging-full/batch_id=oldlabel-0"
     )
     assert compact_state_partitions(spark, index_path) == 2
     idx = read_neardup_index(spark, index_path)
     assert {r["id"] for r in idx.select("id").collect()} == before
     assert idx.count() == len(before)  # no duplicated rows from the stale dir
+
+
+def test_interrupted_compaction_is_healed_before_the_next_batch(spark, tmp_path):
+    """A compaction cut between the final-dir delete and the rename
+    leaves the whole index in a marked staging. The next sink batch must
+    heal it before reading: reading around it re-admits a re-delivered
+    doc, and the compacted index would then be orphaned for good."""
+    import os
+    import shutil
+
+    from token_etl_spark.streaming.dedup import (
+        _neardup_sink_batch,
+        compact_state_partitions,
+        read_neardup_index,
+    )
+
+    def text(i):
+        return " ".join(f"tok{i}x{j}" for j in range(24))
+
+    docs = spark.createDataFrame(
+        [(i, text(i)) for i in range(10)], "doc_id long, text string"
+    )
+    index_path = str(tmp_path / "orphan_index")
+    _neardup_sink_batch(docs.where("doc_id < 5"), "o-0", index_path)
+    _neardup_sink_batch(docs.where("doc_id >= 5"), "o-1", index_path)
+    assert compact_state_partitions(spark, index_path) == 2
+
+    # the crash window: final deleted, the marked staging holds the index
+    staging = index_path + ".staging-full"
+    shutil.move(index_path, staging)
+    open(os.path.join(staging, "_SUCCESS"), "w").close()
+
+    # doc 0 re-delivered under its own id, doc 42 novel
+    batch = spark.createDataFrame(
+        [(0, text(0)), (42, text(42))], "doc_id long, text string"
+    )
+    _neardup_sink_batch(batch, "o-2", index_path)
+    compact_state_partitions(spark, index_path)
+
+    ids = sorted(r["id"] for r in read_neardup_index(spark, index_path).collect())
+    assert ids == list(range(10)) + [42]  # doc 0 not re-admitted
+    assert not os.path.exists(staging)
 
 
 def test_read_partitioned_state_excludes_key_against_legacy_int_partitions(
@@ -959,7 +1002,7 @@ def test_rebuild_ivf_index_heals_interrupted_swap_and_resizes(
     # simulate the crash window: the complete new tree sits in staging,
     # the final dir is already gone
     fs, hpath = _bucket_fs(spark, index_path)
-    assert fs.rename(hpath(index_path), hpath(index_path + ".staging"))
+    assert fs.rename(hpath(index_path), hpath(index_path + ".staging-full"))
     healed = read_embedding_index(spark, index_path)
     assert {r["corpus_id"] for r in healed.select("corpus_id").collect()} == ids
     assert _read_existing(spark, f"{index_path}/centroids").count() == 4

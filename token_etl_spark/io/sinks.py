@@ -17,6 +17,7 @@ itself requires).
 from __future__ import annotations
 
 import warnings
+from collections.abc import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -126,63 +127,76 @@ def upsert_by_key(
     whole-row latest, which the reference's document-update also does for
     supplied fields).
 
-    Commit protocol: the merged table is written to a sibling
-    ``.staging`` dir and swapped in via rename — an in-place overwrite
-    of the ONLY copy would lose the whole table on a crash mid-write.
-    :func:`_heal_full_swap` (run first) finishes a crash-interrupted
-    swap (complete staging, ``_SUCCESS`` present) or discards an
-    incomplete staging write. Single-writer contract, like every state
-    sink in this package.
+    Commit protocol: :func:`_full_swap` — an in-place overwrite of the
+    ONLY copy would lose the whole table on a crash mid-write.
+    Single-writer contract, like every state sink in this package.
     """
+    _heal_legacy_staging(spark, path)
     _heal_full_swap(spark, path)
     existing = _read_existing(spark, path)
     deduped = _first_per_key(existing, new_df, key, latest_order(new_df.columns))
-    _full_swap(spark, deduped, path)
+    _full_swap(spark, path, {"": deduped.write.parquet})
 
 
-def _full_swap(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Stage ``df`` as a COMPLETE replacement table at
-    ``<path>.staging-full`` and swap it over ``path`` via rename (the
-    commit of :func:`upsert_by_key`). An in-place overwrite of the only
-    copy would lose the whole table on a crash mid-write."""
+def _full_swap(
+    spark: SparkSession, path: str, parts: dict[str, Callable[[str], None]]
+) -> None:
+    """Replace the tree at ``path`` whole — the one commit of every state
+    table in this package (the upsert sink, the KMV and retention
+    sketches, state compaction, the IVF index, the BPE checkpoints and
+    the domain stats). An in-place overwrite of the only copy would lose
+    the tree on a crash mid-write.
+
+    ``parts`` maps a part name to the call that writes it, given the
+    part's directory, in order. A part is a subdir of the tree (e.g.
+    ``centroids``), or ``""`` for a tree that is one parquet table at
+    its root — then it is the only part.
+
+    Protocol: heal (:func:`_heal_full_swap`), clear any stale staging,
+    write every part under ``<path>.staging-full``, check that each part
+    left its own ``_SUCCESS``, mark the staging root ``_SUCCESS``, then
+    delete the final tree and rename the staging over it. The root
+    marker is the completeness signal the heal trusts, so a crash at any
+    point leaves either the old tree, a marked staging the next reader
+    or writer promotes, or an unmarked staging nothing promotes."""
+    _heal_full_swap(spark, path)
     staging = path.rstrip("/") + _STAGING_FULL
-    write_parquet(df, staging, mode="overwrite")
+    _delete_dir(spark, staging)
+    dirs = {name: f"{staging}/{name}" if name else staging for name in parts}
+    for name, write in parts.items():
+        write(dirs[name])
     fs, hpath = _bucket_fs(spark, path)
-    if not fs.exists(hpath(staging + "/_SUCCESS")):
+    partial = [
+        n or "." for n, d in dirs.items() if not fs.exists(hpath(d + "/_SUCCESS"))
+    ]
+    if partial:
         raise IOError(
-            f"staging write at {staging} left no _SUCCESS marker — refusing "
-            "to swap (set mapreduce.fileoutputcommitter.marksuccessfuljobs)"
+            f"staging write at {staging} left no _SUCCESS in part(s) {partial} "
+            f"— refusing to commit a partial tree over {path} (a part deleted "
+            "mid-write, or mapreduce.fileoutputcommitter.marksuccessfuljobs off)"
         )
+    fs.create(hpath(staging + "/_SUCCESS"), True).close()
+    _heal_full_swap(spark, path)  # the swap IS the heal of a marked staging
+
+
+def _heal_full_swap(spark: SparkSession, path: str) -> None:
+    """Finish a whole-tree swap (:func:`_full_swap`) that a crash cut
+    after its staging was marked: a staging with a root ``_SUCCESS`` is a
+    complete replacement and is promoted over whatever final tree
+    exists. An unmarked staging is never deleted here — it may be a
+    concurrent writer's in-flight staging; the next writer clears it.
+    Every reader of a whole-tree state runs this first, so nothing reads
+    or appends to a tree a marked staging is about to replace. Only
+    consumes ``.staging-full`` dirs (see the suffix constants)."""
+    fs, hpath = _bucket_fs(spark, path)
+    staging = path.rstrip("/") + _STAGING_FULL
+    if not fs.exists(hpath(staging + "/_SUCCESS")):
+        return
     dst = hpath(path)
     if fs.exists(dst):
         fs.delete(dst, True)
     if not fs.rename(hpath(staging), dst):
-        raise IOError(f"upsert swap failed: rename {staging} -> {path}")
-
-
-def _heal_full_swap(spark: SparkSession, path: str) -> None:
-    """Crash recovery for the whole-table staging swap (:func:`_full_swap`):
-    a COMPLETE staging dir (``_SUCCESS`` present — the swap only starts
-    after the staging write returned) strictly supersedes whatever final
-    state exists, so finish the swap; an INCOMPLETE one (crash mid-write)
-    is discarded — the caller's retry rewrites it. Only consumes
-    ``.staging-full`` dirs: a per-bucket staging (``.staging-buckets``)
-    is NOT a complete table and renaming it over the final dir would
-    drop every untouched bucket."""
-    _heal_legacy_staging(spark, path)
-    fs, hpath = _bucket_fs(spark, path)
-    staging = path.rstrip("/") + _STAGING_FULL
-    sp = hpath(staging)
-    if not fs.exists(sp):
-        return
-    if fs.exists(hpath(staging + "/_SUCCESS")):
-        dst = hpath(path)
-        if fs.exists(dst):
-            fs.delete(dst, True)
-        if not fs.rename(sp, dst):
-            raise IOError(f"upsert swap recovery failed: {staging} -> {path}")
-    else:
-        fs.delete(sp, True)
+        raise IOError(f"whole-tree swap failed: rename {staging} -> {path}")
 
 
 def _heal_legacy_staging(spark: SparkSession, path: str) -> None:
@@ -251,9 +265,9 @@ def _bucket_fs(spark: SparkSession, path: str):
 
 
 def _delete_dir(spark: SparkSession, path: str) -> None:
-    """Recursively delete ``path`` if it exists (no-op otherwise) —
-    the shared stale-staging/partial-write cleanup used by the state
-    sinks (streaming dedup, state compaction, checkpointed BPE)."""
+    """Recursively delete ``path`` if it exists (no-op otherwise) — the
+    stale-staging clear of the staged commits in this module and the
+    partial-partition clear of the streaming embedding sink."""
     fs, hpath = _bucket_fs(spark, path)
     p = hpath(path)
     if fs.exists(p):
@@ -415,10 +429,12 @@ def merge_touched_buckets(
     window — unlike a dynamic-partition overwrite, whose delete-then-move
     inside the committer can lose a bucket's PRIOR rows with nothing on
     disk to recover from. ``n_buckets`` is validated against the state's
-    persisted marker (:func:`_check_bucket_count`). The full-swap heal
+    persisted marker (:func:`_check_bucket_count`). The whole-tree heal
     also runs, for a ``.staging-full`` left by the saturated-batch full
-    rewrite this merge used to take."""
+    rewrite this merge used to take, and so does the pre-suffix
+    ``.staging`` migration heal."""
     _heal_bucket_swap(spark, path)
+    _heal_legacy_staging(spark, path)
     _heal_full_swap(spark, path)
     _check_bucket_count(spark, path, n_buckets)
     existing = _read_existing(spark, path, batch.schema)

@@ -152,36 +152,6 @@ def bpe_train(
     return out
 
 
-def _recover_bpe_state(spark, state_path: str) -> None:
-    """Crash recovery for the checkpointed train's whole-tree swap.
-
-    Unlike the compaction/retrain swaps (whose final dir always exists
-    while staging is written, so a lone staging dir is provably
-    complete), a FIRST BPE commit has no final dir yet — a crash
-    mid-staging-write leaves final-missing + PARTIAL staging, and
-    promoting that would wedge or silently corrupt the resume (r11
-    review). Completeness is therefore explicit: ``_commit`` touches
-    ``_COMMITTED`` as its last staging step, and this heal promotes a
-    final-less staging ONLY when the marker is present; any other
-    staging (final exists, or marker missing) is an un-swapped or
-    partial commit and is discarded — the retry recomputes at most
-    ``checkpoint_every`` merges."""
-    from token_etl_spark.io.sinks import _bucket_fs, _delete_dir
-
-    staging = state_path.rstrip("/") + ".staging"
-    fs, hpath = _bucket_fs(spark, state_path)
-    sp = hpath(staging)
-    if not fs.exists(sp):
-        return
-    if fs.exists(hpath(f"{staging}/_COMMITTED")) and not fs.exists(
-        hpath(state_path)
-    ):
-        if not fs.rename(sp, hpath(state_path)):
-            raise IOError(f"bpe state recovery failed: {staging} -> {state_path}")
-    else:
-        _delete_dir(spark, staging)
-
-
 def bpe_train_checkpointed(
     docs: DataFrame,
     state_path: str,
@@ -200,16 +170,15 @@ def bpe_train_checkpointed(
     they are NON-RELIABLE (executor-local blocks — any executor loss
     aborts the job, and a 32k-merge train is hours of work restarted
     from merge 0) and driver-lifetime-bound (a restarted driver starts
-    over). Every ``checkpoint_every`` merges this loop stages the
-    current ``(vocab, merges)`` pair under ``{state_path}.staging`` and
-    atomically swaps it in (a whole-tree rename, completeness gated on
-    an explicit ``_COMMITTED`` marker — see :func:`_recover_bpe_state`
-    for why the first commit cannot use the lone-staging-is-complete
-    invariant the other tree swaps rely on), so a
-    crashed train RESUMES from the last committed checkpoint: calling
-    again with the same ``state_path`` continues where it stopped, and
-    a call asking for fewer merges than already committed just returns
-    the prefix. Between checkpoints the in-memory localCheckpoint fast
+    over). Every ``checkpoint_every`` merges this loop commits the
+    current ``(vocab, merges)`` pair through the whole-tree swap
+    (``io.sinks._full_swap``: staged, marked complete only once both
+    parts are written, renamed in — so not even a crash during the
+    FIRST commit, which has no final tree to fall back to, can heal a
+    partial pair into live state). A crashed train RESUMES from the
+    last committed checkpoint: calling again with the same
+    ``state_path`` continues where it stopped, and a call asking for
+    fewer merges than already committed just returns the prefix. Between checkpoints the in-memory localCheckpoint fast
     path still applies — ``checkpoint_every`` trades re-doable work for
     parquet-write overhead (measured in PERF.md "BPE checkpointed
     train probe").
@@ -218,11 +187,10 @@ def bpe_train_checkpointed(
     ``{state_path}/merges`` (the table learned so far). Single-writer
     contract, like every state sink in this package.
     """
-    from token_etl_spark.io.sinks import _bucket_fs, _delete_dir, _read_existing
-    from token_etl_spark.streaming.curation import _swap_state_dir
+    from token_etl_spark.io.sinks import _full_swap, _heal_full_swap, _read_existing
 
     spark = docs.sparkSession
-    _recover_bpe_state(spark, state_path)
+    _heal_full_swap(spark, state_path)
     merges_df = _read_existing(spark, f"{state_path.rstrip('/')}/merges")
     if merges_df is not None:
         done = merges_df.count()
@@ -247,22 +215,11 @@ def bpe_train_checkpointed(
         merges = []
 
     def _commit() -> None:
-        staging = state_path.rstrip("/") + ".staging"
         out = merges[0]
         for m in merges[1:]:
             out = out.unionByName(m)
-        _delete_dir(spark, staging)  # stale staging from an interrupted commit
-        vocab.write.mode("overwrite").parquet(f"{staging}/vocab")
-        out.write.mode("overwrite").parquet(f"{staging}/merges")
-        # the marker is written LAST: _recover_bpe_state promotes a
-        # final-less staging ONLY when it carries the marker, so a crash
-        # anywhere mid-staging-write can never be healed into live state
-        # (on a FIRST commit there is no final dir to fall back to — the
-        # generic lone-staging-is-complete invariant does not hold here;
-        # r11 review)
-        fs, hpath = _bucket_fs(spark, staging)
-        fs.create(hpath(f"{staging}/_COMMITTED"), True).close()
-        _swap_state_dir(spark, staging, state_path)
+        parts = {"vocab": vocab.write.parquet, "merges": out.write.parquet}
+        _full_swap(spark, state_path, parts)
 
     committed_at = last_learned = done
     for i in range(done + 1, n_merges + 1):

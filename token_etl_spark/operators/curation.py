@@ -2080,10 +2080,10 @@ def refresh_domain_stats(
 
     Returns the refreshed frame read back through the validated
     loader."""
-    from token_etl_spark.io.sinks import _bucket_fs
+    from token_etl_spark.io.sinks import _bucket_fs, _heal_full_swap
 
     base = path.rstrip("/")
-    _heal_domain_stats(spark, path)
+    _heal_full_swap(spark, path)
     fs, hpath = _bucket_fs(spark, path)
     if fs.exists(hpath(f"{base}/params")) and not allow_rule_change:
         rule, digest = _suffix_fingerprint(suffixes)
@@ -2131,101 +2131,44 @@ def save_domain_stats(
     variations the operator itself ignores (case, padding, blanks,
     duplicates) are not.
 
-    Commit protocol: stats and params stage together under
-    ``<path>.staging-stats`` and swap in via a marker-gated whole-tree
-    rename — a "stats then params" in-place overwrite would leave a
-    crash window where NEW stats sit beside STALE params and a later
-    load validates the wrong rule successfully, re-enabling the exact
-    silent mismatch this feature exists to prevent (review-found r12).
+    Commit protocol: stats and params commit together through the
+    whole-tree swap (``io.sinks._full_swap``) — a "stats then params"
+    in-place overwrite would leave a crash window where NEW stats sit
+    beside STALE params and a later load validates the wrong rule
+    successfully, re-enabling the exact silent mismatch this feature
+    exists to prevent (review-found r12). The swap refuses to commit a
+    staging that lost either half mid-write (ADVICE r13), and its
+    readers never delete an in-flight staging, so a periodic
+    :func:`refresh_domain_stats` may run beside streaming gates that
+    load the tree every micro-batch.
     CALLER CONTRACT: ``suffixes`` here must be the table the frame was
     FIT with — prefer :func:`fit_and_save_domain_stats`, which cannot
     record a wrong stamp."""
-    from token_etl_spark.io.sinks import _bucket_fs, _delete_dir
+    from token_etl_spark.io.sinks import _full_swap
 
-    base = path.rstrip("/")
-    _heal_domain_stats(spark, path)
-    staging = base + _STAGING_DOMSTATS
-    _delete_dir(spark, staging)
-    stats.write.mode("overwrite").parquet(f"{staging}/stats")
-    rule, digest = _suffix_fingerprint(suffixes)
-    spark.createDataFrame(
-        [(rule, digest)], "rule string, suffix_md5 string"
-    ).write.mode("overwrite").parquet(f"{staging}/params")
-    fs, hpath = _bucket_fs(spark, path)
-    # verify the staging actually holds BOTH halves before the marker
-    # makes it swap-eligible — belt-and-suspenders against any foreign
-    # deletion of the staging mid-write: without this check a
-    # marker-only (or params-only) dir would rename over the live tree
-    # and lose it (ADVICE r13)
-    if not (
-        fs.exists(hpath(f"{staging}/stats"))
-        and fs.exists(hpath(f"{staging}/params"))
-    ):
-        raise IOError(
-            f"save_domain_stats: staging at {staging} lost its stats/"
-            "params mid-write (concurrent deletion?) — refusing to "
-            "commit a partial tree over the live one"
-        )
-    fs.create(hpath(f"{staging}/{_DOMSTATS_MARKER}"), True).close()
-    dst = hpath(base)
-    if fs.exists(dst):
-        fs.delete(dst, True)
-    if not fs.rename(hpath(staging), dst):
-        raise IOError(f"domain stats swap failed: {staging} -> {base}")
+    def write_params(params_dir: str) -> None:
+        rule, digest = _suffix_fingerprint(suffixes)
+        spark.createDataFrame(
+            [(rule, digest)], "rule string, suffix_md5 string"
+        ).write.parquet(params_dir)
 
-
-_STAGING_DOMSTATS = ".staging-stats"
-_DOMSTATS_MARKER = "_STATS_COMMITTED"
-
-
-def _heal_domain_stats(spark, path: str, finish_only: bool = False) -> None:
-    """Finish a crash-interrupted stats swap (marker present — the
-    staging is a complete replacement) or discard an incomplete one.
-
-    ``finish_only=True`` is the READ-path variant (the
-    ``_heal_shard_layout`` r12 rule, applied here): it finishes a
-    marker-present swap but NEVER deletes marker-less staging. The
-    advertised deployment runs :func:`refresh_domain_stats` as a
-    periodic batch job CONCURRENTLY with streaming gates that call
-    :func:`load_domain_stats` every micro-batch — the refresh's staging
-    is marker-less for its whole stats+params write window, and a
-    reader deleting it mid-write would let the writer's marker-only
-    rename destroy the live tree (ADVICE r13). The full heal stays
-    writer-only (save/refresh hold the single-writer contract among
-    themselves)."""
-    from token_etl_spark.io.sinks import _bucket_fs
-
-    base = path.rstrip("/")
-    staging = base + _STAGING_DOMSTATS
-    fs, hpath = _bucket_fs(spark, path)
-    sp = hpath(staging)
-    if not fs.exists(sp):
-        return
-    if fs.exists(hpath(f"{staging}/{_DOMSTATS_MARKER}")):
-        dst = hpath(base)
-        if fs.exists(dst):
-            fs.delete(dst, True)
-        if not fs.rename(sp, dst):
-            raise IOError(f"domain stats swap recovery failed: {staging}")
-    elif not finish_only:
-        fs.delete(sp, True)
+    _full_swap(spark, path, {"stats": stats.write.parquet, "params": write_params})
 
 
 def is_saved_domain_stats(spark, path: str) -> bool:
     """True when ``path`` is a :func:`save_domain_stats` provenance
     tree (``stats`` + ``params`` beside each other) rather than a bare
-    parquet frame. Heals a crash-interrupted save first (finish-only —
-    a read must never delete a concurrent refresh's marker-less
-    staging, ADVICE r13), so a swap that committed its marker but not
-    its rename still reads as a provenance tree. Lets callers handed
+    parquet frame. Heals a crash-interrupted save first, so a swap that
+    marked its staging but did not rename it still reads as a
+    provenance tree. Lets callers handed
     "a domain-stats path" (the CLI) route a provenance tree through
     :func:`load_domain_stats`'s rule validation instead of silently
     reading ``<path>`` raw and bypassing the fit/apply check
     (ADVICE r12)."""
-    from token_etl_spark.io.sinks import _bucket_fs
+    from token_etl_spark.io.sinks import _bucket_fs, _heal_full_swap
 
     base = path.rstrip("/")
-    _heal_domain_stats(spark, path, finish_only=True)
+    _heal_full_swap(spark, path)
     fs, hpath = _bucket_fs(spark, path)
     return fs.exists(hpath(f"{base}/params")) and fs.exists(
         hpath(f"{base}/stats")
@@ -2241,12 +2184,13 @@ def load_domain_stats(
     ``suffixes`` setting matches the one the frame was FIT under
     (see :func:`save_domain_stats`); raises ValueError on mismatch
     instead of silently flagging every document domain_kept=False.
-    Finishes any crash-interrupted save first (finish-only: the
-    streaming gates call this per micro-batch beside a periodic
-    :func:`refresh_domain_stats`, and a reader must never delete the
-    refresh's in-flight marker-less staging — ADVICE r13)."""
+    Finishes any crash-interrupted save first (``io.sinks._heal_full_swap``
+    never deletes the in-flight staging of a concurrent
+    :func:`refresh_domain_stats`)."""
+    from token_etl_spark.io.sinks import _heal_full_swap
+
     base = path.rstrip("/")
-    _heal_domain_stats(spark, path, finish_only=True)
+    _heal_full_swap(spark, path)
     rule, digest = _suffix_fingerprint(suffixes)
     params = spark.read.parquet(f"{base}/params").collect()[0]
     if (params["rule"], params["suffix_md5"]) != (rule, digest):

@@ -906,20 +906,31 @@ def build_ivf_index(
     calls skip both training and corpus assignment. At 100 TB the
     assignments table is the corpus re-partitioned once; each probe reads
     only n_probe/n_centroids of it via partition pruning.
+
+    The index commits whole through ``io.sinks._full_swap``: it replaces
+    any tree at ``path`` (stream-admitted partitions included), and a
+    crash mid-build leaves the previous index intact.
     """
+    from token_etl_spark.io.sinks import _full_swap
+
     cents, assigned = build_ivf_index_frames(
         corpus, n_centroids, refine_iters, id_col, vec_col
     )
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
     # co-partition on the cell before the partitioned write: without it
     # every writing task splays a file into every cell dir (tasks ×
     # cells tiny files — the r10 partitionBy finding, measured 4,098 →
     # 130 files on the bucketed-state sink). One task per cell caps
     # write parallelism at n_centroids, which at scale exceeds the
     # cluster's parallelism anyway.
-    assigned.repartition(n_centroids, "centroid_id").write.mode(
-        "overwrite"
-    ).partitionBy("centroid_id").parquet(f"{path}/assignments")
+    cells = assigned.repartition(n_centroids, "centroid_id").write
+    _full_swap(
+        corpus.sparkSession,
+        path,
+        {
+            "centroids": cents.write.parquet,
+            "assignments": cells.partitionBy("centroid_id").parquet,
+        },
+    )
 
 
 def ivf_search_frames(

@@ -391,18 +391,18 @@ def merge_kmv_state(
     which treats ONLY analyzer path-not-found as first-batch — a
     transient storage error or corrupt footer re-raises instead of
     silently discarding all accumulated state under the overwrite (the
-    exact hazard that helper documents). The rewrite lands in a staging
-    directory first and is then swapped in via filesystem rename, so the
-    files the merge plan read are never overwritten mid-read (no
-    persist/count eviction race) and a crash mid-write leaves the
-    previous state intact; the one non-atomic window (between delete and
-    rename) is healed on the next merge by ``_recover_state_dir``, which
-    renames a lone complete staging dir into place before reading — the
-    standard HDFS-rename tradeoff (a table format with real MERGE would
-    close it at 100 TB).
+    exact hazard that helper documents). The rewrite commits through
+    ``io.sinks._full_swap``: it lands in a staging tree first and is
+    renamed into place, so the files the merge plan read are never
+    overwritten mid-read (no persist/count eviction race) and a crash
+    mid-write leaves the previous state intact. The one non-atomic
+    window (between delete and rename) leaves a marked staging, which
+    the heal at the start of the next merge promotes before reading —
+    the standard HDFS-rename tradeoff (a table format with real MERGE
+    would close it at 100 TB).
     """
     from pyspark.sql import Window
-    from token_etl_spark.io.sinks import _read_existing
+    from token_etl_spark.io.sinks import _full_swap, _heal_full_swap, _read_existing
     from token_etl_spark.operators.sketch import kmv_sketch
 
     spark = batch_df.sparkSession
@@ -410,7 +410,7 @@ def merge_kmv_state(
     batch_sk = kmv_sketch(
         batch_df, item_col, group_cols, k=k, n_prebuckets=n_prebuckets
     ).select(*g, "h")
-    _recover_state_dir(spark, state_path)
+    _heal_full_swap(spark, state_path)
     prev = _read_existing(spark, state_path)
     if prev is not None:
         merged = prev.select(*g, "h").unionByName(batch_sk).distinct()
@@ -421,43 +421,7 @@ def merge_kmv_state(
         merged.withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= k)
     )
-    staging = state_path.rstrip("/") + ".staging"
-    trimmed.write.mode("overwrite").parquet(staging)
-    _swap_state_dir(spark, staging, state_path)
-
-
-def _swap_state_dir(spark, staging: str, final: str) -> None:
-    """Replace ``final`` with ``staging`` via the Hadoop FileSystem API
-    (filesystem-agnostic: local, HDFS, or any mounted FS)."""
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path
-    dst = hpath(final)
-    fs = dst.getFileSystem(sc._jsc.hadoopConfiguration())
-    if fs.exists(dst):
-        fs.delete(dst, True)
-    if not fs.rename(hpath(staging), dst):
-        raise IOError(f"state swap failed: rename {staging} -> {final}")
-
-
-def _recover_state_dir(spark, final: str) -> None:
-    """Crash recovery for the staging swap's one non-atomic window: a
-    failure between ``delete(final)`` and ``rename(staging, final)``
-    leaves no final dir but a COMPLETE ``.staging`` dir (the delete only
-    runs after the staging write returned, so a lone staging dir is
-    always a fully-written state). Without this, the next merge's
-    ``_read_existing`` would see path-not-found and silently restart
-    state from scratch. Finish the interrupted rename iff final is
-    missing AND staging exists; when final exists, staging is a leftover
-    of unknown completeness (crash mid-write) and is left alone — the
-    next successful merge overwrites it."""
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path
-    dst = hpath(final)
-    fs = dst.getFileSystem(sc._jsc.hadoopConfiguration())
-    staging = hpath(final.rstrip("/") + ".staging")
-    if not fs.exists(dst) and fs.exists(staging):
-        if not fs.rename(staging, dst):
-            raise IOError(f"state recovery failed: rename {staging} -> {final}")
+    _full_swap(spark, state_path, {"": trimmed.write.parquet})
 
 
 def run_streaming_kmv(
@@ -741,7 +705,10 @@ def _novelty_sink_batch(
         return
     from pyspark.sql import Window
 
-    from token_etl_spark.streaming.dedup import _read_partitioned_state
+    from token_etl_spark.streaming.dedup import (
+        _read_partitioned_state,
+        _write_batch_partition,
+    )
 
     spark = batch_df.sparkSession
     grams = shingles(batch_df, text_col=text_col, id_col=id_col, k=k)
@@ -774,17 +741,13 @@ def _novelty_sink_batch(
         )
     )
     if scores_path is not None:
-        scored.write.mode("overwrite").parquet(
-            f"{scores_path.rstrip('/')}/batch_id={key}"
-        )
+        _write_batch_partition(scored, scores_path, key)
     new_grams = shingles(batch_df, text_col=text_col, id_col=id_col, k=k).select(
         "shingle"
     ).distinct()
     if index is not None:
         new_grams = new_grams.join(index.select("shingle"), "shingle", "left_anti")
-    new_grams.write.mode("overwrite").parquet(
-        f"{gram_index_path.rstrip('/')}/batch_id={key}"
-    )
+    _write_batch_partition(new_grams, gram_index_path, key)
 
 
 def read_novelty_scores(spark, scores_path: str) -> DataFrame | None:
@@ -829,6 +792,7 @@ def _snapshot_diff_sink_batch(
     as ``streaming/dedup._neardup_sink_batch``). The old state is
     static, so no own-partition exclusion is needed here."""
     from token_etl_spark.operators.curation import snapshot_status_expr
+    from token_etl_spark.streaming.dedup import _write_batch_partition
 
     if batch_df.isEmpty():
         return
@@ -849,7 +813,7 @@ def _snapshot_diff_sink_batch(
     out = n.join(old, "id", "left").select(
         "id", snapshot_status_expr().alias("status")
     )
-    out.write.mode("overwrite").parquet(f"{diff_path.rstrip('/')}/batch_id={key}")
+    _write_batch_partition(out, diff_path, key)
 
 
 def run_streaming_snapshot_diff(

@@ -176,16 +176,23 @@ def _neardup_sink_batch(
             batch_df, index, text_col, id_col, k, num_hashes, bands, threshold
         ).localCheckpoint(eager=True)
         if matches_path is not None:
-            matches.write.mode("overwrite").parquet(
-                f"{matches_path.rstrip('/')}/batch_id={key}"
-            )
+            _write_batch_partition(matches, matches_path, key)
         dup_ids = matches.select(F.col("id_new").alias("id")).distinct()
         novel = new_idx.join(dup_ids, "id", "left_anti")
     else:
         novel = new_idx
-    novel.write.mode("overwrite").parquet(
-        f"{index_path.rstrip('/')}/batch_id={key}"
-    )
+    _write_batch_partition(novel, index_path, key)
+
+
+def _write_batch_partition(df: DataFrame, path: str, key: str) -> None:
+    """Write one micro-batch's ``batch_id=<key>`` partition of an
+    append-mode state tree, after healing the tree: a marked staging
+    from an interrupted :func:`compact_state_partitions` promoted AFTER
+    this write would drop the partition."""
+    from token_etl_spark.io.sinks import _heal_full_swap
+
+    _heal_full_swap(df.sparkSession, path)
+    df.write.mode("overwrite").parquet(f"{path.rstrip('/')}/batch_id={key}")
 
 
 def _batch_partition_key(checkpoint_path: str, batch_id: int) -> str:
@@ -260,11 +267,17 @@ def _read_partitioned_state(
     leave exactly that layout (``batch_id=<key>`` containing only
     ``_SUCCESS``) — re-raising would wedge every later batch of the
     stream (ADVICE r10). Any other analyzer failure (corrupt footer,
-    conflicting types) still re-raises."""
+    conflicting types) still re-raises.
+
+    Heals an interrupted whole-tree swap first
+    (``io.sinks._heal_full_swap``): a compaction cut between the final
+    delete and the rename leaves the whole state in a marked staging,
+    and reading around it would re-admit every indexed row."""
     from pyspark.errors import AnalysisException
 
-    from token_etl_spark.io.sinks import _read_existing
+    from token_etl_spark.io.sinks import _heal_full_swap, _read_existing
 
+    _heal_full_swap(spark, path)
     try:
         df = _read_existing(spark, path)
     except AnalysisException as e:
@@ -314,11 +327,10 @@ def compact_state_partitions(
     partition is sized from the directory listing
     (``operators/layout.dir_size_bytes`` → ~``target_mb`` per file).
 
-    Crash safety reuses the kmv staging-swap machinery
-    (``streaming/curation._swap_state_dir`` + ``_recover_state_dir``
-    healing): the consolidated layout lands in ``<path>.staging`` first
-    and swaps in by rename, so a crash at any point leaves either the
-    old or the new complete layout, never a mix.
+    Crash safety is the whole-tree swap (``io.sinks._full_swap``): the
+    consolidated layout is staged and renamed in, so a crash at any
+    point leaves either the old or the new complete layout, never a
+    mix — every reader and appender of the tree heals first.
 
     CONTRACT — quiescent streams only: run this between runs (or on a
     stopped stream). The consolidated partition key (``<label>-0``,
@@ -327,14 +339,10 @@ def compact_state_partitions(
     retry-self-match hazard the per-batch exclusion closes; committed
     batches are exactly the ones a retry can never replay.
     """
-    from token_etl_spark.io.sinks import _read_existing
+    from token_etl_spark.io.sinks import _full_swap, _heal_full_swap, _read_existing
     from token_etl_spark.operators.layout import dir_size_bytes
-    from token_etl_spark.streaming.curation import (
-        _recover_state_dir,
-        _swap_state_dir,
-    )
 
-    _recover_state_dir(spark, path)
+    _heal_full_swap(spark, path)
     df = _read_existing(spark, path)
     if df is None or "batch_id" not in df.columns:
         return 0
@@ -342,20 +350,8 @@ def compact_state_partitions(
     if n_parts <= 1:
         return 0
     n_files = max(1, -(-dir_size_bytes(spark, path) // (target_mb << 20)))
-    staging = path.rstrip("/") + ".staging"
-    # A stale staging dir here means a previous compaction crashed AFTER
-    # its staging write but BEFORE the final-dir delete (final still
-    # exists, so _recover_state_dir correctly left it alone). Writing
-    # into it would only overwrite OUR partition name — a stale
-    # partition under a different label would survive the swap and
-    # duplicate rows. Clear it first.
-    from token_etl_spark.io.sinks import _delete_dir
-
-    _delete_dir(spark, staging)
-    df.drop("batch_id").repartition(n_files).write.mode("overwrite").parquet(
-        f"{staging}/batch_id={label}-0"
-    )
-    _swap_state_dir(spark, staging, path)
+    compacted = df.drop("batch_id").repartition(n_files)
+    _full_swap(spark, path, {f"batch_id={label}-0": compacted.write.parquet})
     return n_parts
 
 
@@ -523,9 +519,7 @@ def _embedding_neardup_sink_batch(
             .localCheckpoint(eager=True)
         )
         if matches_path is not None:
-            matches.write.mode("overwrite").parquet(
-                f"{matches_path.rstrip('/')}/batch_id={key}"
-            )
+            _write_batch_partition(matches, matches_path, key)
         dup_ids = matches.select(F.col("id_new").alias(id_col)).distinct()
         # eager checkpoint: the emptiness probe below and the partition
         # write both consume novel — without it the anti-join runs twice
@@ -562,13 +556,13 @@ def _read_quantizer(spark: SparkSession, index_path: str) -> DataFrame:
     """The index's frozen quantizer, or a ValueError naming the remedy —
     shared by the sink and the health report so the layout and the
     error contract can never drift between them. Heals an interrupted
-    :func:`rebuild_ivf_index` swap first (crash between the final-dir
-    delete and the staging rename leaves only the complete staging
-    tree — without the heal this would misread as "no quantizer")."""
-    from token_etl_spark.io.sinks import _read_existing
-    from token_etl_spark.streaming.curation import _recover_state_dir
+    whole-tree swap of the index first (``io.sinks._heal_full_swap``: a
+    build or rebuild cut between the final-dir delete and the rename
+    leaves the whole index in a marked staging — without the heal this
+    would misread as "no quantizer")."""
+    from token_etl_spark.io.sinks import _heal_full_swap, _read_existing
 
-    _recover_state_dir(spark, index_path)
+    _heal_full_swap(spark, index_path)
     cents = _read_existing(spark, f"{index_path.rstrip('/')}/centroids")
     if cents is None:
         raise ValueError(
@@ -588,12 +582,11 @@ def read_embedding_index(
     ``exclude_key`` drops one stream batch's partition (the sink's retry
     guard); the sink calls through here so the serving read and the
     batch pipeline's read are the same definition of "the index".
-    Heals an interrupted :func:`rebuild_ivf_index` swap first, like
+    Heals an interrupted whole-tree swap of the index first, like
     :func:`_read_quantizer`."""
-    from token_etl_spark.io.sinks import _read_existing
-    from token_etl_spark.streaming.curation import _recover_state_dir
+    from token_etl_spark.io.sinks import _heal_full_swap, _read_existing
 
-    _recover_state_dir(spark, index_path)
+    _heal_full_swap(spark, index_path)
     seed = _read_existing(spark, f"{index_path.rstrip('/')}/assignments")
     streamed = _read_partitioned_state(
         spark, f"{index_path.rstrip('/')}/stream_assignments", exclude_key=exclude_key
@@ -660,13 +653,12 @@ def rebuild_ivf_index(
     state (``matches_path``) is untouched — recorded pairs stay valid;
     they were verified by exact cosine, not by any cell geometry.
 
-    Commit protocol: the new ``centroids`` + ``assignments`` are staged
-    under ``{index_path}.staging`` and swapped in whole-tree via rename
-    (``streaming/curation._swap_state_dir``); readers and the next
-    rebuild heal the one non-atomic window (final deleted, complete
-    staging present) via ``_recover_state_dir`` — same machinery as
-    :func:`compact_state_partitions`. A crash mid-staging leaves the
-    live index untouched (stale staging is cleared up front).
+    Commit protocol: the retrain is ``build_ivf_index`` over the combined
+    index, so the new ``centroids`` + ``assignments`` commit through its
+    whole-tree swap (``io.sinks._full_swap``): a crash mid-staging
+    leaves the live index untouched, and the one non-atomic window
+    (final deleted, marked staging present) is healed by every reader
+    of the index.
 
     CONTRACT — quiescent streams only (same as compaction): run between
     runs or on a stopped stream. A rebuild racing a live batch could
@@ -679,14 +671,8 @@ def rebuild_ivf_index(
     (``spherical_kmeans`` — init is the n smallest corpus ids), so a
     crashed-and-retried rebuild converges to the identical index.
     """
-    from token_etl_spark.io.sinks import _delete_dir
-    from token_etl_spark.operators.similarity import build_ivf_index_frames
-    from token_etl_spark.streaming.curation import (
-        _recover_state_dir,
-        _swap_state_dir,
-    )
+    from token_etl_spark.operators.similarity import build_ivf_index
 
-    _recover_state_dir(spark, index_path)  # finish an interrupted prior swap
     if n_centroids is None:
         n_centroids = _read_quantizer(spark, index_path).count()
     combined = read_embedding_index(spark, index_path)
@@ -695,20 +681,12 @@ def rebuild_ivf_index(
             f"embedding index at {index_path} has no assignments to rebuild"
             " from — build_ivf_index a seed corpus or admit a batch first"
         )
-    cents, assigned = build_ivf_index_frames(
+    build_ivf_index(
         combined.select("corpus_id", "cv"),
+        index_path,
         n_centroids=n_centroids,
         refine_iters=refine_iters,
         id_col="corpus_id",
         vec_col="cv",
     )
-    staging = index_path.rstrip("/") + ".staging"
-    _delete_dir(spark, staging)  # stale staging from an interrupted rebuild
-    cents.write.mode("overwrite").parquet(f"{staging}/centroids")
-    # co-partition on the cell first — the r10 partitionBy file-splay fix
-    assigned.repartition(n_centroids, "centroid_id").write.mode(
-        "overwrite"
-    ).partitionBy("centroid_id").parquet(f"{staging}/assignments")
-    n = spark.read.parquet(f"{staging}/assignments").count()
-    _swap_state_dir(spark, staging, index_path)
-    return n
+    return spark.read.parquet(f"{index_path.rstrip('/')}/assignments").count()

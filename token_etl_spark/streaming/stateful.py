@@ -247,13 +247,14 @@ def merge_retention_state(
     state equals the batch answer over the concatenated input (no
     approximation, no ordering sensitivity: the state is a set union).
     State is bounded by user-periods (users × observed periods), not
-    events; rewrite goes through the same staging-swap as
-    ``merge_kmv_state`` so a crash never clobbers the previous state."""
-    from token_etl_spark.io.sinks import _read_existing
-    from token_etl_spark.streaming.curation import _recover_state_dir, _swap_state_dir
+    events; the rewrite commits through the whole-tree swap
+    (``io.sinks._full_swap``), like ``merge_kmv_state``, so a crash
+    never clobbers the previous state and the next merge heals an
+    interrupted swap before reading."""
+    from token_etl_spark.io.sinks import _full_swap, _heal_full_swap, _read_existing
 
     spark = batch_df.sparkSession
-    _recover_state_dir(spark, state_path)
+    _heal_full_swap(spark, state_path)
     period = F.floor(
         F.unix_micros(F.col(ts_col)) / F.lit(float(period_s) * 1_000_000.0)
     ).cast("long")
@@ -266,9 +267,7 @@ def merge_retention_state(
         if prev is None
         else prev.select("user", "period").unionByName(batch_pairs).distinct()
     )
-    staging = state_path.rstrip("/") + ".staging"
-    merged.write.mode("overwrite").parquet(staging)
-    _swap_state_dir(spark, staging, state_path)
+    _full_swap(spark, state_path, {"": merged.write.parquet})
 
 
 def run_streaming_retention(
@@ -306,10 +305,11 @@ def run_streaming_retention(
 def retention_from_state(spark, state_path: str) -> DataFrame:
     """(cohort, period_offset, n_users) from a ``run_streaming_retention``
     state table — the same two aggregations the batch operator runs on
-    its deduplicated activity frame."""
-    from token_etl_spark.streaming.curation import _recover_state_dir
+    its deduplicated activity frame. Heals an interrupted merge swap
+    first."""
+    from token_etl_spark.io.sinks import _heal_full_swap
 
-    _recover_state_dir(spark, state_path)
+    _heal_full_swap(spark, state_path)
     active = spark.read.parquet(state_path)
     first = active.groupBy("user").agg(F.min("period").alias("cohort"))
     return (
