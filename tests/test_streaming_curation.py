@@ -1,5 +1,6 @@
-"""Streaming curation: PII redaction and stream-static decontamination
-agree with their batch twins (streaming/curation.py)."""
+"""Streaming curation: each ingest-time twin (a batch operator applied
+to a stream, or a streaming/curation.py runner) agrees with its batch
+form."""
 
 from __future__ import annotations
 
@@ -10,7 +11,6 @@ from token_etl_spark.operators import curation as C
 from token_etl_spark.streaming.curation import (
     benchmark_shingle_set,
     streaming_decontaminate,
-    streaming_pii_redact,
 )
 from token_etl_spark.streaming.dedup import read_file_stream
 from token_etl_spark.streaming.hourly import run_to_memory
@@ -26,7 +26,7 @@ def _staged_docs(spark, sf_dir, tmp_path, name):
 def test_streaming_pii_matches_batch(spark, sf_dir, tmp_path):
     docs, staged = _staged_docs(spark, sf_dir, tmp_path, "pii_stream")
     stream = read_file_stream(spark, staged, docs.schema)
-    run_to_memory(streaming_pii_redact(stream), "pii_out", output_mode="append")
+    run_to_memory(C.pii_scan(stream), "pii_out", output_mode="append")
     got = spark.sql("SELECT * FROM pii_out")
     exp = C.pii_scan(docs)
     assert got.count() == exp.count()
@@ -290,7 +290,6 @@ def test_streaming_histogram_matches_batch(spark, sf_dir, tmp_path):
     """Running histogram over micro-batches (complete mode) equals the
     batch histogram_counts cell-for-cell."""
     from token_etl_spark.operators.sketch import histogram_counts
-    from token_etl_spark.streaming.curation import streaming_histogram
 
     docs = load_table(spark, sf_dir, "documents")
     staged = str(tmp_path / "hist_stream")
@@ -300,7 +299,7 @@ def test_streaming_histogram_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    out = streaming_histogram(
+    out = histogram_counts(
         stream, "n_chars", 0.0, 2000.0, n_bins=32, group_cols=("source",)
     )
     run_to_memory(out, "hist_out", output_mode="complete")
@@ -621,8 +620,6 @@ def test_streaming_novelty_matches_batch_on_ordered_batches(spark, sf_dir, tmp_p
 
 
 def test_streaming_url_canonicalize_matches_batch(spark, tmp_path):
-    from token_etl_spark.streaming.curation import streaming_url_canonicalize
-
     urls = spark.createDataFrame(
         [
             (1, "HTTP://WWW.Example.COM:80/Path/Sub/?utm_source=x&b=2&a=1#frag"),
@@ -635,7 +632,7 @@ def test_streaming_url_canonicalize_matches_batch(spark, tmp_path):
     staged = str(tmp_path / "url_stream")
     urls.write.parquet(staged)
     stream = read_file_stream(spark, staged, urls.schema)
-    run_to_memory(streaming_url_canonicalize(stream), "url_out", output_mode="append")
+    run_to_memory(C.url_canonicalize(stream), "url_out", output_mode="append")
     got = spark.sql("SELECT * FROM url_out")
     exp = C.url_canonicalize(urls)
     assert got.count() == exp.count()
@@ -644,7 +641,6 @@ def test_streaming_url_canonicalize_matches_batch(spark, tmp_path):
 
 def test_streaming_text_normalize_matches_batch(spark, tmp_path):
     from token_etl_spark.operators.text import normalize_text
-    from token_etl_spark.streaming.curation import streaming_text_normalize
 
     docs = spark.createDataFrame(
         [
@@ -657,7 +653,7 @@ def test_streaming_text_normalize_matches_batch(spark, tmp_path):
     staged = str(tmp_path / "norm_stream")
     docs.write.parquet(staged)
     stream = read_file_stream(spark, staged, docs.schema)
-    run_to_memory(streaming_text_normalize(stream), "norm_out", output_mode="append")
+    run_to_memory(normalize_text(stream), "norm_out", output_mode="append")
     got = spark.sql("SELECT * FROM norm_out")
     exp = normalize_text(docs)
     assert got.count() == exp.count() == 3
@@ -694,7 +690,7 @@ def test_streaming_snapshot_diff_matches_batch(spark, sf_dir, tmp_path):
         write_snapshot_state,
     )
     from token_etl_spark.streaming.dedup import (
-        _batch_partition_key,
+        _lineage_keys,
         compact_state_partitions,
     )
 
@@ -758,7 +754,7 @@ def test_streaming_snapshot_diff_matches_batch(spark, sf_dir, tmp_path):
     # retry idempotency: re-running a batch sink with its same key
     # rewrites its partition, leaving the final report unchanged
     _snapshot_diff_sink_batch(
-        gens[0], _batch_partition_key(ckpt, 0), old_path, diff_path
+        gens[0], _lineage_keys(ckpt)(0), old_path, diff_path
     )
     got2 = {
         (r["id"], r["status"])
@@ -866,7 +862,6 @@ def test_streaming_url_dedup_matches_batch(spark, sf_dir, tmp_path):
 
 def test_streaming_html_extract_matches_batch(spark, tmp_path):
     from token_etl_spark.operators.text import extract_html_text
-    from token_etl_spark.streaming.curation import streaming_html_extract
 
     docs = spark.createDataFrame(
         [
@@ -884,7 +879,7 @@ def test_streaming_html_extract_matches_batch(spark, tmp_path):
     staged = str(tmp_path / "html_stream")
     docs.write.parquet(staged)
     stream = read_file_stream(spark, staged, docs.schema)
-    run_to_memory(streaming_html_extract(stream), "html_out", output_mode="append")
+    run_to_memory(extract_html_text(stream), "html_out", output_mode="append")
     got = spark.sql("SELECT * FROM html_out")
     exp = extract_html_text(docs)
     assert got.count() == exp.count() == 3
@@ -1026,7 +1021,6 @@ def test_read_incremental_shards_heals_empty_incoming(spark, sf_dir, tmp_path):
 
 def test_streaming_domain_filter_matches_batch(spark, tmp_path):
     from token_etl_spark.operators.curation import domain_filter, domain_stats
-    from token_etl_spark.streaming.curation import streaming_domain_filter
 
     rows = (
         [(i, f"https://a.good.com/{i}", 0.9) for i in range(30)]
@@ -1039,7 +1033,7 @@ def test_streaming_domain_filter_matches_batch(spark, tmp_path):
     docs.write.parquet(staged)
     stream = read_file_stream(spark, staged, docs.schema)
     run_to_memory(
-        streaming_domain_filter(stream, stats, min_docs=5, min_mean_quality=0.5),
+        domain_filter(stream, stats, min_docs=5, min_mean_quality=0.5),
         "dom_out",
         output_mode="append",
     )
@@ -1219,12 +1213,86 @@ def test_domain_gate_sink_batch_retry_idempotent(spark, tmp_path):
     assert kept == {0: True, 1: False}
 
 
+def _cut_compaction(spark, out):
+    """Compact ``out``, then leave it in the crash window between the
+    final-dir delete and the rename: the whole tree sits in the marked
+    staging."""
+    import os
+    import shutil
+
+    from token_etl_spark.streaming.dedup import compact_state_partitions
+
+    assert compact_state_partitions(spark, out) == 2
+    staging = out + ".staging-full"
+    shutil.move(out, staging)
+    open(os.path.join(staging, "_SUCCESS"), "w").close()
+    return staging
+
+
+def test_domain_gate_sink_heals_interrupted_compaction(spark, tmp_path):
+    """The gate sink heals its output tree before writing: a batch
+    written around a marked compaction staging is dropped when the
+    staging is promoted, losing that batch's decision rows."""
+    import os
+
+    from token_etl_spark.operators.curation import fit_and_save_domain_stats
+    from token_etl_spark.streaming.curation import _domain_gate_sink_batch
+    from token_etl_spark.streaming.dedup import _read_partitioned_state
+
+    docs = spark.createDataFrame(
+        [(i, f"https://good.com/{i}") for i in (0, 1, 2, 3, 7)],
+        "doc_id long, url string",
+    )
+    stats_path = str(tmp_path / "rep")
+    fit_and_save_domain_stats(spark, docs, stats_path)
+    out = str(tmp_path / "gate_out")
+    _domain_gate_sink_batch(docs.where("doc_id < 2"), "g-0", stats_path, out)
+    _domain_gate_sink_batch(docs.where("doc_id in (2, 3)"), "g-1", stats_path, out)
+    staging = _cut_compaction(spark, out)
+
+    _domain_gate_sink_batch(docs.where("doc_id = 7"), "g-2", stats_path, out)
+    ids = sorted(r["doc_id"] for r in _read_partitioned_state(spark, out).collect())
+    assert ids == [0, 1, 2, 3, 7]  # batch 7's decision row kept
+    assert not os.path.exists(staging)
+
+
+def test_ingest_sink_heals_interrupted_compaction(spark, tmp_path):
+    """The composed ingest sink heals its output tree before writing,
+    like the gate sink: every input document keeps its decision row."""
+    import os
+
+    from token_etl_spark.operators.curation import fit_and_save_domain_stats
+    from token_etl_spark.streaming.curation import _ingest_sink_batch
+    from token_etl_spark.streaming.dedup import _read_partitioned_state
+
+    docs = spark.createDataFrame(
+        [
+            (i, f"<p>ordinary crawl prose number {i}</p>", f"https://good.com/{i}")
+            for i in (0, 1, 2, 3, 7)
+        ],
+        "doc_id long, text string, url string",
+    )
+    stats_path = str(tmp_path / "rep")
+    fit_and_save_domain_stats(spark, docs, stats_path)
+    out = str(tmp_path / "ingest_out")
+    _ingest_sink_batch(docs.where("doc_id < 2"), "i-0", stats_path, out)
+    _ingest_sink_batch(docs.where("doc_id in (2, 3)"), "i-1", stats_path, out)
+    staging = _cut_compaction(spark, out)
+
+    _ingest_sink_batch(docs.where("doc_id = 7"), "i-2", stats_path, out)
+    ids = sorted(r["doc_id"] for r in _read_partitioned_state(spark, out).collect())
+    assert ids == [0, 1, 2, 3, 7]  # batch 7's decision row kept
+    assert not os.path.exists(staging)
+
+
 def test_streaming_repetition_filter_matches_batch(spark, tmp_path):
     """The repetition gate's streaming twin: the map-only inline form
     reaches the explode-form batch gate's exact keep/reject decisions
     over a real file stream in append mode (no state, no watermark)."""
-    from token_etl_spark.operators.text import gopher_repetition_filter
-    from token_etl_spark.streaming.curation import streaming_repetition_filter
+    from token_etl_spark.operators.text import (
+        gopher_repetition_filter,
+        gopher_repetition_filter_inline,
+    )
 
     rows = [
         (1, "the spam line is here today ok\n" * 20),
@@ -1243,7 +1311,7 @@ def test_streaming_repetition_filter_matches_batch(spark, tmp_path):
     docs.write.parquet(staged)
     stream = read_file_stream(spark, staged, docs.schema)
     run_to_memory(
-        streaming_repetition_filter(stream), "rep_out", output_mode="append"
+        gopher_repetition_filter_inline(stream), "rep_out", output_mode="append"
     )
     got = {
         r["doc_id"]: (r["keep"], r["reject_reasons"])

@@ -1,11 +1,11 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from token_etl_spark.io.sources import load_table
 from token_etl_spark.streaming.dedup import (
     read_file_stream,
-    streaming_dedup_exact,
     streaming_dedup_within_watermark,
 )
 from token_etl_spark.streaming.hourly import run_to_memory
@@ -22,7 +22,7 @@ def _staged_with_dups(spark, sf_dir, tmp_path, name):
 def test_streaming_exact_dedup_drops_replayed_rows(spark, sf_dir, tmp_path):
     events, staged = _staged_with_dups(spark, sf_dir, tmp_path, "sd_exact")
     stream = read_file_stream(spark, staged, events.schema)
-    deduped = streaming_dedup_exact(stream, ["event_id"])
+    deduped = stream.dropDuplicates(["event_id"])
     run_to_memory(deduped, "sd_exact_out", output_mode="append")
     got = spark.sql("SELECT count(*) AS n, count(DISTINCT event_id) AS d FROM sd_exact_out").collect()[0]
     n_distinct = events.select("event_id").distinct().count()
@@ -45,7 +45,7 @@ def test_streaming_watermark_dedup_drops_replayed_rows(spark, sf_dir, tmp_path):
 def test_streaming_dedup_keeps_payload_columns(spark, sf_dir, tmp_path):
     events, staged = _staged_with_dups(spark, sf_dir, tmp_path, "sd_cols")
     stream = read_file_stream(spark, staged, events.schema)
-    deduped = streaming_dedup_exact(stream, ["event_id"])
+    deduped = stream.dropDuplicates(["event_id"])
     run_to_memory(deduped, "sd_cols_out", output_mode="append")
     batch = spark.sql("SELECT * FROM sd_cols_out")
     assert set(batch.columns) == set(events.columns)
@@ -296,6 +296,34 @@ def test_streaming_runners_require_checkpoint_path(spark, sf_dir, tmp_path):
         run_streaming_novelty(stream, str(tmp_path / "g"))
 
 
+@pytest.mark.parametrize("checkpoint_path", [None, ""])
+@pytest.mark.parametrize(
+    "module, runner, n_paths",
+    [
+        ("curation", "run_streaming_novelty", 1),
+        ("curation", "run_streaming_snapshot_diff", 2),
+        ("curation", "run_streaming_url_dedup", 1),
+        ("curation", "run_streaming_shard_router", 1),
+        ("curation", "run_streaming_ingest", 2),
+        ("curation", "run_streaming_domain_gate", 2),
+        ("dedup", "run_streaming_neardup", 1),
+        ("dedup", "run_streaming_embedding_neardup", 1),
+    ],
+)
+def test_checkpointed_runner_rejects_missing_checkpoint(
+    module, runner, n_paths, checkpoint_path
+):
+    """Every runner whose state is keyed by checkpoint lineage refuses a
+    missing or empty ``checkpoint_path`` before it touches the stream
+    (``stream=None`` here: no Spark job starts)."""
+    import importlib
+
+    run = getattr(importlib.import_module(f"token_etl_spark.streaming.{module}"), runner)
+    paths = [f"unused_{i}" for i in range(n_paths)]
+    with pytest.raises(ValueError, match="checkpoint_path"):
+        run(None, *paths, checkpoint_path=checkpoint_path)
+
+
 def test_compact_state_partitions_preserves_state_and_continuation(
     spark, sf_dir, tmp_path
 ):
@@ -539,7 +567,7 @@ def test_neardup_threshold_curve_over_stream_state(spark, tmp_path):
     from token_etl_spark.operators.dedup import dedup_threshold_curve
     from token_etl_spark.streaming.dedup import (
         _neardup_sink_batch,
-        _batch_partition_key,
+        _lineage_keys,
         neardup_threshold_curve,
         read_neardup_matches,
     )
@@ -557,7 +585,7 @@ def test_neardup_threshold_curve_over_stream_state(spark, tmp_path):
     ck = str(tmp_path / "ck")
     for b, frame in enumerate((gen0, gen1)):
         _neardup_sink_batch(
-            frame, _batch_partition_key(ck, b), idx, matches_path=mat, threshold=0.5
+            frame, _lineage_keys(ck)(b), idx, matches_path=mat, threshold=0.5
         )
     got = {
         (r["band_lo"], r["n_pairs"], r["n_pairs_at_or_above"])

@@ -67,7 +67,7 @@ def prepare_corpus(
     - ``extract_html=True`` runs boilerplate-stripping extraction
       (``operators/text.extract_html_text``) FIRST: every downstream
       stage — gates, digests, shingles — keys off the extracted text,
-      never the raw markup (the streaming_html_extract rule).
+      never the raw markup (``run_streaming_ingest``'s order).
     - ``url_col`` enables the domain-reputation gate
       (``operators/curation.domain_filter``) BEFORE any per-document
       compute: a pruned domain's documents never reach line/span

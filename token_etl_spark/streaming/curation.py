@@ -1,16 +1,23 @@
 """Streaming curation — ingest-time filtering for a training-data
-pipeline: PII redaction and benchmark decontamination applied to a
-document stream before it lands in the corpus.
+pipeline, applied to a document stream before it lands in the corpus.
 
-Both are streaming twins of operators/curation.py:
+A stateless batch operator (``pii_scan``, ``url_canonicalize``,
+``normalize_text``, ``extract_html_text``,
+``gopher_repetition_filter_inline``, ``domain_filter``,
+``histogram_counts``) is its own streaming twin: its expression tree
+applies to a stream verbatim, so stream and batch agree row-for-row
+(tested against the batch op). This module holds only the twins that
+need more than that:
 
-- ``streaming_pii_redact``: stateless narrow projection (regexp count +
-  redact) — identical expression tree to the batch ``pii_scan``, so the
-  two provably agree row-for-row (tested against the batch op).
 - ``streaming_decontaminate``: stream-static join against the *static*
   benchmark shingle set, collapsed to one broadcast array. Stateless —
   no watermark or state store — which is exactly why decontamination
   belongs at ingest: the eval set is fixed, the stream is infinite.
+- sketches reshaped before aggregation (HLL, count-min), the
+  fit-offline / score-at-ingest scorers, and the ``run_streaming_*``
+  runners, whose per-batch state (KMV, novelty grams, snapshot diff,
+  URL keep-best, shard router, ingest and domain gates) drains through
+  ``streaming/dedup._drain``.
 
 No counterpart exists in the reference (SURVEY §2.9 — batch only).
 """
@@ -20,45 +27,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from token_etl_spark.operators.curation import pii_scan
 from token_etl_spark.operators.dedup import shingle_array_expr, shingles
 from token_etl_spark.operators.text import tokens
-
-
-def streaming_pii_redact(
-    stream: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document PII counts + redacted text on a stream. Stateless —
-    the batch expression tree applies verbatim."""
-    return pii_scan(stream, text_col=text_col, id_col=id_col)
-
-
-def streaming_url_canonicalize(
-    stream: DataFrame, url_col: str = "url", out_col: str = "canon_url"
-) -> DataFrame:
-    """RFC 3986 URL canonicalization on a crawl stream. Stateless — the
-    batch expression tree (``curation.url_canonicalize``) applies
-    verbatim, so stream and batch provably agree row-for-row (tested).
-    Canonicalization belongs at ingest: it is per-row, needs no state,
-    and the canonical column is what downstream URL-level dedup
-    (``streaming_dedup_within_watermark`` on ``out_col``) keys on."""
-    from token_etl_spark.operators.curation import url_canonicalize
-
-    return url_canonicalize(stream, url_col=url_col, out_col=out_col)
-
-
-def streaming_text_normalize(
-    stream: DataFrame, text_col: str = "text", out_col: str = "norm_text"
-) -> DataFrame:
-    """Ingest text canonicalization on a document stream. Stateless —
-    the batch expression tree (``text.normalize_text``) applies
-    verbatim, so stream and batch provably agree row-for-row (tested).
-    Normalization belongs at ingest for the same reason URL
-    canonicalization does: it is per-row, and every downstream digest/
-    shingle/dedup stage keys off the canonical form."""
-    from token_etl_spark.operators.text import normalize_text
-
-    return normalize_text(stream, text_col=text_col, out_col=out_col)
+from token_etl_spark.streaming.dedup import (
+    _drain,
+    _lineage_keys,
+    _read_partitioned_state,
+    _write_batch_partition,
+)
 
 
 def streaming_line_cleanup(stream: DataFrame, text_col: str = "text") -> DataFrame:
@@ -458,40 +434,7 @@ def run_streaming_kmv(
             base, state_path, "_item", group_cols, k=k, n_prebuckets=n_prebuckets
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def streaming_histogram(
-    stream: DataFrame,
-    value_col: str,
-    lo: float,
-    hi: float,
-    n_bins: int = 128,
-    group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Running equi-width histogram over a stream — the streaming twin
-    of ``operators/sketch.py histogram_counts`` (same bin rule, cell-
-    identical counters; completes the sketch family's streaming story
-    alongside bloom / HLL / count-min / KMV).
-
-    Bounded state by construction: the aggregation keys are (group, bin)
-    with bin ∈ [0, n_bins), so state is ≤ n_bins rows per group forever
-    — a pure streaming aggregate (cell-wise ADD is commutative), no
-    foreachBatch needed. Emit mode ``update``/``complete``; a snapshot
-    feeds ``histogram_quantiles`` unchanged, giving running p50/p95/p99
-    of any metric (doc length, quality score) as batches arrive.
-    """
-    from token_etl_spark.operators.sketch import histogram_counts
-
-    return histogram_counts(
-        stream, value_col, lo, hi, n_bins=n_bins, group_cols=group_cols
-    )
+    _drain(stream, _sink)
 
 
 def streaming_semantic_decontaminate(
@@ -654,36 +597,20 @@ def run_streaming_novelty(
     continuation stream (fresh checkpoint over new crawl files, same
     index dir) cannot clobber an earlier run's partitions.
     """
-
-    from token_etl_spark.streaming.dedup import _batch_partition_key
-
-    if checkpoint_path is None:
-        raise ValueError(
-            "run_streaming_novelty requires checkpoint_path: without it the"
-            " state partitions degrade to bare batch_id keys, and a"
-            " continuation stream (which restarts batch numbering at 0)"
-            " would clobber the original run's partitions"
-        )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _novelty_sink_batch(
+    key = _lineage_keys(checkpoint_path)
+    _drain(
+        stream,
+        lambda batch_df, batch_id: _novelty_sink_batch(
             batch_df,
-            _batch_partition_key(checkpoint_path, batch_id),
+            key(batch_id),
             gram_index_path,
             k=k,
             text_col=text_col,
             id_col=id_col,
             scores_path=scores_path,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+        ),
+        checkpoint_path,
     )
-    q.awaitTermination()
 
 
 def _novelty_sink_batch(
@@ -704,11 +631,6 @@ def _novelty_sink_batch(
     if batch_df.isEmpty():
         return
     from pyspark.sql import Window
-
-    from token_etl_spark.streaming.dedup import (
-        _read_partitioned_state,
-        _write_batch_partition,
-    )
 
     spark = batch_df.sparkSession
     grams = shingles(batch_df, text_col=text_col, id_col=id_col, k=k)
@@ -752,8 +674,6 @@ def _novelty_sink_batch(
 
 def read_novelty_scores(spark, scores_path: str) -> DataFrame | None:
     """All per-batch novelty rows appended so far (partition col dropped)."""
-    from token_etl_spark.streaming.dedup import _read_partitioned_state
-
     return _read_partitioned_state(spark, scores_path)
 
 
@@ -792,7 +712,6 @@ def _snapshot_diff_sink_batch(
     as ``streaming/dedup._neardup_sink_batch``). The old state is
     static, so no own-partition exclusion is needed here."""
     from token_etl_spark.operators.curation import snapshot_status_expr
-    from token_etl_spark.streaming.dedup import _write_batch_partition
 
     if batch_df.isEmpty():
         return
@@ -847,32 +766,19 @@ def run_streaming_snapshot_diff(
     dir of (id, status) rows. ``compact_state_partitions``
     (streaming/dedup.py) applies to ``diff_path`` unchanged when batch
     count grows pathological."""
-    from token_etl_spark.streaming.dedup import _batch_partition_key
-
-    if not checkpoint_path:
-        raise ValueError(
-            "checkpoint_path is required: it anchors source tracking and the "
-            "state-partition lineage prefix (retry/continuation idempotency)"
-        )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _snapshot_diff_sink_batch(
+    key = _lineage_keys(checkpoint_path)
+    _drain(
+        stream,
+        lambda batch_df, batch_id: _snapshot_diff_sink_batch(
             batch_df,
-            _batch_partition_key(checkpoint_path, batch_id),
+            key(batch_id),
             old_path,
             diff_path,
             id_col=id_col,
             text_col=text_col,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+        ),
+        checkpoint_path,
     )
-    q.awaitTermination()
 
 
 def finalize_snapshot_diff(spark, old_path: str, diff_path: str) -> DataFrame:
@@ -883,8 +789,6 @@ def finalize_snapshot_diff(spark, old_path: str, diff_path: str) -> DataFrame:
     (one anti-join of the thin old state against the accumulated ids).
     Output schema matches the batch ``snapshot_diff`` exactly —
     equivalence is pinned in tests/test_streaming_curation.py."""
-    from token_etl_spark.streaming.dedup import _read_partitioned_state
-
     seen = _read_partitioned_state(spark, diff_path)
     old = spark.read.parquet(old_path)
     if seen is None:
@@ -975,30 +879,19 @@ def run_streaming_url_dedup(
     under the batch contract's tie rules, which require ids unique
     across the whole stream (re-deliveries of the same (id, quality)
     row are absorbed idempotently)."""
-    if not checkpoint_path:
-        raise ValueError(
-            "checkpoint_path is required: it anchors Structured Streaming's "
-            "source tracking (exactly-once batch delivery into the sink)"
-        )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _url_dedup_sink_batch(
+    _lineage_keys(checkpoint_path)  # no checkpoint, no exactly-once delivery
+    _drain(
+        stream,
+        lambda batch_df, batch_id: _url_dedup_sink_batch(
             batch_df,
             state_path,
             n_buckets=n_buckets,
             url_col=url_col,
             quality_col=quality_col,
             id_col=id_col,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+        ),
+        checkpoint_path,
     )
-    q.awaitTermination()
 
 
 def read_url_dedup_state(spark, state_path: str) -> DataFrame | None:
@@ -1008,49 +901,6 @@ def read_url_dedup_state(spark, state_path: str) -> DataFrame | None:
 
     df = _read_existing(spark, state_path)
     return df.drop("_bucket") if df is not None else None
-
-
-def streaming_html_extract(
-    stream: DataFrame,
-    html_col: str = "text",
-    out_col: str = "extracted",
-    min_chars: int = 30,
-    max_link_density: float = 0.35,
-    min_alpha_ratio: float = 0.5,
-) -> DataFrame:
-    """HTML boilerplate extraction on a crawl stream. Stateless — the
-    batch expression tree (``text.extract_html_text``) applies verbatim,
-    so stream and batch provably agree row-for-row (tested). Extraction
-    belongs at ingest, FIRST: it is per-row, needs no state, and every
-    downstream stage (normalization, quality gates, digests, dedup)
-    must key off the extracted text, not the raw markup."""
-    from token_etl_spark.operators.text import extract_html_text
-
-    return extract_html_text(
-        stream,
-        html_col=html_col,
-        out_col=out_col,
-        min_chars=min_chars,
-        max_link_density=max_link_density,
-        min_alpha_ratio=min_alpha_ratio,
-    )
-
-
-def streaming_repetition_filter(
-    stream: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Gopher repetition gate at ingest — the last crawl-ingest tier to
-    gain a streaming twin. The explode-form batch operator aggregates
-    (illegal as a plain stream transform without state/watermark), but
-    every signal is PER-DOCUMENT, so the map-only inline twin
-    (``text.repetition_signals_inline`` — higher-order array folds,
-    one codegen'd projection, no shuffle, no state) applies verbatim:
-    same thresholds, same reject_reasons/keep merge contract, legal in
-    any output mode. Stream ≡ batch gate decision pinned in
-    tests/test_streaming_curation.py."""
-    from token_etl_spark.operators.text import gopher_repetition_filter_inline
-
-    return gopher_repetition_filter_inline(stream, text_col=text_col)
 
 
 def _resolve_route_params(
@@ -1150,32 +1000,20 @@ def run_streaming_shard_router(
     ``shard_id`` remains a partition column INSIDE each batch dir, so
     a reader of ``incoming/`` still prunes by shard.
     ``read_incremental_shards`` serves the combined view."""
-    if not checkpoint_path:
-        raise ValueError(
-            "checkpoint_path is required: it anchors Structured Streaming's "
-            "source tracking (exactly-once batch delivery into the sink)"
-        )
-    from token_etl_spark.streaming.dedup import _batch_partition_key
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _route_sink_batch(
+    key = _lineage_keys(checkpoint_path)
+    _drain(
+        stream,
+        lambda batch_df, batch_id: _route_sink_batch(
             batch_df,
             export_path,
-            _batch_partition_key(checkpoint_path, batch_id),
+            key(batch_id),
             key_col=key_col,
             token_col=token_col,
             text_col=text_col,
             seed=seed,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+        ),
+        checkpoint_path,
     )
-    q.awaitTermination()
 
 
 def read_incremental_shards(spark, export_path: str) -> DataFrame:
@@ -1186,7 +1024,6 @@ def read_incremental_shards(spark, export_path: str) -> DataFrame:
     ``shard_id``. Missing ``incoming/`` (no stream ran yet) serves the
     base alone."""
     from token_etl_spark.io.sinks import _heal_shard_layout
-    from token_etl_spark.streaming.dedup import _read_partitioned_state
 
     # finish any crash-interrupted split/compaction first (the marker-
     # gated staged commit): readers self-heal the one non-atomic window,
@@ -1208,40 +1045,6 @@ def read_incremental_shards(spark, export_path: str) -> DataFrame:
         return base
     inc = inc.withColumn("shard_id", F.col("shard_id").cast("long"))
     return base.unionByName(inc.select(*base.columns))
-
-
-def streaming_domain_filter(
-    stream: DataFrame,
-    stats: DataFrame,
-    url_col: str = "url",
-    min_docs: int = 1,
-    min_mean_quality: float | None = None,
-    max_dup_rate: float | None = None,
-    blocklist: tuple[str, ...] = (),
-    suffixes: DataFrame | None = None,
-) -> DataFrame:
-    """Domain-reputation gate at ingest — the fit-offline /
-    apply-at-ingest twin of ``curation.domain_filter`` (the importance-
-    scoring / LM-scoring / bloom-decontamination pattern): ``stats`` is
-    a PRECOMPUTED ``domain_stats`` frame (batch job over the corpus so
-    far — domain reputation moves slowly, refreshing it is a periodic
-    batch concern, not per-batch state), broadcast as the keep-list;
-    each micro-batch row gets its ``domain`` and ``domain_kept`` flag
-    through the exact batch expression tree, so stream and batch
-    provably agree row-for-row (tested). Stateless beyond the source
-    checkpoint."""
-    from token_etl_spark.operators.curation import domain_filter
-
-    return domain_filter(
-        stream,
-        stats,
-        url_col=url_col,
-        min_docs=min_docs,
-        min_mean_quality=min_mean_quality,
-        max_dup_rate=max_dup_rate,
-        blocklist=blocklist,
-        suffixes=suffixes,
-    )
 
 
 def _ingest_sink_batch(
@@ -1315,7 +1118,7 @@ def _ingest_sink_batch(
             F.when(F.col("ingest_keep"), F.col(html_col)),
         )
     )
-    out.write.mode("overwrite").parquet(f"{out_path.rstrip('/')}/batch_id={key}")
+    _write_batch_partition(out, out_path, key)
 
 
 def run_streaming_ingest(
@@ -1349,18 +1152,12 @@ def run_streaming_ingest(
     broadcast keep-list join + one map-only fold projection — the
     corpus rows never shuffle; the only reads beyond the batch are the
     domain-cardinality reputation tree."""
-    from token_etl_spark.streaming.dedup import _batch_partition_key
-
-    if not checkpoint_path:
-        raise ValueError(
-            "checkpoint_path is required: it anchors source tracking and the "
-            "output-partition lineage prefix (retry/continuation idempotency)"
-        )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _ingest_sink_batch(
+    key = _lineage_keys(checkpoint_path)
+    _drain(
+        stream,
+        lambda batch_df, batch_id: _ingest_sink_batch(
             batch_df,
-            _batch_partition_key(checkpoint_path, batch_id),
+            key(batch_id),
             stats_path,
             out_path,
             html_col=html_col,
@@ -1370,16 +1167,9 @@ def run_streaming_ingest(
             max_dup_rate=max_dup_rate,
             blocklist=blocklist,
             suffixes=suffixes,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+        ),
+        checkpoint_path,
     )
-    q.awaitTermination()
 
 
 def _domain_gate_sink_batch(
@@ -1420,9 +1210,7 @@ def _domain_gate_sink_batch(
         blocklist=blocklist,
         suffixes=suffixes,
     )
-    flagged.write.mode("overwrite").parquet(
-        f"{out_path.rstrip('/')}/batch_id={key}"
-    )
+    _write_batch_partition(flagged, out_path, key)
 
 
 def run_streaming_domain_gate(
@@ -1437,10 +1225,10 @@ def run_streaming_domain_gate(
     blocklist: tuple[str, ...] = (),
     suffixes: DataFrame | None = None,
 ) -> None:
-    """The REFRESH-AWARE form of :func:`streaming_domain_filter`: the
-    static form broadcasts one ``stats`` frame for the stream's
-    lifetime, so a reputation refresh needs a restart to land; this
-    runner re-loads the saved tree (``operators/curation.
+    """The REFRESH-AWARE domain gate at ingest: ``domain_filter``
+    applied to a stream directly broadcasts one ``stats`` frame for the
+    stream's lifetime, so a reputation refresh needs a restart to land;
+    this runner re-loads the saved tree (``operators/curation.
     save_domain_stats`` layout) on EVERY micro-batch — the IVF serving
     sink's centroids re-read pattern — so a
     :func:`~token_etl_spark.operators.curation.refresh_domain_stats`
@@ -1456,18 +1244,12 @@ def run_streaming_domain_gate(
     per micro-batch — cheap against any real batch's gate work, and the
     price buys refresh pickup without stream restarts. Output rows land
     per (checkpoint-lineage, batch_id) partition, retry-idempotent."""
-    from token_etl_spark.streaming.dedup import _batch_partition_key
-
-    if not checkpoint_path:
-        raise ValueError(
-            "checkpoint_path is required: it anchors source tracking and the "
-            "output-partition lineage prefix (retry/continuation idempotency)"
-        )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _domain_gate_sink_batch(
+    key = _lineage_keys(checkpoint_path)
+    _drain(
+        stream,
+        lambda batch_df, batch_id: _domain_gate_sink_batch(
             batch_df,
-            _batch_partition_key(checkpoint_path, batch_id),
+            key(batch_id),
             stats_path,
             out_path,
             url_col=url_col,
@@ -1476,13 +1258,6 @@ def run_streaming_domain_gate(
             max_dup_rate=max_dup_rate,
             blocklist=blocklist,
             suffixes=suffixes,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+        ),
+        checkpoint_path,
     )
-    q.awaitTermination()

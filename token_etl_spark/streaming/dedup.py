@@ -1,23 +1,25 @@
-"""Streaming deduplication — the streaming twin of the batch exact-dedup
-operator (operators/dedup.py), for ingest-time duplicate suppression in a
+"""Streaming deduplication — ingest-time duplicate suppression for a
 training-data pipeline (re-crawled pages, redelivered queue messages).
 
-Two forms, both built on Structured Streaming's keyed dedup state:
+Exact dedup on a stream is the batch primitive applied to it:
+``stream.dropDuplicates(keys)`` keeps one state row per distinct key,
+forever. ``streaming_dedup_within_watermark`` is the 100 TB-safe form:
+``dropDuplicatesWithinWatermark`` suppresses duplicates only when they
+arrive within the watermark horizon of the first occurrence, and
+evicts state past it (bounded state, at the cost of readmitting a
+duplicate that recurs later than the horizon; downstream batch dedup
+catches those). The near-dup runners keep a persisted MinHash or IVF
+index as their state.
 
-- ``streaming_dedup_exact``: ``dropDuplicates`` on the key columns —
-  state grows with distinct keys forever (exact across the whole stream).
-- ``streaming_dedup_within_watermark``: ``dropDuplicatesWithinWatermark``
-  — duplicates are only suppressed when they arrive within the watermark
-  horizon of the first occurrence, and state is evicted past it. This is
-  the 100 TB-safe form: bounded state, at the cost of readmitting a
-  duplicate that recurs later than the horizon (downstream batch dedup
-  catches those).
-
-No counterpart exists in the reference (SURVEY §2.9 — batch only); this
-is a capability extension over the driver's ``events`` stream shape.
+Every ``foreachBatch`` runner of the ``streaming`` package drains
+through :func:`_drain`, the one micro-batch loop — the Spark form of the
+reference's hand-rolled block-range loop (SURVEY §2.9).
 """
 
 from __future__ import annotations
+
+import hashlib
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,13 +30,6 @@ def read_file_stream(spark: SparkSession, path: str, schema: StructType) -> Data
     """File-source stream over a staged parquet directory (test harness
     shape — production would read Kafka or cloud-storage notifications)."""
     return spark.readStream.schema(schema).parquet(path)
-
-
-def streaming_dedup_exact(stream: DataFrame, keys: list[str]) -> DataFrame:
-    """Whole-stream exact dedup on ``keys``. Unbounded state: one state
-    row per distinct key, forever. Use only when the key space is bounded
-    (e.g. bounded backfill replays)."""
-    return stream.dropDuplicates(keys)
 
 
 def streaming_dedup_within_watermark(
@@ -101,18 +96,12 @@ def run_streaming_neardup(
     :func:`read_neardup_index` / :func:`read_neardup_matches`, which
     drop it.
     """
-    if checkpoint_path is None:
-        raise ValueError(
-            "run_streaming_neardup requires checkpoint_path: without it the"
-            " state partitions degrade to bare batch_id keys, and a"
-            " continuation stream (which restarts batch numbering at 0)"
-            " would clobber the original run's partitions"
-        )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _neardup_sink_batch(
+    key = _lineage_keys(checkpoint_path)
+    _drain(
+        stream,
+        lambda batch_df, batch_id: _neardup_sink_batch(
             batch_df,
-            _batch_partition_key(checkpoint_path, batch_id),
+            key(batch_id),
             index_path,
             text_col=text_col,
             id_col=id_col,
@@ -121,16 +110,9 @@ def run_streaming_neardup(
             bands=bands,
             threshold=threshold,
             matches_path=matches_path,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+        ),
+        checkpoint_path,
     )
-    q.awaitTermination()
 
 
 def _neardup_sink_batch(
@@ -195,22 +177,50 @@ def _write_batch_partition(df: DataFrame, path: str, key: str) -> None:
     df.write.mode("overwrite").parquet(f"{path.rstrip('/')}/batch_id={key}")
 
 
-def _batch_partition_key(checkpoint_path: str, batch_id: int) -> str:
-    """Partition-dir key for idempotent foreachBatch writes.
+_NO_CHECKPOINT = (
+    "checkpoint_path is required: it anchors Structured Streaming's source"
+    " tracking and the state-partition lineage prefix; without it a"
+    " continuation stream (which restarts batch numbering at 0) would"
+    " clobber the original run's partitions"
+)
+
+
+def _lineage_keys(checkpoint_path: str | None) -> Callable[[int], str]:
+    """``batch_id → <md5(checkpoint_path)[:8]>-<batch_id>``, the
+    partition-dir key of idempotent foreachBatch writes; raises
+    ``ValueError`` for a missing or empty ``checkpoint_path``, so a
+    runner that calls it first fails before touching its stream.
 
     Keyed by (checkpoint lineage, batch_id): a RETRY of the same batch
     in the same stream produces the same key and overwrites its own
     partition, while a CONTINUATION stream (fresh checkpoint over new
     source files, same state dir) gets a different prefix — without
     the prefix, the new stream's batch 0 would clobber the original
-    run's ``batch_id=0`` partition. ``checkpoint_path`` is mandatory:
-    the runners refuse to start without one."""
+    run's ``batch_id=0`` partition."""
     if not checkpoint_path:
-        raise ValueError("checkpoint_path is required for state partition keys")
-    import hashlib
-
+        raise ValueError(_NO_CHECKPOINT)
     prefix = hashlib.md5(checkpoint_path.encode()).hexdigest()[:8]
-    return f"{prefix}-{batch_id}"
+    return lambda batch_id: f"{prefix}-{batch_id}"
+
+
+def _drain(
+    stream: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint_path: str | None = None,
+) -> None:
+    """Run ``sink(batch_df, batch_id)`` on every micro-batch of the input
+    available now, then return: the package's one ``foreachBatch`` loop
+    (update mode, ``availableNow`` trigger, checkpointed when
+    ``checkpoint_path`` is given). Per-batch accounting attaches here.
+    The sinks own their empty-batch checks; the loop adds no Spark job."""
+    writer = (
+        stream.writeStream.foreachBatch(sink)
+        .outputMode("update")
+        .trigger(availableNow=True)
+    )
+    if checkpoint_path is not None:
+        writer = writer.option("checkpointLocation", checkpoint_path)
+    writer.start().awaitTermination()
 
 
 def _has_data_files(spark: SparkSession, path: str) -> bool:
@@ -433,18 +443,12 @@ def run_streaming_embedding_neardup(
     Stream≡batch equivalence and recrawl suppression are pinned in
     tests/test_streaming_dedup.py.
     """
-    if checkpoint_path is None:
-        raise ValueError(
-            "run_streaming_embedding_neardup requires checkpoint_path: without"
-            " it the state partitions degrade to bare batch_id keys, and a"
-            " continuation stream (which restarts batch numbering at 0)"
-            " would clobber the original run's partitions"
-        )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _embedding_neardup_sink_batch(
+    key = _lineage_keys(checkpoint_path)
+    _drain(
+        stream,
+        lambda batch_df, batch_id: _embedding_neardup_sink_batch(
             batch_df,
-            _batch_partition_key(checkpoint_path, batch_id),
+            key(batch_id),
             index_path,
             id_col=id_col,
             vec_col=vec_col,
@@ -452,16 +456,9 @@ def run_streaming_embedding_neardup(
             n_probe=n_probe,
             threshold=threshold,
             matches_path=matches_path,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+        ),
+        checkpoint_path,
     )
-    q.awaitTermination()
 
 
 def _embedding_neardup_sink_batch(

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from token_etl_spark.functions.timeops import unix_seconds
+from token_etl_spark.streaming.dedup import _drain
 
 
 def hourly_metrics_stream(
@@ -60,8 +61,6 @@ def run_foreach_batch_upsert(
     previous values instead of duplicating — the incremental-ingest
     contract the reference's Future-loop + Arango upsert approximates.
     """
-    from pyspark.sql import functions as F
-
     from token_etl_spark.io.sinks import upsert_by_key
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -70,13 +69,7 @@ def run_foreach_batch_upsert(
         keyed = batch_df.withColumn("_key", F.concat_ws("|", *key_cols))
         upsert_by_key(batch_df.sparkSession, keyed, out_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, _sink)
 
 
 def run_to_memory(

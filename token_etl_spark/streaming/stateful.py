@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from token_etl_spark.streaming.dedup import _drain
+
 OUTPUT_SCHEMA = "user_id bigint, ts_sec bigint, balance double"
 STATE_SCHEMA = "balance double"
 
@@ -293,13 +295,7 @@ def run_streaming_retention(
             return
         merge_retention_state(batch_df, state_path, user_col, ts_col, period_s)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream, _sink)
 
 
 def retention_from_state(spark, state_path: str) -> DataFrame:
