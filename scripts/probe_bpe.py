@@ -49,44 +49,6 @@ def main() -> None:
             f" {rows_chain:>8}"
         )
 
-    # --- checkpointed production train: per-merge cost of the persisted
-    # -vocabulary loop vs the localCheckpoint-only loop as n_merges grows
-    # (the measured counter to PERF.md r6's 0.17 s/merge × 32k ≈ 90 min
-    # extrapolation), plus the resume cost a crashed train actually pays.
-    import shutil
-    import tempfile
-
-    from token_etl_spark.operators.bpe import bpe_train_checkpointed
-
-    print("\ncheckpointed train (checkpoint_every=64):")
-    print(f"{'n':>5} {'plain_s':>8} {'ckpt_s':>8} {'plain_s/m':>10} {'ckpt_s/m':>10}")
-    for n in sizes:
-        t0 = time.monotonic()
-        n_plain = bpe_train(docs, n_merges=n).count()
-        t_plain = time.monotonic() - t0
-        state = tempfile.mkdtemp(prefix="bpe_probe_")
-        shutil.rmtree(state)
-        t0 = time.monotonic()
-        n_ckpt = bpe_train_checkpointed(
-            docs, state, n_merges=n, checkpoint_every=64
-        ).count()
-        t_ckpt = time.monotonic() - t0
-        assert n_plain == n_ckpt, (n_plain, n_ckpt)
-        print(
-            f"{n_plain:>5} {t_plain:>8.1f} {t_ckpt:>8.1f}"
-            f" {t_plain / max(n_plain, 1):>10.3f} {t_ckpt / max(n_ckpt, 1):>10.3f}"
-        )
-        if n == sizes[-1]:
-            t0 = time.monotonic()
-            bpe_train_checkpointed(
-                docs, state, n_merges=n + 32, checkpoint_every=64
-            ).count()
-            print(
-                f"resume {n}->{n + 32}: {time.monotonic() - t0:.1f}s"
-                f" ({(time.monotonic() - t0) / 32:.3f} s/merge incl. state read)"
-            )
-        shutil.rmtree(state, ignore_errors=True)
-
     # --- encode-only expression-depth curve beyond the corpus's natural
     # merge count: pad a real trained table with never-applying synthetic
     # merges. The chain path pays full analysis/codegen/fold cost per

@@ -185,94 +185,3 @@ def test_bpe_oracles_guard_merge_exhaustion(spark):
         (int(i), w, p) for i, w, p in con.execute(_bpe_encode_sql(6)).fetchall()
     )
     assert got_enc == exp_enc and len(got_enc) == 6
-
-
-def _merge_rows(df):
-    return [
-        (r["merge_idx"], r["left_sym"], r["right_sym"], r["pair_count"])
-        for r in df.orderBy("merge_idx").collect()
-    ]
-
-
-def test_bpe_train_checkpointed_equals_bpe_train(spark, sf_dir, tmp_path):
-    """The persisted-state production loop learns the identical merge
-    table (integer counts + exact string ops — no tolerance needed),
-    across a checkpoint interval that forces several mid-train commits."""
-    from token_etl_spark.operators.bpe import bpe_train_checkpointed
-
-    docs = load_table(spark, sf_dir, "documents").limit(60)
-    exp = _merge_rows(bpe_train(docs, n_merges=10))
-    got = _merge_rows(
-        bpe_train_checkpointed(
-            docs, str(tmp_path / "bpe_state"), n_merges=10, checkpoint_every=3
-        )
-    )
-    assert got == exp and len(got) == 10
-
-
-def test_bpe_train_checkpointed_resumes_from_committed_state(
-    spark, sf_dir, tmp_path
-):
-    """A second call with the same state_path continues from the last
-    committed checkpoint instead of restarting: 4 merges then a resume
-    to 10 equals a one-shot 10-merge train, and asking for fewer merges
-    than already committed returns the prefix."""
-    from token_etl_spark.operators.bpe import bpe_train_checkpointed
-
-    docs = load_table(spark, sf_dir, "documents").limit(60)
-    state = str(tmp_path / "bpe_resume")
-    first = bpe_train_checkpointed(docs, state, n_merges=4, checkpoint_every=2)
-    assert first.count() == 4
-
-    resumed = _merge_rows(
-        bpe_train_checkpointed(docs, state, n_merges=10, checkpoint_every=2)
-    )
-    assert resumed == _merge_rows(bpe_train(docs, n_merges=10))
-
-    prefix = _merge_rows(
-        bpe_train_checkpointed(docs, state, n_merges=6, checkpoint_every=2)
-    )
-    assert prefix == resumed[:6]
-
-
-def test_bpe_train_checkpointed_heals_interrupted_swap(spark, sf_dir, tmp_path):
-    """The whole-tree swap's non-atomic window (state dir deleted,
-    complete staging present) heals on the next call — the train
-    resumes from the staged commit instead of restarting at merge 0."""
-    from token_etl_spark.io.sinks import _bucket_fs
-    from token_etl_spark.operators.bpe import bpe_train_checkpointed
-
-    docs = load_table(spark, sf_dir, "documents").limit(60)
-    state = str(tmp_path / "bpe_heal")
-    bpe_train_checkpointed(docs, state, n_merges=5, checkpoint_every=2)
-
-    fs, hpath = _bucket_fs(spark, state)
-    assert fs.rename(hpath(state), hpath(state + ".staging-full"))
-    out = _merge_rows(
-        bpe_train_checkpointed(docs, state, n_merges=8, checkpoint_every=2)
-    )
-    assert out == _merge_rows(bpe_train(docs, n_merges=8))
-
-
-def test_bpe_train_checkpointed_discards_partial_first_commit(
-    spark, sf_dir, tmp_path
-):
-    """A crash DURING the very first commit's staging write leaves
-    final-missing + partial staging (no root _SUCCESS marker). The heal
-    must never promote it; the train starts from scratch — promoting it would wedge
-    (committer temporaries only) or silently desync vocab from merges
-    (r11 review)."""
-    from token_etl_spark.operators.bpe import bpe_train_checkpointed
-
-    docs = load_table(spark, sf_dir, "documents").limit(60)
-    state = str(tmp_path / "bpe_partial")
-    staging = tmp_path / "bpe_partial.staging-full" / "vocab"
-    staging.mkdir(parents=True)
-    (staging / "part-00000.parquet").write_bytes(b"partial write, no marker")
-
-    got = _merge_rows(
-        bpe_train_checkpointed(docs, state, n_merges=6, checkpoint_every=2)
-    )
-    assert got == _merge_rows(bpe_train(docs, n_merges=6))
-    import os
-    assert not os.path.exists(str(tmp_path / "bpe_partial.staging-full"))

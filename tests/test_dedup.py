@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
 from token_etl_spark.operators.dedup import (
@@ -419,3 +421,80 @@ def test_weighted_minhash_tf_cap_applies(spark):
     # identical docs are 1.0 regardless of cap; the cap is exercised by
     # the expansion arrays staying <= 4 elements (would OOM-scale otherwise)
     assert len(out) == 1 and abs(out[0].wjaccard - 1.0) < 1e-12
+
+
+def test_md5_hash32_matches_hashlib_prefix(spark):
+    """The portable hash is the first 8 hex digits of md5 read as an
+    unsigned 32-bit integer, so any engine with md5 reproduces it."""
+    import hashlib
+
+    from token_etl_spark.operators.dedup import md5_hash32
+
+    texts = [t for _, t in DOCS] + ["", "é ünïcode"]
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    got = [r["h"] for r in df.select(md5_hash32(F.col("t")).alias("h")).collect()]
+    exp = [int(hashlib.md5(t.encode("utf-8")).hexdigest()[:8], 16) for t in texts]
+    assert got == exp
+    assert all(0 <= h < 2**32 for h in got)
+
+
+def test_simhash_band_pairs_have_perfect_recall_below_band_count(spark):
+    """Fingerprints within hamming distance d < bands agree on at least
+    one band, so banding emits every such pair; pairs that differ in
+    every band are never emitted."""
+    import random
+
+    from token_etl_spark.operators.dedup import simhash_candidate_pairs
+
+    rng = random.Random(7)
+    fps = []
+    for base_id in range(20):
+        base = rng.getrandbits(32)
+        fps.append((base_id * 10, base))
+        for j in range(1, 4):  # flip j < 4 bits
+            flipped = base
+            for bit in rng.sample(range(32), j):
+                flipped ^= 1 << bit
+            fps.append((base_id * 10 + j, flipped))
+    # differs in every 8-bit band from fps[0]
+    fps.append((999, fps[0][1] ^ 0x01010101))
+    df = spark.createDataFrame(fps, "id long, simhash long")
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in simhash_candidate_pairs(df, bands=4, bits=32).collect()
+    }
+    close = {
+        (a, b)
+        for a, fa in fps
+        for b, fb in fps
+        if a < b and bin(fa ^ fb).count("1") < 4
+    }
+    assert close and close <= got
+    assert (0, 999) not in got
+    for a, b in got:
+        fa, fb = dict(fps)[a], dict(fps)[b]
+        assert any(((fa ^ fb) >> (8 * k)) & 0xFF == 0 for k in range(4))
+
+
+def test_jaccard_verify_matches_python_sets(spark):
+    from token_etl_spark.operators.dedup import jaccard_verify, shingle_arrays
+
+    arrays = shingle_arrays(_docs(spark), k=3)
+    sets = {r["id"]: set(r["sh"]) for r in arrays.collect()}
+    cands = spark.createDataFrame(
+        [(a, b) for a in sets for b in sets if a < b], "id_a long, id_b long"
+    )
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in jaccard_verify(cands, arrays, threshold=0.5).collect()
+    }
+    exp = {
+        (a, b): len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        for a in sets
+        for b in sets
+        if a < b and len(sets[a] & sets[b]) / len(sets[a] | sets[b]) >= 0.5
+    }
+    assert set(got) == set(exp)
+    assert (0, 1) in got and (0, 3) in got
+    for pair, j in exp.items():
+        assert math.isclose(got[pair], j, rel_tol=1e-12)

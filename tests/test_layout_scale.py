@@ -1,6 +1,7 @@
-"""Storage-layout proofs for the SCALE.md claims: partition pruning
-reaches the file listing, and bucketed tables co-locate joins without a
-shuffle. These run against real written tables, not assertions on prose.
+"""Storage-layout proofs: the SCALE.md claim that partition pruning
+reaches the file listing, and the listing-based directory size that
+state compaction sizes its rewrite from. They run against real written
+tables, not assertions on prose.
 """
 
 from __future__ import annotations
@@ -8,6 +9,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from token_etl_spark import fixtures
@@ -34,66 +36,28 @@ def test_partitioned_layout_prunes(spark, tmp_path):
     assert n_parts == 1
 
 
-# bucketed-join co-location is proven in tests/test_bucketing.py
+def test_dir_size_bytes_matches_the_file_listing(spark, tmp_path):
+    """The listing-based size counts every file under the directory tree
+    (data files and commit markers, partition subdirectories included),
+    which is what ``compact_state_partitions`` sizes its rewrite from; a
+    missing path raises instead of reading as empty. The local checksum
+    filesystem hides its ``.crc`` side files from the listing, so they
+    are not counted."""
+    import os
 
+    from token_etl_spark.operators.layout import dir_size_bytes
 
-def test_zorder_write_narrows_per_file_ranges_on_both_columns(spark, tmp_path):
-    import glob
+    path = str(tmp_path / "sized")
+    spark.range(5000).select(
+        (F.col("id") % 4).alias("p"), F.sha1(F.col("id").cast("string")).alias("pad")
+    ).write.partitionBy("p").parquet(path)
+    def listed(d, files):
+        return sum(os.path.getsize(os.path.join(d, f)) for f in files if not f.endswith(".crc"))
 
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from token_etl_spark.operators.layout import write_zordered
-
-    # two independent uniform columns — a single-column sort would leave
-    # the other column's per-file range at ~full span
-    df = (
-        spark.range(40000)
-        .select(
-            (F.hash(F.col("id")) % 10000).alias("x"),
-            (F.hash(F.col("id") + 1) % 10000).alias("y"),
-        )
-        .filter((F.col("x") >= 0) & (F.col("y") >= 0))
-    )
-    zpath = str(tmp_path / "zordered")
-    npath = str(tmp_path / "naive")
-    write_zordered(df, zpath, ["x", "y"], n_files=8)
-    df.repartition(8).write.parquet(npath)
-
-    def mean_file_span(path, col):
-        spans = []
-        for f in glob.glob(path + "/**/*.parquet", recursive=True):
-            md = pq.ParquetFile(f).metadata
-            lo = min(
-                md.row_group(i).column(
-                    [md.schema.column(j).name for j in range(md.num_columns)].index(col)
-                ).statistics.min
-                for i in range(md.num_row_groups)
-            )
-            hi = max(
-                md.row_group(i).column(
-                    [md.schema.column(j).name for j in range(md.num_columns)].index(col)
-                ).statistics.max
-                for i in range(md.num_row_groups)
-            )
-            spans.append(hi - lo)
-        return sum(spans) / len(spans)
-
-    full_span = 10000.0
-    for col in ("x", "y"):
-        z_span = mean_file_span(zpath, col)
-        n_span = mean_file_span(npath, col)
-        # naive files cover ~the full range; z-prefix-aligned files
-        # cover a deterministic aligned sub-rectangle on BOTH columns:
-        # 8 files = 3 prefix bits over 2 columns → one axis halved, the
-        # other quartered (~0.5 and ~0.25 of full span + bin-edge noise)
-        assert n_span > 0.9 * full_span
-        assert z_span < 0.6 * full_span, (col, z_span)
-        assert z_span < 0.7 * n_span, (col, z_span, n_span)
-
-    # prefix split is deterministic: every file's (x,y) rectangle is one
-    # aligned z-block, so re-running the write yields identical spans
-    zpath2 = str(tmp_path / "zordered2")
-    write_zordered(df, zpath2, ["x", "y"], n_files=8)
-    for col in ("x", "y"):
-        assert mean_file_span(zpath2, col) == mean_file_span(zpath, col)
+    on_disk = sum(listed(d, files) for d, _, files in os.walk(path))
+    assert on_disk > 0
+    assert dir_size_bytes(spark, path) == on_disk
+    one = os.path.join(path, "p=0")
+    assert dir_size_bytes(spark, one) == listed(one, os.listdir(one))
+    with pytest.raises(Exception, match="FileNotFound|does not exist"):
+        dir_size_bytes(spark, str(tmp_path / "absent"))

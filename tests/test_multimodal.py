@@ -28,32 +28,6 @@ def test_decode_fake_is_deterministic(spark):
     assert a[0] == (16 + 11, 16 + (b"h"[0] % 512), 1 + (11 % 7))
 
 
-def test_resize_shapes(spark):
-    from token_etl_spark.operators.multimodal import resize_images
-
-    payloads = attach_binary_payload(_docs(spark))
-    rows = resize_images(payloads, 224, 224).collect()
-    assert len(rows) == 3
-    assert all(r["width"] == 224 and r["height"] == 224 for r in rows)
-    assert all(len(r["payload"]) == (224 * 224) // 1024 for r in rows)
-
-
-def test_sample_frames_expands_rows(spark):
-    from token_etl_spark.operators.multimodal import sample_frames
-
-    payloads = attach_binary_payload(_docs(spark)).filter(F.col("doc_id") < 2)
-    rows = sample_frames(payloads, every_n=4, max_frames=3).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert set(by_doc) == {0, 1}
-    for frames in by_doc.values():
-        assert [f["frame_index"] for f in sorted(frames, key=lambda x: x["frame_index"])] == list(
-            range(len(frames))
-        )
-        assert all(len(f["frame_payload"]) <= 4 for f in frames)
-
-
 def test_decode_error_stub_raises(spark):
     payloads = attach_binary_payload(_docs(spark))
     with pytest.raises(Exception) as exc:

@@ -1,5 +1,6 @@
-"""Every boolean option of the package is set to its other value somewhere
-that runs in production.
+"""Two censuses of the package surface, parsed with ``ast`` (no Spark
+session): every boolean option is set to its other value somewhere that
+runs in production, and every public definition is called from there.
 
 A boolean-default parameter doubles the configurations a function has to
 keep correct. When only tests pass the non-default value, no pipeline,
@@ -15,6 +16,12 @@ a value other than the default, by keyword or by position: a different
 literal, or any non-literal expression. Calls are matched by function
 name, so a same-named function elsewhere can only make the census more
 lenient, never flag a used option.
+
+The same universe decides whether a public top-level function or class
+of the package (outside ``streaming/``, whose batch twins are settled
+separately) has a production caller: a definition that only tests reach
+serves no traffic, so it is deleted with its tests or listed in
+:data:`KEEP` with the reason it stays.
 """
 from __future__ import annotations
 
@@ -139,3 +146,77 @@ def test_census_sees_keyword_positional_and_expression_arguments():
     assert _sets(f_kw.keywords[0].value, True)  # any expression may set it
     assert not _sets(g_same.keywords[0].value, True)  # passing the default
     assert not _sets(h_same.keywords[0].value, False)
+
+
+#: Public definitions that only tests reach, each with the reason it stays.
+KEEP = {
+    "funnel_reach": "reference for funnel_reach_onepass and streaming_funnel_reach",
+    "bpe_encode": "reference for bpe_encode_table",
+    "q_array_ops_raw": "array-valued sibling of a declared query (no scalar oracle)",
+    "q_daily_event_types_raw": "array-valued sibling of a declared query (no scalar oracle)",
+    "read_jdbc_ranged": "port of the reference's JDBC scan (SURVEY S1)",
+    "reparse_map": "port of the reference's predicate helpers (SURVEY F6)",
+    "is_dapp_address": "port of the reference's predicate helpers (SURVEY F6)",
+    "is_whale_address": "port of the reference's predicate helpers (SURVEY F6)",
+    "wallet_cluster": "port of the reference's wallet clustering (SURVEY A9)",
+    "wallet_cluster_pivot": "port of the reference's cluster pivot (SURVEY A10)",
+    "holder_flag": "port of the reference's boolean predicate (SURVEY P7)",
+    "write_csv": "port of the reference's CSV debug sink (SURVEY S7)",
+    "ivf_search": "reads a persisted IVF index without exposing its layout",
+    "transfers_df": "test fixture",
+    "raw_transfer_events_df": "test fixture",
+    "block_timestamps_df": "test fixture",
+    "dapp_registry_df": "test fixture",
+}
+
+
+def _referenced_names(stmt: ast.stmt) -> set[str]:
+    """Names ``stmt`` reads: bare names, attributes and import aliases,
+    leaving out a definition's own name inside its body."""
+    names = set()
+    for node in ast.walk(stmt):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+            names.add(node.attr)
+        elif isinstance(node, ast.alias):
+            names.add(node.name.rsplit(".", 1)[-1])
+            if node.asname:
+                names.add(node.asname)
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        names.discard(stmt.name)
+    return names
+
+
+def caller_census() -> tuple[dict[str, str], set[str]]:
+    """(public definition → where, names referenced in production)."""
+    defs: dict[str, str] = {}
+    referenced: set[str] = set()
+    for path in _production_sources():
+        tree = ast.parse(path.read_text(), filename=str(path))
+        rel = path.relative_to(ROOT)
+        audited = PACKAGE in path.parents and "streaming" not in rel.parts
+        for stmt in tree.body:
+            if path.name == "__init__.py" and isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                continue  # a package re-export calls nothing
+            referenced |= _referenced_names(stmt)
+            if (
+                audited
+                and isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not stmt.name.startswith("_")
+            ):
+                defs[stmt.name] = f"{rel}:{stmt.lineno}"
+    return defs, referenced
+
+
+def test_every_public_definition_has_a_production_caller():
+    defs, referenced = caller_census()
+    assert len(defs) > 100, "census found few definitions; the parser is broken"
+    uncalled = sorted(set(defs) - referenced - set(KEEP))
+    assert not uncalled, (
+        "public definitions that no production code references (delete them "
+        "with their tests, or add them to KEEP with a reason):\n"
+        + "\n".join(f"  {defs[n]} {n}" for n in uncalled)
+    )
+    stale = sorted(n for n in KEEP if n not in defs or n in referenced)
+    assert not stale, f"KEEP entries that are gone or now have a caller: {stale}"

@@ -1,6 +1,6 @@
-"""Continuous hourly rollup (operators/rollup.py): shard mergeability,
-incremental refresh correctness, merge-read transparency, and the
-pushed-down hot-side scan."""
+"""Continuous hourly rollup (operators/rollup.py): merge-read
+transparency, cold hours served verbatim, and the pushed-down hot-side
+scan."""
 
 from __future__ import annotations
 
@@ -11,12 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from token_etl_spark.io.sources import load_table
-from token_etl_spark.operators.rollup import (
-    hourly_rollup,
-    merge_rollups,
-    rollup_merge_read,
-    rollup_refresh,
-)
+from token_etl_spark.operators.rollup import hourly_rollup, rollup_merge_read
 
 CUT = 1_705_795_200  # 2024-01-21 00:00 UTC
 
@@ -29,28 +24,10 @@ def _rows(df):
     )
 
 
-def test_shard_merge_equals_whole(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    whole = hourly_rollup(ev)
-    a = hourly_rollup(ev.where(F.col("user_id") % 2 == 0))
-    b = hourly_rollup(ev.where(F.col("user_id") % 2 == 1))
-    assert _rows(merge_rollups(a, b)) == _rows(whole)
-
-
-def test_incremental_refresh_catches_the_dirty_tail(spark, sf_dir):
-    """Materialize a rollup that is MISSING the tail (simulating events
-    that arrived after the last refresh), then refresh from the full
-    raw table: result must equal the from-scratch rollup."""
-    ev = load_table(spark, sf_dir, "events")
-    stale = hourly_rollup(ev.where(F.col("ts") < F.timestamp_seconds(F.lit(CUT))))
-    refreshed = rollup_refresh(ev, stale, CUT)
-    assert _rows(refreshed) == _rows(hourly_rollup(ev))
-
-
 def test_refresh_does_not_touch_cold_hours(spark, sf_dir):
-    """Rows before the watermark pass through the refresh verbatim —
+    """Rows before the cutoff pass through the merge-read verbatim —
     even if the materialized values were (deliberately) corrupted, the
-    refresh must not recompute them."""
+    merge-read must not recompute them."""
     ev = load_table(spark, sf_dir, "events")
     rollup = hourly_rollup(ev)
     poisoned = rollup.withColumn(
@@ -59,7 +36,7 @@ def test_refresh_does_not_touch_cold_hours(spark, sf_dir):
             F.col("n_events")
         ),
     )
-    refreshed = rollup_refresh(ev, poisoned, CUT)
+    refreshed = rollup_merge_read(poisoned, ev, CUT)
     cold = refreshed.where(F.col("hour_ts") < CUT)
     assert cold.count() > 0
     assert cold.where(F.col("n_events") != -1).count() == 0
@@ -87,8 +64,6 @@ def test_hot_side_filter_reaches_the_scan(spark, sf_dir):
 def test_alignment_guard(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     rollup = hourly_rollup(ev)
-    with pytest.raises(ValueError):
-        rollup_refresh(ev, rollup, CUT + 7)
     with pytest.raises(ValueError):
         rollup_merge_read(rollup, ev, CUT + 7)
 

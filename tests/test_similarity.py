@@ -37,26 +37,6 @@ def test_brute_force_topk_matches_numpy(spark):
     assert got == exp
 
 
-def test_embedding_near_dups_subset_of_exact(spark):
-    from token_etl_spark.operators.similarity import embedding_near_dups
-
-    df, vecs = _corpus(spark, n=80, dim=8)
-    thr = 0.6
-    lsh_pairs = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dups(df, threshold=thr, n_planes=2, dim=8).collect()
-    }
-    sims = (vecs @ vecs.T) / (
-        np.linalg.norm(vecs, axis=1)[:, None] * np.linalg.norm(vecs, axis=1)[None, :]
-    )
-    exact_pairs = {
-        (i, j) for i in range(80) for j in range(i + 1, 80) if sims[i, j] >= thr
-    }
-    assert lsh_pairs <= exact_pairs          # LSH never invents a pair
-    if exact_pairs:
-        assert len(lsh_pairs) > 0            # and finds some at 2 planes
-
-
 def test_lsh_topk_subset_of_bruteforce_universe(spark):
     df, _ = _corpus(spark)
     queries = df.filter(F.col("vec_id") < 3)
@@ -403,15 +383,11 @@ def test_lsh_multiprobe_dominates_single_probe(spark, sf_dir):
 def test_semantic_dedup_boundary_blind_spot_documented(spark):
     """SemDeDup's known limitation, pinned: a near-dup pair placed
     symmetrically about two centroids' bisector assigns to DIFFERENT
-    clusters, so the in-cluster pair search cannot flag it — while the
-    clustering-free embedding_near_dups path does. This is the paper's
-    own trade (per-cluster quadratic work in exchange for boundary
-    misses); the engine carries both operators so a pipeline can chase
-    the boundary tail when it matters."""
-    from token_etl_spark.operators.similarity import (
-        embedding_near_dups,
-        semantic_dedup,
-    )
+    clusters, so the in-cluster pair search cannot flag it. This is the
+    paper's own trade (per-cluster quadratic work in exchange for
+    boundary misses); ``n_assign=2`` closes it
+    (test_semantic_dedup_multi_assign_closes_boundary)."""
+    from token_etl_spark.operators.similarity import semantic_dedup
     from pyspark.sql import functions as F
 
     dim = 8
@@ -442,14 +418,6 @@ def test_semantic_dedup_boundary_blind_spot_documented(spark):
     # the straddling pair is invisible to the in-cluster search
     assert out[10]["kept"] and out[11]["kept"]
     assert out[10]["n_dups"] == 0 and out[11]["n_dups"] == 0
-
-    # the LSH near-dup path sees it (same half-space under every plane
-    # with overwhelming probability at this cosine; assert it fires)
-    pairs = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dups(df, threshold=0.99, dim=dim).collect()
-    }
-    assert (10, 11) in pairs
 
 
 def test_semantic_dedup_multi_assign_closes_boundary(spark, sf_dir):
@@ -830,15 +798,13 @@ def test_projection_signs_deterministic_and_sparse():
 
 def test_random_projection_matches_numpy_reference(spark, sf_dir):
     """The fold-form projection equals the straight numpy matmul of the
-    same matrix to float accumulation order (the pandas twin shares the
-    numpy path, so this pins BOTH implementations to the definition)."""
+    same matrix to float accumulation order."""
     import numpy as np
 
     from token_etl_spark.io.sources import load_table
     from token_etl_spark.operators.similarity import (
         projection_signs,
         random_projection,
-        random_projection_pandas,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").limit(100)
@@ -846,21 +812,14 @@ def test_random_projection_matches_numpy_reference(spark, sf_dir):
         r.vec_id: np.array(r.proj)
         for r in random_projection(emb, dim=64, k=16).select("vec_id", "proj").collect()
     }
-    arrow = {
-        r.vec_id: np.array(r.proj)
-        for r in random_projection_pandas(emb, dim=64, k=16)
-        .select("vec_id", "proj")
-        .collect()
-    }
     mat = np.asarray(projection_signs(64, 16), dtype=np.float64).T * np.sqrt(3 / 16)
     vecs = {
         r.vec_id: np.asarray(r.embedding, dtype=np.float64) for r in emb.collect()
     }
-    assert set(native) == set(arrow) == set(vecs) and len(native) == 100
+    assert set(native) == set(vecs) and len(native) == 100
     for vid, v in vecs.items():
         ref = v @ mat
         assert np.max(np.abs(native[vid] - ref)) < 1e-12
-        assert np.max(np.abs(arrow[vid] - ref)) < 1e-12
 
 
 def test_random_projection_preserves_distances(spark, sf_dir):
@@ -897,8 +856,6 @@ def test_random_projection_wrong_width_degrades_to_null(spark):
     kill the task — the multimodal-decoder contract for malformed rows."""
     from token_etl_spark.operators.similarity import random_projection
 
-    from token_etl_spark.operators.similarity import random_projection_pandas
-
     df = spark.createDataFrame(
         [(1, [1.0] * 64), (2, [1.0] * 10), (3, None)],
         "vec_id long, embedding array<double>",
@@ -910,17 +867,6 @@ def test_random_projection_wrong_width_degrades_to_null(spark):
     assert all(x is not None for x in rows[1])
     assert rows[2] == [None] * 4  # short vector: every fold hits a null pad
     assert rows[3] == [None] * 4
-    # the Arrow twin produces the IDENTICAL degraded shape (k NULL
-    # components, not a NULL array) — swapping implementations must not
-    # change output shape for malformed rows
-    rows_p = {
-        r.vec_id: r.proj
-        for r in random_projection_pandas(df, dim=64, k=4)
-        .select("vec_id", "proj")
-        .collect()
-    }
-    assert rows_p[2] == [None] * 4 and rows_p[3] == [None] * 4
-    assert rows_p[1] == pytest.approx(rows[1])
 
 
 def test_random_projection_plan_is_map_only(spark, sf_dir):
@@ -937,47 +883,6 @@ def test_random_projection_plan_is_map_only(spark, sf_dir):
         .toString()
     )
     assert "Exchange" not in plan
-
-
-def test_projected_topk_production_composition(spark):
-    """projected_topk = project → candidate scan → exact rerank: ranks
-    are 1..k per query with no self-pairs, cosine_sim is the FULL-dim
-    cosine (spot-checked against numpy), and on a clustered corpus the
-    composition recovers most of the true top-k (the probe-measured
-    coverage regime)."""
-    import numpy as np
-
-    from token_etl_spark.operators.similarity import (
-        brute_force_topk,
-        projected_topk,
-    )
-
-    rng = np.random.RandomState(11)
-    centers = rng.randn(20, 64)
-    rows = [
-        (i, [float(x) for x in centers[i % 20] + 0.3 * rng.randn(64)])
-        for i in range(400)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = emb.filter(F.col("vec_id") < 8)
-    out = projected_topk(emb, q, k=5, dim=64, proj_dim=16).collect()
-    vecs = {r[0]: np.array(r[1]) for r in rows}
-    per_q = {}
-    for r in out:
-        per_q.setdefault(r["query_id"], []).append(r)
-        assert r["query_id"] != r["neighbor_id"]
-        a, b = vecs[r["query_id"]], vecs[r["neighbor_id"]]
-        exact = float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-        assert abs(r["cosine_sim"] - exact) < 1e-9  # FULL-dim cosine
-    assert set(per_q) == set(range(8))
-    for rs in per_q.values():
-        assert sorted(r["rank"] for r in rs) == [1, 2, 3, 4, 5]
-    truth = {
-        (r["query_id"], r["neighbor_id"])
-        for r in brute_force_topk(emb, q, k=5).collect()
-    }
-    got = {(r["query_id"], r["neighbor_id"]) for r in out}
-    assert len(got & truth) / len(truth) > 0.6  # clustered-regime floor
 
 
 def test_arrow_assign_bit_exact_to_declarative(spark):
@@ -1253,3 +1158,51 @@ def test_kmeans_checkpoint_cadence_invariant(spark, sf_dir, monkeypatch):
     per_round, per_round_jobs = train(1)
     assert batched == per_round
     assert batched_jobs < per_round_jobs, (batched_jobs, per_round_jobs)
+
+
+def test_cosine_pre_bit_identical_to_cosine(spark):
+    """With the norms precomputed as columns, ``cosine_pre`` returns the
+    very same double as ``cosine`` (same dot fold, same multiply order)."""
+    from token_etl_spark.operators.similarity import cosine_pre, norm
+
+    df, _ = _corpus(spark, n=20, dim=8, seed=3)
+    pairs = df.alias("a").crossJoin(df.alias("b")).select(
+        F.col("a.embedding").alias("x"), F.col("b.embedding").alias("y")
+    )
+    rows = pairs.select(
+        cosine(F.col("x"), F.col("y")).alias("c"),
+        cosine_pre(F.col("x"), F.col("y"), norm(F.col("x")), norm(F.col("y"))).alias("cp"),
+    ).collect()
+    assert len(rows) == 400
+    assert all(r["c"] == r["cp"] for r in rows)
+
+
+def test_l2_normalize_yields_unit_vectors(spark):
+    from token_etl_spark.operators.similarity import l2_normalize
+
+    df, vecs = _corpus(spark, n=30, dim=8, seed=5)
+    got = {
+        r["vec_id"]: r["u"]
+        for r in df.select("vec_id", l2_normalize(F.col("embedding")).alias("u")).collect()
+    }
+    for i, v in enumerate(vecs):
+        u = np.asarray(got[i])
+        assert math.isclose(float(np.linalg.norm(u)), 1.0, rel_tol=1e-12)
+        np.testing.assert_allclose(u, v / np.linalg.norm(v), rtol=1e-12)
+
+
+def test_lsh_bucket_matches_numpy_sign_bits(spark):
+    """Bucket id bit ``b`` is set exactly when the vector lies on the
+    positive side of hyperplane ``b``."""
+    from token_etl_spark.operators.similarity import _hyperplanes, lsh_bucket
+
+    df, vecs = _corpus(spark, n=60, dim=8, seed=11)
+    planes = _hyperplanes(8, 6, seed=42)
+    got = {
+        r["vec_id"]: r["b"]
+        for r in df.select("vec_id", lsh_bucket(F.col("embedding"), planes).alias("b")).collect()
+    }
+    signs = (vecs @ np.asarray(planes).T) > 0
+    exp = {i: int(sum(1 << b for b in range(6) if signs[i, b])) for i in range(len(vecs))}
+    assert got == exp
+    assert len(set(exp.values())) > 1

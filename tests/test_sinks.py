@@ -174,44 +174,6 @@ def test_incremental_upsert_repeated_batches_keep_latest(spark, tmp_path):
     assert got == {"a": 3, "b": 30}
 
 
-def test_write_sorted_global_order_and_manifest(spark, tmp_path, sf_dir):
-    """Concatenating the part files in filename order must yield the
-    global sort order; manifest ranges must be non-overlapping and
-    ordered; the plan must range-partition, never single-task sort."""
-    import io
-    import contextlib
-
-    from token_etl_spark.io.sources import load_table
-    from token_etl_spark.io.sinks import write_sorted
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "value")
-    path = str(tmp_path / "sorted_out")
-    manifest = write_sorted(spark, ev, path, ["value", "event_id"], n_files=8)
-
-    # plan check on the export frame: RangePartitioning, no SinglePartition
-    export = ev.repartitionByRange(8, F.col("value").asc(), F.col("event_id").asc())
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        export.explain("formatted")
-    plan = buf.getvalue()
-    assert "rangepartitioning" in plan.lower()
-    assert "SinglePartition" not in plan
-
-    rows = manifest.orderBy("file_name").collect()
-    assert sum(r["n_rows"] for r in rows) == ev.count()
-    # non-overlapping, filename-ordered ranges
-    for a, b in zip(rows, rows[1:]):
-        assert a["max_key"] <= b["min_key"]
-
-    # file-order concat == global order, rows taken in PHYSICAL order
-    # (one small file reads as one partition; collect preserves row order)
-    concat = []
-    for r in rows:
-        part = spark.read.parquet(f"{path}/{r['file_name']}").collect()
-        concat.extend((p["value"], p["event_id"]) for p in part)
-    assert concat == sorted(concat)
-
-
 def test_bucket_count_marker_rejects_mismatched_merge(spark, tmp_path):
     """A merge re-run with a different n_buckets must fail LOUDLY — a
     mismatched bucketing silently duplicates keys across buckets."""
@@ -516,6 +478,166 @@ def test_bucket_staging_without_marker_is_discarded(spark, tmp_path):
     after = {r["_key"]: r["v"] for r in read_upserted(spark, path).collect()}
     assert after == {**before, "k0": 999}
     assert os.path.exists(os.path.join(path, "_n_buckets"))
+
+
+def _cut_bucket_swap(path, newer):
+    """Leave ``path`` as a merge cut inside its bucket swap does: a
+    complete ``.staging-buckets`` (``_SUCCESS`` and ``_n_buckets``)
+    holding three of ``newer``'s buckets — the first already swapped
+    into ``path``, the second deleted from ``path`` but not yet renamed
+    in (the delete→rename window), the third not yet reached. Returns
+    the staging path and the three bucket ids."""
+    import os
+    import shutil
+
+    staging = path + ".staging-buckets"
+    os.makedirs(staging)
+    names = sorted(d for d in os.listdir(newer) if d.startswith("_bucket="))[:3]
+    for d in names:
+        shutil.copytree(os.path.join(newer, d), os.path.join(staging, d))
+    shutil.copy(os.path.join(newer, "_n_buckets"), staging)
+    open(os.path.join(staging, "_SUCCESS"), "w").close()
+    done, cut = names[:2]
+    shutil.rmtree(os.path.join(path, done))
+    shutil.move(os.path.join(staging, done), os.path.join(path, done))
+    shutil.rmtree(os.path.join(path, cut))
+    return staging, {int(d.split("=")[1]) for d in names}
+
+
+def test_read_upserted_reads_through_a_cut_bucket_swap(spark, tmp_path):
+    """The production reader never misses a bucket a crash left only in
+    the staging: staged buckets read from the staging, the rest from
+    the final dir. The read changes nothing on disk, and the next merge
+    finishes the swap to the same rows."""
+    import os
+
+    from token_etl_spark.io.sinks import read_upserted, upsert_by_key_incremental
+
+    path, newer = str(tmp_path / "read_cut"), str(tmp_path / "newer")
+    mk = lambda d: spark.createDataFrame(
+        [(f"k{i}", i + d) for i in range(40)], "_key string, v long"
+    )
+    upsert_by_key_incremental(spark, mk(0), path, n_buckets=8)
+    upsert_by_key_incremental(spark, mk(100), newer, n_buckets=8)
+    staging, staged = _cut_bucket_swap(path, newer)
+    listing = sorted(os.listdir(staging))
+    want = {
+        r["_key"]: r["v"] if r["_bucket"] in staged else r["v"] - 100
+        for r in spark.read.parquet(newer).collect()
+    }
+    assert len(want) == 40 and any(v >= 100 for v in want.values())
+
+    got = {r["_key"]: r["v"] for r in read_upserted(spark, path).collect()}
+    assert got == want
+    assert sorted(os.listdir(staging)) == listing  # the read changed nothing
+
+    upsert_by_key_incremental(spark, mk(0).limit(0), path, n_buckets=8)
+    assert not os.path.exists(staging)
+    assert {r["_key"]: r["v"] for r in read_upserted(spark, path).collect()} == want
+
+
+def test_read_url_dedup_state_reads_through_a_cut_bucket_swap(spark, tmp_path):
+    """The URL keep-best state reader reads through a cut swap too."""
+    import os
+
+    from token_etl_spark.streaming.curation import (
+        _url_dedup_sink_batch,
+        read_url_dedup_state,
+    )
+
+    path, newer = str(tmp_path / "url_cut"), str(tmp_path / "url_newer")
+    batch = spark.createDataFrame(
+        [(i, f"https://site.example.com/r/{i}") for i in range(40)],
+        "doc_id long, url string",
+    )
+    _url_dedup_sink_batch(batch, path, n_buckets=8)
+    _url_dedup_sink_batch(batch, newer, n_buckets=8)
+    staging, _ = _cut_bucket_swap(path, newer)
+
+    got = {r["doc_id"] for r in read_url_dedup_state(spark, path).collect()}
+    assert got == set(range(40))
+    assert os.path.exists(staging)
+
+
+def test_reads_during_a_merge_leave_its_commit_alone(spark, tmp_path, monkeypatch):
+    """Reads interleaved with a live merge: after its staging job
+    committed (``_SUCCESS``, no ``_n_buckets`` yet) a read returns the
+    last committed rows; after the marker, before the swap, it returns
+    the merged rows. Neither read touches the staging, and the merge
+    then commits every row."""
+    import os
+
+    import token_etl_spark.io.sinks as S
+
+    path = str(tmp_path / "live_merge")
+    staging = path + ".staging-buckets"
+    mk = lambda n, d: spark.createDataFrame(
+        [(f"k{i}", i + d) for i in range(n)], "_key string, v long"
+    )
+    S.upsert_by_key_incremental(spark, mk(40, 0), path, n_buckets=8)
+    read = lambda: {r["_key"]: r["v"] for r in S.read_upserted(spark, path).collect()}
+    seen = []
+
+    def read_unchanged():
+        listing = sorted(os.listdir(staging))
+        seen.append(read())
+        assert sorted(os.listdir(staging)) == listing
+
+    real_marker, real_heal = S._write_bucket_marker, S._heal_bucket_swap
+
+    def marker(spark_, p, n):
+        if p == staging:
+            assert os.path.exists(os.path.join(staging, "_SUCCESS"))
+            read_unchanged()
+        real_marker(spark_, p, n)
+
+    def heal(spark_, p):
+        if os.path.exists(os.path.join(staging, "_n_buckets")):  # the swap
+            read_unchanged()
+        real_heal(spark_, p)
+
+    monkeypatch.setattr(S, "_write_bucket_marker", marker)
+    monkeypatch.setattr(S, "_heal_bucket_swap", heal)
+    S.upsert_by_key_incremental(spark, mk(10, 1000), path, n_buckets=8)
+
+    merged = {f"k{i}": i + (1000 if i < 10 else 0) for i in range(40)}
+    assert seen == [{f"k{i}": i for i in range(40)}, merged]
+    assert read() == merged
+    assert not os.path.exists(staging)
+
+
+def test_read_upserted_leaves_incomplete_staging(spark, tmp_path):
+    """A reader never promotes or deletes an incomplete staging (it may
+    be a writer's in-flight staging) — without ``_SUCCESS``, or with
+    ``_SUCCESS`` but no ``_n_buckets``: it returns the committed rows
+    and the staging stays for the next merge, which discards it."""
+    import os
+    import shutil
+
+    from token_etl_spark.io.sinks import read_upserted, upsert_by_key_incremental
+
+    path = str(tmp_path / "read_partial")
+    newer = str(tmp_path / "newer")
+    mk = lambda v: spark.createDataFrame(
+        [(f"k{i}", v) for i in range(20)], "_key string, v long"
+    )
+    upsert_by_key_incremental(spark, mk(1), path, n_buckets=4)
+    upsert_by_key_incremental(spark, mk(2), newer, n_buckets=4)
+    staging = path + ".staging-buckets"
+    shutil.copytree(newer, staging)
+    os.remove(os.path.join(staging, "_n_buckets"))
+    for marker in (None, "_SUCCESS"):
+        if marker:
+            open(os.path.join(staging, marker), "w").close()
+        listing = sorted(os.listdir(staging))
+        got = {r["_key"]: r["v"] for r in read_upserted(spark, path).collect()}
+        assert got == {f"k{i}": 1 for i in range(20)}
+        assert sorted(os.listdir(staging)) == listing
+
+    upsert_by_key_incremental(spark, mk(3).limit(1), path, n_buckets=4)
+    assert not os.path.exists(staging)
+    got = sorted(r["v"] for r in read_upserted(spark, path).collect())
+    assert got == [1] * 19 + [3]  # the staged 2s were not promoted
 
 
 def test_success_only_legacy_staging_never_destroys_the_table(spark, tmp_path):

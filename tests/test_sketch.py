@@ -257,3 +257,19 @@ def test_kmv_sketch_is_bottom_k_of_distinct(spark):
         range(1, 65)
     )
     assert len(set(hs)) == 64
+
+
+def test_kmv_estimate_expr_exact_below_k_and_ratio_above(spark):
+    """Fewer than k hashes: the sketch is the distinct set, so the count
+    is returned as is. A full sketch estimates (k-1) * 2^48 / h_k."""
+    from token_etl_spark.operators.sketch import kmv_estimate_expr
+
+    k = 64
+    df = spark.createDataFrame(
+        [(5, 123), (63, 2**40), (64, 2**42), (64, 2**47)], "cnt long, max_h long"
+    )
+    got = [
+        r["e"]
+        for r in df.select(kmv_estimate_expr(F.col("cnt"), F.col("max_h"), k).alias("e")).collect()
+    ]
+    assert got == [5.0, 63.0, 63.0 * 2**6, 63.0 * 2]

@@ -48,74 +48,6 @@ def test_salted_aggregate_rejects_nonmergeable(spark):
         assert "avg" in str(e)
 
 
-def test_hot_key_join_matches_plain_join(spark):
-    from pyspark.sql import functions as F
-
-    from token_etl_spark.operators.skew import hot_key_join
-
-    big = spark.range(20000).select(
-        F.when(F.col("id") % 10 < 8, F.lit(7)).otherwise(F.col("id") % 100).alias("k"),
-        (F.col("id") % 13).cast("double").alias("v"),
-    )
-    small = spark.range(100).select(
-        F.col("id").alias("k"), (F.col("id") * 3.0).alias("w")
-    )
-    plain = big.join(small, "k").groupBy("k").agg(
-        F.count("*").alias("n"), F.sum(F.col("v") + F.col("w")).alias("s")
-    )
-    hybrid = hot_key_join(big, small, "k", n_hot=4).groupBy("k").agg(
-        F.count("*").alias("n"), F.sum(F.col("v") + F.col("w")).alias("s")
-    )
-    p = {(r.k): (r.n, round(r.s, 6)) for r in plain.collect()}
-    h = {(r.k): (r.n, round(r.s, 6)) for r in hybrid.collect()}
-    assert p == h
-
-
-def test_hot_key_join_left_keeps_unmatched(spark):
-    from pyspark.sql import functions as F
-
-    from token_etl_spark.operators.skew import hot_key_join
-
-    big = spark.range(1000).select((F.col("id") % 7).alias("k"), F.col("id").alias("v"))
-    small = spark.createDataFrame([(0, "zero"), (1, "one")], "k long, name string")
-    out = hot_key_join(big, small, "k", n_hot=2, how="left")
-    assert out.count() == 1000
-    assert out.filter(F.col("name").isNull()).count() == big.filter(~F.col("k").isin([0, 1])).count()
-
-
-def test_hot_key_join_left_keeps_null_keys(spark):
-    """NULL big-side keys must survive a left hybrid join: `isin(hot)`
-    evaluates to NULL for them, so a naive hot/tail split drops the row
-    from BOTH branches. A skewed NULL key also lands in the hot sample —
-    it must never poison the tail's NOT-IN filter."""
-    from pyspark.sql import functions as F
-
-    from token_etl_spark.operators.skew import hot_key_join
-
-    # 60% NULL keys (NULL is the hottest "key" the sampler sees), the
-    # rest split between a hot key and a tail.
-    big = spark.range(2000).select(
-        F.when(F.col("id") % 10 < 6, F.lit(None).cast("long"))
-        .when(F.col("id") % 10 < 9, F.lit(1))
-        .otherwise(F.col("id") % 50)
-        .alias("k"),
-        F.col("id").alias("v"),
-    )
-    small = spark.createDataFrame([(1, "one"), (2, "two")], "k long, name string")
-    for how in ("inner", "left"):
-        plain = big.join(small, "k", how)
-        hybrid = hot_key_join(big, small, "k", n_hot=2, sample_fraction=1.0, how=how)
-        assert hybrid.count() == plain.count(), how
-        # Counter, not sorted(): None keys are unorderable against ints
-        from collections import Counter
-
-        p = Counter((r.k, r.v, r.name) for r in plain.collect())
-        h = Counter((r.k, r.v, r.name) for r in hybrid.collect())
-        assert p == h, how
-    left = hot_key_join(big, small, "k", n_hot=2, sample_fraction=1.0, how="left")
-    assert left.filter(F.col("k").isNull()).count() == big.filter(F.col("k").isNull()).count()
-
-
 def test_skew_profile_ranks_hot_keys(spark):
     """A planted 60/30/10 split must rank k0 > k1 > k2 with exact counts
     and shares; two-phase pre-rank must equal the naive global window
@@ -140,3 +72,48 @@ def test_skew_profile_deterministic_ties(spark):
     df = spark.createDataFrame(rows, ["key"]).repartition(8)
     out = skew_profile(df, ["key"], top_k=3).collect()
     assert [r["key"] for r in sorted(out, key=lambda r: r["rank"])] == ["a", "b", "c"]
+
+
+def test_salted_join_left_keeps_unmatched_and_null_keys(spark):
+    """A left salted join equals the plain left join row for row: big-side
+    rows with no partner and rows with a NULL key survive with NULL
+    small-side columns (the salt hashes the whole row, so a NULL key still
+    lands in exactly one salt)."""
+    from collections import Counter
+
+    big = spark.range(2000).select(
+        F.when(F.col("id") % 10 < 3, F.lit(None).cast("long"))
+        .when(F.col("id") % 10 < 8, F.lit(1))
+        .otherwise(F.col("id") % 50)
+        .alias("k"),
+        F.col("id").alias("v"),
+    )
+    small = spark.createDataFrame([(1, "one"), (2, "two")], "k long, name string")
+    plain = big.join(small, "k", "left")
+    salted = salted_join(big, small, "k", n_salts=8, how="left")
+    assert salted.count() == 2000
+    # Counter, not sorted(): None keys are unorderable against ints
+    assert Counter(map(tuple, salted.select("k", "v", "name").collect())) == Counter(
+        map(tuple, plain.select("k", "v", "name").collect())
+    )
+    assert salted.filter(F.col("k").isNull()).count() == 600
+
+
+def test_salt_spreads_a_hot_key_over_every_salt(spark):
+    """The salt is a pure function of the row: a hot key's rows cover
+    all ``n`` salts, and a second evaluation assigns the same salt to
+    every row (no rand(), so a retried task re-partitions identically)."""
+    from token_etl_spark.operators.skew import _salt
+
+    df = _skewed(spark, 4000)
+    salted = df.withColumn("s", _salt(df, None, 8))
+    per_salt = {
+        r["s"]: r["n"]
+        for r in salted.filter(F.col("k") == "hot").groupBy("s").agg(F.count("*").alias("n")).collect()
+    }
+    assert set(per_salt) == set(range(8))
+    # 3,600 hot rows over 90 distinct (k, v) rows: no salt holds most of them
+    assert max(per_salt.values()) < 3600 // 2
+    first = [r["s"] for r in df.select(_salt(df, None, 8).alias("s")).collect()]
+    second = [r["s"] for r in df.select(_salt(df, None, 8).alias("s")).collect()]
+    assert first == second

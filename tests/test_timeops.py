@@ -1,8 +1,15 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from token_etl_spark.functions.timeops import HOUR, bucket, changelog, unix_seconds
+from token_etl_spark.functions.timeops import (
+    HOUR,
+    bucket,
+    changelog,
+    require_timestamp,
+    unix_seconds,
+)
 
 
 def test_hour_bucket_truncates(spark):
@@ -37,3 +44,12 @@ def test_collapse_to_map_grouped(spark):
     )
     rows = {r["k"]: r["m"] for r in df.groupBy("k").agg(changelog("ts", "v", "m")).collect()}
     assert rows == {"a": {3600: 1.0, 7200: 2.0}, "b": {3600: 3.0}}
+
+
+def test_require_timestamp_passes_values_and_names_pipeline_on_null(spark):
+    df = spark.createDataFrame([(3600,), (7200,)], "ts long")
+    got = [r[0] for r in df.select(require_timestamp(F.col("ts"), "wallets")).collect()]
+    assert got == [3600, 7200]
+    bad = spark.createDataFrame([(3600,), (None,)], "ts long")
+    with pytest.raises(Exception, match="wallets: a transfer has no timestamp"):
+        bad.select(require_timestamp(F.col("ts"), "wallets")).collect()

@@ -143,9 +143,9 @@ def _full_swap(
 ) -> None:
     """Replace the tree at ``path`` whole — the one commit of every state
     table in this package (the upsert sink, the KMV and retention
-    sketches, state compaction, the IVF index, the BPE checkpoints and
-    the domain stats). An in-place overwrite of the only copy would lose
-    the tree on a crash mid-write.
+    sketches, state compaction, the IVF index and the domain stats). An
+    in-place overwrite of the only copy would lose the tree on a crash
+    mid-write.
 
     ``parts`` maps a part name to the call that writes it, given the
     part's directory, in order. A part is a subdir of the tree (e.g.
@@ -488,52 +488,45 @@ def upsert_by_key_incremental(
     )
 
 
+def read_bucketed(spark: SparkSession, path: str) -> DataFrame | None:
+    """Read a key-bucketed table (:func:`merge_touched_buckets`) as its
+    last committed merge left it, ``_bucket`` column kept; None before
+    the first write. A merge cut inside its swap leaves a complete
+    staging (``_SUCCESS`` and ``_n_buckets``) whose buckets the final
+    dir may lack — the delete→rename window: those buckets are read from
+    the staging, every other bucket from the final dir. The read changes
+    nothing on disk: only the next merge finishes the swap
+    (:func:`_heal_bucket_swap`), so a reader never races the writer's
+    own swap."""
+    fs, hpath = _bucket_fs(spark, path)
+    staging = path.rstrip("/") + _STAGING_BUCKETS
+    staged = []
+    if fs.exists(hpath(staging + "/_SUCCESS")) and fs.exists(
+        hpath(staging + "/_n_buckets")
+    ):
+        found = fs.globStatus(hpath(staging + "/_bucket=*")) or []
+        staged = [int(st.getPath().getName().split("=", 1)[1]) for st in found]
+    swapped = _read_existing(spark, staging) if staged else None
+    table = _read_existing(spark, path)
+    if swapped is None:  # no swap was cut, or it finished meanwhile
+        return table
+    if table is None:  # a first write cut inside its swap
+        return swapped
+    return table.where(~F.col("_bucket").isin(staged)).unionByName(
+        swapped, allowMissingColumns=True
+    )
+
+
 def read_upserted(spark: SparkSession, path: str) -> DataFrame:
     """Read an upserted table, hiding the bookkeeping columns (tables
     written before the source rank replaced it still carry
-    ``_ingest_version``)."""
-    df = spark.read.parquet(path)
+    ``_ingest_version``). A bucketed table reads through
+    :func:`read_bucketed`, so a read never misses a bucket a crash left
+    only in the staging."""
+    df = read_bucketed(spark, path)
+    if df is None:
+        raise FileNotFoundError(f"no upserted table at {path}")
     return df.drop(*[c for c in ("_bucket", "_ingest_version") if c in df.columns])
-
-
-def write_sorted(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    n_files: int = 32,
-) -> DataFrame:
-    """Globally-sorted (ascending) parquet export (O1 at scale; the
-    reference's ``orderBy`` before its sink, WriteToFile.scala:6-12 — but
-    a bare ``orderBy`` + single writer is the 100 TB anti-plan).
-
-    Scale shape: ``repartitionByRange`` samples range boundaries and
-    distributes rows so partition i's keys all sort before partition
-    i+1's (a RangePartitioning exchange — parallel, no single-task
-    global sort); ``sortWithinPartitions`` orders inside each range with
-    a per-partition spillable sort. Part-file index == partition id, so
-    concatenating files in filename order IS the global order — the
-    contract consumers (sequential trainers, mergers) actually need.
-
-    Returns the serving-side pruning manifest: one row per file with
-    (file_name, min/max of the leading sort key, n_rows), read back from
-    the written footers — the index a reader uses to binary-search files
-    without opening them.
-    """
-    cols = [F.col(c).asc() for c in sort_cols]
-    out = df.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
-    out.write.mode("overwrite").parquet(path)
-    lead = sort_cols[0]
-    return (
-        spark.read.parquet(path)
-        .withColumn("file_name", F.element_at(F.split(F.input_file_name(), "/"), -1))
-        .groupBy("file_name")
-        .agg(
-            F.min(lead).alias("min_key"),
-            F.max(lead).alias("max_key"),
-            F.count("*").alias("n_rows"),
-        )
-    )
 
 
 def export_shards(

@@ -152,129 +152,6 @@ def bpe_train(
     return out
 
 
-def bpe_train_checkpointed(
-    docs: DataFrame,
-    state_path: str,
-    n_merges: int = 16,
-    text_col: str = "text",
-    checkpoint_every: int = 64,
-) -> DataFrame:
-    """Production-scale BPE training: :func:`bpe_train`'s loop on a
-    PERSISTED vocabulary table with periodic parquet checkpoints — the
-    32k-merge shape PERF.md round 6 called for. Identical merge table
-    (equivalence-pinned in tests/test_bpe.py): the loop body is the same
-    ``_adjacent_pairs`` argmax + ``merge_fold`` rewrite; only the state
-    substrate differs.
-
-    Why localCheckpoints alone don't survive a production train:
-    they are NON-RELIABLE (executor-local blocks — any executor loss
-    aborts the job, and a 32k-merge train is hours of work restarted
-    from merge 0) and driver-lifetime-bound (a restarted driver starts
-    over). Every ``checkpoint_every`` merges this loop commits the
-    current ``(vocab, merges)`` pair through the whole-tree swap
-    (``io.sinks._full_swap``: staged, marked complete only once both
-    parts are written, renamed in — so not even a crash during the
-    FIRST commit, which has no final tree to fall back to, can heal a
-    partial pair into live state). A crashed train RESUMES from the
-    last committed checkpoint: calling again with the same
-    ``state_path`` continues where it stopped, and a call asking for
-    fewer merges than already committed just returns the prefix. Between checkpoints the in-memory localCheckpoint fast
-    path still applies — ``checkpoint_every`` trades re-doable work for
-    parquet-write overhead (measured in PERF.md "BPE checkpointed
-    train probe").
-
-    State layout: ``{state_path}/vocab`` (word, cnt, syms) and
-    ``{state_path}/merges`` (the table learned so far). Single-writer
-    contract, like every state sink in this package.
-    """
-    from token_etl_spark.io.sinks import _full_swap, _heal_full_swap, _read_existing
-
-    spark = docs.sparkSession
-    _heal_full_swap(spark, state_path)
-    merges_df = _read_existing(spark, f"{state_path.rstrip('/')}/merges")
-    if merges_df is not None:
-        done = merges_df.count()
-        if done >= n_merges:
-            return merges_df.filter(F.col("merge_idx") <= n_merges).orderBy(
-                "merge_idx"
-            )
-        # EAGER checkpoints: resume state must be divorced from the
-        # parquet files backing it — the first in-loop commit SWAPS the
-        # state dir (deleting those files), and a later commit
-        # re-materializing a file-backed lineage would read deleted
-        # paths (the frame's file index is snapshotted at analysis).
-        vocab = _read_existing(
-            spark, f"{state_path.rstrip('/')}/vocab"
-        ).localCheckpoint(eager=True)
-        merges = [merges_df.orderBy("merge_idx").localCheckpoint(eager=True)]
-    else:
-        done = 0
-        vocab = word_counts(docs, text_col).select(
-            "word", "cnt", _chars(F.col("word")).alias("syms")
-        ).localCheckpoint(eager=False)
-        merges = []
-
-    def _commit() -> None:
-        out = merges[0]
-        for m in merges[1:]:
-            out = out.unionByName(m)
-        parts = {"vocab": vocab.write.parquet, "merges": out.write.parquet}
-        _full_swap(spark, state_path, parts)
-
-    committed_at = last_learned = done
-    for i in range(done + 1, n_merges + 1):
-        best = (
-            _adjacent_pairs(vocab)
-            .orderBy(F.col("c").desc(), "l", "r")
-            .limit(1)
-            .localCheckpoint(eager=True)
-        )
-        if best.isEmpty():
-            break
-        merges.append(
-            best.select(
-                F.lit(i).cast("long").alias("merge_idx"),
-                F.col("l").alias("left_sym"),
-                F.col("r").alias("right_sym"),
-                F.col("c").alias("pair_count"),
-            )
-        )
-        vocab = (
-            vocab.crossJoin(F.broadcast(best))
-            .select(
-                "word",
-                "cnt",
-                merge_fold(F.col("syms"), F.col("l"), F.col("r")).alias("syms"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        last_learned = i
-        if (i - done) % checkpoint_every == 0:
-            _commit()
-            committed_at = i
-            # collapse the accumulated per-merge union to the committed
-            # table: without this the plan grows one unionByName child
-            # per merge (quadratic re-analysis and ~n_merges pinned
-            # 1-row checkpoint blocks at 32k merges; r11 review). The
-            # eager checkpoint divorces it from the files the NEXT
-            # commit's swap deletes.
-            merges = [
-                spark.read.parquet(
-                    f"{state_path.rstrip('/')}/merges"
-                ).orderBy("merge_idx").localCheckpoint(eager=True)
-            ]
-    if not merges:  # every word already a single symbol, nothing committed
-        return spark.createDataFrame(
-            [], "merge_idx long, left_sym string, right_sym string, pair_count long"
-        )
-    if last_learned > committed_at:  # skip the redundant re-commit when
-        _commit()  # the loop ended exactly on a checkpoint boundary
-        # (or an exhausted resume learned nothing new)
-    return spark.read.parquet(f"{state_path.rstrip('/')}/merges").orderBy(
-        "merge_idx"
-    )
-
-
 def bpe_encode(
     df: DataFrame,
     merges: DataFrame,

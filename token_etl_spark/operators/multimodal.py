@@ -203,56 +203,6 @@ def decode_features(df: DataFrame, decode_stub: str = "fake") -> DataFrame:
 
 
 RESIZED_SCHEMA = "doc_id bigint, width int, height int, payload binary"
-FRAMES_SCHEMA = "doc_id bigint, frame_index int, frame_payload binary"
-
-
-def resize_images(df: DataFrame, target_w: int = 224, target_h: int = 224) -> DataFrame:
-    """Resize stub over the same Arrow-batched contract. The fake resize
-    is a deterministic byte-slice/pad to a size proportional to the
-    target area — a real implementation swaps `_resize_one` for
-    PIL.Image.resize; the batching, schema, and memory profile stay."""
-
-    def _resize_one(payload: bytes) -> bytes:
-        target = max(1, (target_w * target_h) // 1024)
-        if not payload:
-            payload = b"\x00"
-        return (payload * (target // len(payload) + 1))[:target]
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": target_w,
-                    "height": target_h,
-                    "payload": [_resize_one(p) for p in pdf["payload"]],
-                }
-            )
-
-    return df.mapInPandas(_batches, schema=RESIZED_SCHEMA)
-
-
-def sample_frames(df: DataFrame, every_n: int = 4, max_frames: int = 8) -> DataFrame:
-    """Frame-sampling stub: one output row per sampled frame (1→N row
-    expansion inside mapInPandas — the shape a video pipeline needs).
-    Fake frames are deterministic byte windows; a real decoder would
-    seek keyframes instead."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {"doc_id": [], "frame_index": [], "frame_payload": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames = min(max(len(payload) // every_n, 1), max_frames)
-                for i in range(n_frames):
-                    start = i * every_n
-                    out["doc_id"].append(doc_id)
-                    out["frame_index"].append(i)
-                    out["frame_payload"].append(bytes(payload[start : start + every_n]))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_batches, schema=FRAMES_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # REAL decoders for uncompressed formats (numpy + stdlib only)
 #
@@ -449,8 +399,8 @@ def extract_media_features(df: DataFrame) -> DataFrame:
 
 
 def resize_raw_images(df: DataFrame, target_w: int = 224, target_h: int = 224) -> DataFrame:
-    """REAL resize for raw Netpbm payloads over the same contract as the
-    ``resize_images`` stub: decode → nearest-neighbor resample →
+    """REAL resize for raw Netpbm payloads over the Arrow-batched
+    mapInPandas contract: decode → nearest-neighbor resample →
     re-encode P6/P5. Non-Netpbm payloads pass through with NULL payload
     (a compressed-format resize needs the codec library — the honest
     boundary, visible per row instead of silently faked)."""

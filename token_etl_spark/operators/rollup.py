@@ -1,24 +1,20 @@
 """Continuous hourly rollup — a hypertable-style continuous aggregate
 (TimescaleDB's "continuous aggregates" / materialized-view maintenance
-pattern) expressed as three DataFrame algebra pieces:
+pattern) expressed as two DataFrame algebra pieces:
 
 - :func:`hourly_rollup` — the aggregate itself, restricted to MERGEABLE
   aggregates (count→sum, sum→sum, min→min, max→max) so partial rollups
   compose;
-- :func:`merge_rollups` — cell-wise combination of partial rollups
-  (per-shard, per-day, per-stream) into one, exact by the mergeability
-  of each aggregate;
-- :func:`rollup_refresh` / :func:`rollup_merge_read` — the maintenance
-  and serving halves: refresh recomputes only the dirty tail of hours,
-  merge-read serves cold hours from the materialized table and the hot
-  tail from raw events, returning EXACTLY what the full aggregation
-  over raw data would (result transparency — the oracle for any query
-  built on this is the plain GROUP BY).
+- :func:`rollup_merge_read` — the serving half: cold hours from the
+  materialized table and the hot tail from raw events, returning
+  EXACTLY what the full aggregation over raw data would (result
+  transparency — the oracle for any query built on this is the plain
+  GROUP BY).
 
 Why this shape at 100 TB: an hourly dashboard query over years of raw
 events re-scans everything on every run; the rollup table is
-hours × keys rows (millions, not billions), the refresh touches only
-events newer than the watermark (a pushed-down timestamp range scan —
+hours × keys rows (millions, not billions), the hot side touches only
+events newer than the cutoff (a pushed-down timestamp range scan —
 the predicate compares the raw timestamp column to a literal, never a
 function of the column, so parquet min/max pruning skips cold files),
 and the serving union re-aggregates nothing cold. countDistinct is
@@ -56,50 +52,6 @@ def hourly_rollup(
         F.min(value_col).alias("min_value"),
         F.max(value_col).alias("max_value"),
     )
-
-
-def merge_rollups(
-    a: DataFrame, b: DataFrame, key_cols: tuple[str, ...] = ("event_type",)
-) -> DataFrame:
-    """Combine partial rollups cell-wise: counts and sums add, min/max
-    re-reduce. Exact for any partition of the underlying events into
-    shards (tested: merge of two halves == rollup of the whole)."""
-    return (
-        a.unionByName(b)
-        .groupBy("hour_ts", *key_cols)
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_value").alias("sum_value"),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-        )
-    )
-
-
-def rollup_refresh(
-    events: DataFrame,
-    rollup: DataFrame,
-    since_ts: int,
-    ts_col: str = "ts",
-    key_cols: tuple[str, ...] = ("event_type",),
-    value_col: str = "value",
-) -> DataFrame:
-    """Incremental refresh: keep materialized hours strictly before the
-    (hour-aligned) watermark ``since_ts``, recompute everything at or
-    after it from raw events. The raw-side filter compares the timestamp
-    COLUMN to a literal so it reaches the parquet scan (file pruning on
-    ts min/max); cold files are never opened. Late rows older than the
-    watermark are NOT picked up — choose ``since_ts`` behind the maximum
-    expected lateness, exactly like a streaming watermark."""
-    if since_ts % 3600:
-        raise ValueError("since_ts must be hour-aligned")
-    fresh = hourly_rollup(
-        events.where(F.col(ts_col) >= F.timestamp_seconds(F.lit(since_ts))),
-        ts_col,
-        key_cols,
-        value_col,
-    )
-    return rollup.where(F.col("hour_ts") < since_ts).unionByName(fresh)
 
 
 def rollup_merge_read(

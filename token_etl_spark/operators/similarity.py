@@ -17,7 +17,6 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1109,41 +1108,6 @@ def quantized_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "qdot", "rank")
-    )
-
-
-def embedding_near_dups(
-    corpus: DataFrame,
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via LSH self-join: pairs in
-    the same bucket with cosine ≥ threshold, id_a < id_b."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    base = (
-        corpus.select(
-            F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-        )
-        .withColumn("bucket", lsh_bucket(F.col("v"), planes))
-        .withColumn("_n", norm(F.col("v")))
-    )
-    a = base.select(F.col("id").alias("id_a"), F.col("v").alias("va"), "bucket",
-                    F.col("_n").alias("_na"))
-    b = base.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), "bucket",
-                    F.col("_n").alias("_nb"))
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine_sim",
-            cosine_pre(F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb")),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-        .select("id_a", "id_b", "cosine_sim")
     )
 
 
@@ -2540,12 +2504,6 @@ def random_projection(
     project to NULL components (zip_with null-padding) — degrade, never
     crash, same contract as the multimodal decoders.
 
-    For very wide dim·k (≳512×256) the flat fold column count starts to
-    dominate codegen; :func:`random_projection_pandas` is the
-    Arrow-batched numpy-matmul twin with identical semantics (values
-    equal up to float summation order; tolerance-pinned in
-    tests/test_similarity.py).
-
     Operating guidance (measured, scripts/probe_projection.py +
     PERF.md r11): use the projection as a CANDIDATE GENERATOR —
     retrieve c·k in projected space, then exact-rerank the candidates
@@ -2571,106 +2529,3 @@ def random_projection(
         for j in range(k)
     ]
     return df.withColumn(out_col, F.array(*comps))
-
-
-def random_projection_pandas(
-    df: DataFrame,
-    dim: int,
-    k: int = 16,
-    vec_col: str = "embedding",
-    out_col: str = "proj",
-    seed: str = "rp0",
-    s: int = 3,
-) -> DataFrame:
-    """Arrow-batched numpy-matmul twin of :func:`random_projection` for
-    wide dim·k where the flat expression form's codegen gets large: one
-    BLAS ``V @ R`` per Arrow batch instead of k fold expressions.
-    Identical matrix and scaling; values differ from the fold form only
-    by float summation order (numpy sums pairwise). Memory is bounded
-    by ``spark.sql.execution.arrow.maxRecordsPerBatch`` × dim doubles —
-    the same per-batch contract as the multimodal decoders."""
-    import pandas as pd
-
-    mat = (
-        np.asarray(projection_signs(dim, k, seed, s), dtype=np.float64).T
-        * float(np.sqrt(s / k))
-    )  # dim × k
-
-    # Build the StructType directly — a simpleString DDL round-trip
-    # breaks on nested struct/map field names that need quoting (the
-    # asof_join/route_to_shards bug class, ADVICE r11)
-    fields = [f for f in df.schema.fields if f.name != out_col]
-    out_schema = T.StructType(
-        [*fields, T.StructField(out_col, T.ArrayType(T.DoubleType()))]
-    )
-
-    def project(batches):
-        for pdf in batches:
-            vecs = pdf[vec_col]
-            ok = vecs.map(lambda x: x is not None and len(x) == dim).to_numpy()
-            # malformed rows yield an array of k NULL components — the
-            # SAME shape the fold form produces via zip_with null-padding
-            # (twin parity incl. degraded rows, pinned in tests)
-            res: list = [[None] * k] * len(pdf)
-            if ok.any():
-                V = np.vstack(
-                    vecs.iloc[np.flatnonzero(ok)]
-                    .map(lambda x: np.asarray(x, dtype=np.float64))
-                    .values
-                )
-                P = V @ mat
-                for row, pos in enumerate(np.flatnonzero(ok)):
-                    res[pos] = P[row]
-            out = pdf[[f.name for f in fields]].copy()
-            out[out_col] = pd.Series(res, index=pdf.index, dtype=object)
-            yield out
-
-    return df.mapInPandas(project, schema=out_schema)
-
-
-def projected_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    dim: int = 64,
-    proj_dim: int = 16,
-    candidates_per_k: int = 3,
-    seed: str = "rp0",
-    s: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The production composition the projection exists for, in one
-    call: project corpus and queries 64 → ``proj_dim`` dims
-    (:func:`random_projection`, map-only), retrieve
-    ``candidates_per_k·k`` candidates per query in PROJECTED space
-    (``dim/proj_dim``× cheaper distance scan), then restore full-dim
-    ranking fidelity by exact-cosine re-ranking just those candidates
-    (:func:`exact_rerank` — |Q|·R exact distances, independent of
-    corpus size). Returns the standard (query_id, neighbor_id,
-    cosine_sim, rank) frame; ``cosine_sim`` is the FULL-dimension
-    cosine, so downstream thresholds keep their meaning.
-
-    Recall equals the candidate stage's true-top-k coverage, which is a
-    property of the corpus's neighbor-margin structure — measured in
-    scripts/probe_projection.py (~91-95% at proj_dim 16-32 on clustered
-    vectors; i.i.d.-random vectors are the adversarial floor). Tune
-    ``candidates_per_k`` up when coverage on the target distribution
-    falls short.
-
-    At index scale the brute-force candidate stage swaps for any of the
-    family's bucketed scans over the projected column (``lsh_topk`` /
-    ``ivf_topk`` take the projected frame as-is) — the projection
-    composes BEFORE indexing, cutting quantizer training, assignment,
-    and probe cost by the same dim ratio.
-    """
-    pc = random_projection(
-        corpus, dim=dim, k=proj_dim, vec_col=vec_col, out_col="_proj", seed=seed, s=s
-    ).select(F.col(id_col), F.col("_proj").alias(vec_col))
-    pq = random_projection(
-        queries, dim=dim, k=proj_dim, vec_col=vec_col, out_col="_proj", seed=seed, s=s
-    ).select(F.col(id_col), F.col("_proj").alias(vec_col))
-    cand = brute_force_topk(
-        pc, pq, k=candidates_per_k * k, id_col=id_col, vec_col=vec_col
-    ).select("query_id", "neighbor_id")
-    return exact_rerank(cand, corpus, queries, k=k, id_col=id_col, vec_col=vec_col)

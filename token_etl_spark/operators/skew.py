@@ -80,57 +80,6 @@ def salted_join(
     return big_salted.join(small_replicated, [key, "_salt"], how).drop("_salt")
 
 
-def hot_key_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_hot: int = 16,
-    sample_fraction: float = 0.01,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant join for a NON-broadcastable small side: detect the
-    big side's hottest keys from a seeded sample, route those rows through
-    a broadcast join against the small side's matching slice, and the
-    long tail through a normal shuffle join; union the halves.
-
-    Beats uniform salting when hot keys are few but the small side is too
-    large to replicate x n_salts: only the hot-key slice (≤ n_hot rows'
-    worth of dim keys) is broadcast. The sample keeps detection cost a
-    narrow scan; the collected hot-key list is bounded by ``n_hot``.
-
-    Supported ``how``: inner / left (each input row lands in exactly one
-    branch — key sets are disjoint — so the union is exact).
-    """
-    if how not in ("inner", "left", "left_outer"):
-        raise ValueError(f"hot_key_join supports inner/left, got {how}")
-    hot_rows = (
-        big.sample(fraction=sample_fraction, seed=42)
-        .groupBy(key)
-        .count()
-        .orderBy(F.col("count").desc(), F.col(key))
-        .limit(n_hot)
-        .collect()
-    )
-    # NULL keys: a NULL sampled into hot_keys would turn the tail filter
-    # into `x NOT IN (..., NULL)` = NULL (dropping the whole tail), and a
-    # NULL big-side key evaluates both `isin` branches to NULL (dropping
-    # the row from BOTH halves — wrong for how='left'). Keep hot_keys
-    # NULL-free and route NULL-key rows to the tail branch, where the
-    # ordinary join gives them normal inner/left semantics.
-    hot_keys = [r[0] for r in hot_rows if r[0] is not None]
-    if not hot_keys:
-        return big.join(small, key, how)
-    # isNotNull() & isin(): FALSE AND NULL = FALSE, so is_hot is never
-    # NULL and ~is_hot keeps NULL-key rows in the tail.
-    is_hot = F.col(key).isNotNull() & F.col(key).isin(hot_keys)
-    big_hot = big.filter(is_hot)
-    big_tail = big.filter(~is_hot)
-    small_hot = small.filter(F.col(key).isin(hot_keys))
-    hot_joined = big_hot.join(F.broadcast(small_hot), key, how)
-    tail_joined = big_tail.join(small, key, how)
-    return hot_joined.unionByName(tail_joined)
-
-
 def skew_profile(
     df: DataFrame,
     key_cols: list[str],
@@ -140,8 +89,8 @@ def skew_profile(
     """Hot-key diagnostic: the ``top_k`` heaviest values of ``key_cols``
     with their row count and share of the table — the measurement that
     decides whether a join/agg key needs salting (``salted_join`` /
-    ``salted_aggregate``) or a ``hot_key_join`` split BEFORE the skewed
-    shuffle burns a 1000-executor stage on one straggler task.
+    ``salted_aggregate``) BEFORE the skewed shuffle burns a
+    1000-executor stage on one straggler task.
 
     Plan shape (the 100 TB design): the per-key count is one combinable
     aggregation (shuffle carries |keys| partial counts, not rows); the

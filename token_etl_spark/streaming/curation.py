@@ -896,10 +896,11 @@ def run_streaming_url_dedup(
 
 def read_url_dedup_state(spark, state_path: str) -> DataFrame | None:
     """The kept (canon_url, id[, quality]) rows so far, bucket column
-    dropped; None before any batch landed."""
-    from token_etl_spark.io.sinks import _read_existing
+    dropped; None before any batch landed (``io.sinks.read_bucketed``:
+    the read never misses a bucket a crash left only in the staging)."""
+    from token_etl_spark.io.sinks import read_bucketed
 
-    df = _read_existing(spark, state_path)
+    df = read_bucketed(spark, state_path)
     return df.drop("_bucket") if df is not None else None
 
 
