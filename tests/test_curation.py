@@ -874,8 +874,8 @@ def test_domain_stats_provenance_hardening(spark, tmp_path):
     assert load_domain_stats(spark, p, suffixes=dup_psl).count() == 1
 
     # torn-write window: a save that crashes AFTER staging completes
-    # (marker present, swap not yet done) heals into the NEW state on
-    # the next load — never new stats beside stale params
+    # (marker present, swap not yet done) reads as the NEW state on the
+    # next load — never new stats beside stale params
     lite_stats = domain_stats(df).localCheckpoint()
     from token_etl_spark.io.sinks import _bucket_fs
 
@@ -888,10 +888,17 @@ def test_domain_stats_provenance_hardening(spark, tmp_path):
     fs, hpath = _bucket_fs(spark, p)
     fs.create(hpath(f"{staging}/_SUCCESS"), True).close()
     # the old PSL tree is still in place; a load under the OLD rule now
-    # heals the committed staging and refuses — the new lite state won
+    # reads the committed staging and refuses — the new lite state won
     with pytest.raises(ValueError, match="mismatched registered-domain"):
         load_domain_stats(spark, p, suffixes=psl)
     assert {r["domain"] for r in load_domain_stats(spark, p).collect()} == {"co.uk"}
+    # the loads changed nothing on disk: the next writer promotes it
+    import glob
+
+    assert glob.glob(staging)
+    from token_etl_spark.io.sinks import _heal_full_swap
+
+    _heal_full_swap(spark, p)
 
     # a marker-LESS staging (crash mid-write OR a live concurrent
     # refresh) is LEFT ALONE by the read path — a reader deleting it
@@ -899,8 +906,6 @@ def test_domain_stats_provenance_hardening(spark, tmp_path):
     # live tree (ADVICE r13); the writer path discards it instead
     lite_stats.write.mode("overwrite").parquet(f"{staging}/stats")
     assert load_domain_stats(spark, p).count() == 1  # still the lite state
-    import glob
-
     assert glob.glob(staging)  # the reader did NOT touch the staging
     # the WRITER path (single-writer contract) discards the leftover
     # marker-less staging and commits fresh
@@ -908,8 +913,8 @@ def test_domain_stats_provenance_hardening(spark, tmp_path):
     assert not glob.glob(staging)
     assert load_domain_stats(spark, p).count() == 1
 
-    # detection heals too: a committed-but-unrenamed staging reads as a
-    # provenance tree through is_saved_domain_stats (the CLI's router
+    # detection reads it too: a committed-but-unrenamed staging reads as
+    # a provenance tree through is_saved_domain_stats (the CLI's router
     # must not mis-route a mid-swap tree to the bare-parquet path)
     lite_stats.write.mode("overwrite").parquet(f"{staging}/stats")
     spark.createDataFrame(
@@ -917,7 +922,7 @@ def test_domain_stats_provenance_hardening(spark, tmp_path):
     ).write.mode("overwrite").parquet(f"{staging}/params")
     fs.create(hpath(f"{staging}/_SUCCESS"), True).close()
     assert C2.is_saved_domain_stats(spark, p)
-    assert not glob.glob(staging)  # the detection finished the swap
+    assert glob.glob(staging)  # the detection left the swap to a writer
 
 
 def test_domain_stats_reader_writer_race(spark, tmp_path):

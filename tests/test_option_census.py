@@ -162,6 +162,9 @@ KEEP = {
     "wallet_cluster_pivot": "port of the reference's cluster pivot (SURVEY A10)",
     "holder_flag": "port of the reference's boolean predicate (SURVEY P7)",
     "write_csv": "port of the reference's CSV debug sink (SURVEY S7)",
+    "WALLETS": "port of the reference's wallets collection schema (SURVEY §1)",
+    "DAPPS": "port of the reference's dapps collection schema (SURVEY §1)",
+    "TOKEN_WALLETS": "port of the reference's token_wallets document schema (SURVEY §1)",
     "ivf_search": "reads a persisted IVF index without exposing its layout",
     "transfers_df": "test fixture",
     "raw_transfer_events_df": "test fixture",
@@ -189,7 +192,8 @@ def _referenced_names(stmt: ast.stmt) -> set[str]:
 
 
 def caller_census() -> tuple[dict[str, str], set[str]]:
-    """(public definition → where, names referenced in production)."""
+    """(public definition → where, names referenced in production): a
+    definition is a top-level function, class or assigned name."""
     defs: dict[str, str] = {}
     referenced: set[str] = set()
     for path in _production_sources():
@@ -200,13 +204,30 @@ def caller_census() -> tuple[dict[str, str], set[str]]:
             if path.name == "__init__.py" and isinstance(stmt, (ast.Import, ast.ImportFrom)):
                 continue  # a package re-export calls nothing
             referenced |= _referenced_names(stmt)
-            if (
-                audited
-                and isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-                and not stmt.name.startswith("_")
-            ):
-                defs[stmt.name] = f"{rel}:{stmt.lineno}"
+            if audited:
+                for name in _defined_names(stmt):
+                    if not name.startswith("_"):
+                        defs[name] = f"{rel}:{stmt.lineno}"
     return defs, referenced
+
+
+def _defined_names(stmt: ast.stmt) -> list[str]:
+    """Top-level names ``stmt`` defines: a function or class, or the
+    plain-name targets of a module-level assignment (constants too)."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    if isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    elif isinstance(stmt, ast.AnnAssign):
+        targets = [stmt.target]
+    else:
+        return []
+    return [
+        n.id
+        for t in targets
+        for n in ast.walk(t)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+    ]
 
 
 def test_every_public_definition_has_a_production_caller():

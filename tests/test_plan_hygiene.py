@@ -126,8 +126,8 @@ def test_lazy_checkpoint_helpers_launch_no_jobs(spark, sf_dir):
     Iterative helpers (spherical_kmeans, bpe_train, pagerank, connected
     components, PQ training) are exempt by design: their eager
     per-round checkpoints run jobs regardless, which is why their
-    internal lazy checkpoints (similarity.py _assign_with_sim /
-    _residual_subs, bpe.py vocab) are masked and harmless."""
+    internal lazy checkpoints (similarity.py SemDeDup/D4 assignment,
+    residual IVF-PQ subvectors, bpe.py vocab) are masked and harmless."""
     from token_etl_spark.io.sources import load_table
     from token_etl_spark.operators import dedup as D
 

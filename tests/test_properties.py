@@ -1684,7 +1684,7 @@ def test_refresh_domain_stats_rule_chain_fuzz(spark, suf1, suf2, decorate):
         assert fp_lite != fp1
 
         # crash window: stage a lite re-fit with the marker but no
-        # rename — the next load must heal into the NEW (lite) state
+        # rename — the next load must read the NEW (lite) state
         staging = p + ".staging-full"
         stats = C2.domain_stats(docs)
         stats.write.mode("overwrite").parquet(f"{staging}/stats")

@@ -745,38 +745,6 @@ def test_knn_label_consistency_accepts_precomputed_neighbors(spark, sf_dir):
     )
 
 
-def test_semantic_dedup_pair_salts_output_identical_and_measured(spark, sf_dir):
-    """pair_salts > 1 (the 2D-block self-join salt, r8) must produce
-    exactly the default's rows — same pairs, same keep decisions — and
-    its plan must carry the explicit salted repartitions."""
-    import contextlib
-    import io
-
-    from token_etl_spark.io.sources import load_table
-    from token_etl_spark.operators.similarity import semantic_dedup, spherical_kmeans
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = spherical_kmeans(emb, 8, 1)
-
-    def key(df):
-        return {
-            (r["id"], r["centroid_id"], round(r["centroid_sim"], 9), r["n_dups"], r["kept"])
-            for r in df.collect()
-        }
-
-    base = key(semantic_dedup(emb, centroids=cents))
-    salted_df = semantic_dedup(emb, centroids=cents, pair_salts=4)
-    assert key(salted_df) == base and base
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        salted_df.explain("formatted")
-    plan = buf.getvalue()
-    assert any(
-        "hashpartitioning(centroid_id" in l and "_ps" in l and "REPARTITION_BY_NUM" in l
-        for l in plan.splitlines()
-    )
-
-
 # --- sparse random projection (JL) ------------------------------------------
 
 
@@ -914,7 +882,7 @@ def test_arrow_assign_bit_exact_to_declarative(spark):
     )
     decl = {
         r["corpus_id"]: r["centroid_id"]
-        for r in S._assign_to_centroids(base, cents).collect()
+        for r in S._assign_to_centroids(base, cents, "cv", False).collect()
     }
     arrow = {
         r["corpus_id"]: r["centroid_id"]
@@ -1127,13 +1095,15 @@ def test_arrow_paths_refuse_zero_vectors(spark):
         S._pair_cosine_arrow(pairs, "va", "vb", threshold=0.5).collect()
 
 
-def test_kmeans_checkpoint_cadence_invariant(spark, sf_dir, monkeypatch):
+@pytest.mark.parametrize("trainer", ["spherical_kmeans", "pq_train"])
+def test_kmeans_checkpoint_cadence_invariant(spark, sf_dir, monkeypatch, trainer):
     """The Lloyd checkpoint cadence (one eager cut per
     _KMEANS_CKPT_EVERY rounds instead of per round) must not change the
-    trained centroids — the checkpoint is lineage truncation only — and
+    trained table — the checkpoint is lineage truncation only — and
     must actually REDUCE the driver-job count: at 3 rounds the batched
     cadence launches fewer jobs than a cut every round, each run counted
-    the same way (its own job group)."""
+    the same way (its own job group). Both trainers run the one shared
+    Lloyd loop: the IVF spherical k-means and the PQ codebooks."""
     import token_etl_spark.operators.similarity as S
     from token_etl_spark.io.sources import load_table
 
@@ -1141,18 +1111,25 @@ def test_kmeans_checkpoint_cadence_invariant(spark, sf_dir, monkeypatch):
     sc = spark.sparkContext
     assert 16 < S._ARROW_ASSIGN_MIN  # the cadence applies at this k
 
+    def run():
+        if trainer == "pq_train":
+            rows = S.pq_train(emb, m=8, k=16, n_iters=3).collect()
+            return {(r["sub"], r["code_id"]): r["code_vec"] for r in rows}
+        rows = S.spherical_kmeans(
+            emb, 16, 3, id_col="vec_id", vec_col="embedding", keep_means=True
+        ).collect()
+        return {r[0]: (r[1], r[2]) for r in rows}
+
     def train(cadence: int):
         monkeypatch.setattr(S, "_KMEANS_CKPT_EVERY", cadence)
-        group = f"kmeans-cadence-{cadence}"
+        group = f"{trainer}-cadence-{cadence}"
         sc.setJobGroup(group, group)
         try:
-            rows = S.spherical_kmeans(
-                emb, 16, 3, id_col="vec_id", vec_col="embedding", keep_means=True
-            ).collect()
+            table = run()
             jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         finally:
             sc.setJobGroup("", "")
-        return {r[0]: (r[1], r[2]) for r in rows}, jobs
+        return table, jobs
 
     batched, batched_jobs = train(S._KMEANS_CKPT_EVERY)
     per_round, per_round_jobs = train(1)

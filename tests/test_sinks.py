@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from token_etl_spark import fixtures
@@ -268,6 +269,113 @@ def test_upsert_full_swap_heals_and_discards(spark, tmp_path):
     got = {r["_key"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert got == {"a": 99, "b": 1, "c": 5, "d": 6}
     assert not os.path.exists(staging)
+
+
+def _write_partitioned(spark, root, v):
+    spark.createDataFrame([(v,)], "x long").coalesce(1).write.parquet(f"{root}/batch_id=k{v}")
+
+
+def _write_index(spark, root, v):
+    spark.createDataFrame(
+        [(v, [1.0, float(v)])], "centroid_id long, centroid_vec array<double>"
+    ).coalesce(1).write.parquet(f"{root}/centroids")
+    spark.createDataFrame(
+        [(v, [1.0, float(v)], v)], "corpus_id long, cv array<double>, centroid_id long"
+    ).coalesce(1).write.parquet(f"{root}/assignments")
+
+
+def _write_retention(spark, root, v):
+    spark.createDataFrame(
+        [("u", v), ("u", v + 2)], "user string, period long"
+    ).coalesce(1).write.parquet(root)
+
+
+def _write_domain_stats(spark, root, v):
+    """A provenance tree (stats + params) holding domain ``d<v>``; the
+    final tree of the detection case (v == 1) is a bare frame instead."""
+    stats = spark.createDataFrame([(f"d{v}",)], "domain string")
+    if v == 1:
+        stats.coalesce(1).write.parquet(root)
+        return
+    stats.coalesce(1).write.parquet(f"{root}/stats")
+    spark.createDataFrame(
+        [("lite", "")], "rule string, suffix_md5 string"
+    ).coalesce(1).write.parquet(f"{root}/params")
+
+
+def _whole_tree_readers():
+    from token_etl_spark.operators import curation as C
+    from token_etl_spark.streaming import dedup as D
+    from token_etl_spark.streaming.stateful import retention_from_state
+
+    def rows(df, col):
+        return sorted(r[col] for r in df.collect())
+
+    return {
+        "read_partitioned_state": (
+            _write_partitioned,
+            lambda s, p: rows(D._read_partitioned_state(s, p), "x"),
+        ),
+        "read_quantizer": (
+            _write_index,
+            lambda s, p: rows(D._read_quantizer(s, p), "centroid_id"),
+        ),
+        "read_embedding_index": (
+            _write_index,
+            lambda s, p: rows(D.read_embedding_index(s, p), "corpus_id"),
+        ),
+        "retention_from_state": (
+            _write_retention,
+            lambda s, p: sorted(tuple(r) for r in retention_from_state(s, p).collect()),
+        ),
+        "is_saved_domain_stats": (_write_domain_stats, C.is_saved_domain_stats),
+        "load_domain_stats": (
+            lambda s, root, v: _write_domain_stats(s, root, v + 1),
+            lambda s, p: rows(C.load_domain_stats(s, p), "domain"),
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "reader",
+    [
+        "read_partitioned_state",
+        "read_quantizer",
+        "read_embedding_index",
+        "retention_from_state",
+        "is_saved_domain_stats",
+        "load_domain_stats",
+    ],
+)
+def test_whole_tree_readers_read_marked_staging_in_place(spark, tmp_path, reader):
+    """A reader of a whole-tree state (``io.sinks._full_swap``) that
+    finds a marked ``.staging-full`` returns the staged values and
+    changes nothing on disk. Only writers heal: two heals over one
+    staging both pass the marker check, and the second deletes the tree
+    the first just promoted — two readers after a crash, or one reader
+    beside the writer's closing heal, would lose the whole state."""
+    from pathlib import Path
+
+    write, read = _whole_tree_readers()[reader]
+    path = str(tmp_path / "tree")
+    staging = path + ".staging-full"
+    write(spark, path, 1)
+    write(spark, staging, 2)
+    Path(staging, "_SUCCESS").touch()
+    expected_path = str(tmp_path / "expected")
+    write(spark, expected_path, 2)
+    expected = read(spark, expected_path)
+
+    def listing(root):
+        return sorted(
+            (str(p.relative_to(root)), p.stat().st_size)
+            for p in Path(root).rglob("*")
+            if p.is_file()
+        )
+
+    before = listing(path), listing(staging)
+    assert read(spark, path) == expected
+    assert (listing(path), listing(staging)) == before
 
 
 def test_staging_protocols_do_not_cross_heal(spark, tmp_path):

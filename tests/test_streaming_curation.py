@@ -1256,6 +1256,35 @@ def test_domain_gate_sink_heals_interrupted_compaction(spark, tmp_path):
     assert not os.path.exists(staging)
 
 
+def test_novelty_sink_heals_interrupted_compaction(spark, tmp_path):
+    """The novelty sink reads its gram index, then appends to it, so it
+    heals the index before reading: a frame read from the marked
+    compaction staging would be left pointing at files that the
+    append's own heal renames away."""
+    import os
+
+    from token_etl_spark.operators.dedup import shingles
+    from token_etl_spark.streaming.curation import _novelty_sink_batch
+    from token_etl_spark.streaming.dedup import _read_partitioned_state
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma w{i} delta") for i in range(8)],
+        "doc_id long, text string",
+    )
+    grams = str(tmp_path / "grams")
+    _novelty_sink_batch(docs.where("doc_id < 3"), "n-0", grams)
+    _novelty_sink_batch(docs.where("doc_id between 3 and 5"), "n-1", grams)
+    before = {r["shingle"] for r in _read_partitioned_state(spark, grams).collect()}
+    staging = _cut_compaction(spark, grams)
+
+    _novelty_sink_batch(docs.where("doc_id = 7"), "n-2", grams)
+    after = [r["shingle"] for r in _read_partitioned_state(spark, grams).collect()]
+    assert len(after) == len(set(after))  # seen grams not re-admitted
+    new = shingles(docs.where("doc_id = 7"), text_col="text", id_col="doc_id", k=3)
+    assert set(after) == before | {r["shingle"] for r in new.collect()}
+    assert not os.path.exists(staging)
+
+
 def test_ingest_sink_heals_interrupted_compaction(spark, tmp_path):
     """The composed ingest sink heals its output tree before writing,
     like the gate sink: every input document keeps its decision row."""

@@ -699,6 +699,8 @@ def test_streaming_embedding_neardup_matches_sequential_batch(
                 F.col("embedding").cast("array<double>").alias("cv"),
             ),
             F.broadcast(cents),
+            "cv",
+            False,
         )
         assigned = (
             new_rows if assigned is None else assigned.unionByName(new_rows)
@@ -1007,14 +1009,16 @@ def test_rebuild_ivf_index_heals_interrupted_swap_and_resizes(
     spark, sf_dir, tmp_path
 ):
     """The one non-atomic swap window (final dir deleted, complete
-    staging present) heals at the next read — a continuing stream's
-    sink must not see 'no quantizer'. And n_centroids overrides the
+    staging present) is read in place — a continuing stream's sink must
+    not see 'no quantizer' — and the rebuild, a writer, heals it. And
+    n_centroids overrides the
     cell count (the growth-probe mitigation: more cells, flatter
     per-batch slope)."""
     from token_etl_spark.io.sinks import _bucket_fs, _read_existing
     from token_etl_spark.io.sources import load_table
     from token_etl_spark.operators.similarity import build_ivf_index
     from token_etl_spark.streaming.dedup import (
+        _read_quantizer,
         read_embedding_index,
         rebuild_ivf_index,
     )
@@ -1033,7 +1037,7 @@ def test_rebuild_ivf_index_heals_interrupted_swap_and_resizes(
     assert fs.rename(hpath(index_path), hpath(index_path + ".staging-full"))
     healed = read_embedding_index(spark, index_path)
     assert {r["corpus_id"] for r in healed.select("corpus_id").collect()} == ids
-    assert _read_existing(spark, f"{index_path}/centroids").count() == 4
+    assert _read_quantizer(spark, index_path).count() == 4
 
     # resize: the retrain lever the mitigation measurement asks for
     rebuild_ivf_index(spark, index_path, n_centroids=16)

@@ -157,8 +157,9 @@ def _full_swap(
     left its own ``_SUCCESS``, mark the staging root ``_SUCCESS``, then
     delete the final tree and rename the staging over it. The root
     marker is the completeness signal the heal trusts, so a crash at any
-    point leaves either the old tree, a marked staging the next reader
-    or writer promotes, or an unmarked staging nothing promotes."""
+    point leaves either the old tree, a marked staging the next writer
+    promotes (readers read it in place, :func:`_committed_tree`), or an
+    unmarked staging nothing promotes."""
     _heal_full_swap(spark, path)
     staging = path.rstrip("/") + _STAGING_FULL
     _delete_dir(spark, staging)
@@ -185,9 +186,12 @@ def _heal_full_swap(spark: SparkSession, path: str) -> None:
     complete replacement and is promoted over whatever final tree
     exists. An unmarked staging is never deleted here — it may be a
     concurrent writer's in-flight staging; the next writer clears it.
-    Every reader of a whole-tree state runs this first, so nothing reads
-    or appends to a tree a marked staging is about to replace. Only
-    consumes ``.staging-full`` dirs (see the suffix constants)."""
+    Every writer of a whole-tree state runs this first, so nothing
+    appends to a tree a marked staging is about to replace; readers
+    resolve through :func:`_committed_tree` instead and never run it —
+    two heals over one staging both pass the marker check, and the
+    second would delete the tree the first just promoted. Only consumes
+    ``.staging-full`` dirs (see the suffix constants)."""
     fs, hpath = _bucket_fs(spark, path)
     staging = path.rstrip("/") + _STAGING_FULL
     if not fs.exists(hpath(staging + "/_SUCCESS")):
@@ -197,6 +201,17 @@ def _heal_full_swap(spark: SparkSession, path: str) -> None:
         fs.delete(dst, True)
     if not fs.rename(hpath(staging), dst):
         raise IOError(f"whole-tree swap failed: rename {staging} -> {path}")
+
+
+def _committed_tree(spark: SparkSession, path: str) -> str:
+    """Where to read a whole-tree state (:func:`_full_swap`) as its last
+    commit left it: the marked ``.staging-full`` while a cut swap left
+    one (a complete replacement the next writer promotes), else
+    ``path``. Changes nothing on disk, so a reader never races another
+    heal or the writer's own swap (:func:`_heal_full_swap`)."""
+    fs, hpath = _bucket_fs(spark, path)
+    staging = path.rstrip("/") + _STAGING_FULL
+    return staging if fs.exists(hpath(staging + "/_SUCCESS")) else path
 
 
 def _heal_legacy_staging(spark: SparkSession, path: str) -> None:

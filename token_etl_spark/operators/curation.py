@@ -2158,17 +2158,17 @@ def save_domain_stats(
 def is_saved_domain_stats(spark, path: str) -> bool:
     """True when ``path`` is a :func:`save_domain_stats` provenance
     tree (``stats`` + ``params`` beside each other) rather than a bare
-    parquet frame. Heals a crash-interrupted save first, so a swap that
-    marked its staging but did not rename it still reads as a
-    provenance tree. Lets callers handed
+    parquet frame. Reads a crash-interrupted save in place
+    (``io.sinks._committed_tree``), so a swap that marked its staging
+    but did not rename it still reads as a provenance tree. Lets
+    callers handed
     "a domain-stats path" (the CLI) route a provenance tree through
     :func:`load_domain_stats`'s rule validation instead of silently
     reading ``<path>`` raw and bypassing the fit/apply check
     (ADVICE r12)."""
-    from token_etl_spark.io.sinks import _bucket_fs, _heal_full_swap
+    from token_etl_spark.io.sinks import _bucket_fs, _committed_tree
 
-    base = path.rstrip("/")
-    _heal_full_swap(spark, path)
+    base = _committed_tree(spark, path).rstrip("/")
     fs, hpath = _bucket_fs(spark, path)
     return fs.exists(hpath(f"{base}/params")) and fs.exists(
         hpath(f"{base}/stats")
@@ -2184,13 +2184,12 @@ def load_domain_stats(
     ``suffixes`` setting matches the one the frame was FIT under
     (see :func:`save_domain_stats`); raises ValueError on mismatch
     instead of silently flagging every document domain_kept=False.
-    Finishes any crash-interrupted save first (``io.sinks._heal_full_swap``
-    never deletes the in-flight staging of a concurrent
-    :func:`refresh_domain_stats`)."""
-    from token_etl_spark.io.sinks import _heal_full_swap
+    Reads a crash-interrupted save's marked staging in place
+    (``io.sinks._committed_tree``) and changes nothing on disk, so it
+    never races a concurrent :func:`refresh_domain_stats`."""
+    from token_etl_spark.io.sinks import _committed_tree
 
-    base = path.rstrip("/")
-    _heal_full_swap(spark, path)
+    base = _committed_tree(spark, path).rstrip("/")
     rule, digest = _suffix_fingerprint(suffixes)
     params = spark.read.parquet(f"{base}/params").collect()[0]
     if (params["rule"], params["suffix_md5"]) != (rule, digest):

@@ -14,6 +14,8 @@ deterministically (seeded numpy) and enter the plan as literals.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -362,7 +364,20 @@ def ivf_assign(
     (``_assign_to_centroids``); nothing shuffles until a later per-cell
     operation.
     """
-    cents = F.broadcast(
+    cents = F.broadcast(_sample_centroids(corpus, n_centroids, id_col, vec_col))
+    base = corpus.select(
+        F.col(id_col).alias("corpus_id"), F.col(vec_col).cast("array<double>").alias("cv")
+    )
+    assigned = _assign_to_centroids(base, cents, "cv", False, n_centroids)
+    return assigned, cents
+
+
+def _sample_centroids(
+    corpus: DataFrame, n_centroids: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """The untrained quantizer: the ``n_centroids`` smallest-id corpus
+    vectors, each keeping its own id as ``centroid_id``."""
+    return (
         corpus.orderBy(id_col)
         .limit(n_centroids)
         .select(
@@ -370,32 +385,34 @@ def ivf_assign(
             F.col(vec_col).cast("array<double>").alias("centroid_vec"),
         )
     )
-    base = corpus.select(
-        F.col(id_col).alias("corpus_id"), F.col(vec_col).cast("array<double>").alias("cv")
-    )
-    assigned = _assign_to_centroids(base, cents, n_centroids_hint=n_centroids)
-    return assigned, cents
 
 
 def lloyd_refine(assigned: DataFrame) -> DataFrame:
     """One Lloyd's iteration over an IVF assignment: new centroid =
-    per-cell mean vector. Distributed as a single aggregation — the mean
-    of array columns is computed with ``posexplode`` + groupBy (cell,
-    position), then re-assembled with ``array_agg`` ordered by position.
+    per-cell mean vector (:func:`_grouped_mean` over ``centroid_id``).
     Returns a centroids frame usable as the quantizer for re-assignment.
     """
-    exploded = assigned.select(
-        "centroid_id", F.posexplode("cv").alias("pos", "x")
+    return _grouped_mean(assigned, ["centroid_id"], "cv", "centroid_vec")
+
+
+def _grouped_mean(
+    df: DataFrame, keys: list[str], vec_col: str, out_col: str
+) -> DataFrame:
+    """Per-group mean vector — the refinement step of every Lloyd loop
+    here (the IVF cells and the PQ codebooks). Distributed as a single
+    aggregation: the mean of array columns is computed with
+    ``posexplode`` + groupBy (group, position), then re-assembled with
+    ``collect_list`` ordered by position."""
+    means = (
+        df.select(*keys, F.posexplode(vec_col).alias("pos", "x"))
+        .groupBy(*keys, "pos")
+        .agg(F.avg("x").alias("m"))
     )
-    means = exploded.groupBy("centroid_id", "pos").agg(F.avg("x").alias("m"))
-    return (
-        means.groupBy("centroid_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s.getField("m"),
-            ).alias("centroid_vec")
-        )
+    return means.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "m"))),
+            lambda s: s.getField("m"),
+        ).alias(out_col)
     )
 
 
@@ -562,65 +579,107 @@ def _pair_cosine_arrow(
     return pairs.mapInPandas(gen, schema=schema)
 
 
-def _assign_to_centroids(
-    base: DataFrame, cents: DataFrame, n_centroids_hint: int | None = None
-) -> DataFrame:
-    """Assign each ``(corpus_id, cv)`` row to its max-cosine centroid.
+def _arrow_route(n_rows: int | None) -> bool:
+    """The one Arrow-vs-declarative decision, for the assignment argmax
+    and the SemDeDup pair verify alike: a centroid table of at least
+    ``_ARROW_ASSIGN_MIN`` rows takes the bit-exact Arrow twins — the
+    interpreted HOF fold's cost grows with n_centroids and the scale
+    regime trains MANY centroids; the gate constants (16) keep the
+    declarative, job-free-build form. ``None`` (a row count the caller
+    did not take) keeps the declarative form."""
+    return n_rows is not None and n_rows >= _ARROW_ASSIGN_MIN
 
-    MAP-ONLY: the centroid set is collapsed to a single broadcast row
-    (array of (centroid_id, centroid_vec) structs) and the argmax is a
-    per-row ``array_max`` over a ``transform`` fold — no shuffle. The
-    previous form (broadcast join + ``Window.partitionBy(corpus_id)``)
-    shuffled the n_centroids-times-expanded corpus on corpus_id once per
-    call — i.e. per Lloyd iteration — which is a full-corpus shuffle at
-    100 TB for what is semantically a narrow operation. Ties break to
-    the smallest centroid_id (struct max on (sim, -centroid_id)),
-    matching the oracle's ``row_number() OVER (ORDER BY sim DESC,
-    centroid_id)`` exactly; the cosine is the same expression, so the
-    float bits agree.
 
-    ``n_centroids_hint`` (callers know their own parameter) routes
-    counts >= ``_ARROW_ASSIGN_MIN`` through the bit-exact Arrow twin
-    (:func:`_assign_argmax_arrow`) — the interpreted HOF fold's cost
-    grows with n_centroids and the scale regime trains MANY centroids;
-    the gate constants (16) keep the declarative, job-free-build form."""
-    if n_centroids_hint is not None and n_centroids_hint >= _ARROW_ASSIGN_MIN:
-        return _assign_argmax_arrow(base, cents, "cv", with_sim=False)
-    # Norms precomputed once per row (and once per centroid inside the
-    # broadcast struct) instead of once per (row, centroid): the cosine
-    # values are bit-identical (cosine_pre) while the interpreted fold
-    # count per row drops from 3 x n_centroids to n_centroids + 1.
+def _quantizer(
+    centroids: DataFrame | None,
+    n_centroids: int,
+    build: Callable[[], DataFrame],
+) -> tuple[DataFrame, int]:
+    """``(cents, n_rows)``: the centroid table a call assigns against and
+    the row count :func:`_arrow_route` decides on. A SUPPLIED table is
+    counted — one job over a broadcast-sized (by contract) frame, so a
+    large pre-trained table under a default ``n_centroids`` cannot keep
+    the interpreted O(n x n_centroids x dim) HOF path (ADVICE r14).
+    Otherwise ``build()`` makes the table, which has exactly
+    ``n_centroids`` rows and costs no count."""
+    if centroids is not None:
+        return centroids, centroids.count()
+    return build(), n_centroids
+
+
+def _centroid_scores(
+    base: DataFrame, cents: DataFrame, vec_col: str, *carry: str
+) -> tuple[DataFrame, Column]:
+    """The broadcast centroid scorer: ``base`` joined to the centroid
+    table collapsed into ONE broadcast row (``_cents``, an array of
+    (centroid_id, centroid_vec, *carry, cnorm) structs), and the per-row
+    array of (sim, neg_id, *carry) structs scoring every centroid by
+    cosine against ``vec_col``. MAP-ONLY — no shuffle. ``array_max`` of
+    it is the argmax with ties to the smallest centroid_id (struct max
+    on (sim, -centroid_id)), matching the oracle's ``row_number() OVER
+    (ORDER BY sim DESC, centroid_id)`` exactly; sorting it descending
+    ranks the cells in that same order.
+
+    Norms are precomputed once per row (``_nv``) and once per centroid
+    (``cnorm``) instead of once per (row, centroid): the cosine values
+    are bit-identical (cosine_pre) while the interpreted fold count per
+    row drops from 3 x n_centroids to n_centroids + 1."""
     carr = F.broadcast(
         cents.agg(
             F.collect_list(
                 F.struct(
                     F.col("centroid_id"),
                     F.col("centroid_vec"),
+                    *[F.col(c) for c in carry],
                     norm(F.col("centroid_vec")).alias("cnorm"),
                 )
             ).alias("_cents")
         )
     )
-    best = F.array_max(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                cosine_pre(
-                    F.col("cv"),
-                    c.getField("centroid_vec"),
-                    F.col("_nv"),
-                    c.getField("cnorm"),
-                ).alias("sim"),
-                (-c.getField("centroid_id")).alias("neg_id"),
-            ),
-        )
+    scores = F.transform(
+        F.col("_cents"),
+        lambda c: F.struct(
+            cosine_pre(
+                F.col(vec_col),
+                c.getField("centroid_vec"),
+                F.col("_nv"),
+                c.getField("cnorm"),
+            ).alias("sim"),
+            (-c.getField("centroid_id")).alias("neg_id"),
+            *[c.getField(x).alias(x) for x in carry],
+        ),
     )
-    return (
-        base.withColumn("_nv", norm(F.col("cv")))
-        .join(carr)
-        .withColumn("_best", best)
-        .select("corpus_id", "cv", (-F.col("_best.neg_id")).alias("centroid_id"))
-    )
+    return base.withColumn("_nv", norm(F.col(vec_col))).join(carr), scores
+
+
+def _assign_to_centroids(
+    base: DataFrame,
+    cents: DataFrame,
+    vec_col: str,
+    with_sim: bool,
+    n_rows: int | None = None,
+) -> DataFrame:
+    """Assign each row of ``base`` to its max-cosine centroid: base's
+    columns plus ``centroid_id`` (and, ``with_sim``, the winning cosine
+    as ``centroid_sim``).
+
+    MAP-ONLY (:func:`_centroid_scores` + ``array_max``). The previous
+    form (broadcast join + ``Window.partitionBy(corpus_id)``) shuffled
+    the n_centroids-times-expanded corpus on corpus_id once per call —
+    i.e. per Lloyd iteration — which is a full-corpus shuffle at 100 TB
+    for what is semantically a narrow operation. The cosine is the same
+    expression as the oracle's, so the float bits agree.
+
+    ``n_rows`` is the centroid table's row count (:func:`_quantizer`);
+    :func:`_arrow_route` sends large tables through the bit-exact Arrow
+    twin (:func:`_assign_argmax_arrow`)."""
+    if _arrow_route(n_rows):
+        return _assign_argmax_arrow(base, cents, vec_col, with_sim)
+    scored, scores = _centroid_scores(base, cents, vec_col)
+    best = [(-F.col("_b.neg_id")).alias("centroid_id")]
+    if with_sim:
+        best.append(F.col("_b.sim").alias("centroid_sim"))
+    return scored.withColumn("_b", F.array_max(scores)).select(*base.columns, *best)
 
 
 #: Lloyd rounds between eager lineage-truncating checkpoints on the
@@ -629,6 +688,36 @@ def _assign_to_centroids(
 #: the per-round driver barrier + block write (VERDICT r15 item 4);
 #: tests pin that the cadence does not change the trained centroids.
 _KMEANS_CKPT_EVERY = 4
+
+
+def _lloyd(
+    cents: DataFrame,
+    n_iters: int,
+    step: Callable[[DataFrame], DataFrame],
+    every_round: bool,
+) -> DataFrame:
+    """Run ``n_iters`` Lloyd rounds (``step``: previous table → refined
+    table) under the one checkpoint cadence of every trainer here
+    (spherical k-means, the PQ codebooks).
+
+    Cadence (guide §2.6 / VERDICT r15 item 4): the eager per-round
+    checkpoint serialized one driver barrier + block write per Lloyd
+    round, but its only job is lineage truncation — each round
+    references the previous table ONCE (the broadcast-fold agg), so
+    nesting a few rounds into one plan is linear, not exponential, and
+    one eager cut per ``_KMEANS_CKPT_EVERY`` rounds (always on the last)
+    materializes the same values with K× fewer barriers.
+    ``every_round`` cuts each round instead: the Arrow assignment twin
+    COLLECTS the centroid table at round start, and an uncut chain would
+    recompute all prior rounds per collect. Bit-identical either way:
+    the checkpoint is semantics-free and the plan shapes/partitioning
+    under the aggregations are unchanged (pinned in
+    tests/test_similarity.py)."""
+    for it in range(n_iters):
+        cents = step(cents)
+        if every_round or (it + 1) % _KMEANS_CKPT_EVERY == 0 or it == n_iters - 1:
+            cents = cents.localCheckpoint(eager=True)
+    return cents
 
 
 def spherical_kmeans(
@@ -671,33 +760,17 @@ def spherical_kmeans(
             F.col("cv").alias("centroid_vec"),
         )
     )
-    # Checkpoint cadence (guide §2.6 / VERDICT r15 item 4): the eager
-    # per-round checkpoint serialized one driver barrier + block write
-    # per Lloyd round, but its only job is lineage truncation — each
-    # round references the previous centroids ONCE (the broadcast-fold
-    # agg), so nesting a few rounds into one plan is linear, not
-    # exponential, and one eager cut per K rounds (always on the last)
-    # materializes the same values with K× fewer barriers. The Arrow
-    # assignment twin COLLECTS the centroid table at round start, so at
-    # n_centroids >= _ARROW_ASSIGN_MIN every round keeps its checkpoint
-    # (an uncut chain would recompute all prior rounds per collect).
-    # Bit-identical either way: the checkpoint is semantics-free and the
-    # plan shapes/partitioning under the aggregations are unchanged
-    # (pinned in tests/test_similarity.py).
-    ckpt_every = 1 if n_centroids >= _ARROW_ASSIGN_MIN else _KMEANS_CKPT_EVERY
-    for it in range(n_iters):
+    def step(prev: DataFrame) -> DataFrame:
         assigned = _assign_to_centroids(
-            base,
-            cents.select("centroid_id", "centroid_vec"),
-            n_centroids_hint=n_centroids,
+            base, prev.select("centroid_id", "centroid_vec"), "cv", False, n_centroids
         )
-        cents = (
+        return (
             lloyd_refine(assigned)
             .withColumnRenamed("centroid_vec", "centroid_mean")
             .withColumn("centroid_vec", l2_normalize(F.col("centroid_mean")))
         )
-        if (it + 1) % ckpt_every == 0 or it == n_iters - 1:
-            cents = cents.localCheckpoint(eager=True)
+
+    cents = _lloyd(cents, n_iters, step, _arrow_route(n_centroids))
     if not keep_means:
         return cents.select("centroid_id", "centroid_vec")
     if n_iters == 0:
@@ -705,11 +778,40 @@ def spherical_kmeans(
     return cents.select("centroid_id", "centroid_vec", "centroid_mean")
 
 
+def _probe(q: DataFrame, cents: DataFrame, n_probe: int, *carry: str) -> DataFrame:
+    """The query prober of every IVF search here: ``(query_id, qv,
+    centroid_id, *carry)`` — each ``(query_id, qv)`` query's ``n_probe``
+    nearest cells by cosine, ties to the smallest centroid_id. The
+    centroid table is broadcast; the query norm is computed once per
+    query (not once per centroid) and the centroid norm once per
+    centroid row — bit-identical ranking (cosine_pre)."""
+    q_scored = (
+        q.withColumn("_qn", norm(F.col("qv")))
+        .join(F.broadcast(cents.withColumn("_cn", norm(F.col("centroid_vec")))))
+        .withColumn(
+            "sim",
+            cosine_pre(
+                F.col("qv"), F.col("centroid_vec"), F.col("_qn"), F.col("_cn")
+            ),
+        )
+    )
+    wq = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("centroid_id"))
+    return (
+        q_scored.withColumn("rn", F.row_number().over(wq))
+        .filter(F.col("rn") <= n_probe)
+        .select("query_id", "qv", "centroid_id", *carry)
+    )
+
+
+#: Sub-buckets per centroid cell in the IVF candidate join
+#: (:func:`_cell_join_topk`).
+_CELL_SALTS = 8
+
+
 def _cell_join_topk(
     probes: DataFrame,
     assigned: DataFrame,
     k: int,
-    n_salts: int = 8,
     exclude_self: bool = True,
 ) -> DataFrame:
     """The IVF candidate join + exact verify + per-query rank, shared by
@@ -723,7 +825,7 @@ def _cell_join_topk(
     DIFFERENT vector, and excluding it would silently drop a legitimate
     neighbor.
 
-    The cell join's key is SALTED (``n_salts`` sub-buckets of each
+    The cell join's key is SALTED (``_CELL_SALTS`` sub-buckets of each
     centroid cell, assigned side keyed by hash(corpus_id), probe side
     replicated across all salts): a plain join on ``centroid_id`` has
     n_centroids distinct keys, and — worse — AQE coalesces its
@@ -734,11 +836,11 @@ def _cell_join_topk(
     verify serialized onto ONE coalesced task, 12.9 s vs ~1.3 s salted
     (r8 finding). Both inputs get EXPLICIT-numPartitions repartitions
     (AQE never coalesces user-specified partition counts), so the join
-    runs co-partitioned at n_centroids × n_salts key granularity and
+    runs co-partitioned at n_centroids × _CELL_SALTS key granularity and
     only (ids, sim) flow onward to the rank window's query_id exchange
     — the vectors never shuffle again after the cell join.
 
-    Replication cost: the probe side is duplicated ``n_salts``× through
+    Replication cost: the probe side is duplicated ``_CELL_SALTS``× through
     one exchange — per replica one (query_id, qv, centroid_id) row, the
     standard replicated-fragment trade. Every (probe, corpus-row) pair
     still matches exactly once (on the corpus row's own salt), so the
@@ -750,10 +852,10 @@ def _cell_join_topk(
     # extra double per row through the exchange, ~3× less interpreted
     # fold work per scored pair — cosine_pre, bit-identical)
     asg = assigned.withColumn("_cn", norm(F.col("cv"))).withColumn(
-        "_salt", F.pmod(F.xxhash64("corpus_id"), F.lit(n_salts)).cast("int")
+        "_salt", F.pmod(F.xxhash64("corpus_id"), F.lit(_CELL_SALTS)).cast("int")
     ).repartition(n_parts, "centroid_id", "_salt")
     prb = probes.withColumn("_qn", norm(F.col("qv"))).withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
+        "_salt", F.explode(F.array(*[F.lit(i) for i in range(_CELL_SALTS)]))
     ).repartition(n_parts, "centroid_id", "_salt")
     cand = prb.join(asg, ["centroid_id", "_salt"])
     if exclude_self:
@@ -798,7 +900,7 @@ def ivf_topk(
 
     Expected comparisons per query: |corpus| × n_probe / n_centroids.
     The cell join is salted (``_cell_join_topk``) so its parallelism is
-    n_centroids × n_salts, not n_centroids — and immune to AQE's
+    n_centroids × _CELL_SALTS, not n_centroids — and immune to AQE's
     bytes-based coalescing, which otherwise serializes the expansion
     join's verify onto one task when the query side is corpus-sized.
 
@@ -806,53 +908,20 @@ def ivf_topk(
     instead of the raw sample — tighter cells, higher recall at the same
     n_probe (measured in PERF.md). ``centroids`` shares a pre-trained
     quantizer (train once, reuse — the corpus-wide Lloyd shuffles are
-    the only training cost; same seam as ``semantic_dedup``).
+    the only training cost; same seam as ``semantic_dedup``). Both build
+    through :func:`build_ivf_index_frames`, the persisted index's own
+    builder.
     """
     if refine_iters > 0 or centroids is not None:
-        cents = F.broadcast(
-            (
-                centroids
-                if centroids is not None
-                else spherical_kmeans(corpus, n_centroids, refine_iters, id_col, vec_col)
-            ).select("centroid_id", "centroid_vec")
-        )
-        base = corpus.select(
-            F.col(id_col).alias("corpus_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
-        # a SUPPLIED quantizer routes on its real row count (ADVICE r14);
-        # the self-trained one has exactly n_centroids rows (no job)
-        assigned = _assign_to_centroids(
-            base,
-            cents,
-            n_centroids_hint=(
-                n_centroids if centroids is None else centroids.count()
-            ),
+        cents, assigned = build_ivf_index_frames(
+            corpus, n_centroids, refine_iters, id_col, vec_col, centroids
         )
     else:
         assigned, cents = ivf_assign(corpus, n_centroids, id_col, vec_col)
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
     )
-    # query norm once per query (not once per centroid), centroid norm
-    # once per centroid row — bit-identical ranking (cosine_pre)
-    q_scored = (
-        q.withColumn("_qn", norm(F.col("qv")))
-        .join(cents.withColumn("_cn", norm(F.col("centroid_vec"))))
-        .withColumn(
-            "sim",
-            cosine_pre(
-                F.col("qv"), F.col("centroid_vec"), F.col("_qn"), F.col("_cn")
-            ),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("centroid_id"))
-    probes = (
-        q_scored.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "qv", "centroid_id")
-    )
-    return _cell_join_topk(probes, assigned, k)
+    return _cell_join_topk(_probe(q, cents, n_probe), assigned, k)
 
 
 def build_ivf_index_frames(
@@ -870,23 +939,17 @@ def build_ivf_index_frames(
     frames; a declared query can instead feed them straight into
     :func:`ivf_search_frames`, exercising the identical build+serve logic
     without a plan-build write job."""
-    cents = (
-        centroids
-        if centroids is not None
-        else spherical_kmeans(corpus, n_centroids, refine_iters, id_col, vec_col)
-    ).select("centroid_id", "centroid_vec")
+    cents, n_rows = _quantizer(
+        centroids,
+        n_centroids,
+        lambda: spherical_kmeans(corpus, n_centroids, refine_iters, id_col, vec_col),
+    )
+    cents = cents.select("centroid_id", "centroid_vec")
     base = corpus.select(
         F.col(id_col).alias("corpus_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
     )
-    # a SUPPLIED quantizer routes on its real row count (ADVICE r14);
-    # the self-trained one has exactly n_centroids rows (no job)
-    assigned = _assign_to_centroids(
-        base,
-        F.broadcast(cents),
-        n_centroids_hint=(n_centroids if centroids is None else centroids.count()),
-    )
-    return cents, assigned
+    return cents, _assign_to_centroids(base, F.broadcast(cents), "cv", False, n_rows)
 
 
 def build_ivf_index(
@@ -948,29 +1011,10 @@ def ivf_search_frames(
     external-namespace contract. :func:`ivf_search` delegates here after
     its parquet reads, so a declared query exercising this function
     exercises the exact code path a production cluster serves through."""
-    cents = F.broadcast(cents)
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
     )
-    # query norm once per query (not once per centroid), centroid norm
-    # once per centroid row — bit-identical ranking (cosine_pre)
-    q_scored = (
-        q.withColumn("_qn", norm(F.col("qv")))
-        .join(cents.withColumn("_cn", norm(F.col("centroid_vec"))))
-        .withColumn(
-            "sim",
-            cosine_pre(
-                F.col("qv"), F.col("centroid_vec"), F.col("_qn"), F.col("_cn")
-            ),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("centroid_id"))
-    probes = (
-        q_scored.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "qv", "centroid_id")
-    )
-    return _cell_join_topk(probes, assigned, k, exclude_self=False)
+    return _cell_join_topk(_probe(q, cents, n_probe), assigned, k, exclude_self=False)
 
 
 def ivf_search(
@@ -1189,102 +1233,12 @@ def semantic_decontaminate(
     )
 
 
-def _assign_with_sim(
-    corpus: DataFrame,
-    n_centroids: int,
-    n_iters: int,
-    id_col: str,
-    vec_col: str,
-    centroids: DataFrame | None = None,
-    checkpoint: bool = True,
-    n_centroids_hint: int | None = None,
-) -> DataFrame:
-    """Train spherical k-means (or accept a PRE-TRAINED ``centroids``
-    frame — (centroid_id, centroid_vec), e.g. from ``spherical_kmeans``)
-    and assign every corpus row to its max-cosine centroid, RETAINING
-    the winning cosine: (id, v, centroid_id, centroid_sim). Assignment
-    is the same map-only broadcast-argmax as ``_assign_to_centroids``
-    (ties to the smallest centroid_id via struct max on (sim, -id),
-    matching the oracle's row_number ordering bit-for-bit); shared by
-    ``semantic_dedup`` and ``prototypicality_filter``, which accept the
-    same ``centroids`` pass-through so one training run serves dedup,
-    diversification, AND the IVF index (train once, reuse — at 100 TB
-    the Lloyd iterations are corpus-wide shuffles worth sharing).
-
-    ``checkpoint=False`` skips the trailing lazy ``localCheckpoint``:
-    when the centroid lineage is NOT already materialized (e.g. the
-    untrained orderBy+limit sample), the lazy checkpoint materializes
-    an AQE query stage AT PLAN BUILD — the plan-hygiene red. Callers
-    in the k-means family are tagged ``iterative`` (training runs jobs
-    anyway); a non-iterative consumer whose re-computation is the
-    cheap broadcast argmax passes False.
-
-    Arrow-vs-declarative routing (ADVICE r14): a SUPPLIED ``centroids``
-    frame routes on its ACTUAL row count — a caller passing a large
-    pre-trained table while leaving ``n_centroids`` at its default must
-    not silently keep the interpreted O(n x n_centroids x dim) HOF path.
-    The count is one job over a broadcast-sized (by contract) frame;
-    callers that resolved ``centroids`` themselves from a known
-    parameter pass ``n_centroids_hint`` to skip it (keeping plan build
-    job-free for the non-iterative sample-centroid consumers)."""
-    base = corpus.select(
+def _id_vectors(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``(id, v)``: the corpus rows the SemDeDup/D4/outlier family
+    assigns."""
+    return corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    cents = (
-        centroids
-        if centroids is not None
-        else spherical_kmeans(corpus, n_centroids, n_iters, id_col, vec_col)
-    )
-    if n_centroids_hint is not None:
-        eff_nc = n_centroids_hint
-    elif centroids is not None:
-        eff_nc = centroids.count()
-    else:
-        eff_nc = n_centroids
-    # scale regime: large centroid counts route through the bit-exact
-    # Arrow twin (see _assign_to_centroids) — the gate constants (16)
-    # keep the declarative form below
-    if eff_nc >= _ARROW_ASSIGN_MIN:
-        out = _assign_argmax_arrow(base, cents, "v", with_sim=True)
-        return out.localCheckpoint(eager=False) if checkpoint else out
-    # norms once per row / per centroid — see _assign_to_centroids
-    carr = F.broadcast(
-        cents.agg(
-            F.collect_list(
-                F.struct(
-                    F.col("centroid_id"),
-                    F.col("centroid_vec"),
-                    norm(F.col("centroid_vec")).alias("cnorm"),
-                )
-            ).alias("_cents")
-        )
-    )
-    best = F.array_max(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                cosine_pre(
-                    F.col("v"),
-                    c.getField("centroid_vec"),
-                    F.col("_nv"),
-                    c.getField("cnorm"),
-                ).alias("sim"),
-                (-c.getField("centroid_id")).alias("neg_id"),
-            ),
-        )
-    )
-    out = (
-        base.withColumn("_nv", norm(F.col("v")))
-        .join(carr)
-        .withColumn("_b", best)
-        .select(
-            "id",
-            "v",
-            (-F.col("_b.neg_id")).alias("centroid_id"),
-            F.col("_b.sim").alias("centroid_sim"),
-        )
-    )
-    return out.localCheckpoint(eager=False) if checkpoint else out
 
 
 def prototypicality_filter(
@@ -1319,9 +1273,26 @@ def prototypicality_filter(
     precedes it; oversized clusters are bounded the same way (grow
     n_centroids with the corpus).
     """
-    assigned = _assign_with_sim(
-        corpus, n_centroids, n_iters, id_col, vec_col, centroids
+    cents, n_rows = _quantizer(
+        centroids,
+        n_centroids,
+        lambda: spherical_kmeans(corpus, n_centroids, n_iters, id_col, vec_col),
     )
+    return _prototypes(corpus, cents, n_rows, drop_pct, id_col, vec_col)
+
+
+def _prototypes(
+    corpus: DataFrame,
+    cents: DataFrame,
+    n_rows: int,
+    drop_pct: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """:func:`prototypicality_filter` against a resolved quantizer."""
+    assigned = _assign_to_centroids(
+        _id_vectors(corpus, id_col, vec_col), cents, "v", True, n_rows
+    ).localCheckpoint(eager=False)
     w_rank = Window.partitionBy("centroid_id").orderBy(
         F.col("centroid_sim").desc(), F.col("id")
     )
@@ -1350,47 +1321,12 @@ def _probe_cells(
 ) -> DataFrame:
     """(id, cell): each row's top-``n_assign`` cells by cosine (ties to
     the smallest centroid_id — the first element equals the
-    ``_assign_with_sim`` argmax, so n_assign=1 reproduces primary
+    primary assignment's argmax, so n_assign=1 reproduces primary
     assignment exactly). Map-only broadcast, narrow explode."""
-    base = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    carr = F.broadcast(
-        cents.agg(
-            F.collect_list(
-                F.struct(
-                    F.col("centroid_id"),
-                    F.col("centroid_vec"),
-                    norm(F.col("centroid_vec")).alias("cnorm"),
-                )
-            ).alias("_cents")
-        )
-    )
-    ranked = F.slice(
-        F.reverse(
-            F.array_sort(
-                F.transform(
-                    F.col("_cents"),
-                    lambda c: F.struct(
-                        cosine_pre(
-                            F.col("v"),
-                            c.getField("centroid_vec"),
-                            F.col("_nv"),
-                            c.getField("cnorm"),
-                        ).alias("sim"),
-                        (-c.getField("centroid_id")).alias("neg_id"),
-                    ),
-                )
-            )
-        ),
-        1,
-        n_assign,
-    )
-    return (
-        base.withColumn("_nv", norm(F.col("v")))
-        .join(carr)
-        .select("id", F.explode(ranked).alias("_c"))
-        .select("id", (-F.col("_c.neg_id")).alias("cell"))
+    scored, scores = _centroid_scores(_id_vectors(corpus, id_col, vec_col), cents, "v")
+    ranked = F.slice(F.reverse(F.array_sort(scores)), 1, n_assign)
+    return scored.select("id", F.explode(ranked).alias("_c")).select(
+        "id", (-F.col("_c.neg_id")).alias("cell")
     )
 
 
@@ -1404,7 +1340,6 @@ def semantic_dedup(
     max_cluster: int | None = None,
     centroids: DataFrame | None = None,
     n_assign: int = 1,
-    pair_salts: int = 1,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
     embedding space with spherical k-means, then flag semantic
@@ -1452,26 +1387,54 @@ def semantic_dedup(
     Returns one row per corpus row: (id, centroid_id, centroid_sim,
     n_dups, kept).
     """
-    cents = (
-        centroids
-        if centroids is not None
-        else spherical_kmeans(corpus, n_centroids, n_iters, id_col, vec_col)
+    cents, n_rows = _quantizer(
+        centroids,
+        n_centroids,
+        lambda: spherical_kmeans(corpus, n_centroids, n_iters, id_col, vec_col),
     )
-    # Arrow-vs-declarative routing follows the ACTUAL centroid count
-    # when a pre-trained frame is supplied (ADVICE r14): a large table
-    # under a default n_centroids must not keep the interpreted HOF
-    # path. One count job on a broadcast-sized frame; self-trained
-    # centroids have exactly n_centroids rows (no job).
-    eff_nc = n_centroids if centroids is None else centroids.count()
-    assigned = _assign_with_sim(
-        corpus, n_centroids, n_iters, id_col, vec_col, cents,
-        n_centroids_hint=eff_nc,
+    return _semantic_dedup(
+        corpus, cents, n_rows, threshold, id_col, vec_col, max_cluster, n_assign
     )
-    _CLUSTER_ADVICE = (
-        "raise n_centroids so cluster size ~ n/k stays bounded "
-        "(SemDeDup scales k with the corpus), or raise max_cluster "
-        "explicitly."
-    )
+
+
+def _semantic_dedup(
+    corpus: DataFrame,
+    cents: DataFrame,
+    n_rows: int,
+    threshold: float,
+    id_col: str,
+    vec_col: str,
+    max_cluster: int | None,
+    n_assign: int,
+) -> DataFrame:
+    """:func:`semantic_dedup` against a resolved quantizer."""
+    assigned = _assign_to_centroids(
+        _id_vectors(corpus, id_col, vec_col), cents, "v", True, n_rows
+    ).localCheckpoint(eager=False)
+    if n_assign > 1:
+        members, cell = _probe_cells(corpus, cents, n_assign, id_col, vec_col), "cell"
+    else:
+        members, cell = assigned, "centroid_id"
+    if max_cluster is not None:
+        from token_etl_spark.operators.dedup import _cap_bucket_size
+
+        members = _cap_bucket_size(
+            members, [cell], max_cluster, "semantic-dedup cluster",
+            advice=(
+                "raise n_centroids so cluster size ~ n/k stays bounded "
+                "(SemDeDup scales k with the corpus), or raise max_cluster "
+                "explicitly."
+            ),
+        )
+
+    def side(src: DataFrame, t: str, *keys: str) -> DataFrame:
+        return src.select(
+            F.col("id").alias(f"id_{t}"),
+            F.col("v").alias(f"v{t}"),
+            *keys,
+            F.col("centroid_sim").alias(f"sim_{t}"),
+        ).withColumn(f"_n{t}", norm(F.col(f"v{t}")))
+
     if n_assign > 1:
         # Candidate IDs come from a cells-only self-join and are DEDUPED
         # BEFORE the cosine verify: a pair can meet in up to n_assign
@@ -1480,94 +1443,31 @@ def semantic_dedup(
         # through the cell join. Pair-IDs-first matches the oracle's
         # cand CTE shape and attaches vectors/sims exactly once per
         # distinct pair.
-        cells = _probe_cells(corpus, cents, n_assign, id_col, vec_col)
-        if max_cluster is not None:
-            from token_etl_spark.operators.dedup import _cap_bucket_size
-
-            cells = _cap_bucket_size(
-                cells, ["cell"], max_cluster, "semantic-dedup cluster",
-                advice=_CLUSTER_ADVICE,
-            )
         cand = (
-            cells.select(F.col("id").alias("id_a"), "cell")
-            .join(cells.select(F.col("id").alias("id_b"), "cell"), "cell")
+            members.select(F.col("id").alias("id_a"), cell)
+            .join(members.select(F.col("id").alias("id_b"), cell), cell)
             .filter(F.col("id_a") != F.col("id_b"))
             .select("id_a", "id_b")
             .distinct()
         )
-        sa = assigned.select(
-            F.col("id").alias("id_a"), F.col("v").alias("va"),
-            F.col("centroid_sim").alias("sim_a"),
-        ).withColumn("_na", norm(F.col("va")))
-        sb = assigned.select(
-            F.col("id").alias("id_b"), F.col("v").alias("vb"),
-            F.col("centroid_sim").alias("sim_b"),
-        ).withColumn("_nb", norm(F.col("vb")))
-        joined = cand.join(sa, "id_a").join(sb, "id_b")
-        if eff_nc >= _ARROW_ASSIGN_MIN:
-            joined = _pair_cosine_arrow(joined, "va", "vb", threshold=threshold)
-        else:
-            joined = joined.filter(
-                cosine_pre(F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb"))
-                >= threshold
-            )
-        pairs = joined.select("id_a", "id_b", "sim_a", "sim_b")
+        joined = cand.join(side(assigned, "a"), "id_a").join(side(assigned, "b"), "id_b")
     else:
-        paired_src = assigned
-        if max_cluster is not None:
-            from token_etl_spark.operators.dedup import _cap_bucket_size
-
-            paired_src = _cap_bucket_size(
-                paired_src, ["centroid_id"], max_cluster,
-                "semantic-dedup cluster", advice=_CLUSTER_ADVICE,
-            )
-        a = paired_src.select(
-            F.col("id").alias("id_a"),
-            F.col("v").alias("va"),
-            "centroid_id",
-            F.col("centroid_sim").alias("sim_a"),
-        ).withColumn("_na", norm(F.col("va")))
-        b = paired_src.select(
-            F.col("id").alias("id_b"),
-            F.col("v").alias("vb"),
-            "centroid_id",
-            F.col("centroid_sim").alias("sim_b"),
-        ).withColumn("_nb", norm(F.col("vb")))
-        join_keys = ["centroid_id"]
-        if pair_salts > 1:
-            # Opt-in 2D-block salt for the in-cluster SELF-join — the
-            # ``_cell_join_topk`` fix adapted to a self-join: side b is
-            # sub-bucketed by hash(id_b), side a replicated across all
-            # salts, so each pair matches exactly once (on b's salt) and
-            # the verify parallelism is n_centroids × pair_salts instead
-            # of n_centroids (and immune to AQE's bytes-based
-            # coalescing via the explicit-numPartitions repartitions).
-            # Default OFF: it replicates the corpus side ×pair_salts
-            # through a shuffle, and SemDeDup's declared contract —
-            # n_centroids grows with the corpus — already restores
-            # parallelism at scale; this seam is for the fixed-small-k
-            # regime (probe/eval corpora on a wide cluster).
-            n_parts = paired_src.sparkSession.sparkContext.defaultParallelism
-            b = b.withColumn(
-                "_ps", F.pmod(F.xxhash64("id_b"), F.lit(pair_salts)).cast("int")
-            ).repartition(n_parts, "centroid_id", "_ps")
-            a = a.withColumn(
-                "_ps", F.explode(F.array(*[F.lit(i) for i in range(pair_salts)]))
-            ).repartition(n_parts, "centroid_id", "_ps")
-            join_keys = ["centroid_id", "_ps"]
-        joined = a.join(b, join_keys).filter(F.col("id_a") != F.col("id_b"))
-        # scale regime: the in-cluster verify's HOF cosine routes through
-        # the bit-exact Arrow twin alongside the assignment (same switch)
-        if eff_nc >= _ARROW_ASSIGN_MIN:
-            joined = _pair_cosine_arrow(joined, "va", "vb", threshold=threshold)
-        else:
-            joined = joined.filter(
-                cosine_pre(F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb"))
-                >= threshold
-            )
-        pairs = joined.select("id_a", "id_b", "sim_a", "sim_b")
+        joined = (
+            side(members, "a", cell)
+            .join(side(members, "b", cell), cell)
+            .filter(F.col("id_a") != F.col("id_b"))
+        )
+    # scale regime: the in-cluster verify's HOF cosine routes through
+    # the bit-exact Arrow twin alongside the assignment (same switch)
+    if _arrow_route(n_rows):
+        joined = _pair_cosine_arrow(joined, "va", "vb", threshold=threshold)
+    else:
+        joined = joined.filter(
+            cosine_pre(F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb"))
+            >= threshold
+        )
     dup = (
-        pairs.groupBy(F.col("id_b").alias("id"))
+        joined.groupBy(F.col("id_b").alias("id"))
         .agg(
             F.count("*").alias("n_dups"),
             F.max(
@@ -1608,7 +1508,8 @@ def d4_select(
     also keeps both stages' cluster geometry consistent, which the
     second stage's per-cluster quota assumes. A caller that ALREADY has
     a trained table (an IVF index, a sibling query in the same session)
-    passes it via ``centroids`` and the composition trains zero times.
+    passes it via ``centroids`` and the composition trains zero times;
+    the table is counted once for both stages.
     Prototypicality ranks the SURVIVORS of the dedup stage (left-semi
     join), so the drop quota applies to the deduplicated cluster sizes,
     matching the paper's ordering.
@@ -1618,29 +1519,20 @@ def d4_select(
     ``keep`` = survived both stages; rows dropped by stage 1 carry null
     stage-2 columns.
     """
-    cents = (
-        centroids
-        if centroids is not None
-        else spherical_kmeans(corpus, n_centroids, n_iters, id_col, vec_col)
-    )
-    sem = semantic_dedup(
-        corpus,
+    cents, n_rows = _quantizer(
+        centroids,
         n_centroids,
-        n_iters,
-        threshold,
-        id_col,
-        vec_col,
-        max_cluster,
-        centroids=cents,
+        lambda: spherical_kmeans(corpus, n_centroids, n_iters, id_col, vec_col),
+    )
+    sem = _semantic_dedup(
+        corpus, cents, n_rows, threshold, id_col, vec_col, max_cluster, 1
     )
     survivors = corpus.join(
         sem.filter(F.col("kept")).select(F.col("id").alias(id_col)),
         id_col,
         "left_semi",
     )
-    proto = prototypicality_filter(
-        survivors, n_centroids, n_iters, drop_pct, id_col, vec_col, centroids=cents
-    )
+    proto = _prototypes(survivors, cents, n_rows, drop_pct, id_col, vec_col)
     return (
         sem.select(
             "id",
@@ -1704,60 +1596,68 @@ def pq_train(
     baselines. Returns (sub, code_id, code_vec) — m×k rows, the codebook
     frame every other PQ operator broadcasts.
 
-    ALL m subspaces train in the SAME distributed job per Lloyd round:
-    the corpus explodes once into (vec_id, sub, sv) and assignment/
-    refinement group by (sub, code) — the subspace is just another key,
-    so training cost is one corpus pass per iteration regardless of m
-    (not m separate k-means runs). Init is deterministic (the k smallest
-    vec_ids seed every subspace, code_id = 1-based rank), assignment
-    breaks ties to the smallest code_id, and the L2 fold order is pinned
-    — the DuckDB oracle unrolls the whole loop exactly as
-    ``_kmeans_cte_members`` does for the IVF trainer.
+    ALL m subspaces train in the SAME distributed job per Lloyd round
+    (:func:`_pq_lloyd`): the corpus explodes once into (vec_id, sub, sv)
+    and assignment/refinement group by (sub, code) — the subspace is
+    just another key, so training cost is one corpus pass per iteration
+    regardless of m (not m separate k-means runs). The DuckDB oracle
+    unrolls the whole loop exactly as ``_kmeans_cte_members`` does for
+    the IVF trainer.
     """
-    dsub = dim // m
-    base = corpus.select(
+    sub = _pq_subs(corpus, m, dim, id_col, vec_col).localCheckpoint(eager=False)
+    return _pq_lloyd(sub, corpus, id_col, k, n_iters)
+
+
+def _pq_subs(
+    corpus: DataFrame, m: int, dim: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(vec_id, sub, sv): each l2-normalized vector split into its ``m``
+    subvectors."""
+    v = l2_normalize(F.col(vec_col).cast("array<double>"))
+    return corpus.select(
         F.col(id_col).alias("vec_id"),
-        l2_normalize(F.col(vec_col).cast("array<double>")).alias("v"),
+        F.posexplode(_subvectors(v, m, dim // m)).alias("sub", "sv"),
     )
-    sub = base.select(
-        "vec_id", F.posexplode(_subvectors(F.col("v"), m, dsub)).alias("sub", "sv")
-    ).localCheckpoint(eager=False)
-    cents = (
-        sub.join(
-            F.broadcast(
-                base.orderBy("vec_id")
-                .limit(k)
-                .select(
-                    "vec_id",
-                    F.row_number().over(Window.orderBy("vec_id")).alias("code_id"),
-                )
-            ),
-            "vec_id",
-        )
-        .select("sub", "code_id", F.col("sv").alias("code_vec"))
+
+
+def _pq_lloyd(
+    sub: DataFrame, corpus: DataFrame, id_col: str, k: int, n_iters: int
+) -> DataFrame:
+    """The PQ trainer: per-subspace L2 Lloyd over a (vec_id, sub, sv)
+    frame — the raw subvectors (``pq_train``) or the residual ones
+    (``ivfpq_residual_topk``). Init is deterministic (the ``k`` smallest
+    corpus ids seed every subspace, code_id = 1-based rank), assignment
+    breaks ties to the smallest code_id, the L2 fold order is pinned,
+    and the rounds run under the shared :func:`_lloyd` cadence — each
+    round references the previous codebook once (the ``_pq_assign``
+    broadcast agg)."""
+    seeds = (
+        corpus.select(F.col(id_col).alias("vec_id"))
+        .orderBy("vec_id")
+        .limit(k)
+        .select("vec_id", F.row_number().over(Window.orderBy("vec_id")).alias("code_id"))
     )
-    # checkpoint cadence: same rule as spherical_kmeans — each round
-    # references the previous codebook once (the _pq_assign broadcast
-    # agg), so lineage nests linearly and one eager cut per
-    # _KMEANS_CKPT_EVERY rounds (always the last) saves a driver
-    # barrier + block write per skipped round, bit-identically
-    for it in range(n_iters):
-        assigned = _pq_assign(sub, cents)
-        cents = (
-            assigned.select("sub", "code_id", F.posexplode("sv").alias("pos", "x"))
-            .groupBy("sub", "code_id", "pos")
-            .agg(F.avg("x").alias("mu"))
-            .groupBy("sub", "code_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mu"))),
-                    lambda s: s.getField("mu"),
-                ).alias("code_vec")
-            )
+    cents = sub.join(F.broadcast(seeds), "vec_id").select(
+        "sub", "code_id", F.col("sv").alias("code_vec")
+    )
+    return _lloyd(
+        cents,
+        n_iters,
+        lambda prev: _grouped_mean(
+            _pq_assign(sub, prev), ["sub", "code_id"], "sv", "code_vec"
+        ),
+        False,
+    )
+
+
+def _codebook_row(codebooks: DataFrame) -> DataFrame:
+    """The m×k codebook as ONE broadcast row: ``_cb``, an array of
+    (sub, code_id, code_vec) structs."""
+    return F.broadcast(
+        codebooks.agg(
+            F.collect_list(F.struct("sub", "code_id", "code_vec")).alias("_cb")
         )
-        if (it + 1) % _KMEANS_CKPT_EVERY == 0 or it == n_iters - 1:
-            cents = cents.localCheckpoint(eager=True)
-    return cents
+    )
 
 
 def _pq_assign(sub: DataFrame, cents: DataFrame) -> DataFrame:
@@ -1765,11 +1665,6 @@ def _pq_assign(sub: DataFrame, cents: DataFrame) -> DataFrame:
     subspace — map-only: the m×k codebook collapses to one broadcast
     array; the per-row argmin filters it by subspace inside the lambda
     (ties to the smallest code_id via struct min on (d2, code_id))."""
-    carr = F.broadcast(
-        cents.agg(
-            F.collect_list(F.struct("sub", "code_id", "code_vec")).alias("_cb")
-        )
-    )
     best = F.array_min(
         F.transform(
             F.filter(F.col("_cb"), lambda c: c.getField("sub") == F.col("sub")),
@@ -1780,9 +1675,24 @@ def _pq_assign(sub: DataFrame, cents: DataFrame) -> DataFrame:
         )
     )
     return (
-        sub.join(carr)
+        sub.join(_codebook_row(cents))
         .withColumn("_b", best)
         .select("vec_id", "sub", "sv", F.col("_b.code_id").alias("code_id"))
+    )
+
+
+def _pq_codes(sub: DataFrame, codebooks: DataFrame) -> DataFrame:
+    """(vec_id, codes): each vector's m-array of nearest code ids,
+    ordered by subspace. One shuffle on vec_id to reassemble."""
+    return (
+        _pq_assign(sub, codebooks)
+        .groupBy("vec_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("sub", "code_id"))),
+                lambda s: s.getField("code_id"),
+            ).alias("codes")
+        )
     )
 
 
@@ -1800,23 +1710,72 @@ def pq_encode(
     embedding corpus searchable from memory. Narrow: subvector split,
     broadcast-codebook argmin per subspace, collect back to an array
     ordered by subspace. One shuffle on vec_id to reassemble."""
+    return _pq_codes(_pq_subs(corpus, m, dim, id_col, vec_col), codebooks)
+
+
+def _pq_queries(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(query_id, qv): the l2-normalized query side of every PQ search."""
+    return queries.select(
+        F.col(id_col).alias("query_id"),
+        l2_normalize(F.col(vec_col).cast("array<double>")).alias("qv"),
+    )
+
+
+def _with_lut(
+    frame: DataFrame,
+    codebooks: DataFrame,
+    qv_col: str,
+    m: int,
+    k_codes: int,
+    dim: int,
+    *keep: str,
+) -> DataFrame:
+    """``keep`` columns of ``frame`` plus its lookup table ``lut``:
+    LUT[sub][code-1] = l2sq(subvector ``sub`` of ``qv_col``, that code's
+    vector), an ``m × k_codes`` nested array folded from the broadcast
+    codebook structs in (sub asc, code_id asc) order."""
     dsub = dim // m
-    base = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        l2_normalize(F.col(vec_col).cast("array<double>")).alias("v"),
+    lut = F.transform(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        lambda s: F.transform(
+            F.sequence(F.lit(1), F.lit(k_codes)),
+            lambda c: F.aggregate(
+                F.filter(
+                    F.col("_cb"),
+                    lambda e: (e.getField("sub") == s) & (e.getField("code_id") == c),
+                ),
+                F.lit(0.0),
+                lambda acc, e: acc
+                + _l2sq(F.slice(F.col(qv_col), s * dsub + 1, dsub), e.getField("code_vec")),
+            ),
+        ),
     )
-    sub = base.select(
-        "vec_id", F.posexplode(_subvectors(F.col("v"), m, dsub)).alias("sub", "sv")
+    return frame.join(_codebook_row(codebooks)).select(*keep, lut.alias("lut"))
+
+
+def _pq_rank(cand: DataFrame, k: int) -> DataFrame:
+    """The lookup-table scan of every PQ search: a (query_id, lut,
+    vec_id, codes) candidate's distance is the SUM OF m TABLE LOOKUPS
+    (``element_at`` of each subspace's row at its code), and each query
+    keeps its ``k`` nearest, ties on vec_id. Returns (query_id,
+    neighbor_id, pq_dist, rank)."""
+    scored = cand.filter(F.col("query_id") != F.col("vec_id")).withColumn(
+        "pq_dist",
+        F.aggregate(
+            F.zip_with(
+                F.col("lut"),
+                F.col("codes"),
+                lambda row, code: F.element_at(row, code.cast("int")),
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
     )
-    assigned = _pq_assign(sub, codebooks)
+    w = Window.partitionBy("query_id").orderBy(F.col("pq_dist").asc(), F.col("vec_id"))
     return (
-        assigned.groupBy("vec_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("sub", "code_id"))),
-                lambda s: s.getField("code_id"),
-            ).alias("codes")
-        )
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "pq_dist", "rank")
     )
 
 
@@ -1850,57 +1809,9 @@ def pq_topk(
         corpus, m, k_codes, n_iters, dim, id_col, vec_col
     )
     codes = pq_encode(corpus, cb, m, dim, id_col, vec_col)
-    dsub = dim // m
-    # one broadcast row: codebook as (sub, code_id, code_vec) structs
-    carr = F.broadcast(
-        cb.agg(F.collect_list(F.struct("sub", "code_id", "code_vec")).alias("_cb"))
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        l2_normalize(F.col(vec_col).cast("array<double>")).alias("qv"),
-    )
-    # LUT[sub][code-1] = l2sq(query subvector, code vector); built by
-    # sorting the broadcast codebook structs (sub asc, code_id asc) and
-    # folding distances into a nested array
-    lut = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.transform(
-            F.sequence(F.lit(1), F.lit(k_codes)),
-            lambda c: F.aggregate(
-                F.filter(
-                    F.col("_cb"),
-                    lambda e: (e.getField("sub") == s) & (e.getField("code_id") == c),
-                ),
-                F.lit(0.0),
-                lambda acc, e: acc
-                + _l2sq(F.slice(F.col("qv"), s * dsub + 1, dsub), e.getField("code_vec")),
-            ),
-        ),
-    )
-    q_lut = q.join(carr).select("query_id", "qv", lut.alias("lut"))
-    scored = (
-        F.broadcast(q_lut.drop("qv"))
-        .crossJoin(codes)
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn(
-            "pq_dist",
-            F.aggregate(
-                F.zip_with(
-                    F.col("lut"),
-                    F.col("codes"),
-                    lambda row, code: F.element_at(row, code.cast("int")),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("pq_dist").asc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "pq_dist", "rank")
-    )
+    q = _pq_queries(queries, id_col, vec_col)
+    q_lut = _with_lut(q, cb, "qv", m, k_codes, dim, "query_id")
+    return _pq_rank(F.broadcast(q_lut).crossJoin(codes), k)
 
 
 def ivfpq_topk(
@@ -1931,8 +1842,9 @@ def ivfpq_topk(
     per-cell residuals for tighter quantization — the documented next
     fidelity step, same plan shape with a per-(query, cell) LUT.
 
-    Plan shape: coarse training + assignment and PQ training + encoding
-    are the existing shared-machinery paths (broadcast centroid/codebook
+    Plan shape: coarse training + assignment (the IVF index builder,
+    :func:`build_ivf_index_frames`) and PQ training + encoding are the
+    existing shared-machinery paths (broadcast centroid/codebook
     tables, map-only argmax/argmin); the probe table is |Q|·n_probe rows
     (broadcast); the candidate join shuffles on centroid_id exactly like
     ``ivf_topk`` but carries codes, not vectors. Returns (query_id,
@@ -1940,86 +1852,22 @@ def ivfpq_topk(
     share pre-trained tables (train once, reuse — both trainings are
     the only corpus-wide iterative costs here).
     """
-    coarse = (
-        coarse_centroids.select("centroid_id", "centroid_vec")
-        if coarse_centroids is not None
-        else spherical_kmeans(corpus, n_centroids, coarse_iters, id_col, vec_col)
+    coarse, assigned = build_ivf_index_frames(
+        corpus, n_centroids, coarse_iters, id_col, vec_col, coarse_centroids
     )
-    assigned = _assign_with_sim(
-        corpus, n_centroids, coarse_iters, id_col, vec_col, centroids=coarse,
-        # self-trained coarse quantizer has exactly n_centroids rows (no
-        # job); a supplied one routes on its real count inside
-        n_centroids_hint=n_centroids if coarse_centroids is None else None,
-    ).select(F.col("id").alias("vec_id"), "centroid_id")
     cb = (
         codebooks
         if codebooks is not None
         else pq_train(corpus, m, k_codes, pq_iters, dim, id_col, vec_col)
     )
-    codes = pq_encode(corpus, cb, m, dim, id_col, vec_col).join(assigned, "vec_id")
-
-    dsub = dim // m
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        l2_normalize(F.col(vec_col).cast("array<double>")).alias("qv"),
+    codes = pq_encode(corpus, cb, m, dim, id_col, vec_col).join(
+        assigned.select(F.col("corpus_id").alias("vec_id"), "centroid_id"), "vec_id"
     )
-    q_scored = (
-        q.withColumn("_qn", norm(F.col("qv")))
-        .join(F.broadcast(coarse.withColumn("_cn", norm(F.col("centroid_vec")))))
-        .withColumn(
-            "sim",
-            cosine_pre(
-                F.col("qv"), F.col("centroid_vec"), F.col("_qn"), F.col("_cn")
-            ),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("centroid_id"))
-    probes = (
-        q_scored.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "centroid_id")
-    )
-    carr = F.broadcast(
-        cb.agg(F.collect_list(F.struct("sub", "code_id", "code_vec")).alias("_cb"))
-    )
-    lut = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.transform(
-            F.sequence(F.lit(1), F.lit(k_codes)),
-            lambda c: F.aggregate(
-                F.filter(
-                    F.col("_cb"),
-                    lambda e: (e.getField("sub") == s) & (e.getField("code_id") == c),
-                ),
-                F.lit(0.0),
-                lambda acc, e: acc
-                + _l2sq(F.slice(F.col("qv"), s * dsub + 1, dsub), e.getField("code_vec")),
-            ),
-        ),
-    )
-    q_lut = q.join(carr).select("query_id", lut.alias("lut"))
-    cand = (
-        F.broadcast(probes.join(q_lut, "query_id"))
-        .join(codes, "centroid_id")
-        .filter(F.col("query_id") != F.col("vec_id"))
-    )
-    scored = cand.withColumn(
-        "pq_dist",
-        F.aggregate(
-            F.zip_with(
-                F.col("lut"),
-                F.col("codes"),
-                lambda row, code: F.element_at(row, code.cast("int")),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("pq_dist").asc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "pq_dist", "rank")
+    q = _pq_queries(queries, id_col, vec_col)
+    q_lut = _with_lut(q, cb, "qv", m, k_codes, dim, "query_id")
+    probes = _probe(q, coarse, n_probe).select("query_id", "centroid_id")
+    return _pq_rank(
+        F.broadcast(probes.join(q_lut, "query_id")).join(codes, "centroid_id"), k
     )
 
 
@@ -2038,45 +1886,19 @@ def _residual_subs(
     variance-minimizing reconstruction centroid (see the
     ``spherical_kmeans`` keep_means note: subtracting the re-normalized
     direction instead measurably inflates residual energy above the raw
-    vectors). The map-only coarse argmax reuses the broadcast-argmax
-    machinery; the subtraction and split are narrow."""
+    vectors). The map-only coarse argmax is the broadcast centroid
+    scorer carrying each centroid's mean; the subtraction and split are
+    narrow."""
     base = corpus.select(
         F.col(id_col).alias("vec_id"),
         l2_normalize(F.col(vec_col).cast("array<double>")).alias("nv"),
     )
-    carr = F.broadcast(
-        coarse.agg(
-            F.collect_list(
-                F.struct(
-                    F.col("centroid_id"),
-                    F.col("centroid_vec"),
-                    F.col("centroid_mean"),
-                    norm(F.col("centroid_vec")).alias("cnorm"),
-                )
-            ).alias("_cents")
-        )
-    )
-    best = F.array_max(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                cosine_pre(
-                    F.col("nv"),
-                    c.getField("centroid_vec"),
-                    F.col("_nn"),
-                    c.getField("cnorm"),
-                ).alias("sim"),
-                (-c.getField("centroid_id")).alias("neg_id"),
-                c.getField("centroid_mean").alias("cm"),
-            ),
-        )
-    )
-    base = base.withColumn("_nn", norm(F.col("nv")))
-    resid = base.join(carr).withColumn("_b", best).select(
+    scored, scores = _centroid_scores(base, coarse, "nv", "centroid_mean")
+    resid = scored.withColumn("_b", F.array_max(scores)).select(
         "vec_id",
         (-F.col("_b.neg_id")).alias("centroid_id"),
         F.zip_with(
-            F.col("nv"), F.col("_b.cm"), lambda x, y: x - y
+            F.col("nv"), F.col("_b.centroid_mean"), lambda x, y: x - y
         ).alias("rv"),
     )
     return resid.select(
@@ -2127,7 +1949,8 @@ def ivfpq_residual_topk(
     dsub = dim // m
     # a shared coarse table must carry centroid_mean (keep_means=True
     # training) — residual encoding subtracts the MEAN, not the
-    # re-projected direction (see below)
+    # re-projected direction (see below). The residual argmax never
+    # takes the Arrow route, so a supplied table is not counted.
     coarse = (
         coarse_centroids.select("centroid_id", "centroid_vec", "centroid_mean")
         if coarse_centroids is not None
@@ -2138,122 +1961,29 @@ def ivfpq_residual_topk(
     rsub = _residual_subs(corpus, coarse, m, dsub, id_col, vec_col).localCheckpoint(
         eager=False
     )
-
-    # PQ training on residual subvectors: same deterministic seed rule
-    # (the k smallest vec_ids seed every subspace) and Lloyd loop as
-    # pq_train, but over the residual frame.
-    cents = (
-        rsub.join(
-            F.broadcast(
-                corpus.select(F.col(id_col).alias("vec_id"))
-                .orderBy("vec_id")
-                .limit(k_codes)
-                .select(
-                    "vec_id",
-                    F.row_number().over(Window.orderBy("vec_id")).alias("code_id"),
-                )
-            ),
-            "vec_id",
-        ).select("sub", "code_id", F.col("sv").alias("code_vec"))
-    )
-    # same checkpoint cadence as pq_train (one reference per round)
-    for it in range(pq_iters):
-        assigned = _pq_assign(rsub.select("vec_id", "sub", "sv"), cents)
-        cents = (
-            assigned.select("sub", "code_id", F.posexplode("sv").alias("pos", "x"))
-            .groupBy("sub", "code_id", "pos")
-            .agg(F.avg("x").alias("mu"))
-            .groupBy("sub", "code_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mu"))),
-                    lambda s: s.getField("mu"),
-                ).alias("code_vec")
-            )
-        )
-        if (it + 1) % _KMEANS_CKPT_EVERY == 0 or it == pq_iters - 1:
-            cents = cents.localCheckpoint(eager=True)
-    codes = (
-        _pq_assign(rsub.select("vec_id", "sub", "sv"), cents)
-        .groupBy("vec_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("sub", "code_id"))),
-                lambda s: s.getField("code_id"),
-            ).alias("codes")
-        )
-        .join(rsub.select("vec_id", "centroid_id").distinct(), "vec_id")
-    )
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        l2_normalize(F.col(vec_col).cast("array<double>")).alias("qv"),
-    )
-    q_scored = (
-        q.withColumn("_qn", norm(F.col("qv")))
-        .join(F.broadcast(coarse.withColumn("_cn", norm(F.col("centroid_vec")))))
-        .withColumn(
-            "sim",
-            cosine_pre(
-                F.col("qv"), F.col("centroid_vec"), F.col("_qn"), F.col("_cn")
-            ),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("centroid_id"))
-    probes = (
-        q_scored.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "qv", "centroid_id", "centroid_mean")
+    # PQ training on residual subvectors: pq_train's trainer, over the
+    # residual frame
+    sub = rsub.select("vec_id", "sub", "sv")
+    cents = _pq_lloyd(sub, corpus, id_col, k_codes, pq_iters)
+    codes = _pq_codes(sub, cents).join(
+        rsub.select("vec_id", "centroid_id").distinct(), "vec_id"
     )
     # per-(query, cell) LUT over the query residual against that cell's
     # MEAN (the reconstruction centroid — must match _residual_subs)
-    carr = F.broadcast(
-        cents.agg(F.collect_list(F.struct("sub", "code_id", "code_vec")).alias("_cb"))
-    )
-    qres = F.zip_with(F.col("qv"), F.col("centroid_mean"), lambda x, y: x - y)
-    lut = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.transform(
-            F.sequence(F.lit(1), F.lit(k_codes)),
-            lambda c: F.aggregate(
-                F.filter(
-                    F.col("_cb"),
-                    lambda e: (e.getField("sub") == s) & (e.getField("code_id") == c),
-                ),
-                F.lit(0.0),
-                lambda acc, e: acc
-                + _l2sq(F.slice(F.col("_qr"), s * dsub + 1, dsub), e.getField("code_vec")),
-            ),
+    probes = _probe(_pq_queries(queries, id_col, vec_col), coarse, n_probe, "centroid_mean")
+    probe_lut = _with_lut(
+        probes.withColumn(
+            "_qr", F.zip_with(F.col("qv"), F.col("centroid_mean"), lambda x, y: x - y)
         ),
+        cents,
+        "_qr",
+        m,
+        k_codes,
+        dim,
+        "query_id",
+        "centroid_id",
     )
-    probe_lut = (
-        probes.join(carr)
-        .withColumn("_qr", qres)
-        .select("query_id", "centroid_id", lut.alias("lut"))
-    )
-    cand = (
-        F.broadcast(probe_lut)
-        .join(codes, "centroid_id")
-        .filter(F.col("query_id") != F.col("vec_id"))
-    )
-    scored = cand.withColumn(
-        "pq_dist",
-        F.aggregate(
-            F.zip_with(
-                F.col("lut"),
-                F.col("codes"),
-                lambda row, code: F.element_at(row, code.cast("int")),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("pq_dist").asc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "pq_dist", "rank")
-    )
+    return _pq_rank(F.broadcast(probe_lut).join(codes, "centroid_id"), k)
 
 
 def exact_rerank(
@@ -2341,7 +2071,7 @@ def embedding_outliers(
     (distance-to-prototype screening is the SemDeDup/D4 companion
     check; cf. Abbas et al. 2023).
 
-    Composition, not new machinery: the ``_assign_with_sim`` broadcast
+    Composition, not new machinery: the ``_assign_to_centroids`` broadcast
     argmax (shared with SemDeDup/D4/IVF — pass ``centroids`` to reuse a
     trained quantizer; default is the deterministic first-n sample) +
     ``zscore_outliers`` on the winning cosine grouped by cluster (one
@@ -2356,22 +2086,16 @@ def embedding_outliers(
     """
     from token_etl_spark.operators.profile import zscore_outliers
 
-    cents = (
-        centroids
-        if centroids is not None
-        else corpus.orderBy(id_col)
-        .limit(n_centroids)
-        .select(
-            F.col(id_col).alias("centroid_id"),
-            F.col(vec_col).cast("array<double>").alias("centroid_vec"),
-        )
+    cents, n_rows = _quantizer(
+        centroids,
+        n_centroids,
+        lambda: _sample_centroids(corpus, n_centroids, id_col, vec_col),
     )
-    assigned = _assign_with_sim(
-        corpus, n_centroids, 0, id_col, vec_col, cents, checkpoint=False,
-        # self-resolved sample has exactly n_centroids rows — hint keeps
-        # plan build job-free for the non-iterative outlier queries; a
-        # caller-supplied table routes on its real count inside
-        n_centroids_hint=n_centroids if centroids is None else None,
+    # no checkpoint (unlike SemDeDup): the untrained sample is not
+    # materialized, so a lazy localCheckpoint would run an AQE query
+    # stage at plan build, and the one consumer re-reads nothing
+    assigned = _assign_to_centroids(
+        _id_vectors(corpus, id_col, vec_col), cents, "v", True, n_rows
     )
     return zscore_outliers(
         assigned.select("id", "centroid_id", "centroid_sim"),

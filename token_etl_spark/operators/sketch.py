@@ -119,9 +119,6 @@ def hll_alpha_m2(m: int = HLL_M) -> float:
     return (0.7213 / (1.0 + 1.079 / m)) * float(m * m)
 
 
-HLL_ALPHA_M2 = hll_alpha_m2(HLL_M)
-
-
 def hll_registers(
     df: DataFrame,
     item_col: str,

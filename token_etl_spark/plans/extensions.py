@@ -1659,6 +1659,8 @@ def q_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("cv"),
         ),
         F.broadcast(cents),
+        "cv",
+        False,
     )
     return S.ivf_cell_stats(seed_assigned.unionByName(stream_assigned), cents)
 

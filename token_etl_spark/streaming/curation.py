@@ -632,7 +632,10 @@ def _novelty_sink_batch(
         return
     from pyspark.sql import Window
 
+    from token_etl_spark.io.sinks import _heal_full_swap
+
     spark = batch_df.sparkSession
+    _heal_full_swap(spark, gram_index_path)  # a writer heals before it reads
     grams = shingles(batch_df, text_col=text_col, id_col=id_col, k=k)
     index = _read_partitioned_state(spark, gram_index_path, exclude_key=key)
     if index is not None:
@@ -1027,8 +1030,7 @@ def read_incremental_shards(spark, export_path: str) -> DataFrame:
     from token_etl_spark.io.sinks import _heal_shard_layout
 
     # finish any crash-interrupted split/compaction first (the marker-
-    # gated staged commit): readers self-heal the one non-atomic window,
-    # the same contract as the embedding-index readers (r11).
+    # gated staged commit): readers self-heal the one non-atomic window.
     # finish_only: a read must complete a committed swap but never
     # delete a concurrent writer's marker-less staging (review-found
     # r12)

@@ -144,11 +144,13 @@ def _neardup_sink_batch(
     LATER batch (at-least-once source) matches its own earlier index
     copy at jaccard 1.0 and is correctly NOT re-admitted: the index
     never accumulates duplicate rows per id."""
+    from token_etl_spark.io.sinks import _heal_full_swap
     from token_etl_spark.operators.dedup import minhash_index_frame, minhash_match_index
 
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
+    _heal_full_swap(spark, index_path)  # a writer heals before it reads
     index = _read_partitioned_state(spark, index_path, exclude_key=key)
     new_idx = minhash_index_frame(
         batch_df, text_col, id_col, k, num_hashes
@@ -279,15 +281,16 @@ def _read_partitioned_state(
     stream (ADVICE r10). Any other analyzer failure (corrupt footer,
     conflicting types) still re-raises.
 
-    Heals an interrupted whole-tree swap first
-    (``io.sinks._heal_full_swap``): a compaction cut between the final
-    delete and the rename leaves the whole state in a marked staging,
-    and reading around it would re-admit every indexed row."""
+    Reads an interrupted whole-tree swap's marked staging in place
+    (``io.sinks._committed_tree``): a compaction cut between the final
+    delete and the rename leaves the whole state there, and reading
+    around it would re-admit every indexed row. The read changes nothing
+    on disk; the next writer finishes the swap."""
     from pyspark.errors import AnalysisException
 
-    from token_etl_spark.io.sinks import _heal_full_swap, _read_existing
+    from token_etl_spark.io.sinks import _committed_tree, _read_existing
 
-    _heal_full_swap(spark, path)
+    path = _committed_tree(spark, path)
     try:
         df = _read_existing(spark, path)
     except AnalysisException as e:
@@ -340,7 +343,8 @@ def compact_state_partitions(
     Crash safety is the whole-tree swap (``io.sinks._full_swap``): the
     consolidated layout is staged and renamed in, so a crash at any
     point leaves either the old or the new complete layout, never a
-    mix — every reader and appender of the tree heals first.
+    mix — every appender of the tree heals first, and every reader reads
+    a marked staging in place.
 
     CONTRACT — quiescent streams only: run this between runs (or on a
     stopped stream). The consolidated partition key (``<label>-0``,
@@ -482,7 +486,7 @@ def _embedding_neardup_sink_batch(
     but before the checkpoint commit must not match the batch against
     its own partial write (every vector would self-match at cosine 1.0
     and the partition would be overwritten EMPTY, losing the vectors)."""
-    from token_etl_spark.io.sinks import _delete_dir
+    from token_etl_spark.io.sinks import _delete_dir, _heal_full_swap
     from token_etl_spark.operators.similarity import (
         _assign_to_centroids,
         ivf_search_frames,
@@ -491,6 +495,7 @@ def _embedding_neardup_sink_batch(
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
+    _heal_full_swap(spark, index_path)  # a writer heals before it reads
     cents = _read_quantizer(spark, index_path)
     # ONE canonical definition of "the index": the same reader the batch
     # pipeline uses, minus this batch's own partial write (retry guard)
@@ -545,22 +550,24 @@ def _embedding_neardup_sink_batch(
         F.col(id_col).alias("corpus_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
     )
-    new_rows = _assign_to_centroids(base, F.broadcast(cents.select("centroid_id", "centroid_vec")))
+    new_rows = _assign_to_centroids(
+        base, F.broadcast(cents.select("centroid_id", "centroid_vec")), "cv", False
+    )
     new_rows.write.mode("overwrite").partitionBy("centroid_id").parquet(own_dir)
 
 
 def _read_quantizer(spark: SparkSession, index_path: str) -> DataFrame:
     """The index's frozen quantizer, or a ValueError naming the remedy —
     shared by the sink and the health report so the layout and the
-    error contract can never drift between them. Heals an interrupted
-    whole-tree swap of the index first (``io.sinks._heal_full_swap``: a
-    build or rebuild cut between the final-dir delete and the rename
-    leaves the whole index in a marked staging — without the heal this
+    error contract can never drift between them. Reads an interrupted
+    whole-tree swap of the index in place (``io.sinks._committed_tree``:
+    a build or rebuild cut between the final-dir delete and the rename
+    leaves the whole index in a marked staging — read around, this
     would misread as "no quantizer")."""
-    from token_etl_spark.io.sinks import _heal_full_swap, _read_existing
+    from token_etl_spark.io.sinks import _committed_tree, _read_existing
 
-    _heal_full_swap(spark, index_path)
-    cents = _read_existing(spark, f"{index_path.rstrip('/')}/centroids")
+    root = _committed_tree(spark, index_path)
+    cents = _read_existing(spark, f"{root.rstrip('/')}/centroids")
     if cents is None:
         raise ValueError(
             f"no trained quantizer at {index_path}/centroids — run "
@@ -579,14 +586,14 @@ def read_embedding_index(
     ``exclude_key`` drops one stream batch's partition (the sink's retry
     guard); the sink calls through here so the serving read and the
     batch pipeline's read are the same definition of "the index".
-    Heals an interrupted whole-tree swap of the index first, like
+    Reads an interrupted whole-tree swap of the index in place, like
     :func:`_read_quantizer`."""
-    from token_etl_spark.io.sinks import _heal_full_swap, _read_existing
+    from token_etl_spark.io.sinks import _committed_tree, _read_existing
 
-    _heal_full_swap(spark, index_path)
-    seed = _read_existing(spark, f"{index_path.rstrip('/')}/assignments")
+    root = _committed_tree(spark, index_path).rstrip("/")
+    seed = _read_existing(spark, f"{root}/assignments")
     streamed = _read_partitioned_state(
-        spark, f"{index_path.rstrip('/')}/stream_assignments", exclude_key=exclude_key
+        spark, f"{root}/stream_assignments", exclude_key=exclude_key
     )
     parts = [
         p.select("corpus_id", "cv", "centroid_id")
@@ -654,8 +661,8 @@ def rebuild_ivf_index(
     index, so the new ``centroids`` + ``assignments`` commit through its
     whole-tree swap (``io.sinks._full_swap``): a crash mid-staging
     leaves the live index untouched, and the one non-atomic window
-    (final deleted, marked staging present) is healed by every reader
-    of the index.
+    (final deleted, marked staging present) is read in place by every
+    reader of the index and healed by its next writer.
 
     CONTRACT — quiescent streams only (same as compaction): run between
     runs or on a stopped stream. A rebuild racing a live batch could
@@ -668,8 +675,10 @@ def rebuild_ivf_index(
     (``spherical_kmeans`` — init is the n smallest corpus ids), so a
     crashed-and-retried rebuild converges to the identical index.
     """
+    from token_etl_spark.io.sinks import _heal_full_swap
     from token_etl_spark.operators.similarity import build_ivf_index
 
+    _heal_full_swap(spark, index_path)  # a writer heals before it reads
     if n_centroids is None:
         n_centroids = _read_quantizer(spark, index_path).count()
     combined = read_embedding_index(spark, index_path)

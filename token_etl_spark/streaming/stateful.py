@@ -301,12 +301,11 @@ def run_streaming_retention(
 def retention_from_state(spark, state_path: str) -> DataFrame:
     """(cohort, period_offset, n_users) from a ``run_streaming_retention``
     state table — the same two aggregations the batch operator runs on
-    its deduplicated activity frame. Heals an interrupted merge swap
-    first."""
-    from token_etl_spark.io.sinks import _heal_full_swap
+    its deduplicated activity frame. Reads an interrupted merge swap's
+    marked staging in place (``io.sinks._committed_tree``)."""
+    from token_etl_spark.io.sinks import _committed_tree
 
-    _heal_full_swap(spark, state_path)
-    active = spark.read.parquet(state_path)
+    active = spark.read.parquet(_committed_tree(spark, state_path))
     first = active.groupBy("user").agg(F.min("period").alias("cohort"))
     return (
         active.join(first, "user")
