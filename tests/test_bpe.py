@@ -42,7 +42,7 @@ def _py_bpe(word_counts: dict[str, int], n_merges: int):
 
 def _word_counts(spark, docs):
     rows = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("w"))
+        docs.select(F.explode(tokens("text")).alias("w"))
         .groupBy("w").count().collect()
     )
     return {r["w"]: r["count"] for r in rows}

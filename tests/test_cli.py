@@ -399,14 +399,14 @@ def test_cli_shardmaint(spark, sf_dir, tmp_path, capsys):
     assert "action_counts" in printed
 
 
-def test_cli_shardmaint_plan_heals_and_flags_increments(
+def test_cli_shardmaint_plan_reads_committed_and_flags_increments(
     spark, sf_dir, tmp_path, capsys, monkeypatch
 ):
-    """ADVICE r13: the plan branch must (a) finish a committed-but-
-    unfinished staged commit BEFORE reading manifest/params — planning
-    across a later heal reads a stale manifest and emits wrong
-    recommendations — and (b) flag un-compacted incoming/ increments
-    the manifest-only arithmetic does not count."""
+    """ADVICE r13: the plan branch must (a) plan against a committed-
+    but-unfinished staged commit as committed — read in place, changing
+    nothing on disk, so it never races a writer's heal — and (b) flag
+    un-compacted incoming/ increments the manifest-only arithmetic does
+    not count."""
     import glob
     import os
 
@@ -436,12 +436,15 @@ def test_cli_shardmaint_plan_heals_and_flags_increments(
         monkeypatch.setattr(sinks, "_apply_shard_layout", real_apply)
     assert glob.glob(f"{out}.staging-shards/_LAYOUT_COMMITTED")
 
-    # plan heals first: its rows cover the POST-split manifest
+    # the plan reads the committed staging: its rows cover the POST-split
+    # manifest, and the staging stays for the writers' heal
     cli.main(["shardmaint", "--path", out, "--action", "plan"])
     printed = capsys.readouterr().out
     assert "action_counts" in printed
     counts = eval(printed.splitlines()[0])["action_counts"]  # noqa: S307
     assert sum(counts.values()) == n_before + 1
+    assert glob.glob(f"{out}.staging-shards/_LAYOUT_COMMITTED")
+    sinks._heal_shard_layout(spark, out)
     assert not glob.glob(f"{out}.staging-shards*")
 
     # marker-less staging (in-flight writer) survives a plan

@@ -39,7 +39,7 @@ def test_lloyd_refine_reduces_distortion(spark):
 
         w = W.partitionBy("corpus_id").orderBy(F.col("sim").desc())
         best = (
-            joined.withColumn("sim", cosine(F.col("cv"), F.col("centroid_vec")))
+            joined.withColumn("sim", F.expr(cosine("cv", "centroid_vec")))
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
         )
@@ -264,3 +264,32 @@ def test_ivf_cell_stats_report(spark):
         for c in drows
         if c != hot
     )
+
+
+def test_ivf_search_warm_rebuild_compiles_nothing(spark, sf_dir):
+    """The centroid sample is a ``row_number() <= n`` filter, not a plain
+    ``orderBy().limit(n)``: on the probe side the limit planned as a
+    codegen'd GlobalLimit/LocalLimit pair, whose counter is named from a
+    JVM-global id, so every run of the same search compiled fresh
+    classes. The filter plans as a per-partition top-n
+    (``TakeOrderedAndProject``) under the window, and a rebuilt search
+    compiles nothing once warm, whatever order AQE finishes its stages
+    in (the session keeps stage ids out of generated class names)."""
+    from token_etl_spark.io.sources import load_table
+
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    emb = load_table(spark, sf_dir, "embeddings").repartition(4)
+
+    def run() -> tuple[int, list, str]:
+        before = int(metrics.METRIC_COMPILATION_TIME().getCount())
+        nb = ivf_topk(emb, emb, k=10, n_centroids=16, n_probe=4)
+        rows = sorted(nb.collect())
+        after = int(metrics.METRIC_COMPILATION_TIME().getCount())
+        return after - before, rows, nb._jdf.queryExecution().executedPlan().toString()
+
+    _, first, _ = run()
+    run()  # AQE settles its last stage shapes on the second run
+    compiled, rows, plan = run()
+    assert rows == first
+    assert "TakeOrderedAndProject(limit=16" in plan and "GlobalLimit" not in plan
+    assert compiled == 0

@@ -418,8 +418,8 @@ def test_containment_pairs_complete_at_uncapped_df(spark, docs, threshold):
     sh_rows = frame.select(
         "doc_id", F.array_distinct(
             F.transform(
-                F.sequence(F.lit(1), F.greatest(F.size(tokens(F.col("text"))) - 2, F.lit(1))),
-                lambda i: F.array_join(F.slice(tokens(F.col("text")), i, 3), " "),
+                F.sequence(F.lit(1), F.greatest(F.size(tokens("text")) - 2, F.lit(1))),
+                lambda i: F.array_join(F.slice(tokens("text"), i, 3), " "),
             )
         ).alias("sh"),
     ).collect()

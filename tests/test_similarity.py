@@ -14,7 +14,7 @@ def test_cosine_matches_numpy(spark):
     a = [1.0, 2.0, 3.0]
     b = [-1.0, 0.5, 2.0]
     df = spark.createDataFrame([(a, b)], "a array<double>, b array<double>")
-    got = df.select(cosine(F.col("a"), F.col("b")).alias("c")).collect()[0]["c"]
+    got = df.select(F.expr(cosine("a", "b")).alias("c")).collect()[0]["c"]
     exp = float(np.dot(a, b) / (np.linalg.norm(a) * np.linalg.norm(b)))
     assert math.isclose(got, exp, rel_tol=1e-12)
 
@@ -899,14 +899,9 @@ def test_arrow_assign_bit_exact_to_declarative(spark):
             F.collect_list(F.struct("centroid_id", "centroid_vec")).alias("_cents")
         )
     )
-    best = F.array_max(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                S.cosine(F.col("v"), c.getField("centroid_vec")).alias("sim"),
-                (-c.getField("centroid_id")).alias("neg_id"),
-            ),
-        )
+    sim = S.cosine("v", "x.centroid_vec")
+    best = F.expr(
+        f"array_max(transform(_cents, x -> struct({sim} AS sim, -x.centroid_id AS neg_id)))"
     )
     decl_sim = {
         r["id"]: (r["centroid_id"], r["centroid_sim"])
@@ -994,7 +989,7 @@ def test_pair_cosine_arrow_bit_exact(spark):
     )
     decl = {
         r["pid"]: r["c"]
-        for r in pairs.withColumn("c", S.cosine(F.col("va"), F.col("vb"))).collect()
+        for r in pairs.withColumn("c", F.expr(S.cosine("va", "vb"))).collect()
     }
     arrow = {
         r["pid"]: r["c"]
@@ -1147,8 +1142,8 @@ def test_cosine_pre_bit_identical_to_cosine(spark):
         F.col("a.embedding").alias("x"), F.col("b.embedding").alias("y")
     )
     rows = pairs.select(
-        cosine(F.col("x"), F.col("y")).alias("c"),
-        cosine_pre(F.col("x"), F.col("y"), norm(F.col("x")), norm(F.col("y"))).alias("cp"),
+        F.expr(cosine("x", "y")).alias("c"),
+        F.expr(cosine_pre("x", "y", norm("x"), norm("y"))).alias("cp"),
     ).collect()
     assert len(rows) == 400
     assert all(r["c"] == r["cp"] for r in rows)
@@ -1160,7 +1155,7 @@ def test_l2_normalize_yields_unit_vectors(spark):
     df, vecs = _corpus(spark, n=30, dim=8, seed=5)
     got = {
         r["vec_id"]: r["u"]
-        for r in df.select("vec_id", l2_normalize(F.col("embedding")).alias("u")).collect()
+        for r in df.select("vec_id", F.expr(l2_normalize("embedding")).alias("u")).collect()
     }
     for i, v in enumerate(vecs):
         u = np.asarray(got[i])
@@ -1177,7 +1172,7 @@ def test_lsh_bucket_matches_numpy_sign_bits(spark):
     planes = _hyperplanes(8, 6, seed=42)
     got = {
         r["vec_id"]: r["b"]
-        for r in df.select("vec_id", lsh_bucket(F.col("embedding"), planes).alias("b")).collect()
+        for r in df.select("vec_id", lsh_bucket("embedding", planes).alias("b")).collect()
     }
     signs = (vecs @ np.asarray(planes).T) > 0
     exp = {i: int(sum(1 << b for b in range(6) if signs[i, b])) for i in range(len(vecs))}

@@ -878,7 +878,7 @@ def test_split_shard_preserves_routing_and_data(spark, sf_dir, tmp_path):
 
     # routing round-trip: outside the split range nothing moves; inside,
     # docs land in the half whose range claims them
-    tagged = docs.withColumn("n_tokens", token_count(F.col("text")).cast("long"))
+    tagged = docs.withColumn("n_tokens", token_count("text").cast("long"))
     r_before = {
         r["doc_id"]: (r["shard_id"], r["ord_key"])
         for r in route_to_shards(tagged, before).collect()
@@ -965,7 +965,7 @@ def test_merge_shards_preserves_routing_and_data(spark, sf_dir, tmp_path):
 
     # routing round-trip: outside the pair nothing moves; inside, both
     # ranges' docs route to the kept shard
-    tagged = docs.withColumn("n_tokens", token_count(F.col("text")).cast("long"))
+    tagged = docs.withColumn("n_tokens", token_count("text").cast("long"))
     r_before = {
         r["doc_id"]: r["shard_id"] for r in route_to_shards(tagged, before).collect()
     }
@@ -1089,10 +1089,16 @@ def test_merge_shard_crash_heals(spark, sf_dir, tmp_path, monkeypatch):
     # nothing committed yet
     assert glob.glob(f"{out}/data/shard_id={drop_sid}")
 
-    # the audit heals (finish_only) and reports the merged layout ok
+    # the audit reads the committed staging in place: merged layout ok,
+    # nothing on disk changed
     a = {r["shard_id"]: r["status"] for r in audit_shard_layout(spark, out).collect()}
     assert drop_sid not in a
     assert all(s == "ok" for s in a.values())
+    assert glob.glob(f"{out}.staging-shards/_LAYOUT_COMMITTED")
+    assert glob.glob(f"{out}/data/shard_id={drop_sid}")
+
+    # the writers' heal finishes the swap
+    sinks._heal_shard_layout(spark, out)
     assert not glob.glob(f"{out}/data/shard_id={drop_sid}")
     assert not glob.glob(f"{out}.staging-shards*")
     assert spark.read.parquet(f"{out}/data").count() == docs.count()
@@ -1303,7 +1309,7 @@ def test_split_shard_crash_heals(spark, sf_dir, tmp_path, monkeypatch):
     """The staged split commit survives a crash at both crash points:
     before the marker the staging is discarded (retry recomputes),
     after the marker the heal finishes the commit — and the combined
-    reader runs the heal itself."""
+    reader serves the committed layout before the heal runs."""
     import glob
 
     import token_etl_spark.io.sinks as sinks
@@ -1328,9 +1334,11 @@ def test_split_shard_crash_heals(spark, sf_dir, tmp_path, monkeypatch):
     assert len(spark.read.parquet(f"{out}/manifest").collect()) == len(before_rows)
     assert glob.glob(f"{out}.staging-shards/_LAYOUT_COMMITTED")
 
-    # the combined reader heals and serves the post-split layout
+    # the combined reader serves the post-split layout; the heal commits it
     combined = read_incremental_shards(spark, out)
     assert combined.count() == docs.count()
+    assert combined.select("shard_id").distinct().count() == len(before_rows) + 1
+    sinks._heal_shard_layout(spark, out)
     healed = spark.read.parquet(f"{out}/manifest")
     assert healed.count() == len(before_rows) + 1
     assert not glob.glob(f"{out}.staging-shards*")
@@ -1447,7 +1455,7 @@ def test_compact_then_split_incremental_layout(spark, sf_dir, tmp_path):
     exp = {
         (r["doc_id"], r["shard_id"])
         for r in route_to_shards(
-            next_docs.withColumn("n_tokens", token_count(F.col("text")).cast("long")),
+            next_docs.withColumn("n_tokens", token_count("text").cast("long")),
             post,
         ).collect()
     }
@@ -1514,22 +1522,27 @@ def test_audit_shard_layout_states(spark, sf_dir, tmp_path):
     assert a3[victim] == "manifest_only"
 
 
-def test_audit_heals_committed_staging_before_listing(spark, sf_dir, tmp_path, monkeypatch):
-    """audit_shard_layout finishes a committed-but-unfinished layout
-    swap BEFORE the eager manifest listing (ADVICE r12): auditing a
-    tree whose heal would otherwise fire mid-read (inside
-    read_incremental_shards) either threw FileNotFoundException when
-    the swap replaced manifest/ under the listed files, or compared the
-    stale pre-heal manifest and reported spurious drift. A marker-LESS
-    staging (in-flight writer) is left untouched — finish_only."""
+def test_shard_readers_read_committed_staging_in_place(spark, sf_dir, tmp_path, monkeypatch):
+    """Readers of a shard layout change nothing on disk: a split cut
+    after its commit marker — before any rename, and again after one
+    staged shard was renamed in — is served and audited as committed by
+    ``read_incremental_shards`` and ``audit_shard_layout``, while the
+    staging and ``data/`` stay as the crash left them. Two readers that
+    both finished the commit could rename one staged shard twice, and
+    the second deleted the first's rename with its rows. A marker-LESS
+    staging (in-flight writer) is ignored and left untouched."""
     import glob
+    import os
+    import shutil
 
     import token_etl_spark.io.sinks as sinks
     from token_etl_spark.io.sinks import audit_shard_layout, export_shards, split_shard
     from token_etl_spark.io.sources import load_table
+    from token_etl_spark.streaming.curation import read_incremental_shards
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    out = str(tmp_path / "audit_heal")
+    n_docs = docs.count()
+    out = str(tmp_path / "audit_in_place")
     before = export_shards(spark, docs, out, tokens_per_shard=1000)
     n_before = before.count()
     sid = _largest_shard(before.collect())["shard_id"]
@@ -1541,17 +1554,39 @@ def test_audit_heals_committed_staging_before_listing(spark, sf_dir, tmp_path, m
         split_shard(spark, out, sid)
     finally:
         monkeypatch.setattr(sinks, "_apply_shard_layout", real_apply)
-    assert glob.glob(f"{out}.staging-shards/_LAYOUT_COMMITTED")
 
-    # the audit heals FIRST, then reports the post-split layout all-ok
-    a = audit_shard_layout(spark, out).collect()
-    assert len(a) == n_before + 1
-    assert all(r["status"] == "ok" for r in a)
+    def tree() -> list[str]:
+        return sorted(
+            os.path.relpath(os.path.join(d, f), tmp_path)
+            for d, _, files in os.walk(tmp_path)
+            for f in files
+        )
+
+    def check_reads() -> None:
+        on_disk = tree()
+        for _ in range(2):
+            a = audit_shard_layout(spark, out).collect()
+            assert len(a) == n_before + 1
+            assert all(r["status"] == "ok" for r in a)
+            combined = read_incremental_shards(spark, out)
+            assert combined.count() == n_docs
+            assert combined.select("doc_id").distinct().count() == n_docs
+        assert tree() == on_disk
+
+    check_reads()
+    # a commit cut after its first rename: one staged shard is in data/
+    staged = sorted(glob.glob(f"{out}.staging-shards/shard_id=*"))
+    name = os.path.basename(staged[0])
+    shutil.rmtree(f"{out}/data/{name}", ignore_errors=True)
+    os.rename(staged[0], f"{out}/data/{name}")
+    check_reads()
+
+    # the writers' heal finishes the commit
+    sinks._heal_shard_layout(spark, out)
     assert not glob.glob(f"{out}.staging-shards*")
+    assert spark.read.parquet(f"{out}/manifest").count() == n_before + 1
 
     # marker-less staging (writer still mid-stage) survives the audit
-    import os
-
     os.makedirs(f"{out}.staging-shards/shard_id=777", exist_ok=True)
     with open(f"{out}.staging-shards/shard_id=777/partial", "w") as f:
         f.write("x")

@@ -139,7 +139,7 @@ def test_streaming_countmin_matches_batch(spark, sf_dir, tmp_path):
     )
     got = sorted(map(tuple, spark.sql("SELECT * FROM cms_out").collect()))
     from token_etl_spark.operators.text import tokens as _toks
-    occ = docs.select(F.explode(_toks(F.col("text"))).alias("token"))
+    occ = docs.select(F.explode(_toks("text")).alias("token"))
     want = sorted(map(tuple, countmin_table(occ, depth=4, width=64).collect()))
     assert got == want
 
@@ -205,14 +205,14 @@ def test_streaming_hll_matches_batch_registers(spark, sf_dir, tmp_path):
 
     docs, staged = _staged_docs(spark, sf_dir, tmp_path, "hll_stream")
     stream = read_file_stream(spark, staged, docs.schema)
-    exploded = stream.select("source", F.explode(_toks(F.col("text"))).alias("tok"))
+    exploded = stream.select("source", F.explode(_toks("text")).alias("tok"))
     run_to_memory(
         streaming_hll(exploded, F.col("tok"), ("source",)),
         "hll_out",
         output_mode="complete",
     )
     got = sorted(map(tuple, spark.sql("SELECT * FROM hll_out").collect()))
-    batch = docs.select("source", F.explode(_toks(F.col("text"))).alias("tok"))
+    batch = docs.select("source", F.explode(_toks("text")).alias("tok"))
     want = sorted(map(tuple, hll_registers(batch, "tok", ("source",)).collect()))
     assert got == want
 
@@ -262,14 +262,14 @@ def test_streaming_kmv_matches_batch_sketch(spark, sf_dir, tmp_path):
     )
     run_streaming_kmv(
         stream,
-        F.explode(tokens(F.col("text"))),
+        F.explode(tokens("text")),
         state,
         group_cols=("source",),
         k=64,
     )
 
     batch_items = docs.select(
-        "source", F.explode(tokens(F.col("text"))).alias("_item")
+        "source", F.explode(tokens("text")).alias("_item")
     )
     exp = {
         (r["source"], r["h"], r["rank"])
@@ -922,7 +922,7 @@ def test_streaming_shard_router_matches_batch(spark, sf_dir, tmp_path):
     exp_new = {
         (r["doc_id"], r["shard_id"])
         for r in route_to_shards(
-            new_docs.withColumn("n_tokens", token_count(F.col("text")).cast("long")),
+            new_docs.withColumn("n_tokens", token_count("text").cast("long")),
             manifest,
         ).collect()
     }

@@ -154,7 +154,7 @@ def test_winnow_matches_python_reference(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(60)
     toks = {
         r["doc_id"]: r["tk"]
-        for r in docs.select("doc_id", tokens(F.col("text")).alias("tk")).collect()
+        for r in docs.select("doc_id", tokens("text").alias("tk")).collect()
     }
     exp = {
         (d, p, h) for d, tk in toks.items() for (p, h) in _py_winnow(tk, 3, 4)

@@ -435,17 +435,13 @@ def main(argv: list[str] | None = None) -> None:
             manifest = merge_shards(spark, args.path, args.shard_id, args.shard_id_b)
             print({"n_shards": manifest.count()})
         elif args.action == "plan":
-            from token_etl_spark.io.sinks import _bucket_fs, _heal_shard_layout
+            from token_etl_spark.io.sinks import _bucket_fs, _committed_shard_layout
             from token_etl_spark.operators.curation import plan_shard_maintenance
 
-            # finish any committed-but-unfinished staged commit BEFORE
-            # the raw manifest/params reads (the audit branch's ADVICE
-            # r12 fix, applied here per ADVICE r13): planning across a
-            # later heal would read a stale manifest — or hit
-            # FileNotFound mid-swap — and emit wrong recommendations.
-            # finish_only: a routine plan must never destroy an
-            # in-flight writer's marker-less staging.
-            _heal_shard_layout(spark, args.path, finish_only=True)
+            # plan against the committed layout, read in place: a
+            # crash-cut split/compaction counts as committed, and the
+            # plan changes nothing on disk
+            layout = _committed_shard_layout(spark, args.path)
             # adopt the budget the export was fit with — its params table
             # records tokens_per_shard beside key_col/seed (the router's
             # adopt-or-refuse discipline, read side)
@@ -453,7 +449,7 @@ def main(argv: list[str] | None = None) -> None:
                 spark.read.parquet(f"{args.path.rstrip('/')}/params")
                 .collect()[0]["tokens_per_shard"]
             )
-            manifest = spark.read.parquet(f"{args.path.rstrip('/')}/manifest")
+            manifest = spark.read.parquet(layout["manifest"])
             rows = [
                 r.asDict()
                 for r in plan_shard_maintenance(manifest, tps).collect()
@@ -472,7 +468,7 @@ def main(argv: list[str] | None = None) -> None:
             # would otherwise emit a false 'run compact first' warning
             # (mirror _refuse_pending_increments' listing; ADVICE r14)
             incp = hpath(f"{args.path.rstrip('/')}/incoming")
-            has_inc = fs.exists(incp) and any(
+            has_inc = layout["incoming"] and fs.exists(incp) and any(
                 st.isDirectory()
                 and any(
                     s.isDirectory()

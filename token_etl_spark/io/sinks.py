@@ -628,10 +628,10 @@ def export_shards(
 # into place and drop the staging root. A crash before the marker
 # discards the staging (the caller retries); a crash after it is
 # finished by ``_heal_shard_layout`` — run at the start of every
-# maintenance action AND by the combined reader, so the one non-atomic
-# window (between individual renames) self-heals on next touch, the
-# same contract as the IVF index swap. Single-writer, like every state
-# sink here.
+# maintenance action, so the one non-atomic window (between individual
+# renames) self-heals on the next write. Readers read a committed
+# staging in place (``_committed_shard_layout``) and change nothing.
+# Single-writer, like every state sink here.
 
 _STAGING_SHARDS = ".staging-shards"
 _SHARD_COMMIT_MARKER = "_LAYOUT_COMMITTED"
@@ -690,27 +690,61 @@ def _apply_shard_layout(spark: SparkSession, path: str) -> None:
     fs.delete(sp, True)
 
 
-def _heal_shard_layout(
-    spark: SparkSession, path: str, finish_only: bool = False
-) -> None:
-    """Crash recovery for the shard-layout commit: a staging root WITH
-    the ``_LAYOUT_COMMITTED`` marker is finished (the commit only starts
+def _heal_shard_layout(spark: SparkSession, path: str) -> None:
+    """Crash recovery for the shard-layout commit, run by the writers
+    only (the maintenance actions): a staging root WITH the
+    ``_LAYOUT_COMMITTED`` marker is finished (the commit only starts
     after every staged write returned), one without it is discarded —
-    the interrupted caller retries from scratch.
-
-    ``finish_only=True`` is the READ-path variant: it finishes a
-    marker-present commit but NEVER deletes marker-less staging — a
-    routine read racing an in-flight writer must not destroy the
-    writer's half-staged work (review-found r12; the full heal is
-    safe only under the maintenance actions' single-writer contract)."""
+    the interrupted caller retries from scratch. Readers never heal:
+    they read a committed staging in place (:func:`_committed_shard_layout`),
+    so two of them can never both rename one staged shard — the second
+    would delete the first's rename and lose the shard's rows."""
     root = path.rstrip("/") + _STAGING_SHARDS
     fs, hpath = _bucket_fs(spark, path)
     if not fs.exists(hpath(root)):
         return
     if fs.exists(hpath(root + "/" + _SHARD_COMMIT_MARKER)):
         _apply_shard_layout(spark, path)
-    elif not finish_only:
+    else:
         fs.delete(hpath(root), True)
+
+
+def _committed_shard_layout(spark: SparkSession, path: str) -> dict:
+    """Where to read a shard layout as its last commit left it, changing
+    nothing on disk (the :func:`_committed_tree` rule for the staged
+    shard commit). Without a committed ``.staging-shards`` (none, or a
+    marker-less one an in-flight writer owns) that is the layout itself.
+    With one — a commit cut anywhere inside :func:`_apply_shard_layout`,
+    whose renames each consume their staged item — the shard dirs still
+    staged replace their ``data/`` counterparts, tombstoned shards are
+    gone, a still-staged manifest replaces ``manifest/`` and a staged
+    drop flag hides ``incoming/``.
+
+    Returns ``data`` (the shard rows, ``shard_id`` as read), ``manifest``
+    (the manifest dir to read) and ``incoming`` (whether ``incoming/``
+    is part of the layout)."""
+    base = path.rstrip("/")
+    root = base + _STAGING_SHARDS
+    fs, hpath = _bucket_fs(spark, path)
+    data = spark.read.parquet(f"{base}/data")
+    if not fs.exists(hpath(root + "/" + _SHARD_COMMIT_MARKER)):
+        return {"data": data, "manifest": f"{base}/manifest", "incoming": True}
+    names = [st.getPath().getName() for st in fs.listStatus(hpath(root))]
+    staged = [n for n in names if n.startswith("shard_id=")]
+    replaced = [int(n.split("=", 1)[1]) for n in staged] + [
+        int(n[len(_DROP_SHARD_PREFIX):]) for n in names if n.startswith(_DROP_SHARD_PREFIX)
+    ]
+    if replaced:
+        data = data.where(~F.col("shard_id").isin(replaced))
+    if staged:
+        data = data.unionByName(
+            spark.read.option("basePath", root).parquet(*[f"{root}/{n}" for n in staged])
+        )
+    return {
+        "data": data,
+        "manifest": f"{root}/manifest" if "manifest" in names else f"{base}/manifest",
+        "incoming": _DROP_INCOMING_FLAG not in names,
+    }
 
 
 def split_shard(spark: SparkSession, path: str, shard_id: int) -> DataFrame:
@@ -939,17 +973,12 @@ def audit_shard_layout(spark: SparkSession, path: str) -> DataFrame:
     from token_etl_spark.streaming.curation import read_incremental_shards
 
     base = path.rstrip("/")
-    # finish any committed-but-unfinished staging BEFORE the eager
-    # manifest listing (the split/compact discipline): auditing across
-    # a later heal would either throw FileNotFoundException when the
-    # swap replaces manifest/ under the listed files, or compare the
-    # stale pre-heal manifest and report spurious drift (ADVICE r12).
-    # finish_only — a routine audit must never destroy an in-flight
-    # writer's marker-less staging.
-    _heal_shard_layout(spark, path, finish_only=True)
-    manifest = spark.read.parquet(f"{base}/manifest")
+    # the committed layout, read in place: a crash-cut split/compaction
+    # is audited as committed, and the audit changes nothing on disk
+    layout = _committed_shard_layout(spark, path)
+    manifest = spark.read.parquet(layout["manifest"])
     actual = shard_manifest(read_incremental_shards(spark, path))
-    inc = _read_existing(spark, f"{base}/incoming")
+    inc = _read_existing(spark, f"{base}/incoming") if layout["incoming"] else None
     inc_sids = (
         inc.select(F.col("shard_id").cast("long")).distinct()
         if inc is not None

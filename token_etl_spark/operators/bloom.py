@@ -46,8 +46,10 @@ BITS_PER_WORD = 32
 
 def _pow2() -> Column:
     """Literal 2^i mask array — integer-exact on both engines by
-    construction (built lazily: Column literals need a live session)."""
-    return F.array(*[F.lit(1 << i).cast("long") for i in range(BITS_PER_WORD)])
+    construction. One parsed expression (Column literals need a live
+    session, so it is built per call, at a fixed few py4j round trips)."""
+    masks = ", ".join(f"CAST({1 << i} AS BIGINT)" for i in range(BITS_PER_WORD))
+    return F.expr(f"array({masks})")
 
 
 def _bit_position(item: Column, row: int, m_bits: int) -> Column:
@@ -129,11 +131,12 @@ def bloom_probe_expr(
     plain projection where Catalyst's subexpression elimination applies;
     contrast the no-CSE lambda traps in PERF.md).
     """
+    pow2 = _pow2()
     conds = []
     for r in range(k_hashes):
         p = _bit_position(item, r, m_bits)
         word = F.element_at(bf, F.floor(p / BITS_PER_WORD).cast("int") + 1)
-        mask = F.element_at(_pow2(), (p % BITS_PER_WORD).cast("int") + 1)
+        mask = F.element_at(pow2, (p % BITS_PER_WORD).cast("int") + 1)
         conds.append(word.bitwiseAND(mask) != F.lit(0))
     return reduce(and_, conds)
 

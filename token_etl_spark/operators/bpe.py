@@ -37,7 +37,7 @@ def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, cnt) over the tokenized corpus — the one corpus-wide
     shuffle of BPE training."""
     return (
-        df.select(F.explode(tokens(F.col(text_col))).alias("word"))
+        df.select(F.explode(tokens(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("cnt"))
     )
@@ -181,7 +181,7 @@ def bpe_encode(
     for l, r in ordered:
         expr = merge_fold(expr, F.lit(l), F.lit(r))
     return df.select(
-        F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("word")
+        F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("word")
     ).select("id", "word", expr.alias("pieces"))
 
 
@@ -247,7 +247,7 @@ def bpe_encode_table(
     ]
     rank = {pair: i for i, pair in enumerate(ordered)}
 
-    words = df.select(F.explode(tokens(F.col(text_col))).alias("word")).distinct()
+    words = df.select(F.explode(tokens(text_col)).alias("word")).distinct()
 
     def enc(batches):
         for pdf in batches:
@@ -257,6 +257,6 @@ def bpe_encode_table(
 
     vocab_pieces = words.mapInPandas(enc, schema="word string, pieces array<string>")
     corpus = df.select(
-        F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("word")
+        F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("word")
     )
     return corpus.join(vocab_pieces, "word").select("id", "word", "pieces")

@@ -170,7 +170,7 @@ def token_budget_cap(
     ships it through the one bucket exchange (r11 precision — the
     unconditional claim predates the assign_shards probe).
     """
-    tok = F.col(token_col) if token_col else token_count(F.col(text_col))
+    tok = F.col(token_col) if token_col else token_count(text_col)
     ord_key = F.md5(F.concat(F.col(key_col).cast("string"), F.lit(seed)))
     base = df.withColumn("_n_tok", tok.cast("long")).withColumn("_ord", ord_key)
     if n_buckets <= 1:
@@ -636,12 +636,13 @@ def bigram_array_expr(toks: Column) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def bigrams(text: Column | str) -> Column:
-    """Adjacent word-pair array from raw text via the shared tokenizer
-    (``text.tokens``); O(len) per document — see ``bigram_array_expr``."""
+def bigrams(text_col: str) -> Column:
+    """Adjacent word-pair array of the text column ``text_col`` via the
+    shared tokenizer (``text.tokens``); O(len) per document — see
+    ``bigram_array_expr``."""
     from token_etl_spark.operators.text import tokens
 
-    return bigram_array_expr(tokens(text))
+    return bigram_array_expr(tokens(text_col))
 
 
 def _bigram_occurrences(
@@ -656,7 +657,7 @@ def _bigram_occurrences(
     return docs.select(
         F.col(id_col).alias("doc_id"),
         F.col(source_col).alias("source"),
-        F.explode(bigrams(F.col(text_col))).alias("bg"),
+        F.explode(bigrams(text_col)).alias("bg"),
     ).withColumn("bucket", hash_bucket(F.col("bg"), n_buckets))
 
 
@@ -702,7 +703,7 @@ def bigram_lm_tables(
     is_ref = F.col(source_col).isin(*reference_sources)
     ref_occ = (
         docs.filter(is_ref)
-        .select(F.explode(bigrams(F.col(text_col))).alias("bg"))
+        .select(F.explode(bigrams(text_col)).alias("bg"))
         .withColumn("w1", F.split(F.col("bg"), " ")[0])
     )
     c2 = ref_occ.groupBy("bg").agg(F.count("*").alias("c2"))
@@ -755,7 +756,7 @@ def bigram_lm_quality(
     occ = docs.select(
         F.col(id_col).alias("doc_id"),
         F.col(source_col).alias("source"),
-        F.posexplode(bigrams(F.col(text_col))).alias("pos", "bg"),
+        F.posexplode(bigrams(text_col)).alias("pos", "bg"),
     ).withColumn("w1", F.split(F.col("bg"), " ")[0])
     probs = (
         occ.join(F.broadcast(c2), "bg", "left")
@@ -942,7 +943,7 @@ def temperature_weights(
     whose rounding is engine-specific — fine for production, excluded
     from the oracle contract.
     """
-    tok = F.col(token_col) if token_col else token_count(F.col(text_col))
+    tok = F.col(token_col) if token_col else token_count(text_col)
     per = df.groupBy(source_col).agg(F.sum(tok.cast("long")).cast("long").alias("n_tokens"))
 
     def _pow(c: Column) -> Column:
@@ -1264,7 +1265,7 @@ def assign_shards(
     Output adds ``ord_key`` (the md5 order key — the shard-internal
     sort key for writers), ``n_tokens``, and ``shard_id``.
     """
-    tok = F.col(token_col) if token_col else token_count(F.col(text_col))
+    tok = F.col(token_col) if token_col else token_count(text_col)
     ord_key = F.md5(F.concat(F.col(key_col).cast("string"), F.lit(seed)))
     # a NULL key has no md5 position on the tape — fail loudly (the
     # two-phase path would otherwise silently DROP the row at the

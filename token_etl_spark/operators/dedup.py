@@ -47,7 +47,7 @@ def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: i
     tokenizer expression inside the per-index transform would re-run the
     regex split once per shingle — O(len²) per document.
     """
-    base = df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
+    base = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("toks"))
     toks = F.col("toks")
     idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1)))
     sh = F.transform(idx, lambda i: F.array_join(F.slice(toks, i, k), " "))
@@ -65,68 +65,50 @@ def shingle_array_expr(toks: Column, k: int = 3) -> Column:
 def shingle_arrays(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3) -> DataFrame:
     """Per-doc distinct shingle ARRAY: (id, sh, n_shingles) — the narrow
     (shuffle-free) representation; `shingles` is its exploded form."""
-    base = df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
+    base = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("toks"))
     sh = shingle_array_expr(F.col("toks"), k)
     return base.select("id", sh.alias("sh")).withColumn("n_shingles", F.size("sh"))
 
 
-def minhash_sig_expr(sh: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature as a single narrow expression over a shingle
-    ARRAY column: sig[i] = array_min(transform(sh, s → murmur3(s,
-    salt=i))). Bit-identical to the grouped ``minhash_signatures`` (same
-    ``F.hash(shingle, lit(i))`` per element, same min) because ``sh`` is
-    never empty (``shingle_array_expr`` emits ≥ 1 shingle per doc)."""
-    def _salted(i: int):
-        # NB: a two-parameter lambda would be called as (element, index)
-        # by F.transform — capture the salt via closure instead.
-        return lambda s: F.hash(s, F.lit(i))
-
-    return F.array(
-        *[F.array_min(F.transform(sh, _salted(i))) for i in range(num_hashes)]
+def minhash_sig_expr(sh: str, num_hashes: int = 32) -> Column:
+    """MinHash signature as a single narrow expression over the shingle
+    ARRAY column named ``sh``: sig[i] = array_min(transform(sh, s →
+    murmur3(s, salt=i))). Bit-identical to the grouped
+    ``minhash_signatures`` (same ``hash(shingle, i)`` per element, same
+    min) because ``sh`` is never empty (``shingle_array_expr`` emits ≥ 1
+    shingle per doc). One parsed expression, so building it costs the
+    same few py4j round trips at any ``num_hashes``."""
+    mins = ", ".join(
+        f"array_min(transform(`{sh}`, x -> hash(x, {i})))" for i in range(num_hashes)
     )
+    return F.expr(f"array({mins})")
 
 
 def minhash_signatures(shingled: DataFrame, num_hashes: int = 32) -> DataFrame:
     """MinHash signature per document: sig[i] = min over shingles of
     murmur3(shingle, salt=i). One aggregation, ``num_hashes`` JVM-side
-    min() columns — no UDF, map-side partial aggregation applies."""
-    aggs = [
-        F.min(F.hash(F.col("shingle"), F.lit(i))).alias(f"h{i}") for i in range(num_hashes)
-    ]
-    sig = (
-        shingled.groupBy("id")
-        .agg(*aggs)
-        .select("id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"))
-    )
-    return sig
+    min() columns — no UDF, map-side partial aggregation applies. The
+    aggregate list is one parsed expression (the optimizer collapses the
+    array projection into the aggregate either way)."""
+    mins = ", ".join(f"min(hash(shingle, {i}))" for i in range(num_hashes))
+    return shingled.groupBy("id").agg(F.expr(f"array({mins}) AS sig"))
 
 
 def _banded(signatures: DataFrame, bands: int, sig_len: int) -> DataFrame:
     """(id, band, bucket) frame: each band's signature slice hashed to a
-    bucket key. Shared by the pair-emitting and star-edge-emitting paths."""
+    bucket key. Shared by the pair-emitting and star-edge-emitting paths.
+    The band array is one parsed expression (few py4j round trips at any
+    band count)."""
     rows_per_band = sig_len // bands
-    return signatures.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.hash(
-                            F.array_join(
-                                F.transform(
-                                    F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                                    lambda x: x.cast("string"),
-                                ),
-                                "_",
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
+    structs = ", ".join(
+        f"struct({b} AS band, hash(array_join(transform("
+        f"slice(sig, {b * rows_per_band + 1}, {rows_per_band}), "
+        f"x -> CAST(x AS STRING)), '_')) AS bucket)"
+        for b in range(bands)
+    )
+    return signatures.select("id", F.expr(f"explode(array({structs})) AS bb")).select(
+        "id", "bb.band", "bb.bucket"
+    )
 
 
 _CAP_ADVICE = (
@@ -395,7 +377,7 @@ def weighted_minhash_dedup(
     exactly; pair-parity with the exact weighted pair set is pinned at
     three SFs in tests/test_dedup_oracle_parity.py.
     """
-    base = df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
+    base = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("toks"))
     toks = F.col("toks")
     idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1)))
     all_grams = base.select(
@@ -662,7 +644,7 @@ def duplicated_spans(
     full k). Summing that per document is the union length without any
     per-token explode.
     """
-    base = df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
+    base = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("toks"))
     n = F.size(F.col("toks"))
     stats = base.select(
         "id",
@@ -744,7 +726,7 @@ def dedup_spans_rewrite(
 
     Returns (id, n_tokens, n_removed, cleaned).
     """
-    base = df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
+    base = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("toks"))
     n = F.size(F.col("toks"))
     occ = _window_fp_occ(base, n, k)
     w_rank = Window.partitionBy("fp").orderBy("id", "pos")
@@ -799,7 +781,7 @@ def simhash(
     ``hash_fn`` defaults to murmur3 (``F.hash``, the fast path); pass
     ``md5_hash32`` for a hash an external SQL engine can recompute
     bit-for-bit (the oracled query uses that)."""
-    tok = df.select(F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("tok"))
+    tok = df.select(F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("tok"))
     h = (hash_fn or F.hash)(F.col("tok"))
     votes = [
         F.sum(
@@ -931,7 +913,7 @@ def minhash_index_frame(
     that trap)."""
     arrays = shingle_arrays(df, text_col, id_col, k)
     return arrays.select(
-        "id", minhash_sig_expr(F.col("sh"), num_hashes).alias("sig"), "sh", "n_shingles"
+        "id", minhash_sig_expr("sh", num_hashes).alias("sig"), "sh", "n_shingles"
     )
 
 

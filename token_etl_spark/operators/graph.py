@@ -16,7 +16,7 @@ same idea with large-star/small-star optimizations for long chains).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -31,18 +31,18 @@ def connected_components(
     """(id_a, id_b) edges → (id, component) with component = min node id
     in the component. Converges in O(diameter) rounds (capped).
 
-    The convergence probe no longer joins old-vs-new labels: each round
-    carries its own per-row ``_changed`` flag into the checkpoint, so
-    the probe is a limit-1 scan of blocks the round already wrote — no
-    shuffle, no second frame. That makes probing every round (the new
-    ``probe_every=1`` default) strictly cheaper than computing one
-    already-converged extra round: dedup star graphs reach the fixpoint
-    AT INIT (every member's min neighbor IS the cluster rep), so the
-    old k=2 default always paid one full wasted round — measured
-    0.99 → 0.70 s per call on the sf0.1 ingest chain (rounds 2 → 1),
-    identical components. ``probe_every=0`` disables probing entirely
-    (pure fixed-iteration mode: zero driver syncs beyond the
-    checkpoints).
+    The convergence probe is free: each round's eager checkpoint
+    carries an ``Observation`` counting the labels that moved, and the
+    count arrives with the checkpoint job itself — no probe job, no
+    second scan, no old-vs-new join. Probing every round (the
+    ``probe_every=1`` default) is therefore strictly cheaper than
+    computing one already-converged extra round: dedup star graphs
+    reach the fixpoint AT INIT (every member's min neighbor IS the
+    cluster rep), so the old k=2 default always paid one full wasted
+    round — measured 0.99 → 0.70 s per call on the sf0.1 ingest chain
+    (rounds 2 → 1), identical components. ``probe_every=0`` disables
+    probing entirely (pure fixed-iteration mode: zero driver syncs
+    beyond the checkpoints).
 
     ``pairs_ordered_distinct=True`` declares the input pair set is
     already distinct with ``src < dst`` per row (the LSH star-edge /
@@ -103,7 +103,7 @@ def connected_components(
     # the same exchange (ReuseExchange serves them within the one job),
     # and rounds ≥ 2 use the round checkpoints — skipping the init
     # barrier saves a full job + barrier per CC call (measured A/B).
-    changed = 0  # the last probe's count: 1 when a label still moved
+    changed = 0  # labels the last round moved (probe mode only)
     for it in range(max_iterations):
         # hop: min label among neighbors
         neighbor_min = (
@@ -137,36 +137,31 @@ def connected_components(
                 ),
                 "_prev",
             )
+        if probe_every:
+            # the round's change count rides on its checkpoint job
+            moved = Observation()
+            doubled = doubled.observe(
+                moved, F.count_if(F.col("component") != F.col("_prev")).alias("n")
+            )
         # localCheckpoint truncates lineage — without it each round's plan
         # nests the previous one and planning time grows without bound.
-        # The checkpoint carries the round's own change flag so the
-        # convergence probe below is a narrow limit-1 read of these
-        # blocks — no old-vs-new join, no shuffle.
-        new_labels = doubled.withColumn(
-            "_changed", F.col("component") != F.col("_prev")
-        ).drop("_prev").localCheckpoint(eager=True)
-        if probe_every and (it + 1) % probe_every == 0:
-            changed = new_labels.where(F.col("_changed")).limit(1).count()
-            if changed == 0:
-                return new_labels.select("id", "component")
-        labels = new_labels.select("id", "component")
-    if probe_every and max_iterations > 0:
+        labels = doubled.drop("_prev").localCheckpoint(eager=True)
+        if probe_every:
+            changed = moved.get["n"]
+            if (it + 1) % probe_every == 0 and changed == 0:
+                return labels
+    if probe_every and changed > 0:
         # cap exit with probing on: labels may not have converged, and
         # every caller's keep/representative rule assumes the fixpoint
         # (component == cluster-min id) — fail loudly instead of
-        # silently mislabeling. The final round's probe already saw
-        # changes when the cadence landed on it; otherwise a limit-1
-        # narrow scan of that round's checkpoint blocks decides. Runs
-        # ONLY on the cap-hit path.
-        if max_iterations % probe_every:
-            changed = new_labels.where(F.col("_changed")).limit(1).count()
-        if changed > 0:
-            raise RuntimeError(
-                f"connected_components hit max_iterations={max_iterations} "
-                "without converging; raise max_iterations (the component ="
-                " min-id contract every keep-list rule relies on holds only"
-                " at the fixpoint)"
-            )
+        # silently mislabeling. The final round's observed count
+        # decides, whatever the cadence.
+        raise RuntimeError(
+            f"connected_components hit max_iterations={max_iterations} "
+            "without converging; raise max_iterations (the component ="
+            " min-id contract every keep-list rule relies on holds only"
+            " at the fixpoint)"
+        )
     return labels
 
 

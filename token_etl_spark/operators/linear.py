@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from token_etl_spark.operators.similarity import dot, l2_normalize
+from token_etl_spark.operators.similarity import dot, unit_vec
 
 
 def _probe_base(
@@ -54,7 +54,7 @@ def _probe_base(
     return (
         corpus.select(
             F.col(id_col).alias("id"),
-            l2_normalize(F.col(vec_col).cast("array<double>")).alias("x"),
+            unit_vec(vec_col).alias("x"),
             F.col(label_col).cast("long").alias("label"),
             (F.col(label_col) == F.lit(target_label)).cast("double").alias("y"),
         )
@@ -91,7 +91,7 @@ def linear_probe_train(
     step = F.lit(float(lr)) * F.lit(2.0)
     for _ in range(n_iters):
         joined = b.crossJoin(F.broadcast(wf)).withColumn(
-            "err", dot(F.col("w"), F.col("x")) + F.col("b") - F.col("y")
+            "err", F.expr(dot("w", "x")) + F.col("b") - F.col("y")
         )
         g = (
             joined.select("err", F.posexplode("x").alias("pos", "xv"))
@@ -145,7 +145,7 @@ def linear_probe_score(
         corpus, target_label, id_col, vec_col, label_col
     )
     scored = b.crossJoin(F.broadcast(model)).withColumn(
-        "score", dot(F.col("w"), F.col("x")) + F.col("b")
+        "score", F.expr(dot("w", "x")) + F.col("b")
     )
     if threshold is None:
         cut = F.broadcast(scored.agg(F.avg("score").alias("_cut")))

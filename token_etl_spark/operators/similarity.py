@@ -21,27 +21,35 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def dot(a: Column, b: Column) -> Column:
-    """JVM-side dot product of two array<double> columns."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+# The vector helpers below return SQL TEXT over SQL expressions (column
+# names, usually), so a caller parses a whole scoring expression once
+# with ``F.expr``: a fixed few py4j round trips, where every
+# Python-built higher-order function costs about twenty. Lambda
+# variables are named x, y as PySpark names them, so the parsed plans
+# equal the Python-built ones.
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
+def dot(a: str, b: str) -> str:
+    """JVM-side dot product of two array<double> expressions."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (x, y) -> x + y)"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<double> columns. CONTRACT: both
+def norm(a: str) -> str:
+    return f"sqrt(aggregate(transform({a}, x -> x * x), 0.0D, (x, y) -> x + y))"
+
+
+def cosine(a: str, b: str) -> str:
+    """Cosine similarity of two array<double> expressions. CONTRACT: both
     vectors nonzero (the embedding-table invariant, same as
     ``quantize_vec``) — a zero operand is an upstream data bug and
     raises ANSI DIVIDE_BY_ZERO rather than silently scoring 0/NaN.
     Derived vectors with a legitimate zero case (label centroids, where
     members can cancel) guard their own division instead
     (``source_centroid_similarity``)."""
-    return dot(a, b) / (norm(a) * norm(b))
+    return f"{dot(a, b)} / ({norm(a)} * {norm(b)})"
 
 
-def cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
+def cosine_pre(a: str, b: str, na: str, nb: str) -> str:
     """``cosine(a, b)`` with both norms precomputed as columns:
     bit-identical floats (same dot fold, same ``norm(a) * norm(b)``
     multiply order on the same input bits) while letting join/argmax
@@ -51,19 +59,23 @@ def cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
     from 3 folds per pair (dot + 2 norms) to 1 (dot only) cuts the
     dominant per-pair cost ~3× — measured 3.0 → 1.3 s on the sf0.1
     SemDeDup in-cluster verify with an identical surviving pair set."""
-    return dot(a, b) / (na * nb)
+    return f"{dot(a, b)} / ({na} * {nb})"
 
 
-def l2_normalize(a: Column) -> Column:
-    """Unit-normalize an array<double> column (JVM-side). On the unit
+def l2_normalize(a: str) -> str:
+    """Unit-normalize an array<double> expression (JVM-side). On the unit
     sphere cosine similarity reduces to a plain dot product, which is what
     spherical k-means exploits. Same nonzero-input contract as
     :func:`cosine`; a cluster mean of exactly zero (members cancelling
     bit-perfectly) would raise loudly here, which is the wanted
     behavior for a quantizer — a directionless centroid is a training
     bug, not a value."""
-    n = norm(a)
-    return F.transform(a, lambda x: x / n)
+    return f"transform({a}, x -> x / {norm(a)})"
+
+
+def unit_vec(vec_col: str) -> Column:
+    """The column ``vec_col`` as a unit array<double>."""
+    return F.expr(l2_normalize(f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"))
 
 
 def brute_force_topk(
@@ -78,17 +90,17 @@ def brute_force_topk(
     neighbor id for determinism."""
     q = F.broadcast(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv"))
-        .withColumn("_qn", norm(F.col("qv")))
+        .withColumn("_qn", F.expr(norm("qv")))
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
-    ).withColumn("_cn", norm(F.col("cv")))
+    ).withColumn("_cn", F.expr(norm("cv")))
     scored = (
         q.crossJoin(c)
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "cosine_sim",
-            cosine_pre(F.col("qv"), F.col("cv"), F.col("_qn"), F.col("_cn")),
+            F.expr(cosine_pre("qv", "cv", "_qn", "_cn")),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id"))
@@ -184,14 +196,19 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return rng.randn(n_planes, dim).tolist()
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH bucket id: bit b = sign(vec · plane_b)."""
-    bucket = F.lit(0).cast("long")
-    for b, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        bit = (dot(vec, p) > 0).cast("long") * F.lit(2**b).cast("long")
-        bucket = bucket + bit
-    return bucket
+def _double_array(xs: list[float]) -> str:
+    """SQL text of a literal array<double>."""
+    return "array(" + ", ".join(f"{float(x)!r}D" for x in xs) + ")"
+
+
+def lsh_bucket(vec_col: str, planes: list[list[float]]) -> Column:
+    """Random-hyperplane LSH bucket id of the array<double> column
+    ``vec_col``: bit b = sign(vec · plane_b)."""
+    bits = "".join(
+        f" + CAST(({dot(vec_col, _double_array(plane))} > 0) AS BIGINT) * CAST({2**b} AS BIGINT)"
+        for b, plane in enumerate(planes)
+    )
+    return F.expr(f"CAST(0 AS BIGINT){bits}")
 
 
 def lsh_topk(
@@ -215,21 +232,21 @@ def lsh_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("bucket", lsh_bucket(F.col("cv"), planes)).withColumn(
-        "_cn", norm(F.col("cv"))
+    ).withColumn("bucket", lsh_bucket("cv", planes)).withColumn(
+        "_cn", F.expr(norm("cv"))
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
-    ).withColumn("bucket", lsh_bucket(F.col("qv"), planes)).withColumn(
-        "_qn", norm(F.col("qv"))
+    ).withColumn("bucket", lsh_bucket("qv", planes)).withColumn(
+        "_qn", F.expr(norm("qv"))
     )
     scored = (
         q.join(c, "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "cosine_sim",
-            cosine_pre(F.col("qv"), F.col("cv"), F.col("_qn"), F.col("_cn")),
+            F.expr(cosine_pre("qv", "cv", "_qn", "_cn")),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id"))
@@ -284,29 +301,23 @@ def lsh_multiprobe_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("bucket", lsh_bucket(F.col("cv"), planes)).withColumn(
-        "_cn", norm(F.col("cv"))
+    ).withColumn("bucket", lsh_bucket("cv", planes)).withColumn(
+        "_cn", F.expr(norm("cv"))
     )
     qb = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
-    ).withColumn("bucket", lsh_bucket(F.col("qv"), planes)).withColumn(
-        "_qn", norm(F.col("qv"))
+    ).withColumn("bucket", lsh_bucket("qv", planes)).withColumn(
+        "_qn", F.expr(norm("qv"))
     )
     if probe_t is not None:
-        margins = F.array(
-            *[
-                F.struct(
-                    F.abs(
-                        dot(
-                            F.col("qv"),
-                            F.array(*[F.lit(float(x)) for x in planes[b]]),
-                        )
-                    ).alias("m"),
-                    F.lit(b).alias("b"),
-                )
+        margins = F.expr(
+            "array("
+            + ", ".join(
+                f"struct(abs({dot('qv', _double_array(planes[b]))}) AS m, {b} AS b)"
                 for b in range(n_planes)
-            ]
+            )
+            + ")"
         )
         pow2 = F.array(*[F.lit(1 << b).cast("long") for b in range(n_planes)])
         chosen = F.slice(F.array_sort(margins), 1, probe_t)
@@ -334,7 +345,7 @@ def lsh_multiprobe_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "cosine_sim",
-            cosine_pre(F.col("qv"), F.col("cv"), F.col("_qn"), F.col("_cn")),
+            F.expr(cosine_pre("qv", "cv", "_qn", "_cn")),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -376,14 +387,22 @@ def _sample_centroids(
     corpus: DataFrame, n_centroids: int, id_col: str, vec_col: str
 ) -> DataFrame:
     """The untrained quantizer: the ``n_centroids`` smallest-id corpus
-    vectors, each keeping its own id as ``centroid_id``."""
+    vectors, each keeping its own id as ``centroid_id``.
+
+    A ``row_number() <= n`` filter, not ``orderBy().limit(n)``: a
+    codegen'd limit stage names its counter from a JVM-global id, so it
+    compiles a fresh class on every run, while the filter's classes hit
+    the codegen cache. The filter still plans as a partial
+    ``WindowGroupLimit`` per partition before the single-partition
+    exchange, so only ``n`` rows per partition move."""
     return (
-        corpus.orderBy(id_col)
-        .limit(n_centroids)
-        .select(
+        corpus.select(
             F.col(id_col).alias("centroid_id"),
             F.col(vec_col).cast("array<double>").alias("centroid_vec"),
+            F.row_number().over(Window.orderBy(id_col)).alias("_rn"),
         )
+        .where(F.col("_rn") <= n_centroids)
+        .drop("_rn")
     )
 
 
@@ -631,25 +650,17 @@ def _centroid_scores(
                     F.col("centroid_id"),
                     F.col("centroid_vec"),
                     *[F.col(c) for c in carry],
-                    norm(F.col("centroid_vec")).alias("cnorm"),
+                    F.expr(norm("centroid_vec")).alias("cnorm"),
                 )
             ).alias("_cents")
         )
     )
-    scores = F.transform(
-        F.col("_cents"),
-        lambda c: F.struct(
-            cosine_pre(
-                F.col(vec_col),
-                c.getField("centroid_vec"),
-                F.col("_nv"),
-                c.getField("cnorm"),
-            ).alias("sim"),
-            (-c.getField("centroid_id")).alias("neg_id"),
-            *[c.getField(x).alias(x) for x in carry],
-        ),
+    sim = cosine_pre(f"`{vec_col}`", "x.centroid_vec", "_nv", "x.cnorm")
+    carried = "".join(f", x.`{c}` AS `{c}`" for c in carry)
+    scores = F.expr(
+        f"transform(_cents, x -> struct({sim} AS sim, -x.centroid_id AS neg_id{carried}))"
     )
-    return base.withColumn("_nv", norm(F.col(vec_col))).join(carr), scores
+    return base.withColumn("_nv", F.expr(norm(f"`{vec_col}`"))).join(carr), scores
 
 
 def _assign_to_centroids(
@@ -750,16 +761,13 @@ def spherical_kmeans(
     """
     base = corpus.select(
         F.col(id_col).alias("corpus_id"),
-        l2_normalize(F.col(vec_col).cast("array<double>")).alias("cv"),
+        unit_vec(vec_col).alias("cv"),
     ).localCheckpoint(eager=False)
-    cents = (
-        base.orderBy("corpus_id")
-        .limit(n_centroids)
-        .select(
-            F.row_number().over(Window.orderBy("corpus_id")).alias("centroid_id"),
-            F.col("cv").alias("centroid_vec"),
-        )
-    )
+    # a row_number filter, not orderBy().limit() (_sample_centroids)
+    cents = base.select(
+        F.row_number().over(Window.orderBy("corpus_id")).alias("centroid_id"),
+        F.col("cv").alias("centroid_vec"),
+    ).where(F.col("centroid_id") <= n_centroids)
     def step(prev: DataFrame) -> DataFrame:
         assigned = _assign_to_centroids(
             base, prev.select("centroid_id", "centroid_vec"), "cv", False, n_centroids
@@ -767,7 +775,7 @@ def spherical_kmeans(
         return (
             lloyd_refine(assigned)
             .withColumnRenamed("centroid_vec", "centroid_mean")
-            .withColumn("centroid_vec", l2_normalize(F.col("centroid_mean")))
+            .withColumn("centroid_vec", F.expr(l2_normalize("centroid_mean")))
         )
 
     cents = _lloyd(cents, n_iters, step, _arrow_route(n_centroids))
@@ -786,13 +794,11 @@ def _probe(q: DataFrame, cents: DataFrame, n_probe: int, *carry: str) -> DataFra
     query (not once per centroid) and the centroid norm once per
     centroid row — bit-identical ranking (cosine_pre)."""
     q_scored = (
-        q.withColumn("_qn", norm(F.col("qv")))
-        .join(F.broadcast(cents.withColumn("_cn", norm(F.col("centroid_vec")))))
+        q.withColumn("_qn", F.expr(norm("qv")))
+        .join(F.broadcast(cents.withColumn("_cn", F.expr(norm("centroid_vec")))))
         .withColumn(
             "sim",
-            cosine_pre(
-                F.col("qv"), F.col("centroid_vec"), F.col("_qn"), F.col("_cn")
-            ),
+            F.expr(cosine_pre("qv", "centroid_vec", "_qn", "_cn")),
         )
     )
     wq = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("centroid_id"))
@@ -851,10 +857,10 @@ def _cell_join_topk(
     # norms once per corpus row / probe row, BEFORE the cell join (one
     # extra double per row through the exchange, ~3× less interpreted
     # fold work per scored pair — cosine_pre, bit-identical)
-    asg = assigned.withColumn("_cn", norm(F.col("cv"))).withColumn(
+    asg = assigned.withColumn("_cn", F.expr(norm("cv"))).withColumn(
         "_salt", F.pmod(F.xxhash64("corpus_id"), F.lit(_CELL_SALTS)).cast("int")
     ).repartition(n_parts, "centroid_id", "_salt")
-    prb = probes.withColumn("_qn", norm(F.col("qv"))).withColumn(
+    prb = probes.withColumn("_qn", F.expr(norm("qv"))).withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(_CELL_SALTS)]))
     ).repartition(n_parts, "centroid_id", "_salt")
     cand = prb.join(asg, ["centroid_id", "_salt"])
@@ -870,7 +876,7 @@ def _cell_join_topk(
     # cosine also keeps the verify fused with the join in one JVM stage.
     scored = cand.withColumn(
         "cosine_sim",
-        cosine_pre(F.col("qv"), F.col("cv"), F.col("_qn"), F.col("_cn")),
+        F.expr(cosine_pre("qv", "cv", "_qn", "_cn")),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("corpus_id")
@@ -1202,24 +1208,17 @@ def semantic_decontaminate(
         ).agg(
             F.array_sort(
                 F.collect_list(
-                    F.struct(F.col("bid"), F.col("bv"), norm(F.col("bv")).alias("bn"))
+                    F.struct(F.col("bid"), F.col("bv"), F.expr(norm("bv")).alias("bn"))
                 )
             ).alias("_bench")
         )
     )
-    best = F.array_max(
-        F.transform(
-            F.col("_bench"),
-            lambda s: F.struct(
-                cosine_pre(
-                    F.col("v"), s.getField("bv"), F.col("_nv"), s.getField("bn")
-                ).alias("sim"),
-                (-s.getField("bid")).alias("neg_id"),
-            ),
-        )
+    sim = cosine_pre("v", "x.bv", "_nv", "x.bn")
+    best = F.expr(
+        f"array_max(transform(_bench, x -> struct({sim} AS sim, -x.bid AS neg_id)))"
     )
     return (
-        base.withColumn("_nv", norm(F.col("v")))
+        base.withColumn("_nv", F.expr(norm("v")))
         .join(barr)
         .withColumn("_best", best)
         .select(
@@ -1433,7 +1432,7 @@ def _semantic_dedup(
             F.col("v").alias(f"v{t}"),
             *keys,
             F.col("centroid_sim").alias(f"sim_{t}"),
-        ).withColumn(f"_n{t}", norm(F.col(f"v{t}")))
+        ).withColumn(f"_n{t}", F.expr(norm(f"v{t}")))
 
     if n_assign > 1:
         # Candidate IDs come from a cells-only self-join and are DEDUPED
@@ -1463,7 +1462,7 @@ def _semantic_dedup(
         joined = _pair_cosine_arrow(joined, "va", "vb", threshold=threshold)
     else:
         joined = joined.filter(
-            cosine_pre(F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb"))
+            F.expr(cosine_pre("va", "vb", "_na", "_nb"))
             >= threshold
         )
     dup = (
@@ -1613,7 +1612,7 @@ def _pq_subs(
 ) -> DataFrame:
     """(vec_id, sub, sv): each l2-normalized vector split into its ``m``
     subvectors."""
-    v = l2_normalize(F.col(vec_col).cast("array<double>"))
+    v = unit_vec(vec_col)
     return corpus.select(
         F.col(id_col).alias("vec_id"),
         F.posexplode(_subvectors(v, m, dim // m)).alias("sub", "sv"),
@@ -1717,7 +1716,7 @@ def _pq_queries(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """(query_id, qv): the l2-normalized query side of every PQ search."""
     return queries.select(
         F.col(id_col).alias("query_id"),
-        l2_normalize(F.col(vec_col).cast("array<double>")).alias("qv"),
+        unit_vec(vec_col).alias("qv"),
     )
 
 
@@ -1891,7 +1890,7 @@ def _residual_subs(
     narrow."""
     base = corpus.select(
         F.col(id_col).alias("vec_id"),
-        l2_normalize(F.col(vec_col).cast("array<double>")).alias("nv"),
+        unit_vec(vec_col).alias("nv"),
     )
     scored, scores = _centroid_scores(base, coarse, "nv", "centroid_mean")
     resid = scored.withColumn("_b", F.array_max(scores)).select(
@@ -2012,20 +2011,20 @@ def exact_rerank(
     cand = F.broadcast(candidates.select("query_id", "neighbor_id").distinct())
     cv = corpus.select(
         F.col(id_col).alias("neighbor_id"),
-        l2_normalize(F.col(vec_col).cast("array<double>")).alias("cv"),
-    ).withColumn("_cn", norm(F.col("cv")))
+        unit_vec(vec_col).alias("cv"),
+    ).withColumn("_cn", F.expr(norm("cv")))
     qv = F.broadcast(
         queries.select(
             F.col(id_col).alias("query_id"),
-            l2_normalize(F.col(vec_col).cast("array<double>")).alias("qv"),
-        ).withColumn("_qn", norm(F.col("qv")))
+            unit_vec(vec_col).alias("qv"),
+        ).withColumn("_qn", F.expr(norm("qv")))
     )
     scored = (
         cv.join(cand, "neighbor_id")
         .join(qv, "query_id")
         .withColumn(
             "cosine_sim",
-            cosine_pre(F.col("qv"), F.col("cv"), F.col("_qn"), F.col("_cn")),
+            F.expr(cosine_pre("qv", "cv", "_qn", "_cn")),
         )
     )
     w = Window.partitionBy("query_id").orderBy(

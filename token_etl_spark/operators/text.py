@@ -24,16 +24,23 @@ STOPWORDS = {
 }
 
 
-def tokens(text: Column | str) -> Column:
-    """Whitespace+punctuation tokenizer: lowercase, strip non-alnum,
-    split on runs of whitespace, drop empties."""
-    c = F.col(text) if isinstance(text, str) else text
-    cleaned = F.regexp_replace(F.lower(c), r"[^a-z0-9\s]", " ")
-    return F.filter(F.split(F.trim(cleaned), r"\s+"), lambda t: t != "")
+def _tokens_sql(text: str) -> str:
+    """SQL text of the tokenizer over the SQL expression ``text``."""
+    return (
+        rf"filter(split(trim(regexp_replace(lower({text}), '[^a-z0-9\\s]', ' ')), "
+        rf"'\\s+'), x -> x != '')"
+    )
 
 
-def token_count(text: Column | str) -> Column:
-    return F.size(tokens(text))
+def tokens(text_col: str) -> Column:
+    """Whitespace+punctuation tokenizer of the column ``text_col``:
+    lowercase, strip non-alnum, split on runs of whitespace, drop
+    empties. One parsed expression (a fixed few py4j round trips)."""
+    return F.expr(_tokens_sql(f"`{text_col}`"))
+
+
+def token_count(text_col: str) -> Column:
+    return F.size(tokens(text_col))
 
 
 def quality_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -44,33 +51,32 @@ def quality_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     The token array is materialized into a column once and every metric
     reads it — expressions containing higher-order lambdas are opaque to
     Spark's subexpression elimination, so repeating ``tokens(...)`` per
-    output column would re-run the regex split per metric.
+    output column would re-run the regex split per metric. Each metric
+    is one parsed expression.
     """
-    c = F.col(text_col)
-    with_toks = df.withColumn("_toks", tokens(c))
+    c = f"`{text_col}`"
     # distinct-token array bound once (cross-column-CSE rule, see
     # extract_html_text): the stopword ratio reads it twice
-    with_toks = with_toks.withColumn("_dtoks", F.array_distinct(F.col("_toks")))
-    toks = F.col("_toks")
-    n_tok = F.size(toks)
+    with_toks = df.withColumn("_toks", tokens(text_col)).withColumn(
+        "_dtoks", F.expr("array_distinct(_toks)")
+    )
+    stopwords = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
     return with_toks.withColumns(
         {
-            "char_len": F.length(c),
-            "n_tokens": n_tok,
-            "mean_token_len": F.when(
-                n_tok > 0,
-                F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t)).cast("double")
-                / n_tok,
-            ).otherwise(F.lit(0.0)),
-            "alpha_ratio": F.length(F.regexp_replace(c, r"[^A-Za-z]", ""))
-            / F.greatest(F.length(c), F.lit(1)).cast("double"),
-            "stopword_ratio_en": F.size(
-                F.array_intersect(
-                    F.col("_dtoks"),
-                    F.array(*[F.lit(w) for w in STOPWORDS["en"]]),
-                )
-            )
-            / F.greatest(F.size(F.col("_dtoks")), F.lit(1)),
+            "char_len": F.expr(f"length({c})"),
+            "n_tokens": F.expr("size(_toks)"),
+            "mean_token_len": F.expr(
+                "CASE WHEN size(_toks) > 0 THEN CAST(aggregate(_toks, 0, "
+                "(x, y) -> x + length(y)) AS DOUBLE) / size(_toks) ELSE 0.0D END"
+            ),
+            "alpha_ratio": F.expr(
+                f"length(regexp_replace({c}, '[^A-Za-z]', '')) "
+                f"/ CAST(greatest(length({c}), 1) AS DOUBLE)"
+            ),
+            "stopword_ratio_en": F.expr(
+                f"size(array_intersect(_dtoks, array({stopwords}))) "
+                "/ greatest(size(_dtoks), 1)"
+            ),
         }
     ).drop("_toks", "_dtoks")
 
@@ -86,7 +92,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     combine, so the plan scales with corpus size, not document length.
     Zero-token documents drop out (same as the explode in the oracle).
     """
-    tok = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok"))
+    tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("tok"))
     counts = tok.groupBy(id_col, "tok").agg(F.count("*").alias("c"))
     return counts.groupBy(id_col).agg(
         (F.count("*") / F.sum("c")).alias("type_token_ratio"),
@@ -100,7 +106,7 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     (undetermined) when no set scores > 0. Deterministic tie-break by
     language code order (en < de < es < fr resolved alphabetically:
     de, en, es, fr)."""
-    with_toks = df.withColumn("_dtoks", F.array_distinct(tokens(F.col(text_col))))
+    with_toks = df.withColumn("_dtoks", F.array_distinct(tokens(text_col)))
     toks = F.col("_dtoks")
     scores = {
         lang: F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in ws])))
@@ -173,7 +179,7 @@ def gopher_filter(
     that belongs BEFORE any shuffle-bearing dedup stage.
     """
     c = F.col(text_col)
-    out = df.withColumn("_toks", tokens(c))
+    out = df.withColumn("_toks", tokens(text_col))
     toks = F.col("_toks")
     n = F.size(toks)
     mean_len = F.when(
@@ -310,7 +316,7 @@ def chunk_documents(
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be < chunk_tokens")
     stride = chunk_tokens - overlap
-    toks = tokens(F.col(text_col))
+    toks = tokens(text_col)
     with_toks = df.withColumn("_toks", toks)
     n = F.size("_toks")
     n_chunks = F.when(n <= chunk_tokens, F.lit(1)).otherwise(
@@ -486,7 +492,7 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     does not compare equal across the upgrade — recompute it. ``fp_set``
     is unchanged.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(text_col)
     sorted_set = F.array_join(F.array_sort(F.array_distinct(toks)), " ")
     rolling = F.aggregate(
         toks,
@@ -538,7 +544,7 @@ def winnow_fingerprints(
     # a multi-minute stall on sf0.1's longer documents).
     tk = F.col("_tk")
     base = df.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("_tk")
+        F.col(id_col).alias("id"), tokens(text_col).alias("_tk")
     ).where(F.size(tk) >= k)
     gram = lambda i: F.array_join(F.slice(tk, i, k), " ")  # noqa: E731
     h = lambda i: F.conv(F.substring(F.md5(gram(i)), 1, 15), 16, 10).cast("long")  # noqa: E731
@@ -663,7 +669,7 @@ def tfidf_top_terms(
     from pyspark.sql import Window
 
     tok = df.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens(F.col(text_col))).alias("term")
+        F.col(id_col).alias("doc_id"), F.explode(tokens(text_col)).alias("term")
     )
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
@@ -764,7 +770,7 @@ def lexical_diversity(
     the top share. No windows, no sorts.
     """
     occ = df.select(
-        F.col(group_col).alias("g"), F.explode(tokens(F.col(text_col))).alias("tok")
+        F.col(group_col).alias("g"), F.explode(tokens(text_col)).alias("tok")
     )
     per_tok = occ.groupBy("g", "tok").agg(F.count("*").alias("c"))
     return (
@@ -1124,7 +1130,7 @@ def repetition_signals(
         "dup_para_char_frac",
     )
 
-    toks = df.select(doc, tokens(F.col(text_col)).alias("_toks"))
+    toks = df.select(doc, tokens(text_col).alias("_toks"))
     tok_chars = toks.select(
         doc,
         F.aggregate(
@@ -1250,7 +1256,7 @@ def repetition_signals_inline(
             "_rep_paras": F.filter(
                 F.split(text, r"(?:\r?\n){2,}"), lambda x: ~x.rlike(_BLANK_UNIT)
             ),
-            "_rep_toks": tokens(text),
+            "_rep_toks": F.expr(_tokens_sql(f"coalesce(`{text_col}`, '')")),
         }
     )
     # Second staging layer (cross-COLUMN sharing, the extract_html_text

@@ -48,18 +48,23 @@ def enrich_transfers(
         df = df.filter(F.col("block_number").between(lower_block, upper_block))
 
     dim = F.broadcast(block_timestamps.select("block_number", "timestamp"))
+    # one projection per plan level (each DataFrame call re-analyses the
+    # plan); the key reads the cast and prefixed columns, as before
     enriched = (
-        df.withColumn("log_index", F.col("log_index").cast("int"))
-        .withColumn("block_number", F.col("block_number").cast("int"))
-        .withColumn("_from", add_collection_prefix("from_address"))
-        .withColumn("_to", add_collection_prefix("to_address"))
+        df.select(
+            F.col("log_index").cast("int").alias("log_index"),
+            F.col("block_number").cast("int").alias("block_number"),
+            "contract_address", "transaction_hash", "value",
+            add_collection_prefix("from_address").alias("_from"),
+            add_collection_prefix("to_address").alias("_to"),
+        )
         .withColumn("_key", transfer_key())
         .join(dim, "block_number", "left_outer")
-        .withColumn("transact_at", F.col("timestamp").cast("string"))
     )
     return enriched.select(
         "_key", "_from", "_to", "contract_address", "transaction_hash",
-        "log_index", "block_number", "value", "transact_at",
+        "log_index", "block_number", "value",
+        F.col("timestamp").cast("string").alias("transact_at"),
     )
 
 

@@ -980,7 +980,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         a.crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine_sim", S.cosine(F.col("va"), F.col("vb")))
+        .withColumn("cosine_sim", F.expr(S.cosine("va", "vb")))
         .filter(F.col("cosine_sim") >= NEARDUP_COSINE)
         .select("id_a", "id_b", F.round("cosine_sim", 6).alias("cosine_sim"))
     )

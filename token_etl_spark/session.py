@@ -33,6 +33,11 @@ def get_spark(app_name: str = "token_etl_spark", master: str | None = None) -> S
         (``spark.sql.ansi.enabled=true``): an invalid cast, index or
         overflow raises instead of yielding NULL, so operators must not
         rely on lazy ``CASE`` evaluation to hide one.
+
+    DataFrame call-site capture is off: an analysis or runtime error
+    still raises with its error class and message, but its context no
+    longer names the Python file and line that built the failing
+    expression.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -69,6 +74,27 @@ def get_spark(app_name: str = "token_etl_spark", master: str | None = None) -> S
         # cost after that run and a full GC is +16 MB heap (124 → 140 MB)
         # and +4 MB Metaspace (180 → 183 MB). PERF.md, "Codegen cache".
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Keep the codegen stage id out of generated class names. The
+        # cache keys on the class text, and AQE numbers stages in the
+        # order their inputs finish, so a warm run whose stages finished
+        # in another order renamed its classes and compiled them again.
+        # Measured on ``ivf_topk`` over the sf0.001 embeddings (16 runs
+        # in one session, local[32] on 4 vCPUs): with ids, a reordered
+        # warm run compiled 6 classes; without, 0 over 15 warm runs that
+        # included two reordered plans. ``ext_knn_label_noise_ivf`` at
+        # sf0.01 (local[4], 3 sessions of 8 runs): one warm run per
+        # session compiled 6-14 classes with ids, none without. The id
+        # stays in the generated code's ``codegenStageId`` comment.
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        # DataFrame call-site capture (static). On, every Column,
+        # DataFrame and ``functions`` call walks the Python stack, tries
+        # to import IPython and makes ~4 extra py4j round trips to record
+        # its call site for error context. Measured on the perfbench
+        # query_mix plan build (4 slots): one pass of the 14 queries
+        # made 20.4k round trips with it on and 11.1k with it off, and
+        # the builds took 3.68 → 2.64 s. PERF.md, "Plan construction
+        # round trips".
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master is not None:
         builder = builder.master(master)

@@ -83,7 +83,7 @@ def streaming_decontaminate(
     ``ngram_decontaminate`` per micro-batch via ``foreachBatch``.
     """
     bench_arr = bench_shingles.agg(F.collect_set("shingle").alias("_bench"))
-    base = stream.withColumn("_toks", tokens(F.col(text_col))).withColumn(
+    base = stream.withColumn("_toks", tokens(text_col)).withColumn(
         "_sh", shingle_array_expr(F.col("_toks"), k)
     )
     flagged = (
@@ -138,7 +138,7 @@ def streaming_importance_score(
     )
     n = F.size(F.col("_bg"))
     return (
-        stream.withColumn("_bg", bigrams(F.col(text_col)))
+        stream.withColumn("_bg", bigrams(text_col))
         .crossJoin(F.broadcast(wrow))
         .withColumn("n_bigrams", F.greatest(n, F.lit(0)).cast("long"))
         .withColumn(
@@ -178,7 +178,7 @@ def streaming_countmin(
     by cell-wise addition (mergeability, tested)."""
     from token_etl_spark.operators.sketch import countmin_table
 
-    occ = stream.select(F.explode(tokens(F.col(text_col))).alias("token"))
+    occ = stream.select(F.explode(tokens(text_col)).alias("token"))
     return countmin_table(occ, item_col="token", depth=depth, width=width)
 
 
@@ -227,7 +227,7 @@ def streaming_lm_score(
 
     n = F.size(F.col("_bg"))
     return (
-        stream.withColumn("_bg", bigrams(F.col(text_col)))
+        stream.withColumn("_bg", bigrams(text_col))
         .crossJoin(F.broadcast(lmrow))
         .withColumn("n_bigrams", F.greatest(n, F.lit(0)).cast("long"))
         .withColumn(
@@ -271,7 +271,7 @@ def streaming_bloom_decontaminate(
     """
     from token_etl_spark.operators.bloom import bloom_probe_expr
 
-    base = stream.withColumn("_toks", tokens(F.col(text_col))).withColumn(
+    base = stream.withColumn("_toks", tokens(text_col)).withColumn(
         "_sh", shingle_array_expr(F.col("_toks"), k)
     )
     n_maybe = F.size(
@@ -469,15 +469,9 @@ def streaming_semantic_decontaminate(
             F.col(bench_vec_col).cast("array<double>").alias("bv"),
         ).agg(F.array_sort(F.collect_list(F.struct("bid", "bv"))).alias("_bench"))
     )
-    v = F.col(vec_col).cast("array<double>")
-    best = F.array_max(
-        F.transform(
-            F.col("_bench"),
-            lambda s: F.struct(
-                cosine(v, s.getField("bv")).alias("sim"),
-                (-s.getField("bid")).alias("neg_id"),
-            ),
-        )
+    sim = cosine(f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)", "x.bv")
+    best = F.expr(
+        f"array_max(transform(_bench, x -> struct({sim} AS sim, -x.bid AS neg_id)))"
     )
     flagged = (
         stream.crossJoin(barr)
@@ -514,12 +508,11 @@ def streaming_probe_score(
     The mean-cut variant is batch-only by nature — a running stream has
     no fixed mean; a streaming consumer thresholds against the cut
     computed on the training corpus."""
-    from token_etl_spark.operators.linear import dot, l2_normalize
+    from token_etl_spark.operators.similarity import dot, l2_normalize
 
+    x = l2_normalize(f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)")
     scored = stream.crossJoin(F.broadcast(model)).withColumn(
-        "score",
-        dot(F.col("w"), l2_normalize(F.col(vec_col).cast("array<double>")))
-        + F.col("b"),
+        "score", F.expr(dot("w", x)) + F.col("b")
     )
     return scored.withColumn(
         "pred", F.col("score") >= F.lit(float(threshold))
@@ -954,7 +947,7 @@ def _route_sink_batch(
     spark = batch_df.sparkSession
     key_col, seed = _resolve_route_params(spark, export_path, key_col, seed)
     manifest = spark.read.parquet(f"{export_path.rstrip('/')}/manifest")
-    tok = F.col(token_col) if token_col else token_count(F.col(text_col))
+    tok = F.col(token_col) if token_col else token_count(text_col)
     routed = route_to_shards(
         batch_df.withColumn("n_tokens", tok.cast("long")),
         manifest,
@@ -1027,17 +1020,14 @@ def read_incremental_shards(spark, export_path: str) -> DataFrame:
     writers share: document columns + ``ord_key``, ``n_tokens``,
     ``shard_id``. Missing ``incoming/`` (no stream ran yet) serves the
     base alone."""
-    from token_etl_spark.io.sinks import _heal_shard_layout
+    from token_etl_spark.io.sinks import _committed_shard_layout
 
-    # finish any crash-interrupted split/compaction first (the marker-
-    # gated staged commit): readers self-heal the one non-atomic window.
-    # finish_only: a read must complete a committed swap but never
-    # delete a concurrent writer's marker-less staging (review-found
-    # r12)
-    _heal_shard_layout(spark, export_path, finish_only=True)
-    base = spark.read.parquet(f"{export_path.rstrip('/')}/data").withColumn(
-        "shard_id", F.col("shard_id").cast("long")
-    )
+    # a crash-cut split/compaction is read as committed, in place: the
+    # read changes nothing on disk, so it never races a writer's heal
+    layout = _committed_shard_layout(spark, export_path)
+    base = layout["data"].withColumn("shard_id", F.col("shard_id").cast("long"))
+    if not layout["incoming"]:
+        return base
     # _read_partitioned_state (not bare _read_existing): it heals the
     # crashed-mid-first-batch layout — an incoming/ holding only
     # committer leftovers and zero data files serves as absent instead
